@@ -3,9 +3,13 @@ schema, and oracle coverage matches the declared policy."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from wikipediaetl_spark.catalog import all_queries
+
+TOOLS_DIR = Path(__file__).resolve().parents[1] / "tools"
 
 # queries intentionally without a SQL oracle (hash-family / float-accumulation
 # operators) → driver records rows-only checks
@@ -56,6 +60,26 @@ def test_query_runs(spark, sf_dir, name):
     # no unaliased autogenerated column names leak to the driver compare
     for c in df.columns:
         assert "(" not in c and ")" not in c, f"{name}: unaliased column {c!r}"
+
+
+def test_query_builders_pin_ansi_for_long_folds(spark, sf_dir):
+    """A vanilla session may run with ANSI off; building any catalog query
+    turns it back on, so a LONG fold that overflows raises instead of
+    wrapping."""
+    from pyspark.sql import functions as F
+
+    from wikipediaetl_spark.functions.fixedpoint import scaled_long
+
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        all_queries()["q13_left_join"].fn(spark, sf_dir)
+        assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+        two = spark.createDataFrame([(5e16,), (5e16,)], "x double")
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            two.agg(F.sum(scaled_long(F.col("x"), 100))).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
 
 
 def test_approx_percentile_close_to_exact(spark, sf_dir):
@@ -237,7 +261,7 @@ def test_sweep_artifacts_cover_current_catalog():
     the sf0.1 twin) before shipping."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(TOOLS_DIR))
     import __spark_entry__ as entry
     from check_sweep_parity import check_parity
 
@@ -251,7 +275,7 @@ def test_sweep_parity_detects_mismatch(tmp_path):
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(TOOLS_DIR))
     from check_sweep_parity import check_parity
 
     for name, queries, fails in [

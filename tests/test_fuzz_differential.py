@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 import random
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 from wikipediaetl_spark.sources import load_table
 
 SF = "/root/testdata/sf0.001"
+TOOLS_DIR = Path(__file__).resolve().parents[1] / "tools"
 
 # (name, sql_expr, spark_builder) predicate atoms over orders
 ATOMS = [
@@ -326,7 +328,7 @@ def test_curation_ops_differential_on_random_corpora(spark, tmp_path, seed):
     (duplicate injection, shared spans, 1-token docs, skewed vocab)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(TOOLS_DIR))
     from check_oracle import canon_rows
 
     from wikipediaetl_spark.catalog import all_queries
@@ -383,7 +385,7 @@ def test_all_document_queries_differential_on_random_corpus(spark, tmp_path, see
     caught the short-doc shingle crash."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(TOOLS_DIR))
     from check_oracle import canon_rows
 
     from wikipediaetl_spark.catalog import all_queries
@@ -434,7 +436,7 @@ def test_all_event_queries_differential_on_random_events(spark, tmp_path, seed):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(TOOLS_DIR))
     from check_oracle import canon_rows
 
     from wikipediaetl_spark.catalog import all_queries

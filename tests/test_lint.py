@@ -2,12 +2,17 @@
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wikipediaetl_spark.operators.relational import q11_star_join
 from wikipediaetl_spark.plans import lint_plan
 from wikipediaetl_spark.sources import load_table
+
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_lint_flags_row_udf(spark, sf_dir):
@@ -42,13 +47,13 @@ def test_readme_headline_numbers_match_bench_full_artifact():
     Regenerating BENCH_FULL.md without updating README turns this red."""
     import re
 
-    with open("/root/repo/BENCH_FULL.md") as f:
+    with open(REPO_ROOT / "BENCH_FULL.md") as f:
         m = re.search(
             r"\| \*\*total\*\* \| \*\*([\d.]+)\*\* \| \*\*([\d.]+)\*\* \|", f.read()
         )
     assert m, "BENCH_FULL.md has no total row"
     spark_s, duck_s = m.group(1), m.group(2)
-    with open("/root/repo/README.md") as f:
+    with open(REPO_ROOT / "README.md") as f:
         readme = f.read()
     want = f"{spark_s} s Spark vs {duck_s} s\nDuckDB"
     flat = readme.replace("\n", " ")
@@ -69,11 +74,11 @@ def test_readme_idle_headline_matches_bench_idle_artifact():
     import json
     import re
 
-    with open("/root/repo/BENCH_IDLE.json") as f:
+    with open(REPO_ROOT / "BENCH_IDLE.json") as f:
         idle = json.load(f)
     want = f"{idle['value']:.2f}"
     canary = idle["queries"]["q01_pricing_summary"]
-    with open("/root/repo/README.md") as f:
+    with open(REPO_ROOT / "README.md") as f:
         flat = f.read().replace("\n", " ")
     m = re.search(r"\*\*([\d.]+) s\*\* for the 20-query sf0.1 headline", flat)
     assert m, "README lost the idle-headline sentence"
@@ -89,7 +94,7 @@ def test_readme_under_comparator_count_matches_400x_artifact():
     import re
     import statistics
 
-    with open("/root/repo/BENCH_SCALE_400x.json") as f:
+    with open(REPO_ROOT / "BENCH_SCALE_400x.json") as f:
         qs = json.load(f)["queries"]
     ratios = [v["ratio"] for v in qs.values() if isinstance(v, dict) and "ratio" in v]
     under = sum(1 for r in ratios if r < 1.0)
@@ -102,7 +107,7 @@ def test_readme_under_comparator_count_matches_400x_artifact():
         "THIRTY-THREE THIRTY-FOUR THIRTY-FIVE THIRTY-SIX THIRTY-SEVEN "
         "THIRTY-EIGHT THIRTY-NINE FORTY"
     ).split()
-    with open("/root/repo/README.md") as f:
+    with open(REPO_ROOT / "README.md") as f:
         flat = f.read().replace("\n", " ")
     m = re.search(r"([\w-]+) queries run UNDER the single-node DuckDB comparator", flat)
     assert m, "README lost the under-comparator sentence"
@@ -116,3 +121,36 @@ def test_readme_under_comparator_count_matches_400x_artifact():
     assert abs(float(m.group(1)) - median) < 0.006 and int(m.group(2)) == len(ratios), (
         f"README median/count {m.groups()} != artifact ({median}, {len(ratios)})"
     )
+
+
+def _is_half(node: ast.expr) -> bool:
+    """``0.5`` or ``F.lit(0.5)``."""
+    if isinstance(node, ast.Call) and len(node.args) == 1:
+        node = node.args[0]
+    return isinstance(node, ast.Constant) and node.value == 0.5
+
+
+def test_half_up_quantizers_live_only_in_fixedpoint():
+    """``F.floor(x + 0.5)`` / ``np.floor(x + 0.5)`` is the fixed-point
+    rounding contract; every caller goes through functions/fixedpoint.py so
+    the contract has one owner. Docstrings and oracle SQL are not calls."""
+    pkg = REPO_ROOT / "wikipediaetl_spark"
+    owner = pkg / "functions" / "fixedpoint.py"
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == owner:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "floor"
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id in ("F", "np")
+                and node.args
+                and isinstance(node.args[0], ast.BinOp)
+                and isinstance(node.args[0].op, ast.Add)
+                and _is_half(node.args[0].right)
+            ):
+                hits.append(f"{path.relative_to(REPO_ROOT)}:{node.lineno}")
+    assert hits == [], hits

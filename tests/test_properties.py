@@ -713,3 +713,77 @@ def test_q162_retention_matches_bruteforce_reference(spark, tmp_path):
         for r in q162_cohort_retention(spark, str(tmp_path)).collect()
     }
     assert got == want
+
+
+# ---------------------------------------------------------------------------
+# functions/fixedpoint.py: the one rounding contract, against exact Python
+# ---------------------------------------------------------------------------
+
+_fp_values = st.one_of(
+    st.integers(-(10**10), 10**10).map(lambda c: c / 100.0),  # money ≤ 1e8
+    st.integers(-(10**6), 10**6).map(lambda k: (2 * k + 1) / 8),  # .5 ties at 100
+    st.floats(min_value=-1e8, max_value=1e8, allow_nan=False),
+)
+
+
+@given(
+    xs=st.lists(_fp_values, min_size=1, max_size=20),
+    scale=st.sampled_from([100, 10_000, 1_000_000]),
+)
+@SETTINGS
+def test_fixedpoint_helpers_match_exact_reference(spark, xs, scale):
+    """scaled_long is Python's floor(x·s + 0.5) (half toward +inf), its
+    numpy twin agrees, and unscale / sum_unscaled are the correctly rounded
+    exact quotient ``float(Fraction(total, s))``."""
+    import math
+    from fractions import Fraction
+
+    import numpy as np
+
+    from wikipediaetl_spark.functions.fixedpoint import (
+        scaled_long,
+        scaled_long_np,
+        sum_unscaled,
+        unscale,
+    )
+
+    want = [math.floor(x * scale + 0.5) for x in xs]
+    df = spark.createDataFrame([(x,) for x in xs], "x double").select(
+        scaled_long(F.col("x"), scale).alias("q")
+    )
+    rows = df.select("q", unscale(F.col("q"), scale).alias("u")).collect()
+    assert [r.q for r in rows] == want
+    assert scaled_long_np(np.array(xs), scale).tolist() == want
+    assert [r.u for r in rows] == [float(Fraction(q, scale)) for q in want]
+    total = df.agg(sum_unscaled(F.col("q"), scale).alias("t")).collect()[0].t
+    assert total == float(Fraction(sum(want), scale))
+
+
+def test_fixedpoint_negative_tie_rounds_toward_positive_infinity(spark):
+    """The documented contract: -0.125 at scale 100 is the tie -12.5, which
+    goes to -12 (HALF_UP would give -13) on Spark and in numpy alike."""
+    import numpy as np
+
+    from wikipediaetl_spark.functions.fixedpoint import scaled_long, scaled_long_np
+
+    got = spark.range(1).select(scaled_long(F.lit(-0.125), 100).alias("q")).first().q
+    assert got == -12
+    assert scaled_long_np(np.array([-0.125, 0.125]), 100).tolist() == [-12, 13]
+
+
+def test_fixedpoint_rejects_non_power_of_ten_scale():
+    import pytest
+
+    from wikipediaetl_spark.functions.fixedpoint import (
+        scaled_long,
+        scaled_long_np,
+        sum_unscaled,
+        unscale,
+    )
+
+    for bad in (100.0, 1e6, 50, 0, -100, 110, True):
+        for helper in (scaled_long, sum_unscaled, unscale):
+            with pytest.raises(ValueError):
+                helper(F.col("x"), bad)
+        with pytest.raises(ValueError):
+            scaled_long_np([1.0], bad)

@@ -38,6 +38,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 _PINNED_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+    # every LONG fold (functions/fixedpoint.py) relies on overflow raising
+    "spark.sql.ansi.enabled": "true",
 }
 
 

@@ -46,7 +46,11 @@ def sanitize_filename(path: Column) -> Column:
 
     Parity: ETL/tasks/utils.py:4-11 (used at categorizer.py:126,133 and
     converter.py:50,55) — the reference's Python UDF rewritten as native
-    expressions. r12 (guide §4 — per-row regex is the floor, so run less
+    expressions, with one divergence: the reference's
+    ``.replace('.html', '')`` removes EVERY '.html' in the name, while this
+    strips only a trailing one ('a.html.bak' stays 'a.html.bak' here, the
+    reference gives 'a.bak'). Names without an interior '.html' match
+    byte for byte. r12 (guide §4 — per-row regex is the floor, so run less
     of it): 2 of the 3 regexes replaced by cheap substring builtins,
     exactly equivalent on ANY input:
     - ``regexp_extract(path, '([^/]*)$', 1)`` ≡ ``substring_index(path,

@@ -21,9 +21,9 @@ q158 is that upsert pattern re-expressed as a distributed latest-wins merge):
   ordered view→click→purchase funnel, and the retention triangle.
 
 All float-valued outputs are integer-quantized on both engines (micro-units
-for bounded per-group sums, exact cents for table-wide money totals — see
-``_micro``/``_cents``) so value-hashes are engine- and platform-portable
-(VERDICT r2 §Next-round #1 pattern).
+for bounded per-group sums, see ``_micro``; exact cents for table-wide money
+totals, see ``functions/fixedpoint.py``) so value-hashes are engine- and
+platform-portable (VERDICT r2 §Next-round #1 pattern).
 """
 
 from __future__ import annotations
@@ -33,25 +33,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from wikipediaetl_spark.catalog import query
+from wikipediaetl_spark.functions.fixedpoint import scaled_long
 from wikipediaetl_spark.sources import load_table
 
 
 def _micro(col: F.Column) -> F.Column:
     """Tie-free integer micro-units: floor of the same IEEE double is
     bit-deterministic on every engine (no HALF_UP/HALF_EVEN divergence).
-    For PER-GROUP sums over bounded groups only — see ``_cents`` for
-    table-wide money totals."""
+    For PER-GROUP sums over bounded groups only — table-wide money totals
+    fold as cents (``scaled_long(col, 100)``)."""
     return F.floor(col * F.lit(1000000.0)).cast("long")
-
-
-def _cents(col: F.Column) -> F.Column:
-    """Exact integer cents for the fixture's 2-decimal money values.
-    Table-wide micro-unit sums overflow BIGINT around 2e12 cents-rows
-    (caught live: q157's micro total at the 400×/240M-row fixture hit
-    ANSI ARITHMETIC_OVERFLOW); cents keep the same exactness with 1e4 more
-    headroom (~1.8e12 rows at 5e6 cents/row — beyond a 100 TB lineitem).
-    floor(x*100+0.5) round-half-up is deterministic on both engines."""
-    return F.floor(col * F.lit(100.0) + F.lit(0.5)).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -376,14 +367,15 @@ def q157_unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     separately demonstrated (q35). The oracle spells the naive reshape as
     UNION ALL — same result. Totals are exact integer CENTS (2-decimal
     fixture money): micro-units overflowed BIGINT at the 400×/240M-row
-    scale fixture (see ``_cents``)."""
+    scale fixture (ANSI ARITHMETIC_OVERFLOW, caught live); cents keep the
+    same exactness with 1e4 more headroom (~1.8e12 rows at 5e6 cents/row)."""
     li = load_table(spark, sf_dir, "lineitem")
     wide = li.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(_cents(F.col("l_quantity"))).alias("l_quantity"),
-        F.sum(_cents(F.col("l_extendedprice"))).alias("l_extendedprice"),
-        F.sum(_cents(F.col("l_discount"))).alias("l_discount"),
-        F.sum(_cents(F.col("l_tax"))).alias("l_tax"),
+        F.sum(scaled_long(F.col("l_quantity"), 100)).alias("l_quantity"),
+        F.sum(scaled_long(F.col("l_extendedprice"), 100)).alias("l_extendedprice"),
+        F.sum(scaled_long(F.col("l_discount"), 100)).alias("l_discount"),
+        F.sum(scaled_long(F.col("l_tax"), 100)).alias("l_tax"),
     )
     return (
         wide.unpivot(
@@ -478,7 +470,7 @@ def q158_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = base_kept.unionByName(changes)
     return merged.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(_cents(F.col("o_totalprice"))).alias("total_cents"),
+        F.sum(scaled_long(F.col("o_totalprice"), 100)).alias("total_cents"),
     )
 
 
@@ -571,9 +563,7 @@ def q160_outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~50k rows, checkpointed once) → stats, threshold, and flag count all
     grain-side; the 5-row threshold table broadcasts onto the grain."""
     e = load_table(spark, sf_dir, "events")
-    c = e.select(
-        "event_type", F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v")
-    )
+    c = e.select("event_type", scaled_long(F.col("value"), 100).alias("v"))
     # r6 (VERDICT r5 #7): ONE scan, not two. The stats pass and the flag
     # pass both depend on the data only through the (event_type, v) VALUE
     # GRAIN — and quantized money has a small domain (~10k distinct cents

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wikipediaetl_spark.catalog import query
+from wikipediaetl_spark.functions.fixedpoint import scaled_long, sum_unscaled
 from wikipediaetl_spark.sources import load_table
 
 
@@ -1273,9 +1274,9 @@ def q172_market_share_denorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     it — the layout lever for this shape is materializing the fact-fact
     JOIN at ingest instead. Every line is stored with its order's year and
     custkey attached (o_year partition column), plus the line's exact
-    scaled-long revenue unit vu = floor(extprice·(1-disc)·1e4 + 0.5) — the
-    same unit q124's salted partials sum, so serving reproduces q124's
-    decimal/double rounding bit-for-bit.
+    scaled-long revenue unit vu (``scaled_long(extprice·(1-disc), 10_000)``)
+    — the same unit q124's salted partials sum, so serving reproduces
+    q124's decimal/double rounding bit-for-bit.
 
     Maintenance is APPEND-ONLY: new lines arrive, join their (already
     ingested) order row — the stream-static enrich shape q147 runs — and
@@ -1291,11 +1292,9 @@ def q172_market_share_denorm(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linenumber",
         "l_partkey",
         "l_suppkey",
-        F.floor(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000 + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("vu"),
+        scaled_long(
+            F.col("l_extendedprice") * (1 - F.col("l_discount")), 10_000
+        ).alias("vu"),
     )
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").alias("o_year"), "o_custkey"
@@ -1342,8 +1341,8 @@ def q172_market_share_denorm(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("vu").alias("pden"),
         )
     )
-    num = (F.sum(F.col("pnum").cast("decimal(38,0)")) / 10000).cast("double")
-    den = (F.sum(F.col("pden").cast("decimal(38,0)")) / 10000).cast("double")
+    num = sum_unscaled(F.col("pnum"), 10_000)
+    den = sum_unscaled(F.col("pden"), 10_000)
     res = (
         partial.groupBy("o_year")
         .agg((num / den).alias("mkt_share"))
@@ -1496,9 +1495,7 @@ def q166_storage_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-                ).alias("total_cents"),
+                F.sum(scaled_long(F.col("o_totalprice"), 100)).alias("total_cents"),
             )
             .localCheckpoint(eager=True)
         )
@@ -1555,10 +1552,8 @@ def q176_star_mv_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Serve is O(answer family): one scan of the MV + a 2-key aggregate —
     no join, no fact scan (star_mv_serve, plan-asserted). Cents partials
-    are exact longs (the q11 argument: 2-decimal fixture money makes
-    floor(x·100+0.5) lossless and a long sum order-independent), so the
-    maintained MV reproduces q11's bits and hash-matches its raw-fact
-    oracle. Reference tie: the categorizer's category-distribution summary
+    are exact longs (``functions/fixedpoint.py``), so the maintained MV
+    reproduces q11's bits and hash-matches its raw-fact oracle. Reference tie: the categorizer's category-distribution summary
     (ETL/tasks/categorizer.py:178-191) maintained instead of recomputed."""
     table = "q176_mv_orders_by_region_nation_year"
     from wikipediaetl_spark.operators.relational import _t
@@ -1567,7 +1562,7 @@ def q176_star_mv_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_custkey",
         F.year("o_orderdate").alias("o_year"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long").alias("o_cents"),
+        scaled_long(F.col("o_totalprice"), 100).alias("o_cents"),
     )
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey", "n_name")

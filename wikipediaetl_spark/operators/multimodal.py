@@ -226,6 +226,7 @@ def _byte_stats(arr: np.ndarray) -> np.ndarray:
     )
 
 from wikipediaetl_spark.catalog import query
+from wikipediaetl_spark.functions.fixedpoint import scaled_long
 from wikipediaetl_spark.sources import load_table
 
 
@@ -501,7 +502,7 @@ def q110_cross_modal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    norm = F.floor(F.sqrt(dot_expr(F.col("v"), F.col("v"))) * 1000000 + 0.5) / 1000000
+    norm = scaled_long(F.sqrt(dot_expr(F.col("v"), F.col("v"))), 1_000_000) / 1000000
     return (
         d.join(e, d.doc_id == e.vec_id)
         .select(

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from wikipediaetl_spark.catalog import query
+from wikipediaetl_spark.functions.fixedpoint import scaled_long
 from wikipediaetl_spark.sources import load_table
 
 
@@ -1051,14 +1052,13 @@ def dsir_serve(hist: DataFrame, counts: DataFrame) -> DataFrame:
     tot = counts.agg(
         F.sum("ct").cast("long").alias("tt"), F.sum("cs").cast("long").alias("ts")
     )
-    lr_u = F.floor(
+    lr_u = scaled_long(
         F.log(
             ((F.col("ct") + 1) * (F.col("ts") + 64)).cast("double")
             / ((F.col("cs") + 1) * (F.col("tt") + 64)).cast("double")
-        )
-        * 1000000
-        + 0.5
-    ).cast("long")
+        ),
+        1_000_000,
+    )
     lr = counts.crossJoin(F.broadcast(tot)).select("b", lr_u.alias("lr_u"))
     wts = (
         hist.join(F.broadcast(lr), "b")

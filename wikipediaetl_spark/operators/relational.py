@@ -16,8 +16,10 @@ Scale notes (100 TB posture), applied per query below:
   handles skew and coalesces post-shuffle partitions;
 - windows partition by high-cardinality keys (custkey), never a global
   orderBy except for deliberately small final results;
-- money aggregates accumulate as exact DECIMAL (see ``dsum``) so results
-  are identical under any partitioning / execution order.
+- money aggregates fold as exact LONGs on a 10^-k grid and combine as
+  DECIMAL(38,0) (``functions/fixedpoint.py``; a few small dimension sums use
+  ``dsum``), so results are identical under any partitioning / execution
+  order.
 """
 
 from __future__ import annotations
@@ -26,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from wikipediaetl_spark.catalog import query
+from wikipediaetl_spark.functions.fixedpoint import scaled_long, sum_unscaled, unscale
 from wikipediaetl_spark.sources import load_table
 
 
@@ -82,14 +85,12 @@ def davg(col, scale: int = 4):
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan → pushed filter → two-stage exact aggregation.
 
-    Money sums use the scaled-long two-stage trick: per-(group, partition)
-    partial sums accumulate as longs inside whole-stage codegen (values have
-    ≤6 decimal digits, so floor(x*1e6+0.5) is a lossless integer — 2.6×
-    faster than per-row DECIMAL accumulation), then the tiny partials merge
-    as DECIMAL so the global total can never overflow. Bound: a 128 MB scan
-    split holds ~1M rows × ≤5e11 per scaled term ≈ 5e17 < 2^63. Exact and
-    order-independent, so it matches the oracle's integer sum bit-for-bit.
-    The shuffle carries (groups × partitions) partial rows, not data.
+    Money sums are two-stage fixed-point folds at scale 1e6
+    (``functions/fixedpoint.py``): per-(group, partition) LONG partials
+    inside whole-stage codegen — 2.6× faster than per-row DECIMAL
+    accumulation — then the tiny partials merge as DECIMAL(28,0) and divide
+    in double, as the oracle does. The shuffle carries (groups × partitions)
+    partial rows, not data.
     """
     li = _t(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -99,10 +100,10 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         "l_linestatus",
         "l_quantity",
-        F.floor(F.col("l_extendedprice") * 1000000 + 0.5).alias("s_price"),
-        F.floor(disc_price * 1000000 + 0.5).alias("s_disc_price"),
-        F.floor(disc_price * (1 + F.col("l_tax")) * 1000000 + 0.5).alias("s_charge"),
-        F.floor(F.col("l_discount") * 1000000 + 0.5).alias("s_disc"),
+        scaled_long(F.col("l_extendedprice"), 1_000_000).alias("s_price"),
+        scaled_long(disc_price, 1_000_000).alias("s_disc_price"),
+        scaled_long(disc_price * (1 + F.col("l_tax")), 1_000_000).alias("s_charge"),
+        scaled_long(F.col("l_discount"), 1_000_000).alias("s_disc"),
         F.spark_partition_id().alias("pid"),
     )
     partials = scaled.groupBy("l_returnflag", "l_linestatus", "pid").agg(
@@ -339,16 +340,13 @@ def q10_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r12 (the q32/q108 finding): the fine-grain partial itself was a per-row
     DECIMAL(18,2) cast+accumulate over all 60M rows — 64% of q32's
-    identical fold, measured. Money now folds as exact BIGINT cents
-    (floor(x·100+0.5), the q11/q12 identity) salted by
-    spark_partition_id() so each long partial is bounded by its scan task,
-    and the ~|tasks|·15 partials re-sum as DECIMAL(38,0) with one exact
-    /100 → double at the end — bit-identical to the decimal oracle at any
-    scale, ANSI-raise backstop. The Expand now consumes |tasks|·15 rows
-    instead of 15 — still nothing. Within-run A/B at 400×
-    (tools/exp_decfold_wave.py): 3.07 → 1.45 s (2.12×), values identical."""
+    identical fold, measured. Money now folds as exact cents in partials
+    salted by spark_partition_id() (``functions/fixedpoint.py``). The
+    Expand now consumes |tasks|·15 rows instead of 15 — still nothing.
+    Within-run A/B at 400× (tools/exp_decfold_wave.py): 3.07 → 1.45 s
+    (2.12×), values identical."""
     o = _t(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = scaled_long(F.col("o_totalprice"), 100)
     base = (
         o.select(
             "o_orderstatus",
@@ -361,7 +359,7 @@ def q10_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return base.cube("o_orderstatus", "o_orderpriority").agg(
         F.sum("pn").alias("n"),
-        (F.sum(F.col("pc").cast("decimal(38,0)")) / 100).cast("double").alias("revenue"),
+        sum_unscaled(F.col("pc"), 100).alias("revenue"),
     )
 
 
@@ -394,21 +392,18 @@ def q11_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (region, nation) is trivial. This is the groupby-pushdown rewrite
     Catalyst does not apply automatically.
 
-    Money accumulates as exact BIGINT cents, not DECIMAL: the fixture's
-    2-decimal money makes floor(x·100+0.5) lossless, a long sum is exact
-    and order-independent like the decimal one, and the final /100.0 of a
-    <2⁵³ integer rounds identically to casting the exact decimal total —
-    but the hot aggregate runs integer adds instead of decimal128 adds,
-    measured 2.43 s → 0.76 s over the 400× fixture's 60M-row scan."""
+    Money accumulates as exact cents (``functions/fixedpoint.py``), not
+    DECIMAL, and the final /100.0 of a <2⁵³ integer rounds identically to
+    casting the exact decimal total — but the hot aggregate runs integer
+    adds instead of decimal128 adds, measured 2.43 s → 0.76 s over the 400×
+    fixture's 60M-row scan."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region")
     per_cust = o.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("pn"),
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias(
-            "pcents"
-        ),
+        F.sum(scaled_long(F.col("o_totalprice"), 100)).alias("pcents"),
     )
     return (
         per_cust.join(c, per_cust.o_custkey == c.c_custkey)
@@ -449,26 +444,20 @@ def q12_fact_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver builds a 30M-row HashedRelation single-threaded).
 
     r5 (VERDICT r4 #1): the revenue fold runs in INT64, not per-row
-    decimal. Each term quantizes ONCE, scan-side, to exact 1e-4 units —
-    extendedprice/discount carry ≤2+2 decimal digits, so the true product
-    lies on the 1e-4 grid and the double's error (~1e-11 relative) is far
-    inside the 5e-7 half-up rounding boundary, making
-    floor(v·1e4 + 0.5)·100 ≡ the oracle's CAST(v AS DECIMAL(18,6)) micros
-    term-by-term (asserted bit-exact vs the decimal plan at 400×,
-    tools/exp_q12.py check_longsum). The join stage then folds longs in
-    whole-stage codegen — profiled 245 s → 115 s of task time at 400×
-    (the decimal accumulator was HALF the join stage) — and the shuffle
-    carries an integer column that compresses 14% tighter than the double.
-    Scale correctness: partials group by (priority, input partition id),
-    bounding each long partial by partition size (maxPartitionBytes), not
-    by table size — a plain per-priority long sum would overflow ~1e10
-    rows/group, the salted partials never do; the per-partition partials
-    merge as DECIMAL(38,0) on ≤5×|partitions| rows, division by 1e4 is
-    exact in decimal, and the final double equals the decimal plan's.
-    ANSI mode (session default) turns any residual breach into an error,
-    never a silent null. At 100 TB the same trade holds whenever the probe
-    side is much larger than the build side and memory fits the build
-    partition; AQE's skew splitting still applies to the hash variant.
+    decimal. Each term quantizes ONCE, scan-side, to exact 1e-4 units
+    (``functions/fixedpoint.py``): extendedprice/discount carry ≤2+2
+    decimal digits, so the product lies on the 1e-4 grid and the long ·100
+    equals the oracle's CAST(v AS DECIMAL(18,6)) micros term-by-term
+    (asserted bit-exact vs the decimal plan at 400×, tools/exp_q12.py
+    check_longsum). The join stage then folds longs in whole-stage codegen
+    — profiled 245 s → 115 s of task time at 400× (the decimal accumulator
+    was HALF the join stage) — and the shuffle carries an integer column
+    that compresses 14% tighter than the double. Partials group by
+    (priority, input partition id): a plain per-priority long sum would
+    overflow ~1e10 rows/group, the salted partials never do. At 100 TB the
+    same trade holds whenever the probe side is much larger than the build
+    side and memory fits the build partition; AQE's skew splitting still
+    applies to the hash variant.
 
     r6: the ≤4.0×-at-400× target is RE-FOUNDED on the stored-layout path
     (VERDICT r5 #2): stock oscillates 4.1-5.0× across rounds with this
@@ -485,11 +474,9 @@ def q12_fact_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stays rejected (measured above), pre-COMPUTING is free
     liv = li.select(
         "l_orderkey",
-        F.floor(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000 + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("vu"),
+        scaled_long(
+            F.col("l_extendedprice") * (1 - F.col("l_discount")), 10_000
+        ).alias("vu"),
     )
     j = liv.join(o.hint("shuffle_hash"), liv.l_orderkey == o.o_orderkey)
     inner = j.groupBy("o_orderpriority", F.spark_partition_id().alias("pid")).agg(
@@ -497,9 +484,7 @@ def q12_fact_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return inner.groupBy("o_orderpriority").agg(
         F.sum("pn").cast("long").alias("n_lines"),
-        (F.sum(F.col("pvu").cast("decimal(38,0)")) / 10000)
-        .cast("double")
-        .alias("revenue"),
+        sum_unscaled(F.col("pvu"), 10_000).alias("revenue"),
     )
 
 
@@ -529,28 +514,23 @@ def q13_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-identical.
 
     r12 (the q32/q108 finding — per-row decimal folds, not scans, are the
-    wall): the partial accumulates exact BIGINT cents instead of
-    DECIMAL(18,2) — lossless for 2-decimal money (the q11/q12 identity),
-    per-custkey totals are bounded by a customer's order count (~10-40 ×
-    ≤5.6e7 cents, nowhere near 2⁶³; ANSI raises, never wraps) — and the
-    exact decimal /100 → double happens on the ~|customer| aggregate rows
-    above the join. Within-run A/B at 400× (tools/exp_q13_cents.py, noop
-    sink): 2.35 → 0.84 s (2.78×), values identical."""
+    wall): the partial accumulates exact cents instead of DECIMAL(18,2)
+    (``functions/fixedpoint.py``); per-custkey totals are bounded by a
+    customer's order count (~10-40 × ≤5.6e7 cents, nowhere near 2⁶³), and
+    the unscale happens on the ~|customer| aggregate rows above the join.
+    Within-run A/B at 400× (tools/exp_q13_cents.py, noop sink):
+    2.35 → 0.84 s (2.78×), values identical."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     oa = o.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("pn"),
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias(
-            "pcents"
-        ),
+        F.sum(scaled_long(F.col("o_totalprice"), 100)).alias("pcents"),
     )
     return c.join(oa, c.c_custkey == oa.o_custkey, "left").select(
         "c_custkey",
         "c_name",
         F.coalesce(F.col("pn"), F.lit(0).cast("long")).alias("n_orders"),
-        F.coalesce(
-            (F.col("pcents").cast("decimal(38,0)") / 100).cast("double"), F.lit(0.0)
-        ).alias("total_spent"),
+        F.coalesce(unscale(F.col("pcents"), 100), F.lit(0.0)).alias("total_spent"),
     )
 
 
@@ -664,14 +644,13 @@ def q18_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     as BroadcastNestedLoopJoin — each fact row probes 5 bands, no shuffle.
     (SURVEY.md §2.3 [E]).
 
-    r12 (the q32/q108 finding): revenue folds as exact BIGINT cents salted
-    by spark_partition_id() (5 band groups would otherwise bound the long
-    sum at ~1.6e11 rows/band); the ~|tasks|·5 partials re-sum as
-    DECIMAL(38,0) with one exact /100 → double. Within-run A/B at 400×
-    (tools/exp_decfold_wave.py): 2.01 → 0.88 s (2.27×), values identical."""
+    r12 (the q32/q108 finding): revenue folds as exact cents in partials
+    salted by spark_partition_id() (``functions/fixedpoint.py``). Within-run
+    A/B at 400× (tools/exp_decfold_wave.py): 2.01 → 0.88 s (2.27×), values
+    identical."""
     o = _t(spark, sf_dir, "orders")
     bands = spark.createDataFrame(PRICE_BANDS, "band string, lo double, hi double")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = scaled_long(F.col("o_totalprice"), 100)
     partial = (
         o.join(
             F.broadcast(bands),
@@ -683,7 +662,7 @@ def q18_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return partial.groupBy("band").agg(
         F.sum("pn").alias("n_orders"),
-        (F.sum(F.col("pc").cast("decimal(38,0)")) / 100).cast("double").alias("revenue"),
+        sum_unscaled(F.col("pc"), 100).alias("revenue"),
     )
 
 
@@ -1040,17 +1019,11 @@ def q32_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     r12: the r11 "scan floor" pin was wrong — decomposed at 400×
     (tools/exp_q32_decfold.py), the per-row decimal cast+accumulate was
     64% of wall (stock 2.24 s vs 0.80 s with a double sum on the same
-    plan). Money now folds as exact BIGINT cents (floor(x·100+0.5),
-    lossless for 2-decimal money — the q11/q12 identity) in salted
-    partials per (year, month, spark_partition_id()); the ~|tasks|·84
-    partial rows combine as DECIMAL(38,0) and divide by 100 exactly
-    before the double cast, so the result is bit-identical to the
-    decimal oracle at ANY group size (a plain per-month long sum would
-    bound groups at ~1.6e11 rows; the salt removes the bound; ANSI
-    raises, never wraps, as the backstop). Measured within-run at 400×:
-    2.24 → 0.84 s (2.67×), values identical."""
+    plan). Money now folds as exact cents in salted partials per (year,
+    month, spark_partition_id()) (``functions/fixedpoint.py``). Measured
+    within-run at 400×: 2.24 → 0.84 s (2.67×), values identical."""
     o = _t(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = scaled_long(F.col("o_totalprice"), 100)
     partial = (
         o.select(
             F.year("o_orderdate").alias("o_year"),
@@ -1063,7 +1036,7 @@ def q32_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return partial.groupBy("o_year", "o_month").agg(
         F.sum("pn").alias("n_orders"),
-        (F.sum(F.col("pc").cast("decimal(38,0)")) / 100).cast("double").alias("revenue"),
+        sum_unscaled(F.col("pc"), 100).alias("revenue"),
     )
 
 
@@ -1377,12 +1350,12 @@ def q66_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     6.28× (BENCH_SCALE_400x, BENCH_NOTES r11).
 
     r12 (the q32/q108 finding, see q10_cube): the fine-grain partial folds
-    exact BIGINT cents salted by spark_partition_id() instead of per-row
-    DECIMAL(18,2); the ~|tasks|·15 partials re-sum as DECIMAL(38,0) with
-    one exact /100 → double. Within-run A/B at 400×
+    exact cents salted by spark_partition_id() instead of per-row
+    DECIMAL(18,2); the SQL combine spells ``sum_unscaled``
+    (``functions/fixedpoint.py``). Within-run A/B at 400×
     (tools/exp_decfold_wave.py): 2.39 → 0.95 s (2.51×), values identical."""
     o = _t(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = scaled_long(F.col("o_totalprice"), 100)
     o.select(
         "o_orderstatus",
         "o_orderpriority",
@@ -1461,12 +1434,10 @@ def q98_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer⋈orders reduces to ~5.5M rows — so c⋈o is the natural
     SHUFFLE_HASH build and the huge lineitem side streams unsorted (the
     sort-merge default sorted 134M rows). The revenue term quantizes to
-    exact 1e-4-unit LONGS scan-side (the q12 identity, property-tested:
-    for 2+2-decimal money the long fold is bit-equal to the DECIMAL(18,6)
-    oracle sum) — 134M per-row decimal adds were the other half of the
-    wall: 10.5 s → 7.3 s same-session at 400×. Per-order groups hold ≤7
-    lines, so the long partial cannot overflow; the /10000 happens in
-    decimal at the ~order-count grain."""
+    exact 1e-4-unit LONGS scan-side (the q12 identity,
+    ``functions/fixedpoint.py``) — 134M per-row decimal adds were the other
+    half of the wall: 10.5 s → 7.3 s same-session at 400×. Per-order groups
+    hold ≤7 lines; the unscale runs at the ~order-count grain."""
     c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp")
@@ -1476,11 +1447,9 @@ def q98_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     liv = li.select(
         "l_orderkey",
-        F.floor(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000 + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("vu"),
+        scaled_long(
+            F.col("l_extendedprice") * (1 - F.col("l_discount")), 10_000
+        ).alias("vu"),
     )
     co = c.join(o, c.c_custkey == o.o_custkey).hint("shuffle_hash")
     return (
@@ -1489,7 +1458,7 @@ def q98_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("vu").alias("svu"))
         .select(
             "l_orderkey",
-            (F.col("svu").cast("decimal(38,0)") / 10000).cast("double").alias("revenue"),
+            unscale(F.col("svu"), 10_000).alias("revenue"),
             F.col("o_orderdate").cast("date").alias("order_date"),
             "o_orderpriority",
         )
@@ -1529,9 +1498,8 @@ def q99_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     c⋈o chain is the SHUFFLE_HASH build (lineitem streams unsorted), and
     the revenue term folds as exact 1e-4-unit longs. With only 5 output
     groups a plain long sum WOULD overflow at ~8e9 rows/nation, so the
-    partials group by (n_name, partition id) — bounded by partition size —
-    and merge as DECIMAL(38,0), exactly the q12 overflow discipline; ANSI
-    errors on any residual breach.
+    partials group by (n_name, partition id), the q12 discipline
+    (``functions/fixedpoint.py``).
 
     r7 second pass (11.9 → 5.5 s warm at 400×, ~5× → ~2.4×): lineitem is
     semi-reduced by the broadcast ASIA-supplier key set BEFORE the fact
@@ -1557,11 +1525,9 @@ def q99_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     liv = li.select(
         "l_orderkey",
         "l_suppkey",
-        F.floor(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000 + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("vu"),
+        scaled_long(
+            F.col("l_extendedprice") * (1 - F.col("l_discount")), 10_000
+        ).alias("vu"),
     )
     co = c.join(o, c.c_custkey == o.o_custkey).hint("shuffle_hash")
     sup = s.alias("sup")
@@ -1576,11 +1542,7 @@ def q99_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name", F.spark_partition_id().alias("pid"))
         .agg(F.sum("vu").alias("pvu"))
     )
-    return inner.groupBy("n_name").agg(
-        (F.sum(F.col("pvu").cast("decimal(38,0)")) / 10000)
-        .cast("double")
-        .alias("revenue")
-    )
+    return inner.groupBy("n_name").agg(sum_unscaled(F.col("pvu"), 10_000).alias("revenue"))
 
 
 @query(
@@ -1606,11 +1568,10 @@ def q112_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     lands on the lineitem scan; nation broadcasts.
 
     r7 (400× plan-variant fix, 20.9 s → 10.3 s same-session): the revenue
-    term folds as exact 1e-4-unit LONGS (the q12 identity) instead of 80M
-    per-row decimal adds — /10000 happens in decimal at the customer grain.
-    Long-sum bound: overflow needs ~8e9 lineitem rows on ONE customer
-    (ANSI errors, never wraps). r7 second pass (8.38 → 7.46 s best-of-3 at
-    400×, 4.8× → 1.7×): the fact-fact join runs on NARROW sides — lineitem
+    term folds as exact 1e-4-unit LONGS (the q12 identity,
+    ``functions/fixedpoint.py``) instead of 80M per-row decimal adds; the
+    unscale runs at the customer grain. r7 second pass (8.38 → 7.46 s
+    best-of-3 at 400×, 4.8× → 1.7×): the fact-fact join runs on NARROW sides — lineitem
     (l_orderkey, vu) probes a (o_orderkey, o_custkey) two-long SHUFFLE_HASH
     build — and aggregates to the copied-dim customer grain (~15k groups,
     partial map-side) BEFORE the string-carrying customer/nation dims
@@ -1624,11 +1585,9 @@ def q112_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     liv = li.select(
         "l_orderkey",
-        F.floor(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000 + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("vu"),
+        scaled_long(
+            F.col("l_extendedprice") * (1 - F.col("l_discount")), 10_000
+        ).alias("vu"),
     )
     o = (
         _t(spark, sf_dir, "orders")
@@ -1648,7 +1607,7 @@ def q112_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "c_custkey",
             "c_name",
-            (F.col("svu").cast("decimal(38,0)") / 10000).cast("double").alias("revenue"),
+            unscale(F.col("svu"), 10_000).alias("revenue"),
             "n_name",
         )
         .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
@@ -1671,8 +1630,8 @@ def q112_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q115_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape (forecast revenue change): the pure filter+aggregate
-    query — every predicate pushes to the parquet scan, one global exact sum
-    (scaled-long, decimal-safe at any scale), no grouping, no join. The
+    query — every predicate pushes to the parquet scan, one global exact
+    scaled-long sum, no grouping, no join. The
     simplest plan in the book and the purest pushdown test."""
     li = _t(spark, sf_dir, "lineitem")
     flt = (
@@ -1681,7 +1640,7 @@ def q115_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("l_discount").between(0.05, 0.07)
         & (F.col("l_quantity") < 24)
     )
-    scaled = F.floor(F.col("l_extendedprice") * F.col("l_discount") * 10000 + 0.5)
+    scaled = scaled_long(F.col("l_extendedprice") * F.col("l_discount"), 10_000)
     return li.filter(flt).agg(
         (F.sum(scaled.cast("decimal(28,0)")).cast("double") / 10000.0).alias(
             "revenue_effect"

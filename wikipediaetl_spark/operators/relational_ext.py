@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wikipediaetl_spark.catalog import query
+from wikipediaetl_spark.functions.fixedpoint import scaled_long, sum_unscaled, unscale
 from wikipediaetl_spark.operators.dedup import q53_shingle_neardup
 from wikipediaetl_spark.sources import load_table
 
@@ -46,9 +47,10 @@ def q75_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     and identical on both engines. Envelope: cents < 9.2e8 and orderkey
     < 1e10 fit BIGINT with no collision."""
     o = _t(spark, sf_dir, "orders")
-    rank = F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long") * F.lit(
-        10_000_000_000
-    ) + F.col("o_orderkey")
+    rank = (
+        scaled_long(F.col("o_totalprice"), 100) * F.lit(10_000_000_000)
+        + F.col("o_orderkey")
+    )
     return o.groupBy("o_custkey").agg(
         F.max_by("o_orderkey", rank).alias("best_order"),
         F.min_by("o_orderkey", rank).alias("worst_order"),
@@ -72,24 +74,18 @@ def q76_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     several predicated accumulators.
 
     r12 (the q32/q108 finding): the predicated money accumulator folds
-    exact BIGINT cents (floor(x·100+0.5), lossless 2-decimal money) in
-    whole-stage codegen instead of per-row DECIMAL(18,2); the exact
-    decimal /100 → double runs once per output row. Per-custkey totals
-    (~40 orders × ≤5.6e7 cents) are nowhere near 2⁶³; ANSI raises, never
-    wraps. Within-run A/B at 400× (tools/exp_decfold_wave.py):
+    exact cents (``functions/fixedpoint.py``) in whole-stage codegen
+    instead of per-row DECIMAL(18,2); the unscale runs once per output
+    row. Per-custkey totals (~40 orders × ≤5.6e7 cents) are nowhere near
+    2⁶³. Within-run A/B at 400× (tools/exp_decfold_wave.py):
     1.45 → 0.88 s (1.64×), values identical."""
     o = _t(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = scaled_long(F.col("o_totalprice"), 100)
     return o.groupBy("o_custkey").agg(
         F.count_if(F.col("o_orderstatus") == "O").alias("n_open"),
         F.count_if(F.col("o_orderstatus") == "F").alias("n_finished"),
         F.coalesce(
-            (
-                F.sum(F.when(F.col("o_orderpriority") == "1-URGENT", cents)).cast(
-                    "decimal(38,0)"
-                )
-                / 100
-            ).cast("double"),
+            unscale(F.sum(F.when(F.col("o_orderpriority") == "1-URGENT", cents)), 100),
             F.lit(0.0),
         ).alias("urgent_spend"),
     )
@@ -230,12 +226,11 @@ def q81_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "salt")
         .agg(
             F.count(F.lit(1)).alias("pc"),
-            # r12 (q32/q108 finding): fold exact BIGINT cents in codegen,
-            # not per-row DECIMAL(18,2); partials re-sum as decimal above
-            # the broadcast join with one exact /100 → double. Within-run
-            # A/B at 400× (tools/exp_decfold_wave.py): 3.31 → 1.92 s
-            # (1.72×), values identical.
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias("pv"),
+            # r12 (q32/q108 finding): fold exact cents in codegen, not
+            # per-row DECIMAL(18,2); partials combine above the broadcast
+            # join. Within-run A/B at 400× (tools/exp_decfold_wave.py):
+            # 3.31 → 1.92 s (1.72×), values identical.
+            F.sum(scaled_long(F.col("value"), 100)).alias("pv"),
         )
     )
     dim = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).select(
@@ -246,9 +241,7 @@ def q81_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(
             F.sum("pc").alias("n_events"),
-            (F.sum(F.col("pv").cast("decimal(38,0)")) / 100)
-            .cast("double")
-            .alias("total_value"),
+            sum_unscaled(F.col("pv"), 100).alias("total_value"),
         )
     )
 
@@ -1294,9 +1287,9 @@ def q108_exact_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     r12 (the big one — guide §1.2 "per-task work"): the r11 form ran the
     five moment sums as per-row DECIMAL(38,0) multiplies + accumulates —
     BigDecimal object arithmetic on every one of 240M rows, measured at
-    87-90% of the query's wall (tools/exp_q108_floor.py: full 12.7 s vs
-    scan+quantize floor 1.2-1.4 s at 400×; the r11 "per-row quantization
-    floor" pin was wrong — quantization is ~free, the decimal ops were
+    87-90% of the query's wall (tools/exp_q108_floor.py: the scan+quantize
+    floor was 12-14% of it at 400×; the r11 "per-row quantization floor"
+    pin was wrong — quantization is ~free, the decimal ops were
     the wall). Now every per-row product runs in LONG inside whole-stage
     codegen: partials accumulate per (l_returnflag, spark_partition_id())
     — the q12/q81 salted-partials pattern, bounding each partial at the
@@ -1310,11 +1303,11 @@ def q108_exact_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal. Exactness unchanged: ring homomorphism — the decimal
     recombination 2²⁶·Σyh² + 2¹⁴·Σyh·yl + Σyl² equals Σy² exactly, and
     partial sums are associative; ANSI still turns any bound breach into
-    an error, never a wrong answer. Measured within-run at 400×: 12.7 →
-    2.07 s (6.2×), values bit-identical."""
+    an error, never a wrong answer. Measured within-run at 400×: 9.16 →
+    1.76 s (5.2×), values bit-identical."""
     li = _t(spark, sf_dir, "lineitem")
-    cx = F.floor(F.col("l_quantity") * 100 + F.lit(0.5)).cast("long")
-    cy = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
+    cx = scaled_long(F.col("l_quantity"), 100)
+    cy = scaled_long(F.col("l_extendedprice"), 100)
     c = li.select("l_returnflag", cx.alias("x"), cy.alias("y"))
     d = lambda col: F.col(col).cast("decimal(38,0)")
     yh = (F.col("y") / 8192).cast("long")

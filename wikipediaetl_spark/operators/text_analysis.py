@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from wikipediaetl_spark.catalog import query
+from wikipediaetl_spark.functions.fixedpoint import scaled_long
 from wikipediaetl_spark.sources import load_table
 
 # Tiny per-language marker lexicons (heuristic n-gram/stopword lang-ID; the
@@ -218,9 +219,10 @@ def q67_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = toks.groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df = toks.groupBy("tok").agg(F.countDistinct("lang").alias("df"))
     n_langs = toks.select(F.countDistinct("lang").alias("n_langs"))
-    tfidf = F.floor(
-        F.col("tf") * F.log(F.col("n_langs") * 1.0 / F.col("df")) * 1000000 + 0.5
-    ) / 1000000.0
+    tfidf = (
+        scaled_long(F.col("tf") * F.log(F.col("n_langs") * 1.0 / F.col("df")), 1_000_000)
+        / 1000000.0
+    )
     scored = (
         tf.join(F.broadcast(df), "tok")
         .crossJoin(F.broadcast(n_langs))
@@ -546,7 +548,7 @@ def unigram_lm(spark: SparkSession, sf_dir: str):
     full_counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     total_df = full_counts.agg(F.sum("cnt").alias("total"))
     vocab = full_counts.orderBy(F.col("cnt").desc(), F.col("tok")).limit(50_000)
-    micro = lambda p: F.floor(F.log(p) * 1_000_000 + F.lit(0.5)).cast("long")
+    micro = lambda p: scaled_long(F.log(p), 1_000_000)
     lp = vocab.crossJoin(F.broadcast(total_df)).select(
         "tok", micro(F.col("cnt") * 1.0 / F.col("total")).alias("lp")
     )
@@ -634,10 +636,8 @@ def q144_unigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation collapses them before the wire)."""
     perdoc = perdoc_logprob(spark, sf_dir)
     ppl = (
-        F.floor(
-            F.exp(-(F.col("sum_lp_micro") / 1_000_000.0) / F.col("n_tokens"))
-            * 1_000_000
-            + F.lit(0.5)
+        scaled_long(
+            F.exp(-(F.col("sum_lp_micro") / 1_000_000.0) / F.col("n_tokens")), 1_000_000
         )
         / 1_000_000.0
     )
@@ -918,13 +918,10 @@ def bm25_index_probe(
     # (probe ⋈ doclen measured 2.84 s of a 3.66 s serve). doclen exists for
     # the corpus scalars (N, total length) only.
     scored = probe.join(F.broadcast(dfs), "tok").crossJoin(F.broadcast(stats))
-    idf_u = F.floor(
-        F.log(
-            (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-        )
-        * 1e6
-        + 0.5
-    ).cast("long")
+    idf_u = scaled_long(
+        F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
+        1_000_000,
+    )
     ratio = (22.0 * F.col("tf") * F.col("total_len")) / (
         10.0 * F.col("tf") * F.col("total_len")
         + 3.0 * F.col("total_len")
@@ -932,7 +929,7 @@ def bm25_index_probe(
     )
     per_term = scored.select(
         "doc_id",
-        F.floor(idf_u.cast("double") * ratio + 0.5).cast("long").alias("st_u"),
+        scaled_long(idf_u.cast("double") * ratio, 1).alias("st_u"),
     )
     agg = per_term.groupBy("doc_id").agg(
         F.sum("st_u").cast("long").alias("score_micro")

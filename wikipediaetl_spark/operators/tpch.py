@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from wikipediaetl_spark.catalog import query
+from wikipediaetl_spark.functions.fixedpoint import scaled_long, sum_unscaled, unscale
 from wikipediaetl_spark.operators.relational import _t, dsum
 
 # Derived partsupp (see module docstring): (part, supplier) grain with a unit
@@ -265,9 +266,7 @@ def q124_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .hint("shuffle_hash")
     )
     li = _t(spark, sf_dir, "lineitem")
-    vu = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000 + F.lit(0.5)
-    ).cast("long")
+    vu = scaled_long(F.col("l_extendedprice") * (1 - F.col("l_discount")), 10_000)
     partial = (
         li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
@@ -282,8 +281,8 @@ def q124_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("vu").alias("pden"),
         )
     )
-    num = (F.sum(F.col("pnum").cast("decimal(38,0)")) / 10000).cast("double")
-    den = (F.sum(F.col("pden").cast("decimal(38,0)")) / 10000).cast("double")
+    num = sum_unscaled(F.col("pnum"), 10_000)
+    den = sum_unscaled(F.col("pden"), 10_000)
     return partial.groupBy("o_year").agg((num / den).alias("mkt_share"))
 
 
@@ -403,22 +402,19 @@ def q127_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast after the 1-row filter.
 
     r12 (the q32/q108 finding): the per-supplier revenue folds as exact
-    1e-4-unit LONGS (the q12 identity — 2+2-decimal money products lie on
-    the 1e-4 grid) instead of per-row DECIMAL(18,6); the exact decimal
-    /10000 → double runs at supplier grain. Per-supplier quarterly totals
-    (~25k lines × ≤1.05e9 units) are far under 2⁶³; ANSI raises, never
-    wraps. Within-run A/B at 400× (tools/exp_decfold_wave.py):
+    1e-4-unit LONGS (the q12 identity, ``functions/fixedpoint.py``)
+    instead of per-row DECIMAL(18,6); the unscale runs at supplier grain.
+    Per-supplier quarterly totals (~25k lines × ≤1.05e9 units) are far
+    under 2⁶³. Within-run A/B at 400× (tools/exp_decfold_wave.py):
     2.43 → 2.08 s (1.17×), values identical — modest: most of this query's
     wall is the pushed-filter scan, as the r11 codegen-floor pin said."""
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
     )
-    vu = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000 + F.lit(0.5)
-    ).cast("long")
+    vu = scaled_long(F.col("l_extendedprice") * (1 - F.col("l_discount")), 10_000)
     rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        (F.sum(vu).cast("decimal(38,0)") / 10000).cast("double").alias("total_revenue")
+        unscale(F.sum(vu), 10_000).alias("total_revenue")
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wikipediaetl_spark.catalog import query
+from wikipediaetl_spark.functions.fixedpoint import scaled_long
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -605,9 +606,7 @@ def q164_stateful_stats_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events_stream(spark, sf_dir)
     agg = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias(
-            "total_cents"
-        ),
+        F.sum(scaled_long(F.col("value"), 100)).alias("total_cents"),
         F.max("value").alias("max_value"),
     )
     updates = _run_to_completion(agg, "update", _state_partitions(sf_dir))

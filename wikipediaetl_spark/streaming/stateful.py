@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
+from wikipediaetl_spark.functions.fixedpoint import scaled_long_np
+
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -125,7 +127,7 @@ def _update_exact(
     for pdf in batches:
         v = pdf["value"].to_numpy()
         n += v.size
-        cents += int(np.floor(v * 100 + 0.5).astype("int64").sum())
+        cents += int(scaled_long_np(v, 100).sum())
         m = v.max()
         if m > mx:
             mx = float(m)
@@ -193,7 +195,7 @@ def _update_exact_sharded(
     pdfs = list(batches)
     u = np.concatenate([p["user_id"].to_numpy() for p in pdfs])
     val = np.concatenate([p["value"].to_numpy() for p in pdfs])
-    cents_in = np.floor(val * 100 + 0.5).astype("int64")
+    cents_in = scaled_long_np(val, 100)
     order = np.argsort(u, kind="stable")
     u, val, cents_in = u[order], val[order], cents_in[order]
     uniq, starts = np.unique(u, return_index=True)
