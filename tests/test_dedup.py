@@ -656,8 +656,8 @@ def test_connected_components_shallow_graph_converges_before_doubling(spark):
 
 
 def test_connected_components_hop_start_zero_matches_adaptive(spark):
-    """The hop_start=0 arm (r11 always-double behavior, kept as the A/B
-    baseline in tools/exp_cc_adaptive.py) and the adaptive default produce
+    """The hop_start=0 arm (r11 always-double behavior, the A/B
+    baseline recorded in OPTIMIZATION_r12.md) and the adaptive default produce
     identical labelings on a mixed shallow+deep graph."""
     from wikipediaetl_spark.operators.relational_ext import connected_components
 

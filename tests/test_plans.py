@@ -884,7 +884,7 @@ def test_q108_moments_accumulate_long_below_decimal_combine(spark, sf_dir):
     """r12 adopted wave (VERDICT r11 #7): the five moment components must
     accumulate as LONGs inside whole-stage codegen at the fact grain — the
     r11 per-row DECIMAL(38,0) products/sums were 87-90% of q108's wall
-    (tools/exp_q108_floor.py). Decimal arithmetic may only appear at and
+    (OPTIMIZATION_r12.md). Decimal arithmetic may only appear at and
     above the (l_returnflag, spark_partition_id) partial-combine grain
     (~|tasks|·3 rows). Tree printout: parents before children, so nothing
     at or below the LAST pair-grain HashAggregate may mention decimal."""

@@ -26,9 +26,10 @@ Three jobs, all about keeping the canonical artifact self-documenting:
 from __future__ import annotations
 
 import json
+import os
 import statistics
 
-PATH = "/root/repo/BENCH_SCALE_400x.json"
+PATH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH_SCALE_400x.json")
 
 CAP_NOTES = {
     "q52_token_jaccard": (
@@ -124,7 +125,7 @@ EXCLUDED_LEGEND = {
         "doc replication makes every replica an exact near-dup of its base, "
         "so doc-level pair output grows as FACTOR^2 — adversarial, not "
         "representative; scale stories are structural (plan-asserted O(batch) "
-        "maintenance) or fp-level side experiments (exp_simhash_wide)"
+        "maintenance) or fp-level side experiments (BENCH_SIMHASH_WIDE.json)"
     ),
     "no-oracle": "rows-only native: no DuckDB comparator to time",
     "complete-mode-harness-shape": (

@@ -126,13 +126,13 @@ QUERIES = [
     # absorbs a replica-heavy crawl. q169 stays excluded: its DOC-level
     # pair output under replication is the q83 quadratic worst case (each
     # base near-dup pair explodes into 400x400 doc pairs); its scale
-    # witness is the fp-level candidate count in tools/exp_simhash_wide.py.
+    # witness is the fp-level candidate count in BENCH_SIMHASH_WIDE.json.
     # q174 (r8) is excluded for the same reason: its output IS q150's
     # doc-level pair set, quadratic under replication; its scale story is
     # structural (O(batch) signatures + append + one bucket-join probe)
     # and its correctness story is the hash-match against q150's oracle.
     # r9 maintained structures: q176's 400x row lives in
-    # BENCH_BUCKETED_400x.json (tools/exp_q176.py — serve 0.48x, the
+    # BENCH_BUCKETED_400x.json (BENCH_NOTES.md r9 q176 — serve 0.48x, the
     # serving-ladder artifact where all rungs are recorded); q177 is
     # excluded because embeddings is copied unchanged (the q57
     # scale-invariant-input caveat); q178's scaled behavior is q51's

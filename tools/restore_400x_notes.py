@@ -7,9 +7,11 @@ adjudication_note on q116) vanish on refresh. Those notes are epoch-free
 text — they describe what the row measures, not a number — so restoring the
 git-HEAD text verbatim is correct. cap_note/one_shot_note are handled by
 tools/annotate_scale_400x.py; amortized rows are rebuilt in-run by
-bench_scale._attach_amortized. serve_* fields are NOT restored here: rows
-carrying them are excluded from refresh tranches entirely (see
-tools/run_scale_refresh_r11c.sh header).
+bench_scale._attach_amortized. serve_* fields are NOT restored here: a
+refresh tranche must leave out every row that carries serve_* fields (the
+serving rows measured by side harnesses into BENCH_*_SERVING.json).
+Refreshing only such a row's build-inclusive number would put two epochs
+inside one row.
 
 Usage: python tools/restore_400x_notes.py <snapshot.json>
 where snapshot.json is the pre-refresh artifact (e.g. `git show
@@ -19,9 +21,10 @@ HEAD:BENCH_SCALE_400x.json > /tmp/snap.json`).
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-PATH = "/root/repo/BENCH_SCALE_400x.json"
+PATH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH_SCALE_400x.json")
 RESTORE_FIELDS = ("build_note", "adjudication_note")
 
 

@@ -1022,7 +1022,7 @@ def simhash_wide_pairs(
     bucket occupancy sub-linear on 1e9-doc corpora (16-bit bands put mean
     occupancy at n/2^16 per band value vs n/2^8 for q152; the candidate
     stage shrinks ~2^8× on diffuse corpora, measured in
-    tools/exp_simhash_wide.py)."""
+    BENCH_SIMHASH_WIDE.json)."""
     band_bits = bits // n_bands
     max_hamming = n_bands - 1
     assert bits % n_bands == 0 and band_bits <= 31 and bits <= 128
@@ -1121,7 +1121,7 @@ def q169_simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     chances) — the wide form trades recall-at-32-bit-distance for a
     narrower candidate stage.
 
-    Measured (tools/exp_simhash_wide.py at 400×, BENCH_SIMHASH_WIDE.json):
+    Measured (at 400×, BENCH_SIMHASH_WIDE.json):
     candidate fp pairs 1,012,958 → 487,127 (2.1×) and surviving pairs
     59,329 → 11,073 (5.4×), while the vote stage costs 1.5× more (39.2 →
     58.1 s wall — 64 md5-nibble votes per token vs 32). On THIS fixture the
@@ -1129,7 +1129,7 @@ def q169_simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupancy is set by real near-dup structure, not hash collisions — the
     full ~2^8× candidate shrink needs a diffuse corpus with n ≫ 2^16 fps
     (the 1e9-doc regime). That regime is now DEMONSTRATED (r9,
-    exp_simhash_wide.py --diffuse; BENCH_SIMHASH_WIDE.json "diffuse"): a
+    BENCH_SIMHASH_WIDE.json "diffuse"): a
     synthesized 1M-doc high-entropy corpus (distinct fps ≈ 1M ≫ 2^16)
     saturates all 256 8-bit buckets at ~3,906 fps each — candidate stage
     7.81e9 pairs, unmaterializable — while the 16-bit bands hold ~15.3

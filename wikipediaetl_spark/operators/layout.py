@@ -989,8 +989,8 @@ def q170_priority_rollup_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     line-grain ingest batches (max of partial maxes; exercised here by
     building from ~90% of lines and merging the rest through
     merge_batch_into_keyed_rollup). The per-query max-aggregate form of
-    this rewrite measured NEGATIVE at 400× (tools/exp_q116_q135.py, pinned
-    in BENCH_NOTES) — paying the aggregation per query costs more than the
+    this rewrite measured NEGATIVE at 400× (pinned in BENCH_NOTES,
+    r7 TPC-H third wave) — paying the aggregation per query costs more than the
     semi-join it replaces; paying it ONCE at ingest is the version that
     wins, exactly the q167 lesson. Serve plan: 3-month orders filter
     (3.8% selectivity) joins the bucketed |orders|-grain rollup — the

@@ -440,7 +440,7 @@ def q88_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
       starts with a space and neither pattern can match a space, so no
       match spans the boundary; '[EMAIL]' introduces no digits, so the
       phone pass composes per-half too.
-    Measured within-run at 400× (tools/exp_regex_gate.py): the body's gate
+    Measured within-run at 400× (OPTIMIZATION_r12.md): the body's gate
     hit-rate is 0% on the fixture (no '@', no digits in document text), so
     the body pays two substring scans instead of two full regex wallks."""
     d = load_table(spark, sf_dir, "documents")

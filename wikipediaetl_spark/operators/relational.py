@@ -343,7 +343,7 @@ def q10_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical fold, measured. Money now folds as exact cents in partials
     salted by spark_partition_id() (``functions/fixedpoint.py``). The
     Expand now consumes |tasks|·15 rows instead of 15 — still nothing.
-    Within-run A/B at 400× (tools/exp_decfold_wave.py): 3.07 → 1.45 s
+    Within-run A/B at 400× (OPTIMIZATION_r12.md): 3.07 → 1.45 s
     (2.12×), values identical."""
     o = _t(spark, sf_dir, "orders")
     cents = scaled_long(F.col("o_totalprice"), 100)
@@ -448,8 +448,8 @@ def q12_fact_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``functions/fixedpoint.py``): extendedprice/discount carry ≤2+2
     decimal digits, so the product lies on the 1e-4 grid and the long ·100
     equals the oracle's CAST(v AS DECIMAL(18,6)) micros term-by-term
-    (asserted bit-exact vs the decimal plan at 400×, tools/exp_q12.py
-    check_longsum). The join stage then folds longs in whole-stage codegen
+    (asserted bit-exact vs the decimal plan at 400×, BENCH_NOTES.md r5
+    q12). The join stage then folds longs in whole-stage codegen
     — profiled 245 s → 115 s of task time at 400× (the decimal accumulator
     was HALF the join stage) — and the shuffle carries an integer column
     that compresses 14% tighter than the double. Partials group by
@@ -510,7 +510,7 @@ def q13_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact because (c_custkey, c_name) is functionally dependent on the join
     key and count(o_orderkey) == per-custkey count(*) (o_orderkey is never
     null); zero-order customers surface as null partials → coalesce to 0.
-    Within-run A/B at 400× (tools/exp_q13_q15.py): 4.3–4.7 s → 2.2–2.4 s,
+    Within-run A/B at 400× (BENCH_NOTES.md r11 q13/q15): 4.3–4.7 s → 2.2–2.4 s,
     value-identical.
 
     r12 (the q32/q108 finding — per-row decimal folds, not scans, are the
@@ -518,7 +518,7 @@ def q13_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``functions/fixedpoint.py``); per-custkey totals are bounded by a
     customer's order count (~10-40 × ≤5.6e7 cents, nowhere near 2⁶³), and
     the unscale happens on the ~|customer| aggregate rows above the join.
-    Within-run A/B at 400× (tools/exp_q13_cents.py, noop sink):
+    Within-run A/B at 400× (OPTIMIZATION_r12.md, noop sink):
     2.35 → 0.84 s (2.78×), values identical."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
@@ -571,7 +571,7 @@ def q15_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_custkey, so orders pre-distincts to ≤|customer| keys (map-side
     partial distinct) and the anti-join build side broadcasts instead of
     shuffling the 60M-row fact. Within-run A/B at 400×
-    (tools/exp_q13_q15.py): 2.6 s → 0.8 s, value-identical.
+    (BENCH_NOTES.md r11 q13/q15): 2.6 s → 0.8 s, value-identical.
     """
     c = _t(spark, sf_dir, "customer")
     ok = _t(spark, sf_dir, "orders").select("o_custkey").distinct()
@@ -646,7 +646,7 @@ def q18_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r12 (the q32/q108 finding): revenue folds as exact cents in partials
     salted by spark_partition_id() (``functions/fixedpoint.py``). Within-run
-    A/B at 400× (tools/exp_decfold_wave.py): 2.01 → 0.88 s (2.27×), values
+    A/B at 400× (OPTIMIZATION_r12.md): 2.01 → 0.88 s (2.27×), values
     identical."""
     o = _t(spark, sf_dir, "orders")
     bands = spark.createDataFrame(PRICE_BANDS, "band string, lo double, hi double")
@@ -1017,7 +1017,7 @@ def q32_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsing parity with categorizer.py:116's '%d %B %Y' handled in etl.py).
 
     r12: the r11 "scan floor" pin was wrong — decomposed at 400×
-    (tools/exp_q32_decfold.py), the per-row decimal cast+accumulate was
+    (OPTIMIZATION_r12.md), the per-row decimal cast+accumulate was
     64% of wall (stock 2.24 s vs 0.80 s with a double sum on the same
     plan). Money now folds as exact cents in salted partials per (year,
     month, spark_partition_id()) (``functions/fixedpoint.py``). Measured
@@ -1353,7 +1353,7 @@ def q66_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cents salted by spark_partition_id() instead of per-row
     DECIMAL(18,2); the SQL combine spells ``sum_unscaled``
     (``functions/fixedpoint.py``). Within-run A/B at 400×
-    (tools/exp_decfold_wave.py): 2.39 → 0.95 s (2.51×), values identical."""
+    (OPTIMIZATION_r12.md): 2.39 → 0.95 s (2.51×), values identical."""
     o = _t(spark, sf_dir, "orders")
     cents = scaled_long(F.col("o_totalprice"), 100)
     o.select(

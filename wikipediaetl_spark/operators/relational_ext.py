@@ -77,7 +77,7 @@ def q76_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cents (``functions/fixedpoint.py``) in whole-stage codegen
     instead of per-row DECIMAL(18,2); the unscale runs once per output
     row. Per-custkey totals (~40 orders × ≤5.6e7 cents) are nowhere near
-    2⁶³. Within-run A/B at 400× (tools/exp_decfold_wave.py):
+    2⁶³. Within-run A/B at 400× (OPTIMIZATION_r12.md):
     1.45 → 0.88 s (1.64×), values identical."""
     o = _t(spark, sf_dir, "orders")
     cents = scaled_long(F.col("o_totalprice"), 100)
@@ -209,7 +209,7 @@ def q81_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     move, and the dim join is broadcast. Result identity with the unsalted
     plain-join plan is the correctness obligation.
 
-    Two rejected shapes, both measured at 400x (tools/exp_q81.py): the
+    Two rejected shapes, both measured at 400x (BENCH_NOTES.md r11 q81): the
     exploded-dim salted SHUFFLE join (the textbook demo — ~5.5 s vs ~3.4 s
     here, it shuffles all 40M fact rows), and a per-row xxhash64 salt
     (~flat vs stock: it multiplies the partial-agg group count x8, ~4.8M
@@ -228,7 +228,7 @@ def q81_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("pc"),
             # r12 (q32/q108 finding): fold exact cents in codegen, not
             # per-row DECIMAL(18,2); partials combine above the broadcast
-            # join. Within-run A/B at 400× (tools/exp_decfold_wave.py):
+            # join. Within-run A/B at 400× (OPTIMIZATION_r12.md):
             # 3.31 → 1.92 s (1.72×), values identical.
             F.sum(scaled_long(F.col("value"), 100)).alias("pv"),
         )
@@ -310,7 +310,7 @@ def connected_components(
     therefore propagate only (shallow graphs converge here and never pay
     the hop); rounds ≥ ``hop_start`` fuse the hop back in, preserving the
     O(log diameter) bound for deep chains. ``hop_start=0`` reproduces the
-    r11 always-double behavior (the A/B arm in tools/exp_cc_adaptive.py).
+    r11 always-double behavior (the A/B baseline in OPTIMIZATION_r12.md).
     Same driver-loop-of-micro-batches shape as the crawler BFS
     (streaming/crawler.py)."""
     spark = pairs.sparkSession
@@ -1287,7 +1287,7 @@ def q108_exact_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     r12 (the big one — guide §1.2 "per-task work"): the r11 form ran the
     five moment sums as per-row DECIMAL(38,0) multiplies + accumulates —
     BigDecimal object arithmetic on every one of 240M rows, measured at
-    87-90% of the query's wall (tools/exp_q108_floor.py: the scan+quantize
+    87-90% of the query's wall (OPTIMIZATION_r12.md: the scan+quantize
     floor was 12-14% of it at 400×; the r11 "per-row quantization floor"
     pin was wrong — quantization is ~free, the decimal ops were
     the wall). Now every per-row product runs in LONG inside whole-stage

@@ -526,7 +526,7 @@ def perdoc_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism-starved, so the extra exchange was pure cost. The two
     corpus passes (vocab count, then score) are inherent to train-then-
     score; a (doc_id, tok) term-frequency grain that would share one
-    explode measured 2-3× WORSE (tools/exp_q159.py) because the pair-grain
+    explode measured 2-3× WORSE (BENCH_NOTES.md r5 q159) because the pair-grain
     shuffle dwarfs the explode saving."""
     d = load_table(spark, sf_dir, "documents")
     lp, oov = unigram_lm(spark, sf_dir)

@@ -405,7 +405,7 @@ def q127_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e-4-unit LONGS (the q12 identity, ``functions/fixedpoint.py``)
     instead of per-row DECIMAL(18,6); the unscale runs at supplier grain.
     Per-supplier quarterly totals (~25k lines × ≤1.05e9 units) are far
-    under 2⁶³. Within-run A/B at 400× (tools/exp_decfold_wave.py):
+    under 2⁶³. Within-run A/B at 400× (OPTIMIZATION_r12.md):
     2.43 → 2.08 s (1.17×), values identical — modest: most of this query's
     wall is the pushed-filter scan, as the r11 codegen-floor pin said."""
     li = _t(spark, sf_dir, "lineitem").filter(
@@ -830,7 +830,7 @@ def q135_shipping_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench session's 32MB splits — with enough scan tasks the raw-line
     shuffle is already overlapped and the pre-agg's extra hash pass
     dominates. Plan choices must be measured under the target session
-    config, not a default one (tools/exp_q116_q135.py). Broadcasting the
+    config, not a default one (BENCH_NOTES.md, r7 TPC-H third wave). Broadcasting the
     pre-aggregate measured 10.9 s either way (driver build cost) — the
     q133 lesson repeats."""
     li = _with_transport(_t(spark, sf_dir, "lineitem")).filter(
@@ -886,7 +886,7 @@ def q136_parts_supplier_relationship(spark: SparkSession, sf_dir: str) -> DataFr
     single remaining exchange is Spark's two-phase distinct aggregate on
     the (brand, type, size, suppkey) expanded key — map-side partial dedup
     collapses the fact stream to near-|distinct| before bytes move.
-    Measured at 400× (same-session A/B, tools/exp_q136_q130.py): old plan
+    Measured at 400× (same-session A/B, BENCH_NOTES.md r9 q136): old plan
     3.411 s → new 2.07 s, 9.27× → 5.62× on a 2.3×-slow epoch (q01 canary
     0.994 s vs r8's 0.428); epoch-normalized ≈0.9 s ≈ 2× vs the r8
     denominator."""

@@ -79,7 +79,7 @@ def get_spark(
         # flat-to-better (14.25→13.91 s within-run). At 100 TB inputs
         # bytesPerCore ≫ 4MB so the floor is inert — this is the
         # small-input end of scale-adaptive split sizing, not a local
-        # tuning knob (tools/exp_scan_splits.py).
+        # tuning knob (OPTIMIZATION_r12.md).
         .config("spark.sql.files.openCostInBytes", str(128 * 1024))
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config(

@@ -305,7 +305,7 @@ def q100_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     2.8-3.1 s/batch with ~2M state rows added AND evicted per batch
     (BENCH_STREAM_AMORTIZE.json); the one-shot catalog ratio is therefore
     first-batch machinery, not dataflow cost. Batch-0 decomposed
-    (VERDICT r6 #3, tools/exp_batch0.py → BENCH_STREAM_BATCH0.json): cold
+    (VERDICT r6 #3, BENCH_STREAM_BATCH0.json): cold
     JVM batch-0 is 6.9 s, but rerunning the SAME flow on the warmed JVM
     (fresh checkpoint + state store, so all per-QUERY costs repay) gives
     batch-0 = 3.3-3.4 s ≈ 1.1-1.2× steady — the entire gap is one-time
@@ -313,8 +313,8 @@ def q100_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.76 s → 0.3 s), which a long-lived executor amortizes over its
     lifetime; irreducible per-query bootstrap (offset WAL, state-store
     instances) is the remaining ~0.4 s. RocksDB state store (VERDICT r7 #3
-    alternative) measured NEGATIVE in this regime (tools/
-    exp_rocksdb_state.py → BENCH_ROCKSDB_STATE.json, interleaved
+    alternative) measured NEGATIVE in this regime
+    (BENCH_ROCKSDB_STATE.json, interleaved
     same-session A/B): steady 7.0-8.3 s/batch vs 4.0-4.7 s HDFS-backed —
     the ~2M-row state fits in heap, so RocksDB's native-store
     serialization only adds cost; it is the right provider when state
@@ -555,7 +555,7 @@ def q149_stateful_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys hold their users' triples as sorted arrays, folded with vectorized
     numpy; emitted update rows are identical. Measured at 400×: 39.0 s →
     5.5 s warm (~9.5× vs DuckDB, from 48×; conf-only levers stopped at
-    28 s — arrow.maxRecordsPerBatch sweep in tools/exp_q149.py). The
+    28 s — arrow.maxRecordsPerBatch sweep in BENCH_NOTES.md, r6 q149). The
     per-user-key form is kept as ``running_user_stats_exact`` for workloads
     needing per-key timeouts/eviction."""
     from pyspark.sql import Window as W

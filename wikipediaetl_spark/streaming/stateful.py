@@ -104,7 +104,7 @@ EXACT_STATE_SCHEMA = T.StructType(
 # its constant costs multiply by key cardinality. The dict-of-lists
 # pd.DataFrame constructor measures 365 µs; copying a prebuilt one-row
 # frame and writing cells via .iat is 65 µs (5.6×) — at 100k+ keys per
-# batch that constructor WAS the operator (measured r6, tools/exp_q149.py).
+# batch that constructor WAS the operator (measured r6, BENCH_NOTES.md q149).
 _EXACT_OUT_TMPL = pd.DataFrame(
     {"user_id": [0], "n_events": [0], "total_cents": [0], "max_value": [0.0]}
 )
@@ -264,8 +264,8 @@ def running_user_stats_exact_sharded(
     Total ≈ a·S + b·U/S, minimized at S* ≈ sqrt(b/a)·sqrt(U); in practice
     the curve is FLAT near the optimum, so target ~100-500 users/shard
     and round to a power of two: U=800k → S=4096 (195 users/shard ≈ 6 KB
-    state/row). MEASURED at the 400× fixture (tools/exp_q149.py shards
-    mode, 800k users, 40M rows, best-of-2): S=512 → 6.15 s, S=4096 →
+    state/row). MEASURED at the 400× fixture (BENCH_NOTES.md r6 q149,
+    800k users, 40M rows, best-of-2): S=512 → 6.15 s, S=4096 →
     4.94 s, S=32768 → 7.38 s — ±8× around the rule's choice costs ≤1.5×,
     the wrong EXTREMES cost the operator (S=U degenerates to the 39 s
     per-user form; S≲cores loses all parallelism and makes shard state
