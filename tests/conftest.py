@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -21,3 +22,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn)`` runs ``fn`` under a fresh job group and returns
+    ``(fn's result, number of Spark jobs it launched)``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -28,6 +28,7 @@ def test_conf_arms_that_cannot_change_values_agree(spark, sf_dir):
     for arm in (p2, p4):
         assert arm["jobs"] > 0 and arm["stages"] > 0 and arm["tasks"] > 0
         assert len(arm["times_s"]) == 2 and arm["median_s"] > 0
+        assert arm["warmup_s"] > 0  # still recorded after the untimed settle round
     assert set(out["canary_q01_sec"]) == {"start", "end"}
     assert spark.conf.get(SHUFFLE) == before  # restored
 

@@ -3,6 +3,7 @@ determinism and Hamming locality, exact-dedup key uniqueness."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from wikipediaetl_spark.operators.dedup import (
@@ -667,3 +668,35 @@ def test_connected_components_hop_start_zero_matches_adaptive(spark):
     always = sorted(map(tuple, connected_components(pairs, hop_start=0).collect()))
     assert adaptive == always
     assert all(c == 0 for n, c in adaptive if n <= 24)
+
+
+def test_connected_components_runs_one_job_per_checkpoint(spark, jobs_of, monkeypatch):
+    """The per-round stability check rides the round's eager checkpoint (an
+    Observation), so the loop launches exactly one job per checkpoint —
+    none for the check. Same star graph as the shallow-graph test."""
+    from wikipediaetl_spark.operators.relational_ext import connected_components
+
+    pairs = spark.createDataFrame(
+        [(0, i) for i in range(1, 8)] + [(100, 101)], "doc_a long, doc_b long"
+    )
+    cls, checkpoints = type(pairs), []
+    real = cls.localCheckpoint
+
+    def counted(self, *args, **kwargs):
+        checkpoints.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", counted)
+    _, jobs = jobs_of(lambda: connected_components(pairs, max_rounds=3, hop_start=4))
+    assert len(checkpoints) >= 3  # edges, initial labels, >= 1 round
+    assert jobs == len(checkpoints)
+
+
+def test_connected_components_raises_when_not_converged(spark):
+    """Non-convergence raises instead of returning unconverged labels: one
+    round cannot settle a 60-node chain."""
+    from wikipediaetl_spark.operators.relational_ext import connected_components
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(59)], "doc_a long, doc_b long")
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(pairs, max_rounds=1)

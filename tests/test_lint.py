@@ -154,3 +154,54 @@ def test_half_up_quantizers_live_only_in_fixedpoint():
             ):
                 hits.append(f"{path.relative_to(REPO_ROOT)}:{node.lineno}")
     assert hits == [], hits
+
+
+# (module under wikipediaetl_spark/, innermost enclosing function or None
+# for the whole module) -> why a schema-inferring parquet read belongs there
+INFERRED_PARQUET_READS_ALLOWED = {
+    ("sources/tables.py", "_inferred_schema_json"): "the schema memo's own inference on a miss",
+    ("sources/tables.py", "parquet_schema"): "a path os.stat cannot fingerprint (remote URI) is inferred per call",
+    ("sources/maintenance.py", None): "compaction and incremental ingest rewrite or grow the tables they read",
+    ("sources/formats.py", "archive_processed"): "one read per archive run of a landing table the caller rewrites",
+    ("operators/layout.py", "_materialize_merged"): "read-back of a staging directory written just before",
+    ("operators/layout.py", "_read_layout"): "read-back of a partitioned layout; its empty-table fallback relies on the inferring read failing",
+}
+
+
+def inferred_parquet_reads(pkg: Path) -> list[str]:
+    """``path:line`` of every ``spark.read....parquet(...)`` call under
+    ``pkg`` with no ``.schema(...)`` in the chain, minus the allowlist."""
+    hits = []
+
+    def visit(node: ast.AST, rel: str, fn: str | None) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+        ):
+            chain, cur = [], node.func.value
+            while isinstance(cur, (ast.Call, ast.Attribute)):
+                if isinstance(cur, ast.Call):
+                    cur = cur.func
+                else:
+                    chain.append(cur.attr)
+                    cur = cur.value
+            allowed = {(rel, fn), (rel, None)} & INFERRED_PARQUET_READS_ALLOWED.keys()
+            if "read" in chain and "schema" not in chain and not allowed:
+                hits.append(f"{rel}:{node.lineno}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, fn)
+
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        visit(ast.parse(path.read_text(), filename=str(path)), rel, None)
+    return hits
+
+
+def test_parquet_reads_pass_a_schema():
+    """Plain ``spark.read.parquet`` runs a footer-reading inference job on
+    every call. Engine reads of fixture tables take their schema from
+    ``sources.parquet_schema`` (memoized per file version) instead."""
+    assert inferred_parquet_reads(REPO_ROOT / "wikipediaetl_spark") == []

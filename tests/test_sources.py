@@ -4,11 +4,15 @@ injected transport, and the end-to-end crawler."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from wikipediaetl_spark.sources import load_table, read_wholetext
+from wikipediaetl_spark.sources import TABLE_NAMES, load_table, parquet_schema, read_wholetext
 from wikipediaetl_spark.sources.formats import (
     archive_processed,
     read_csv,
@@ -27,6 +31,73 @@ DOC_SCHEMA = T.StructType(
         T.StructField("n_chars", T.LongType()),
     ]
 )
+
+
+@pytest.fixture(scope="module")
+def sf01_dir(sf_dir):
+    return str(Path(sf_dir).parent / "sf0.01")
+
+
+def test_load_table_infers_each_schema_once(spark, sf01_dir, jobs_of):
+    """A second scan of an unchanged table runs no schema-inference job."""
+    _, first = jobs_of(lambda: load_table(spark, sf01_dir, "orders"))
+    _, second = jobs_of(lambda: load_table(spark, sf01_dir, "orders"))
+    assert first <= 1 and second == 0
+
+
+def test_parquet_schema_equals_inferred_schema(spark, sf01_dir):
+    for name in TABLE_NAMES:
+        p = f"{sf01_dir}/{name}.parquet"
+        inferred = spark.read.parquet(p)
+        assert parquet_schema(spark, p) == inferred.schema, name
+        # load_table's normalizations applied to the inferred read
+        want = [
+            (c, "timestamp")
+            if t == "timestamp_ntz" or (name == "events" and c == "ts" and t == "bigint")
+            else (c, t)
+            for c, t in inferred.dtypes
+        ]
+        assert load_table(spark, sf01_dir, name).dtypes == want, name
+
+
+def test_rewritten_table_is_reinferred(spark, tmp_path):
+    """The memo never serves a stale schema: overwriting a Spark-written
+    directory table or replacing a single-file table is seen by the next
+    load_table."""
+    d = str(tmp_path)
+    orders = f"{d}/orders.parquet"
+    spark.range(3).write.parquet(orders)
+    assert load_table(spark, d, "orders").columns == ["id"]
+    spark.range(3).withColumn("b", F.lit("x")).write.mode("overwrite").parquet(orders)
+    got = load_table(spark, d, "orders")
+    assert got.columns == ["id", "b"]
+    assert sorted(map(tuple, got.collect())) == [(0, "x"), (1, "x"), (2, "x")]
+
+    region = f"{d}/region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0]}), region)
+    assert load_table(spark, d, "region").columns == ["r_regionkey"]
+    pq.write_table(pa.table({"r_regionkey": [0], "r_name": ["AFRICA"]}), region)
+    got = load_table(spark, d, "region")
+    assert got.columns == ["r_regionkey", "r_name"]
+    assert [tuple(r) for r in got.collect()] == [(0, "AFRICA")]
+
+
+def test_inference_confs_are_in_the_schema_memo_key(spark, tmp_path):
+    """TIMESTAMP(MICROS) with isAdjustedToUTC=false infers as NTZ or LTZ
+    depending on a session conf; the memo must not answer across it."""
+    p = str(tmp_path / "naive_ts.parquet")
+    pq.write_table(pa.table({"t": pa.array([0], pa.timestamp("us"))}), p)
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        ntz = parquet_schema(spark, p)
+        spark.conf.set(key, "false")
+        ltz = parquet_schema(spark, p)
+    finally:
+        spark.conf.set(key, before)
+    assert ntz["t"].dataType == T.TimestampNTZType()
+    assert ltz["t"].dataType == T.TimestampType()
 
 
 def test_json_roundtrip(spark, sf_dir, tmp_path):

@@ -12,8 +12,10 @@ DataFrame`` that stands in for the one query being compared. The rules:
   restored after the action and the checksum. A static or unknown conf
   raises ValueError before anything runs: it cannot differ between arms of
   one session.
-- Each arm is warmed up once; then ``pairs`` rounds run the arms in
-  alternating order (AB, BA, ...), all inside one session.
+- One untimed round first runs every arm in order, so that JVM warm-up
+  on a cold session lands on no arm's timings; then each arm is warmed up
+  once, and ``pairs`` rounds run the arms in alternating order (AB, BA,
+  ...), all inside one session.
 - Every rep rebuilds its DataFrame. Re-running one DataFrame reuses its
   shuffle files and times a different plan (OPTIMIZATION_r12.md). A rep's
   time covers the build (which may run jobs of its own) and the action.
@@ -161,6 +163,8 @@ def ab(spark, sf_dir: str, queries: list[str], arms: dict, pairs: int = 5, sink:
                     r["top_ops"], r["op_time_s"] = pm["top_ops"], pm["op_time_s"]
             return dt
 
+        for n in names:
+            rep(n, f"ab/{q}/{n}/settle")
         for n in names:
             res[n]["warmup_s"] = rep(n, f"ab/{q}/{n}/warmup")
             res[n]["times_s"] = []

@@ -11,7 +11,7 @@ Includes the two explicitly scale-motivated operators:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from wikipediaetl_spark.catalog import query
@@ -312,7 +312,11 @@ def connected_components(
     O(log diameter) bound for deep chains. ``hop_start=0`` reproduces the
     r11 always-double behavior (the A/B baseline in OPTIMIZATION_r12.md).
     Same driver-loop-of-micro-batches shape as the crawler BFS
-    (streaming/crawler.py)."""
+    (streaming/crawler.py).
+
+    Each round is ONE Spark job: the stability check (no node's label
+    moved) rides the round's eager checkpoint as an ``Observation``, so the
+    loop costs one job per checkpoint and none for the check."""
     spark = pairs.sparkSession
     # Materialize the pair list BEFORE pinning the loop confs: the upstream
     # pair generation (e.g. q53's shingle join) is the heavy stage and must
@@ -346,8 +350,9 @@ def connected_components(
             # with one fewer shuffle stage per round. The own row is
             # tagged so the aggregate ALSO carries the previous label
             # (min over the single tagged row) — the stability check then
-            # reads one checkpoint instead of joining two (r12: on tiny
-            # frontiers each removed per-round job is a fixed-cost win).
+            # compares two columns of one frame instead of joining two
+            # (r12: on tiny frontiers each removed per-round job is a
+            # fixed-cost win).
             neighbor_labels = edges.join(labels, edges.dst == labels.node).select(
                 F.col("src").alias("node"), "label", F.lit(False).alias("own")
             )
@@ -376,10 +381,15 @@ def connected_components(
                     ).alias("label"),
                     "prev",
                 )
-            new_labels = propagated.localCheckpoint(eager=True)
-            stable = new_labels.filter(F.col("label") != F.col("prev")).isEmpty()
+            # the stability check rides the checkpoint's own job: an
+            # Observation counts the nodes whose label moved as the round
+            # materializes, so the check costs no job of its own
+            moved = Observation()
+            new_labels = propagated.observe(
+                moved, F.count(F.when(F.col("label") != F.col("prev"), 1)).alias("n")
+            ).localCheckpoint(eager=True)
             labels = new_labels.select("node", "label")
-            if stable:
+            if moved.get["n"] == 0:
                 converged = True
                 break
         if not converged:

@@ -134,6 +134,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from wikipediaetl_spark.sources import parquet_schema
+
 # ---------------------------------------------------------------------------
 # Schema model: the driver-generated TPC-H-ish tables (TESTDATA.md).
 # Column prefixes are globally unique, so multi-table queries never collide.
@@ -611,9 +613,13 @@ class FuzzQuery:
                 for i, g in enumerate(self.group_by)]
 
     def spark_df(self, spark: SparkSession, sf_dir: str) -> DataFrame:
-        df = spark.read.parquet(f"{sf_dir}/{self.tables[0]}.parquet")
+        def read(t: str) -> DataFrame:
+            p = f"{sf_dir}/{t}.parquet"
+            return spark.read.schema(parquet_schema(spark, p)).parquet(p)
+
+        df = read(self.tables[0])
         for i, t in enumerate(self.tables[1:]):
-            right = spark.read.parquet(f"{sf_dir}/{t}.parquet")
+            right = read(t)
             lc, rc = self.join_on[i]
             cond = F.col(lc) == F.col(rc)
             extra = self.join_extra[i] if i < len(self.join_extra) else None
@@ -622,7 +628,7 @@ class FuzzQuery:
             df = df.join(right, on=cond, how=self.join_how[i])
         if self.derived_join is not None:
             sub_t, sk, agg_op, agg_col, oc, how, sub_where = self.derived_join
-            sub = spark.read.parquet(f"{sf_dir}/{sub_t}.parquet")
+            sub = read(sub_t)
             if sub_where is not None:
                 sub = sub.filter(to_spark(sub_where))
             if agg_op == "count_star":
@@ -635,7 +641,7 @@ class FuzzQuery:
             df = df.join(dj, on=F.col(oc) == F.col("__djk"), how=how)
         if self.select_scalar is not None:
             sub_t, oc, sk, agg_op, agg_col, sub_where = self.select_scalar
-            sub = spark.read.parquet(f"{sf_dir}/{sub_t}.parquet")
+            sub = read(sub_t)
             if sub_where is not None:
                 sub = sub.filter(to_spark(sub_where))
             if agg_op == "count_star":
@@ -654,14 +660,14 @@ class FuzzQuery:
             df = df.filter(to_spark(self.where))
         if self.exists_rel is not None:
             sub_t, oc, sc, sub_where, neg = self.exists_rel
-            sub = spark.read.parquet(f"{sf_dir}/{sub_t}.parquet")
+            sub = read(sub_t)
             if sub_where is not None:
                 sub = sub.filter(to_spark(sub_where))
             df = df.join(sub.select(sc), on=F.col(oc) == F.col(sc),
                          how="left_anti" if neg else "left_semi")
         if self.in_sub is not None:
             sub_t, oc, sc, neg, sub_where = self.in_sub
-            sub = spark.read.parquet(f"{sf_dir}/{sub_t}.parquet")
+            sub = read(sub_t)
             if sub_where is not None:
                 sub = sub.filter(to_spark(sub_where))
             if not neg:
@@ -688,7 +694,7 @@ class FuzzQuery:
                       .drop("__inv", "__incnt", "__innn"))
         if self.scalar_sub is not None:
             sub_t, agg_op, sc, k, cmp, outer, sub_where = self.scalar_sub
-            sub = spark.read.parquet(f"{sf_dir}/{sub_t}.parquet")
+            sub = read(sub_t)
             if sub_where is not None:
                 sub = sub.filter(to_spark(sub_where))
             scalar = sub.agg(

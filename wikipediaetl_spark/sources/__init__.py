@@ -2,6 +2,7 @@ from .tables import (
     TABLE_NAMES,
     load_table,
     load_tables,
+    parquet_schema,
     read_wholetext,
     register_views,
     spread_if_starved,
@@ -11,6 +12,7 @@ __all__ = [
     "TABLE_NAMES",
     "load_table",
     "load_tables",
+    "parquet_schema",
     "read_wholetext",
     "register_views",
     "spread_if_starved",

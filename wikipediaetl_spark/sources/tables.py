@@ -14,8 +14,13 @@ scan path.
 
 from __future__ import annotations
 
+import functools
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLE_NAMES = (
     "region",
@@ -31,9 +36,73 @@ TABLE_NAMES = (
 )
 
 
+# Session confs that change what parquet schema inference returns for the
+# same file; a memoized schema is only valid for the values it was inferred
+# under.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """``(size, mtime_ns)`` of a file; for a directory, the sorted
+    ``(relpath, size, mtime_ns)`` of every file under it (Spark's overwrite
+    writes part files under new names, so a rewrite changes the listing).
+    None when ``os.stat`` cannot see the path (a remote URI, a glob)."""
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return (st.st_size, st.st_mtime_ns)
+        entries = []
+        for dirpath, _dirnames, filenames in os.walk(path):
+            for fn in filenames:
+                full = os.path.join(dirpath, fn)
+                fst = os.stat(full)
+                entries.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+        return tuple(sorted(entries))
+    except OSError:
+        return None
+
+
+@functools.lru_cache(maxsize=256)
+def _inferred_schema_json(
+    spark: SparkSession, path: str, fingerprint: tuple, confs: tuple
+) -> str:
+    # JSON, not the StructType: every caller gets its own (mutable) copy.
+    # The session is part of the key, so a stopped one's entries are never
+    # reused; the cache holds at most 256 entries.
+    return spark.read.parquet(path).schema.json()
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """``spark.read.parquet(path).schema``, inferred once per file version.
+
+    Inference runs a footer-reading Spark job on every plain
+    ``spark.read.parquet`` call, even for an unchanged file. The memo key is
+    the resolved local path, its fingerprint (file: size and mtime_ns;
+    directory: the sorted relpath/size/mtime_ns of every file under it) and
+    the session's values of the confs that change inference
+    (``_SCHEMA_CONFS``), so a rewritten table or a flipped inference conf
+    infers afresh. A path ``os.stat`` cannot see (a remote URI) is inferred
+    on every call, as a plain read would."""
+    local = os.path.realpath(path)
+    fingerprint = _fingerprint(local)
+    if fingerprint is None:
+        return spark.read.parquet(path).schema
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    js = _inferred_schema_json(spark, local, fingerprint, confs)
+    return T.StructType.fromJson(json.loads(js))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one fixture table. Plain ``spark.read.parquet`` so Catalyst keeps
-    pushdown/pruning; no driver-side materialization.
+    """Scan one fixture table: a plain parquet scan, so Catalyst keeps
+    pushdown/pruning, on the schema ``parquet_schema`` memoizes. Schema
+    inference (one footer-reading job) runs once per memo key — resolved
+    path, file or directory fingerprint, inference-conf values — and a
+    rewritten table changes the key, so it is inferred afresh.
 
     The ``events`` fixture stores ``ts`` as parquet TIMESTAMP(NANOS), which
     Spark's vectorized reader only accepts as long (legacy nanosAsLong conf);
@@ -45,7 +114,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass  # immutable in this session → assume it was set at build time
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Fixtures may store timestamps as parquet TIMESTAMP(MICROS) with

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from wikipediaetl_spark.catalog import query
 from wikipediaetl_spark.functions.fixedpoint import scaled_long
+from wikipediaetl_spark.sources import parquet_schema
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -35,7 +36,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     # the file stream source requires a directory; glob-filter the one file
     stream = (
         spark.readStream.schema(raw_schema)
