@@ -9,8 +9,8 @@ surface shows up here without having been hand-enumerated.
 
 from __future__ import annotations
 
-import math
 import random
+import sys
 from pathlib import Path
 
 import duckdb
@@ -70,12 +70,14 @@ def _gen_predicate(rng: random.Random):
     return " ".join(sql_parts), spark_pred
 
 
-def _canon(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else f"{v:.9g}"
-    return str(v)
+def _canon_rows(rows) -> list[str]:
+    """Rows as an order-insensitive list of canonical strings, with the
+    oracle sweep's exact comparison (floats by ``repr``, not 9 digits)."""
+    if str(TOOLS_DIR) not in sys.path:
+        sys.path.insert(0, str(TOOLS_DIR))
+    from check_oracle import canon
+
+    return sorted("|".join(canon(v) for v in row) for row in rows)
 
 
 @pytest.fixture(scope="module")
@@ -97,9 +99,7 @@ def test_random_filter_aggregate(spark, ducks, seed):
              min(o_orderkey) AS mn, max(o_orderkey) AS mx
       FROM orders WHERE {sql_pred} GROUP BY {group}
     """
-    want = sorted(
-        "|".join(_canon(v) for v in row) for row in ducks.execute(sql).fetchall()
-    )
+    want = _canon_rows(ducks.execute(sql).fetchall())
 
     o = load_table(spark, SF, "orders")
     got_rows = (
@@ -113,7 +113,7 @@ def test_random_filter_aggregate(spark, ducks, seed):
         )
         .collect()
     )
-    got = sorted("|".join(_canon(v) for v in row) for row in got_rows)
+    got = _canon_rows(got_rows)
     assert got == want, f"divergence for predicate: {sql_pred}"
 
 
@@ -139,9 +139,7 @@ def test_random_join_shapes(spark, ducks, seed):
       FROM orders {sql_jt} rhs ON o_custkey = rhs.k
       GROUP BY o_orderstatus
     """
-    want = sorted(
-        "|".join(_canon(v) for v in row) for row in ducks.execute(sql).fetchall()
-    )
+    want = _canon_rows(ducks.execute(sql).fetchall())
 
     o = load_table(spark, SF, "orders")
     rhs = o.filter(spark_pred).select(F.col("o_custkey").alias("k"))
@@ -151,7 +149,7 @@ def test_random_join_shapes(spark, ducks, seed):
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     )
-    got = sorted("|".join(_canon(v) for v in row) for row in got_rows)
+    got = _canon_rows(got_rows)
     assert got == want, f"join divergence: {sql_jt} with predicate {sql_pred}"
 
 
@@ -190,9 +188,7 @@ def test_random_window_functions(spark, ducks, seed):
       FROM orders
       WINDOW w AS (PARTITION BY {part_sql} ORDER BY {order_sql})
     """
-    want = sorted(
-        "|".join(_canon(v) for v in row) for row in ducks.execute(sql).fetchall()
-    )
+    want = _canon_rows(ducks.execute(sql).fetchall())
 
     cols = []
     for c in order_spark:
@@ -203,7 +199,7 @@ def test_random_window_functions(spark, ducks, seed):
     w = W.partitionBy(F.expr(part_spark)).orderBy(*cols)
     o = load_table(spark, SF, "orders")
     got_rows = o.select("o_orderkey", fn_spark(w).alias("wv")).collect()
-    got = sorted("|".join(_canon(v) for v in row) for row in got_rows)
+    got = _canon_rows(got_rows)
     assert got == want, f"window divergence: {fn_sql} / {part_sql} / {order_sql}"
 
 
@@ -248,14 +244,12 @@ def test_random_scalar_compositions(spark, ducks, seed):
       SELECT o_orderkey, {outer_sql} AS s, {d_sql} AS d
       FROM orders WHERE o_orderkey < 500
     """
-    want = sorted(
-        "|".join(_canon(v) for v in row) for row in ducks.execute(sql).fetchall()
-    )
+    want = _canon_rows(ducks.execute(sql).fetchall())
     o = load_table(spark, SF, "orders").filter(F.col("o_orderkey") < 500)
     got_rows = o.select(
         "o_orderkey", f2(f1(F.col("o_orderpriority"))).alias("s"), d_fn().alias("d")
     ).collect()
-    got = sorted("|".join(_canon(v) for v in row) for row in got_rows)
+    got = _canon_rows(got_rows)
     assert got == want, f"scalar divergence: {outer_sql} / {d_sql}"
 
 

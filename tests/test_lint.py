@@ -130,16 +130,22 @@ def _is_half(node: ast.expr) -> bool:
     return isinstance(node, ast.Constant) and node.value == 0.5
 
 
+def _engine_and_tool_sources(owner: Path):
+    """Every ``.py`` file under wikipediaetl_spark/ and tools/ but ``owner``."""
+    for d in ("wikipediaetl_spark", "tools"):
+        for path in sorted((REPO_ROOT / d).rglob("*.py")):
+            if path != owner:
+                yield path
+
+
 def test_half_up_quantizers_live_only_in_fixedpoint():
     """``F.floor(x + 0.5)`` / ``np.floor(x + 0.5)`` is the fixed-point
-    rounding contract; every caller goes through functions/fixedpoint.py so
-    the contract has one owner. Docstrings and oracle SQL are not calls."""
-    pkg = REPO_ROOT / "wikipediaetl_spark"
-    owner = pkg / "functions" / "fixedpoint.py"
+    rounding contract; every caller, engine or tool, goes through
+    functions/fixedpoint.py so the contract has one owner. Docstrings and
+    oracle SQL are not calls."""
+    owner = REPO_ROOT / "wikipediaetl_spark" / "functions" / "fixedpoint.py"
     hits = []
-    for path in sorted(pkg.rglob("*.py")):
-        if path == owner:
-            continue
+    for path in _engine_and_tool_sources(owner):
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
             if (
                 isinstance(node, ast.Call)
@@ -153,6 +159,29 @@ def test_half_up_quantizers_live_only_in_fixedpoint():
                 and _is_half(node.args[0].right)
             ):
                 hits.append(f"{path.relative_to(REPO_ROOT)}:{node.lineno}")
+    assert hits == [], hits
+
+
+def test_temporary_conf_overrides_go_through_scoped_confs():
+    """A ``spark.conf.set``/``unset`` inside a ``finally:`` is a hand-written
+    save/set/restore block. ``session.scoped_confs`` owns that pattern: it
+    sets inside its ``try`` and unsets keys that were unset on entry."""
+    owner = REPO_ROOT / "wikipediaetl_spark" / "session.py"
+    hits = []
+    for path in _engine_and_tool_sources(owner):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not isinstance(node, ast.Try):
+                continue
+            for stmt in node.finalbody:
+                for call in ast.walk(stmt):
+                    if (
+                        isinstance(call, ast.Call)
+                        and isinstance(call.func, ast.Attribute)
+                        and call.func.attr in ("set", "unset")
+                        and isinstance(call.func.value, ast.Attribute)
+                        and call.func.value.attr == "conf"
+                    ):
+                        hits.append(f"{path.relative_to(REPO_ROOT)}:{call.lineno}")
     assert hits == [], hits
 
 

@@ -1,14 +1,22 @@
 """Streaming semantics: batch-equivalence of the streaming operators, BFS
-fixpoint on a known graph, crawler-step admission, retry backoff."""
+fixpoint on a known graph, crawler-step admission, retry backoff, and the
+session-conf hygiene of the driver-side fixpoint loops."""
 
 from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from wikipediaetl_spark.operators.relational import q37_tumbling_window
-from wikipediaetl_spark.streaming.crawler import bfs_fixpoint, crawl_frontier_step
+from wikipediaetl_spark.operators.relational_ext import connected_components, pagerank_exact
+from wikipediaetl_spark.session import scoped_confs
+from wikipediaetl_spark.streaming.crawler import (
+    bfs_fixpoint,
+    crawl_frontier_step,
+    recursive_bfs_tree,
+)
 from wikipediaetl_spark.streaming.queries import (
     q70_stream_tumbling,
     q71_stream_dedup,
@@ -43,20 +51,13 @@ def test_bfs_known_graph(spark):
         "src string, dst string",
     )
     seeds = spark.createDataFrame([("a",)], "node string")
-    # broadcast_seen=True exercises the fixture fast path; the cycle test
-    # below runs the scale-safe shuffled default
-    got = {
-        r.node: r.depth
-        for r in bfs_fixpoint(spark, seeds, edges, broadcast_seen=True).collect()
-    }
+    got = {r.node: r.depth for r in bfs_fixpoint(spark, seeds, edges).collect()}
     assert got == {"a": 0, "b": 1, "c": 1, "d": 2}  # min depth; x/y unreachable
 
 
 def test_bfs_lookahead_depth_exact(spark):
-    """k-hop lookahead must assign the SAME minimal depths as plain BFS on a
-    graph with cycles, shortcuts, and multiple shortest paths — the min-agg
-    over per-node hop labels is what keeps depths exact when one round
-    discovers several levels at once."""
+    """BFS must assign minimal depths on a graph with cycles, shortcuts,
+    and multiple shortest paths."""
     edges = spark.createDataFrame(
         [
             ("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("e", "f"),
@@ -67,17 +68,8 @@ def test_bfs_lookahead_depth_exact(spark):
         "src string, dst string",
     )
     seeds = spark.createDataFrame([("a",)], "node string")
-    plain = {
-        r.node: r.depth
-        for r in bfs_fixpoint(spark, seeds, edges, lookahead=1).collect()
-    }
+    plain = {r.node: r.depth for r in bfs_fixpoint(spark, seeds, edges).collect()}
     assert plain == {"a": 0, "b": 1, "c": 1, "d": 2, "e": 3, "f": 4}
-    for k in (2, 3):
-        got = {
-            r.node: r.depth
-            for r in bfs_fixpoint(spark, seeds, edges, lookahead=k).collect()
-        }
-        assert got == plain, f"lookahead={k} diverged: {got}"
 
 
 def test_bfs_cycle_terminates(spark):
@@ -98,8 +90,6 @@ def test_recursive_bfs_tree_matches_fixpoint(spark):
     """The Spark-4 recursive-CTE BFS must assign the same depths as the
     driver-loop engine on a forest, at every stride (the anchor covers
     depths 0..stride-1; the power-table step covers the rest)."""
-    from wikipediaetl_spark.streaming.crawler import recursive_bfs_tree
-
     edges = spark.createDataFrame(_FOREST, "src string, dst string")
     seeds = spark.createDataFrame([("a",)], "node string")
     want = {r.node: r.depth for r in bfs_fixpoint(spark, seeds, edges).collect()}
@@ -114,8 +104,6 @@ def test_recursive_bfs_tree_matches_fixpoint(spark):
 
 
 def test_recursive_bfs_tree_depth_cap_and_empty_seeds(spark):
-    from wikipediaetl_spark.streaming.crawler import recursive_bfs_tree
-
     edges = spark.createDataFrame(_FOREST, "src string, dst string")
     seeds = spark.createDataFrame([("a",)], "node string")
     # cap below the chain length, NOT a multiple of the stride: depths > cap
@@ -135,8 +123,6 @@ def test_recursive_bfs_tree_overlapping_seeds(spark):
     """A seed that is an ancestor of another seed enumerates the descendant
     subtree twice; the final min-aggregate must return each node once at
     its MINIMAL depth (bfs_fixpoint semantics)."""
-    from wikipediaetl_spark.streaming.crawler import recursive_bfs_tree
-
     edges = spark.createDataFrame(_FOREST, "src string, dst string")
     seeds = spark.createDataFrame([("a",), ("c",)], "node string")
     want = {r.node: r.depth for r in bfs_fixpoint(spark, seeds, edges).collect()}
@@ -148,6 +134,52 @@ def test_recursive_bfs_tree_overlapping_seeds(spark):
             for r in recursive_bfs_tree(spark, seeds, edges, stride=stride).collect()
         }
         assert got == want, f"stride={stride}: {got}"
+
+
+# every conf a fixpoint loop pins for its rounds
+_LOOP_KEYS = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.shuffle.partitions",
+    "spark.sql.codegen.wholeStage",
+    "spark.sql.cteRecursionRowLimit",
+)
+
+
+def test_fixpoint_loops_leave_the_session_as_they_found_it(spark):
+    """connected components, integer PageRank and the recursive BFS pin
+    tiny-round confs for their loops; afterwards every key reads as before
+    the call, and a key that was unset is unset again."""
+    for k in ("spark.sql.codegen.wholeStage", "spark.sql.cteRecursionRowLimit"):
+        spark.conf.unset(k)  # start from the session defaults
+    before = {k: spark.conf.get(k, None) for k in _LOOP_KEYS}
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long")
+    assert connected_components(pairs).count() == 5
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
+    assert pagerank_exact(edges, n_iter=2).count() == 3
+    forest = spark.createDataFrame(_FOREST, "src string, dst string")
+    seeds = spark.createDataFrame([("a",)], "node string")
+    assert recursive_bfs_tree(spark, seeds, forest).count() == 10
+    assert {k: spark.conf.get(k, None) for k in _LOOP_KEYS} == before
+
+
+def test_scoped_confs_restores_the_session(spark):
+    key, unset_key = "spark.sql.shuffle.partitions", "spark.sql.cteRecursionRowLimit"
+    spark.conf.unset(unset_key)
+    before = spark.conf.get(key)
+    # a key that was unset is unset again; a set key gets its value back
+    with scoped_confs(spark, {key: 3, unset_key: "5"}):
+        assert (spark.conf.get(key), spark.conf.get(unset_key)) == ("3", "5")
+    assert spark.conf.get(unset_key, None) is None
+    assert spark.conf.get(key) == before
+    # an exception in the body
+    with pytest.raises(RuntimeError), scoped_confs(spark, {key: 3}):
+        raise RuntimeError("body failed")
+    assert spark.conf.get(key) == before
+    # a set that fails (a static conf) after an earlier set succeeded
+    with pytest.raises(Exception, match="CANNOT_MODIFY"):
+        with scoped_confs(spark, {key: 3, "spark.sql.codegen.cache.maxEntries": "7"}):
+            pass
+    assert spark.conf.get(key) == before
 
 
 def test_crawl_frontier_step_semantics(spark):
@@ -242,8 +274,6 @@ def test_recursive_bfs_tree_random_forests_vs_python_reference(spark):
     import random
     from collections import deque
 
-    from wikipediaetl_spark.streaming.crawler import recursive_bfs_tree
-
     for seed in range(6):
         rng = random.Random(seed)
         n = rng.randint(10, 60)
@@ -287,8 +317,6 @@ def test_recursive_bfs_tree_forest_assertion(spark):
     input class where UNION ALL recursion enumerates every path — and must
     pass a genuine forest unchanged."""
     import pytest
-
-    from wikipediaetl_spark.streaming.crawler import recursive_bfs_tree
 
     seeds = spark.createDataFrame([("a",)], "node string")
     dag = spark.createDataFrame(

@@ -9,7 +9,8 @@ session's confs) or, from Python, a callable ``(spark, sf_dir) ->
 DataFrame`` that stands in for the one query being compared. The rules:
 
 - A conf arm's overrides are set before its DataFrame is built and
-  restored after the action and the checksum. A static or unknown conf
+  restored after the action and the checksum (``session.scoped_confs``:
+  a key the session had unset is unset again). A static or unknown conf
   raises ValueError before anything runs: it cannot differ between arms of
   one session.
 - One untimed round first runs every arm in order, so that JVM warm-up
@@ -46,7 +47,6 @@ The result is one JSON object; the CLI prints it as one line and, with
 from __future__ import annotations
 
 import argparse
-import contextlib
 import json
 import os
 import statistics
@@ -61,6 +61,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from perfbench.spans import SparkCounters  # noqa: E402
 from wikipediaetl_spark.catalog import all_queries  # noqa: E402
+from wikipediaetl_spark.session import scoped_confs  # noqa: E402
 
 CANARY = "q01_pricing_summary"
 CANARY_SF = "sf0.001"
@@ -93,21 +94,6 @@ def _check_confs(spark, confs: dict) -> None:
             raise ValueError(
                 f"{k} is not a runtime SQL conf: it cannot differ between arms of one session"
             )
-
-
-@contextlib.contextmanager
-def _confs(spark, confs: dict):
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, str(v))
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def _canary(spark, catalog: dict, sf_dir: str) -> float:
@@ -145,7 +131,7 @@ def ab(spark, sf_dir: str, queries: list[str], arms: dict, pairs: int = 5, sink:
         def rep(n: str, group: str, evidence: bool = False) -> float:
             arm = arms[n]
             build = arm if callable(arm) else catalog[q].fn
-            with _confs(spark, {} if callable(arm) else arm):
+            with scoped_confs(spark, {} if callable(arm) else arm):
                 counters.job_group(group)
                 try:
                     t0 = time.perf_counter()

@@ -25,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from wikipediaetl_spark.catalog import all_queries
+from wikipediaetl_spark.functions.fixedpoint import scaled_long, sum_unscaled
 from wikipediaetl_spark.operators.layout import bucketize_facts
 from wikipediaetl_spark.operators.relational import dsum
 from wikipediaetl_spark.session import get_spark
@@ -234,11 +235,7 @@ def build_q172_layout(spark, out):
         "l_orderkey",
         "l_partkey",
         "l_suppkey",
-        F.floor(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000 + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("vu"),
+        scaled_long(F.col("l_extendedprice") * (1 - F.col("l_discount")), 10000).alias("vu"),
     )
     o = spark.read.parquet(f"{out}/orders.parquet").select(
         "o_orderkey", F.year("o_orderdate").alias("o_year"), "o_custkey"
@@ -290,8 +287,8 @@ def serve_q172(spark, out):
             F.sum("vu").alias("pden"),
         )
     )
-    num = (F.sum(F.col("pnum").cast("decimal(38,0)")) / 10000).cast("double")
-    den = (F.sum(F.col("pden").cast("decimal(38,0)")) / 10000).cast("double")
+    num = sum_unscaled(F.col("pnum"), 10000)
+    den = sum_unscaled(F.col("pden"), 10000)
     return partial.groupBy("o_year").agg((num / den).alias("mkt_share"))
 
 
@@ -304,7 +301,7 @@ def build_q176_layout(spark, out):
     o = spark.read.parquet(f"{out}/orders.parquet").select(
         "o_custkey",
         F.year("o_orderdate").alias("o_year"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long").alias("o_cents"),
+        scaled_long(F.col("o_totalprice"), 100).alias("o_cents"),
     )
     c = spark.read.parquet(f"{out}/customer.parquet").select("c_custkey", "c_nationkey")
     n = spark.read.parquet(f"{out}/nation.parquet").select(

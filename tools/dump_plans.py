@@ -12,7 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wikipediaetl_spark.catalog import all_queries
 from wikipediaetl_spark.plans import count_exchanges, explain_str
-from wikipediaetl_spark.session import get_spark
+from wikipediaetl_spark.session import get_spark, scoped_confs
 
 SHOWCASE = {
     "q01_pricing_summary": "Pushed timestamp filter; partial+final hash agg inside one "
@@ -225,6 +225,7 @@ def _pre_checkpoint_plans(spark, sf_dir: str, name: str):
     broadcasts). Asserted by tests/test_plans.py."""
     from pyspark.sql import functions as F
 
+    from wikipediaetl_spark.functions.fixedpoint import scaled_long
     from wikipediaetl_spark.operators.layout import _drop_table
     from wikipediaetl_spark.sources import load_table
 
@@ -283,9 +284,7 @@ def _pre_checkpoint_plans(spark, sf_dir: str, name: str):
         o = load_table(spark, sf_dir, "orders").select(
             "o_custkey",
             F.year("o_orderdate").alias("o_year"),
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("o_cents"),
+            scaled_long(F.col("o_totalprice"), 100).alias("o_cents"),
         )
         c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
         n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey", "n_name")
@@ -464,19 +463,17 @@ def main() -> None:
         if pres:
             from wikipediaetl_spark.operators.layout import _drop_table
 
-            prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
             try:
-                for title, pdf in pres:
-                    print(f"\n**Pre-checkpoint plan — {title}** "
-                          f"(broadcast off = the at-scale shape; "
-                          f"exchanges: {count_exchanges(pdf)}):")
-                    print("\n```")
-                    plines = explain_str(pdf, "simple").splitlines()
-                    print("\n".join(ln.rstrip()[:160] for ln in plines[:24]))
-                    print("```")
+                with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+                    for title, pdf in pres:
+                        print(f"\n**Pre-checkpoint plan — {title}** "
+                              f"(broadcast off = the at-scale shape; "
+                              f"exchanges: {count_exchanges(pdf)}):")
+                        print("\n```")
+                        plines = explain_str(pdf, "simple").splitlines()
+                        print("\n".join(ln.rstrip()[:160] for ln in plines[:24]))
+                        print("```")
             finally:
-                spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
                 for tbl in table if isinstance(table, list) else [table]:
                     _drop_table(spark, tbl)
 

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from wikipediaetl_spark.catalog import query
 from wikipediaetl_spark.functions.fixedpoint import scaled_long, sum_unscaled
+from wikipediaetl_spark.session import scoped_confs
 from wikipediaetl_spark.sources import load_table
 
 
@@ -556,12 +557,10 @@ def upsert_partitioned(
     # leave the touched set part-old/part-new. A table format's manifest
     # swap closes this window; at directory granularity the recovery story
     # is "replay the batch" — the merge is idempotent by construction.
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        out.write.mode("overwrite").partitionBy("_pkey").parquet(path)
+        with scoped_confs(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
+            out.write.mode("overwrite").partitionBy("_pkey").parquet(path)
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         if staging is not None:
             _hadoop_delete(spark, staging)
     for p in emptied:

@@ -1228,11 +1228,10 @@ def q38_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Measured at sf0.1, per call including hop-table builds (same-session
     A/B, best-of-3): recursive CTE stride 4 = 1.7 s vs 3.4 s for the r6
-    driver loop (bfs_fixpoint, lookahead=5) — a 2.0x win.
-    General graphs (cycles,
-    multi-parent) still use the driver loop — UNION ALL recursion would not
-    terminate on a cycle; bfs_fixpoint remains the crawler path and is
-    tested on cyclic graphs in tests/test_streaming.py.
+    driver loop (k-hop lookahead, 5 levels per round) — a 2.0x win.
+    General graphs (cycles, multi-parent) still use the driver loop — UNION
+    ALL recursion would not terminate on a cycle; bfs_fixpoint remains the
+    crawler path and is tested on cyclic graphs in tests/test_streaming.py.
     """
     from wikipediaetl_spark.streaming.crawler import recursive_bfs_tree
 

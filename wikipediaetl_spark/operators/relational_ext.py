@@ -17,7 +17,22 @@ from pyspark.sql import functions as F
 from wikipediaetl_spark.catalog import query
 from wikipediaetl_spark.functions.fixedpoint import scaled_long, sum_unscaled, unscale
 from wikipediaetl_spark.operators.dedup import q53_shingle_neardup
+from wikipediaetl_spark.session import scoped_confs
 from wikipediaetl_spark.sources import load_table
+
+# Pinned for the driver-side fixpoint loops below (connected components,
+# both PageRanks): many tiny rounds, so AQE's per-stage re-optimization is
+# pure overhead, and with AQE off nothing coalesces post-shuffle, so the
+# partition count is pinned small. Per-round whole-stage compilation is a
+# net loss on tiny frontiers and the generated classes get code-cache-
+# evicted between calls (measured interleaved with heavy queries: q83
+# 1.85 -> 1.36 s/call, q165 2.44 -> 2.03 s/call; the same finding as
+# recursive_bfs_tree).
+_LOOP_CONFS = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.codegen.wholeStage": "false",
+}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -325,17 +340,7 @@ def connected_components(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
     edges = edges.localCheckpoint(eager=True)
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    prev_wsc = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")  # tiny-round loop
-    spark.conf.set("spark.sql.shuffle.partitions", "8")  # AQE off → pin small
-    # per-round whole-stage compilation is a net loss on tiny frontiers and
-    # the generated classes get code-cache-evicted between calls (measured
-    # on q83 interleaved with heavy queries: 1.85 -> 1.36 s/call; the same
-    # finding as recursive_bfs_tree)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
+    with scoped_confs(spark, _LOOP_CONFS):
         labels = (
             edges.select(F.col("src").alias("node"))
             .distinct()
@@ -401,10 +406,6 @@ def connected_components(
         return labels.select(
             F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_wsc)
 
 
 # Shared full-recompute oracle for near-dup clustering: q83 computes it
@@ -930,15 +931,7 @@ def pagerank(edges: DataFrame, n_iter: int = 5, damping: float = 0.85) -> DataFr
     dangling-mass redistribution, checkpointed per round. Deterministic up
     to float addition order (rows-only operator)."""
     spark = edges.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    prev_wsc = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # tiny-round loop: per-round codegen compiles get evicted between calls
-    # (measured on q165 interleaved: 2.44 -> 2.03 s/call)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
+    with scoped_confs(spark, _LOOP_CONFS):
         nodes = (
             edges.select(F.col("src").alias("node"))
             .unionByName(edges.select(F.col("dst").alias("node")))
@@ -980,10 +973,6 @@ def pagerank(edges: DataFrame, n_iter: int = 5, damping: float = 0.85) -> DataFr
                 .localCheckpoint(eager=True)
             )
         return ranks
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_wsc)
 
 
 @query("q103_pagerank")
@@ -1063,15 +1052,7 @@ def pagerank_exact(edges: DataFrame, n_iter: int = 5) -> DataFrame:
     scalar, lineage cut by localCheckpoint."""
     spark = edges.sparkSession
     base = 1_000_000_000
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    prev_wsc = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # tiny-round loop: per-round codegen compiles get evicted between calls
-    # (measured on q165 interleaved: 2.44 -> 2.03 s/call)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
+    with scoped_confs(spark, _LOOP_CONFS):
         nodes = (
             edges.select(F.col("src").alias("node"))
             .unionByName(edges.select(F.col("dst").alias("node")))
@@ -1114,10 +1095,6 @@ def pagerank_exact(edges: DataFrame, n_iter: int = 5) -> DataFrame:
                 .localCheckpoint(eager=True)
             )
         return ranks.select("node", F.col("r").alias("rank_ppb"))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_wsc)
 
 
 @query("q165_pagerank_exact", oracle=_pagerank_exact_oracle(5))

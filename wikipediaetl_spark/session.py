@@ -8,7 +8,9 @@ on a real cluster this should be ~2-3x total executor cores; callers pass it.
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -96,3 +98,22 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: dict) -> Iterator[None]:
+    """Set runtime SQL ``confs`` for the ``with`` body, then put the session
+    back as it was: a key that was set gets its old value, a key that was
+    unset is unset again. Every set runs inside the ``try``, so a set that
+    fails (a static conf) still restores the keys set before it."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, str(v))
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

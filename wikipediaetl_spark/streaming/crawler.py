@@ -20,113 +20,67 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wikipediaetl_spark.session import scoped_confs
+
 
 def bfs_fixpoint(
     spark: SparkSession,
     seeds: DataFrame,
     edges: DataFrame,
     max_rounds: int = 30,
-    broadcast_seen: bool = False,
-    lookahead: int = 1,
 ) -> DataFrame:
     """Iterate BFS over ``edges(src, dst)`` from ``seeds(node)`` to a fixpoint.
 
     Returns DataFrame(node, depth) with the minimal BFS depth per reached
-    node (depth capped at ``max_rounds``). Scale posture: `edges` is
-    hash-partitioned on src once up front so every round's frontier⋈edges
-    join reuses the same partitioning; the frontier (small) broadcasts
-    against it. The seen-set grows monotonically, so the DEFAULT dedup
-    anti-join shuffles on the key and the seen set stays
-    partition-distributed — the only setting that survives crawl scale. Pass
-    ``broadcast_seen=True`` explicitly for small fixtures where the whole
-    reachable set fits executor memory (it halves per-round latency by
-    skipping the shuffle).
-
-    ``lookahead=k`` pre-materializes the i-hop edge tables (i ≤ k) once,
-    then expands k depth levels per round inside ONE job — broadcast the
-    frontier against edges ∪ edges² ∪ … — cutting the round count (and its
-    per-round scheduler/checkpoint/barrier cost) by k. Depths stay exact:
-    hop i assigns the per-node label d(u)+i, the round takes min(label) per
-    node, and the seen anti-join drops already-placed nodes. Inductively a
-    round's frontier holds exactly the last k depth levels with exact
-    labels, i-hop coverage reaches every node in the next k levels through
-    unrestricted intermediates, and any label is a path length (≥ true
-    depth), so the min is exact. The trade: |edges^i| ≈ degree^(i-1)·|E|,
-    so lookahead pays on high-diameter, bounded-degree graphs (road nets,
-    tree hierarchies — rounds are the cost) and loses on dense crawl/social
-    graphs (the power-table blowup is the cost) — hence default 1.
+    node (depth capped at ``max_rounds``). Unlike :func:`recursive_bfs_tree`
+    it takes any graph, cycles and multi-parent nodes included, so it is
+    the reference that the forest-only recursion is tested against. Scale
+    posture: `edges` is hash-partitioned on src once up front so every
+    round's frontier⋈edges join reuses the same partitioning; the frontier
+    (small) broadcasts against it. The seen-set grows monotonically, so the
+    dedup anti-join shuffles on the key and the seen set stays
+    partition-distributed — the only setting that survives crawl scale.
     """
     # Few fat partitions beat many thin ones for iterative micro-batches:
     # every round is a frontier-broadcast join, so per-task scheduling
     # overhead × rounds dominates at small frontier sizes. AQE is disabled
     # for the loop: its per-stage re-optimization costs more than it saves
     # on many tiny rounds (measured ~20% of wall); re-enable (drop this
-    # block) when rounds are cluster-sized.
+    # pin) when rounds are cluster-sized. With AQE off nothing coalesces
+    # post-shuffle, so the partition count is pinned: a default-200 driver
+    # session would otherwise run 200 tasks per tiny round.
     n_part = min(8, spark.sparkContext.defaultParallelism)
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # with AQE off nothing coalesces post-shuffle — pin the partition count
-    # so a default-200 driver session doesn't run 200 tasks per tiny round
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
-    edges = edges.repartition(n_part, "src").persist()
-    # i-hop power tables, built once: hop_tables[i-1] = edges^i(src, dst).
-    # Each is one shuffle join up front; per-round work then needs no
-    # mid-round broadcast builds (broadcasting a chained hop would cost a
-    # sub-job per hop per round — measured slower than lookahead=1).
-    hop_tables = [edges]
-    for _ in range(max(1, lookahead) - 1):
-        prev = hop_tables[-1]
-        nxt = (
-            prev.alias("a")
-            .join(edges.alias("b"), F.col("a.dst") == F.col("b.src"))
-            .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
-            .repartition(n_part, "src")
-            .persist()
-        )
-        hop_tables.append(nxt)
-    try:
-        frontier = seeds.select("node").distinct().withColumn("depth", F.lit(0))
-        frontier = frontier.localCheckpoint(eager=True)
-        seen = frontier
-        base = 0  # max depth discovered so far
-        while base < max_rounds:
-            k = min(len(hop_tables), max_rounds - base)
-            seen_keys = seen.select("node")
-            if broadcast_seen:
-                seen_keys = F.broadcast(seen_keys)
-            candidates = None
-            for i in range(k):
-                hop = (
+    loop_confs = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(n_part),
+    }
+    with scoped_confs(spark, loop_confs):
+        edges = edges.repartition(n_part, "src").persist()
+        try:
+            frontier = seeds.select("node").distinct().withColumn("depth", F.lit(0))
+            frontier = frontier.localCheckpoint(eager=True)
+            seen = frontier
+            for _ in range(max_rounds):
+                new_nodes = (
                     F.broadcast(frontier)
-                    .join(hop_tables[i], frontier["node"] == hop_tables[i]["src"])
-                    .select(
-                        F.col("dst").alias("node"),
-                        (frontier["depth"] + (i + 1)).alias("depth"),
-                    )
+                    .join(edges, frontier["node"] == edges["src"])
+                    .select(F.col("dst").alias("node"), (frontier["depth"] + 1).alias("depth"))
+                    .join(seen.select("node"), "node", "left_anti")
+                    .groupBy("node")
+                    .agg(F.min("depth").alias("depth"))
+                    .localCheckpoint(eager=True)
                 )
-                candidates = hop if candidates is None else candidates.unionByName(hop)
-            new_nodes = (
-                candidates.join(seen_keys, "node", "left_anti")
-                .groupBy("node")
-                .agg(F.min("depth").alias("depth"))
-                .localCheckpoint(eager=True)
-            )
-            if new_nodes.isEmpty():
-                break
-            # re-checkpointing the unioned seen set each round measured
-            # FASTER than keeping it as a lazy union of frontiers — the
-            # growing union plan re-scans r checkpoints per round and costs
-            # more than one small materialization
-            seen = seen.unionByName(new_nodes).localCheckpoint(eager=True)
-            frontier = new_nodes
-            base += k
-        return seen
-    finally:
-        for t in hop_tables:
-            t.unpersist()
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+                if new_nodes.isEmpty():
+                    break
+                # re-checkpointing the unioned seen set each round measured
+                # FASTER than keeping it as a lazy union of frontiers — the
+                # growing union plan re-scans r checkpoints per round and
+                # costs more than one small materialization
+                seen = seen.unionByName(new_nodes).localCheckpoint(eager=True)
+                frontier = new_nodes
+            return seen
+        finally:
+            edges.unpersist()
 
 
 def recursive_bfs_tree(
@@ -153,17 +107,17 @@ def recursive_bfs_tree(
     FINITE (ADVICE r7) and why ``assert_forest=True`` offers a cheap
     debug-mode precondition check (one max-indegree aggregate).
 
-    ``stride`` applies the same k-hop lookahead as ``bfs_fixpoint``: the
-    recursion steps over the cached ``edges^stride`` power table (built by
-    doubling: e2 = e1 join e1, e4 = e2 join e2, so stride must be a power of
-    two), with depths 0..stride-1 seeded by the anchor. On a forest the
-    distance-``stride`` ancestor is unique, so paths — and rows — stay
-    unique. Measured at sf0.1 on the q38 instance (150k reachable nodes,
-    depth ~19), per call INCLUDING hop-table builds, same-session A/B
-    best-of-3: stride 4 = 1.7 s vs 3.4 s for the tuned
-    bfs_fixpoint(lookahead=5) driver loop — a 2.0x win; the stride sweep
-    (2/4/8 = 2.4/1.8/2.5 s in an earlier epoch) picks 4, where the extra
-    power-table build starts outweighing the saved levels. Recursion
+    ``stride`` is a k-hop lookahead: the recursion steps over the cached
+    ``edges^stride`` power table (built by doubling: e2 = e1 join e1,
+    e4 = e2 join e2, so stride must be a power of two), with depths
+    0..stride-1 seeded by the anchor. On a forest the distance-``stride``
+    ancestor is unique, so paths — and rows — stay unique. Measured at
+    sf0.1 on the q38 instance (150k reachable nodes, depth ~19), per call
+    INCLUDING hop-table builds, same-session A/B best-of-3: stride 4 =
+    1.7 s vs 3.4 s for the tuned driver loop it replaced (the same k-hop
+    algebra, 5 levels per round) — a 2.0x win; the stride sweep (2/4/8 =
+    2.4/1.8/2.5 s in an earlier epoch) picks 4, where the extra power-table
+    build starts outweighing the saved levels. Recursion
     levels, not joins, are the cost, exactly as in the driver loop.
 
     Returns DataFrame(node, depth), eagerly materialized (the session confs
@@ -184,92 +138,88 @@ def recursive_bfs_tree(
             )
     tag = uuid.uuid4().hex[:12]
     n_part = min(8, spark.sparkContext.defaultParallelism)
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    prev_rows = spark.conf.get("spark.sql.cteRecursionRowLimit", "1000000")
-    prev_wsc = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    # Same rationale as bfs_fixpoint: tiny per-level frontiers make AQE's
-    # per-stage re-optimization and default-200 shuffles pure overhead.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
-    # the default 1M-row recursion guard fires on any fact-scale reach set
-    # (15M nodes at 100x). Raise it to a LARGE FINITE bound rather than -1
-    # (ADVICE r7): max_depth already guarantees termination, but on a
-    # non-forest input the UNION ALL recursion enumerates every path and
-    # this limit is the only backstop between a violated precondition and
-    # an exponential-row runaway. 2e9 rows (~32 GB of (node, depth) pairs)
-    # clears any legitimate reach set by 100x while still killing a path
-    # explosion within one level.
-    spark.conf.set("spark.sql.cteRecursionRowLimit", "2000000000")
-    # Whole-stage codegen is a net LOSS for the loop: each recursion level
-    # compiles its stages, the generated classes are evicted from the
-    # code cache by whatever else the session runs, and the per-level data
-    # is tiny. Measured interleaved with 5 heavy catalog queries (the
-    # bench round-robin shape) at sf0.1: codegen-on 2.8-5.1 s/call,
-    # codegen-off 2.2-2.5 s/call. Re-measured at 100x/400x (per-level
-    # frontiers of 0.5-2M rows): no regression — 0.91x/0.55x vs the
-    # comparator, the join/shuffle dominates, not expression eval. The
-    # conf is loop-scoped and restored.
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    cached = []
-    views = []
-    try:
-        hops = [edges.select("src", "dst").repartition(n_part, "src").persist()]
-        while (1 << (len(hops) - 1)) < stride:
-            prev = hops[-1]
-            hops.append(
-                prev.alias("a")
-                .join(prev.alias("b"), F.col("a.dst") == F.col("b.src"))
-                .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
-                .repartition(n_part, "src")
-                .persist()
-            )
-        cached.extend(hops)
-        # anchor: exact depths 0..stride-1 from the seed set (each level is
-        # one more tiny broadcast hop on the cached 1-hop table)
-        anchor = seeds.select("node").distinct().withColumn("depth", F.lit(0))
-        level = anchor
-        for d in range(1, stride):
-            level = (
-                F.broadcast(level.select("node"))
-                .join(hops[0], F.col("node") == F.col("src"))
-                .select(F.col("dst").alias("node"), F.lit(d).alias("depth"))
-            )
-            anchor = anchor.unionByName(level)
-        anchor_v, step_v = f"bfs_anchor_{tag}", f"bfs_step_{tag}"
-        # register each name BEFORE the create that might throw, so the
-        # finally-cleanup can never leak a view (ADVICE r7)
-        views.append(anchor_v)
-        anchor.createOrReplaceTempView(anchor_v)
-        views.append(step_v)
-        hops[-1].createOrReplaceTempView(step_v)
-        # The final min-aggregate covers the one duplicate source a forest
-        # allows: a seed that is an ancestor of another seed enumerates the
-        # descendant's subtree once per covering seed (bounded by |seeds|,
-        # never exponential) — min(depth) restores bfs_fixpoint's minimal-
-        # depth semantics. With pairwise non-reachable seeds it aggregates
-        # singleton groups.
-        out = spark.sql(f"""
-            WITH RECURSIVE reach(node, depth) AS (
-              SELECT node, depth FROM {anchor_v}
-              UNION ALL
-              SELECT e.dst, r.depth + {stride}
-              FROM {step_v} e JOIN reach r ON e.src = r.node
-              WHERE r.depth < {max_depth}
-            )
-            SELECT node, min(depth) AS depth FROM reach
-            WHERE depth <= {max_depth} GROUP BY node
-        """)
-        return out.localCheckpoint(eager=True)
-    finally:
-        for v in views:
-            spark.catalog.dropTempView(v)
-        for t in cached:
-            t.unpersist()
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.cteRecursionRowLimit", prev_rows)
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_wsc)
+    loop_confs = {
+        # Same rationale as bfs_fixpoint: tiny per-level frontiers make
+        # AQE's per-stage re-optimization and default-200 shuffles pure
+        # overhead.
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(n_part),
+        # the default 1M-row recursion guard fires on any fact-scale reach
+        # set (15M nodes at 100x). Raise it to a LARGE FINITE bound rather
+        # than -1 (ADVICE r7): max_depth already guarantees termination,
+        # but on a non-forest input the UNION ALL recursion enumerates
+        # every path and this limit is the only backstop between a violated
+        # precondition and an exponential-row runaway. 2e9 rows (~32 GB of
+        # (node, depth) pairs) clears any legitimate reach set by 100x
+        # while still killing a path explosion within one level.
+        "spark.sql.cteRecursionRowLimit": "2000000000",
+        # Whole-stage codegen is a net LOSS for the loop: each recursion
+        # level compiles its stages, the generated classes are evicted from
+        # the code cache by whatever else the session runs, and the
+        # per-level data is tiny. Measured interleaved with 5 heavy catalog
+        # queries (the bench round-robin shape) at sf0.1: codegen-on
+        # 2.8-5.1 s/call, codegen-off 2.2-2.5 s/call. Re-measured at
+        # 100x/400x (per-level frontiers of 0.5-2M rows): no regression —
+        # 0.91x/0.55x vs the comparator, the join/shuffle dominates, not
+        # expression eval.
+        "spark.sql.codegen.wholeStage": "false",
+    }
+    with scoped_confs(spark, loop_confs):
+        cached = []
+        views = []
+        try:
+            hops = [edges.select("src", "dst").repartition(n_part, "src").persist()]
+            while (1 << (len(hops) - 1)) < stride:
+                prev = hops[-1]
+                hops.append(
+                    prev.alias("a")
+                    .join(prev.alias("b"), F.col("a.dst") == F.col("b.src"))
+                    .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
+                    .repartition(n_part, "src")
+                    .persist()
+                )
+            cached.extend(hops)
+            # anchor: exact depths 0..stride-1 from the seed set (each level is
+            # one more tiny broadcast hop on the cached 1-hop table)
+            anchor = seeds.select("node").distinct().withColumn("depth", F.lit(0))
+            level = anchor
+            for d in range(1, stride):
+                level = (
+                    F.broadcast(level.select("node"))
+                    .join(hops[0], F.col("node") == F.col("src"))
+                    .select(F.col("dst").alias("node"), F.lit(d).alias("depth"))
+                )
+                anchor = anchor.unionByName(level)
+            anchor_v, step_v = f"bfs_anchor_{tag}", f"bfs_step_{tag}"
+            # register each name BEFORE the create that might throw, so the
+            # finally-cleanup can never leak a view (ADVICE r7)
+            views.append(anchor_v)
+            anchor.createOrReplaceTempView(anchor_v)
+            views.append(step_v)
+            hops[-1].createOrReplaceTempView(step_v)
+            # The final min-aggregate covers the one duplicate source a forest
+            # allows: a seed that is an ancestor of another seed enumerates the
+            # descendant's subtree once per covering seed (bounded by |seeds|,
+            # never exponential) — min(depth) restores bfs_fixpoint's minimal-
+            # depth semantics. With pairwise non-reachable seeds it aggregates
+            # singleton groups.
+            out = spark.sql(f"""
+                WITH RECURSIVE reach(node, depth) AS (
+                  SELECT node, depth FROM {anchor_v}
+                  UNION ALL
+                  SELECT e.dst, r.depth + {stride}
+                  FROM {step_v} e JOIN reach r ON e.src = r.node
+                  WHERE r.depth < {max_depth}
+                )
+                SELECT node, min(depth) AS depth FROM reach
+                WHERE depth <= {max_depth} GROUP BY node
+            """)
+            return out.localCheckpoint(eager=True)
+        finally:
+            for v in views:
+                spark.catalog.dropTempView(v)
+            for t in cached:
+                t.unpersist()
 
 
 def crawl_frontier_step(

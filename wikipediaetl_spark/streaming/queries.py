@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from wikipediaetl_spark.catalog import query
 from wikipediaetl_spark.functions.fixedpoint import scaled_long
+from wikipediaetl_spark.session import scoped_confs
 from wikipediaetl_spark.sources import parquet_schema
 
 
@@ -101,9 +102,7 @@ def _run_to_completion(
     partitioning-independent either way."""
     spark = stream_df.sparkSession
     name = "sink_" + uuid.uuid4().hex[:12]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": state_partitions}):
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -114,8 +113,6 @@ def _run_to_completion(
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
