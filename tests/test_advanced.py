@@ -176,31 +176,29 @@ def test_rollup_incremental_merge_equals_full(spark, sf_dir):
     exactly the table materialize_rollup builds in one shot (partial DECIMAL
     sums are associative)."""
     from wikipediaetl_spark.operators.layout import (
-        _drop_table,
         materialize_rollup,
         merge_batch_into_rollup,
+        scoped_tables,
     )
     from wikipediaetl_spark.sources import load_table
 
     o = load_table(spark, sf_dir, "orders")
-    _drop_table(spark, "t_rollup_inc")
-    for i in range(3):
-        merge_batch_into_rollup(
-            spark, o.filter(F.col("o_orderkey") % 3 == i), table="t_rollup_inc"
-        )
-    materialize_rollup(spark, sf_dir, table="t_rollup_full")
-    inc = spark.table("t_rollup_inc")
-    full = spark.table("t_rollup_full")
-    assert inc.count() == full.count()
-    assert inc.exceptAll(full).count() == 0 and full.exceptAll(inc).count() == 0
-    _drop_table(spark, "t_rollup_inc")
-    _drop_table(spark, "t_rollup_full")
+    with scoped_tables(spark, "t_rollup_inc", "t_rollup_full"):
+        for i in range(3):
+            merge_batch_into_rollup(
+                spark, o.filter(F.col("o_orderkey") % 3 == i), table="t_rollup_inc"
+            )
+        materialize_rollup(spark, sf_dir, table="t_rollup_full")
+        inc = spark.table("t_rollup_inc")
+        full = spark.table("t_rollup_full")
+        assert inc.count() == full.count()
+        assert inc.exceptAll(full).count() == 0 and full.exceptAll(inc).count() == 0
 
 
 def test_rollup_sink_foreachbatch_stream(spark, sf_dir, tmp_path):
     """The streaming entry point: orders fed through foreachBatch maintains
     the same rollup table."""
-    from wikipediaetl_spark.operators.layout import _drop_table, rollup_sink
+    from wikipediaetl_spark.operators.layout import rollup_sink, scoped_tables
     from wikipediaetl_spark.sources import load_table
 
     schema = load_table(spark, sf_dir, "orders").schema
@@ -209,88 +207,93 @@ def test_rollup_sink_foreachbatch_stream(spark, sf_dir, tmp_path):
         .option("pathGlobFilter", "orders.parquet")
         .parquet(sf_dir)
     )
-    _drop_table(spark, "t_rollup_stream")
-    q = (
-        stream.writeStream.foreachBatch(rollup_sink(spark, table="t_rollup_stream"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    batch = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("revenue_d"),
+    with scoped_tables(spark, "t_rollup_stream"):
+        q = (
+            stream.writeStream.foreachBatch(rollup_sink(spark, table="t_rollup_stream"))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
         )
-    )
-    got = spark.table("t_rollup_stream").select("o_custkey", "n_orders", "revenue_d")
-    assert got.exceptAll(batch).count() == 0 and batch.exceptAll(got).count() == 0
-    _drop_table(spark, "t_rollup_stream")
+        q.awaitTermination(120)
+        batch = (
+            load_table(spark, sf_dir, "orders")
+            .groupBy("o_custkey")
+            .agg(
+                F.count(F.lit(1)).alias("n_orders"),
+                F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("revenue_d"),
+            )
+        )
+        got = spark.table("t_rollup_stream").select("o_custkey", "n_orders", "revenue_d")
+        assert got.exceptAll(batch).count() == 0 and batch.exceptAll(got).count() == 0
 
 
 def test_rollup_merge_replay_is_idempotent(spark, sf_dir):
     """A foreachBatch replay (same batch_id re-delivered after a completed
     merge) must be a no-op — the batch id is stamped atomically with the
     merged rows, so double-counting cannot occur (ADVICE r3)."""
-    from wikipediaetl_spark.operators.layout import _drop_table, merge_batch_into_rollup
+    from wikipediaetl_spark.operators.layout import (
+        merge_batch_into_rollup,
+        scoped_tables,
+    )
     from wikipediaetl_spark.sources import load_table
 
     o = load_table(spark, sf_dir, "orders")
-    _drop_table(spark, "t_rollup_replay")
-    merge_batch_into_rollup(spark, o, table="t_rollup_replay", batch_id=0)
-    once = spark.table("t_rollup_replay").select("o_custkey", "n_orders", "revenue_d")
-    once_rows = sorted(map(tuple, once.collect()))
-    # replay batch 0: must not double-count
-    merge_batch_into_rollup(spark, o, table="t_rollup_replay", batch_id=0)
-    twice = spark.table("t_rollup_replay").select("o_custkey", "n_orders", "revenue_d")
-    assert sorted(map(tuple, twice.collect())) == once_rows
-    # a genuinely new batch still merges
-    merge_batch_into_rollup(spark, o.limit(10), table="t_rollup_replay", batch_id=1)
-    n_after = spark.table("t_rollup_replay").agg(F.sum("n_orders")).first()[0]
-    assert n_after == o.count() + 10
-    _drop_table(spark, "t_rollup_replay")
+    with scoped_tables(spark, "t_rollup_replay"):
+        merge_batch_into_rollup(spark, o, table="t_rollup_replay", batch_id=0)
+        once = spark.table("t_rollup_replay").select("o_custkey", "n_orders", "revenue_d")
+        once_rows = sorted(map(tuple, once.collect()))
+        # replay batch 0: must not double-count
+        merge_batch_into_rollup(spark, o, table="t_rollup_replay", batch_id=0)
+        twice = spark.table("t_rollup_replay").select("o_custkey", "n_orders", "revenue_d")
+        assert sorted(map(tuple, twice.collect())) == once_rows
+        # a genuinely new batch still merges
+        merge_batch_into_rollup(spark, o.limit(10), table="t_rollup_replay", batch_id=1)
+        n_after = spark.table("t_rollup_replay").agg(F.sum("n_orders")).first()[0]
+        assert n_after == o.count() + 10
 
 
 def test_rollup_interrupted_swap_recovers_from_staging(spark, sf_dir):
     """Simulate a crash between drop(table) and rename(staging→table): the
     next merge call must first recover the completed staging merge instead
     of restarting history from the incoming batch alone."""
-    from wikipediaetl_spark.operators.layout import _drop_table, merge_batch_into_rollup
+    from wikipediaetl_spark.operators.layout import (
+        merge_batch_into_rollup,
+        scoped_tables,
+    )
     from wikipediaetl_spark.sources import load_table
 
     o = load_table(spark, sf_dir, "orders")
-    _drop_table(spark, "t_rollup_crash")
-    merge_batch_into_rollup(spark, o, table="t_rollup_crash", batch_id=0)
-    # simulate the crash window: completed merge sits in staging, table gone
-    spark.sql("ALTER TABLE t_rollup_crash RENAME TO t_rollup_crash_staging")
-    merge_batch_into_rollup(spark, o.limit(10), table="t_rollup_crash", batch_id=1)
-    n_after = spark.table("t_rollup_crash").agg(F.sum("n_orders")).first()[0]
-    assert n_after == o.count() + 10  # history preserved, batch folded once
-    _drop_table(spark, "t_rollup_crash")
+    with scoped_tables(spark, "t_rollup_crash"):
+        merge_batch_into_rollup(spark, o, table="t_rollup_crash", batch_id=0)
+        # simulate the crash window: completed merge sits in staging, table gone
+        spark.sql("ALTER TABLE t_rollup_crash RENAME TO t_rollup_crash_staging")
+        merge_batch_into_rollup(spark, o.limit(10), table="t_rollup_crash", batch_id=1)
+        n_after = spark.table("t_rollup_crash").agg(F.sum("n_orders")).first()[0]
+        assert n_after == o.count() + 10  # history preserved, batch folded once
 
 
 def test_rollup_unstamped_merge_carries_watermark(spark, sf_dir):
     """An unstamped call (batch_id=None) on a stamped table must carry the
     stored last_batch_id forward (ADVICE r4: dropping it would discard the
     replay watermark and a later resumed stream would double-count)."""
-    from wikipediaetl_spark.operators.layout import _drop_table, merge_batch_into_rollup
+    from wikipediaetl_spark.operators.layout import (
+        merge_batch_into_rollup,
+        scoped_tables,
+    )
     from wikipediaetl_spark.sources import load_table
 
     o = load_table(spark, sf_dir, "orders")
-    _drop_table(spark, "t_rollup_carry")
-    merge_batch_into_rollup(spark, o, table="t_rollup_carry", batch_id=7)
-    # an ad-hoc (unstamped) maintenance merge between streaming batches
-    merge_batch_into_rollup(spark, o.limit(10), table="t_rollup_carry", batch_id=None)
-    cur = spark.table("t_rollup_carry")
-    assert "last_batch_id" in cur.columns
-    assert cur.select("last_batch_id").first()[0] == 7
-    # the carried watermark still suppresses a replay of batch 7
-    before = cur.agg(F.sum("n_orders")).first()[0]
-    merge_batch_into_rollup(spark, o, table="t_rollup_carry", batch_id=7)
-    assert spark.table("t_rollup_carry").agg(F.sum("n_orders")).first()[0] == before
-    _drop_table(spark, "t_rollup_carry")
+    with scoped_tables(spark, "t_rollup_carry"):
+        merge_batch_into_rollup(spark, o, table="t_rollup_carry", batch_id=7)
+        # an ad-hoc (unstamped) maintenance merge between streaming batches
+        merge_batch_into_rollup(spark, o.limit(10), table="t_rollup_carry", batch_id=None)
+        cur = spark.table("t_rollup_carry")
+        assert "last_batch_id" in cur.columns
+        assert cur.select("last_batch_id").first()[0] == 7
+        # the carried watermark still suppresses a replay of batch 7
+        before = cur.agg(F.sum("n_orders")).first()[0]
+        merge_batch_into_rollup(spark, o, table="t_rollup_carry", batch_id=7)
+        assert spark.table("t_rollup_carry").agg(F.sum("n_orders")).first()[0] == before
 
 
 def test_rollup_partial_staging_not_adopted(spark, sf_dir):
@@ -298,53 +301,54 @@ def test_rollup_partial_staging_not_adopted(spark, sf_dir):
     crashed mid-saveAsTable) must be dropped, not renamed into place
     (ADVICE r4): its rows are an incomplete write, and the upcoming merge
     rebuilds correctly from the batch because no main table ever existed."""
-    from wikipediaetl_spark.operators.layout import _drop_table, merge_batch_into_rollup
+    from wikipediaetl_spark.operators.layout import (
+        merge_batch_into_rollup,
+        scoped_tables,
+    )
     from wikipediaetl_spark.sources import load_table
 
     o = load_table(spark, sf_dir, "orders")
-    _drop_table(spark, "t_rollup_partial")
-    _drop_table(spark, "t_rollup_partial_staging")
-    # fabricate a partial staging write: wrong contents, NO commit marker
-    o.limit(3).groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("revenue_d"),
-    ).write.saveAsTable("t_rollup_partial_staging")
-    merge_batch_into_rollup(spark, o, table="t_rollup_partial", batch_id=0)
-    # the partial rows were discarded; the merge holds exactly the batch
-    n = spark.table("t_rollup_partial").agg(F.sum("n_orders")).first()[0]
-    assert n == o.count()
-    _drop_table(spark, "t_rollup_partial")
+    with scoped_tables(spark, "t_rollup_partial"):
+        # fabricate a partial staging write: wrong contents, NO commit marker
+        o.limit(3).groupBy("o_custkey").agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("revenue_d"),
+        ).write.saveAsTable("t_rollup_partial_staging")
+        merge_batch_into_rollup(spark, o, table="t_rollup_partial", batch_id=0)
+        # the partial rows were discarded; the merge holds exactly the batch
+        n = spark.table("t_rollup_partial").agg(F.sum("n_orders")).first()[0]
+        assert n == o.count()
 
 
 def test_lineitem_rollup_merges_to_stock_q12(spark, sf_dir):
     """The bucketed lineitem→orderkey rollup must reproduce stock q12
     bit-for-bit (decimal terms cast before partial summation)."""
     from wikipediaetl_spark.operators.layout import (
-        _drop_table,
         materialize_lineitem_rollup,
+        scoped_tables,
     )
     from wikipediaetl_spark.operators.relational import q12_fact_fact_join
     from wikipediaetl_spark.sources import load_table
 
-    materialize_lineitem_rollup(spark, sf_dir, table="t_li_rollup", n_buckets=4)
-    r = spark.table("t_li_rollup")
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    got = {
-        x["o_orderpriority"]: (x["n_lines"], x["revenue"])
-        for x in r.join(o, r.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.sum("n_lines").alias("n_lines"),
-            F.sum("revenue_d").cast("double").alias("revenue"),
-        )
-        .collect()
-    }
-    want = {
-        x["o_orderpriority"]: (x["n_lines"], x["revenue"])
-        for x in q12_fact_fact_join(spark, sf_dir).collect()
-    }
-    assert got == want
-    _drop_table(spark, "t_li_rollup")
+    with scoped_tables(spark, "t_li_rollup"):
+        materialize_lineitem_rollup(spark, sf_dir, table="t_li_rollup", n_buckets=4)
+        r = spark.table("t_li_rollup")
+        o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+        got = {
+            x["o_orderpriority"]: (x["n_lines"], x["revenue"])
+            for x in r.join(o, r.l_orderkey == o.o_orderkey)
+            .groupBy("o_orderpriority")
+            .agg(
+                F.sum("n_lines").alias("n_lines"),
+                F.sum("revenue_d").cast("double").alias("revenue"),
+            )
+            .collect()
+        }
+        want = {
+            x["o_orderpriority"]: (x["n_lines"], x["revenue"])
+            for x in q12_fact_fact_join(spark, sf_dir).collect()
+        }
+        assert got == want
 
 
 def test_q160_outlier_exact_flag(spark, sf_dir):
@@ -419,68 +423,64 @@ def test_keyed_rollup_replay_and_crash_window_idempotent(spark, sf_dir):
     The batch-id watermark rides the staging TBLPROPERTIES through RENAME,
     so the replay is a no-op, not a double-count under the sum algebra."""
     from wikipediaetl_spark.operators.layout import (
-        _drop_table,
         merge_batch_into_keyed_rollup,
+        scoped_tables,
     )
     from wikipediaetl_spark.sources import load_table
 
     t = "t_keyed_replay"
-    _drop_table(spark, t)
-    _drop_table(spark, f"{t}_staging")
-    o = load_table(spark, sf_dir, "orders")
+    with scoped_tables(spark, t):
+        o = load_table(spark, sf_dir, "orders")
 
-    def part(df):
-        return df.groupBy("o_custkey").agg(F.count(F.lit(1)).cast("long").alias("n"))
+        def part(df):
+            return df.groupBy("o_custkey").agg(F.count(F.lit(1)).cast("long").alias("n"))
 
-    aggs = [F.sum("n").cast("long").alias("n")]
+        aggs = [F.sum("n").cast("long").alias("n")]
 
-    def merge(df, bid):
+        def merge(df, bid):
+            merge_batch_into_keyed_rollup(
+                spark, part(df), t, ["o_custkey"], aggs, "o_custkey",
+                n_buckets=4, batch_id=bid,
+            )
+
+        merge(o, 0)
+        base = spark.table(t).agg(F.sum("n")).first()[0]
+        assert base == o.count()
+        # plain replay of batch 0: no-op
+        merge(o, 0)
+        assert spark.table(t).agg(F.sum("n")).first()[0] == base
+        # batch 1 merges fully, then simulate the drop→rename crash window:
+        # the committed result (history + batch 1) sits in staging, main gone
+        merge(o.limit(10), 1)
+        spark.sql(f"ALTER TABLE {t} RENAME TO {t}_staging")
+        # recovery replays batch 1 — must fold exactly once overall
+        merge(o.limit(10), 1)
+        assert spark.table(t).agg(F.sum("n")).first()[0] == base + 10
+        # an unstamped maintenance merge carries the watermark forward
         merge_batch_into_keyed_rollup(
-            spark, part(df), t, ["o_custkey"], aggs, "o_custkey",
-            n_buckets=4, batch_id=bid,
+            spark, part(o.limit(5)), t, ["o_custkey"], aggs, "o_custkey",
+            n_buckets=4, batch_id=None,
         )
-
-    merge(o, 0)
-    base = spark.table(t).agg(F.sum("n")).first()[0]
-    assert base == o.count()
-    # plain replay of batch 0: no-op
-    merge(o, 0)
-    assert spark.table(t).agg(F.sum("n")).first()[0] == base
-    # batch 1 merges fully, then simulate the drop→rename crash window:
-    # the committed result (history + batch 1) sits in staging, main gone
-    merge(o.limit(10), 1)
-    spark.sql(f"ALTER TABLE {t} RENAME TO {t}_staging")
-    # recovery replays batch 1 — must fold exactly once overall
-    merge(o.limit(10), 1)
-    assert spark.table(t).agg(F.sum("n")).first()[0] == base + 10
-    # an unstamped maintenance merge carries the watermark forward
-    merge_batch_into_keyed_rollup(
-        spark, part(o.limit(5)), t, ["o_custkey"], aggs, "o_custkey",
-        n_buckets=4, batch_id=None,
-    )
-    assert spark.table(t).agg(F.sum("n")).first()[0] == base + 15
-    merge(o, 1)  # stale replay after the unstamped merge: still suppressed
-    assert spark.table(t).agg(F.sum("n")).first()[0] == base + 15
-    _drop_table(spark, t)
+        assert spark.table(t).agg(F.sum("n")).first()[0] == base + 15
+        merge(o, 1)  # stale replay after the unstamped merge: still suppressed
+        assert spark.table(t).agg(F.sum("n")).first()[0] == base + 15
 
 
 def test_lineitem_rollup_merge_replay_idempotent(spark, sf_dir):
     """Same replay contract on the lineitem-grain merge (ADVICE r8)."""
     from wikipediaetl_spark.operators.layout import (
-        _drop_table,
         merge_batch_into_lineitem_rollup,
+        scoped_tables,
     )
     from wikipediaetl_spark.sources import load_table
 
     t = "t_li_replay"
-    _drop_table(spark, t)
-    _drop_table(spark, f"{t}_staging")
-    li = load_table(spark, sf_dir, "lineitem").limit(1000)
-    merge_batch_into_lineitem_rollup(spark, li, table=t, n_buckets=4, batch_id=0)
-    base = spark.table(t).agg(F.sum("n_lines")).first()[0]
-    merge_batch_into_lineitem_rollup(spark, li, table=t, n_buckets=4, batch_id=0)
-    assert spark.table(t).agg(F.sum("n_lines")).first()[0] == base
-    _drop_table(spark, t)
+    with scoped_tables(spark, t):
+        li = load_table(spark, sf_dir, "lineitem").limit(1000)
+        merge_batch_into_lineitem_rollup(spark, li, table=t, n_buckets=4, batch_id=0)
+        base = spark.table(t).agg(F.sum("n_lines")).first()[0]
+        merge_batch_into_lineitem_rollup(spark, li, table=t, n_buckets=4, batch_id=0)
+        assert spark.table(t).agg(F.sum("n_lines")).first()[0] == base
 
 
 def test_hadoop_delete_is_scheme_aware(spark, tmp_path):

@@ -8,6 +8,7 @@ from pathlib import Path
 import pytest
 
 from wikipediaetl_spark.catalog import all_queries
+from wikipediaetl_spark.session import scoped_confs
 
 TOOLS_DIR = Path(__file__).resolve().parents[1] / "tools"
 
@@ -70,16 +71,12 @@ def test_query_builders_pin_ansi_for_long_folds(spark, sf_dir):
 
     from wikipediaetl_spark.functions.fixedpoint import scaled_long
 
-    before = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:
+    with scoped_confs(spark, {"spark.sql.ansi.enabled": "false"}):
         all_queries()["q13_left_join"].fn(spark, sf_dir)
         assert spark.conf.get("spark.sql.ansi.enabled") == "true"
         two = spark.createDataFrame([(5e16,), (5e16,)], "x double")
         with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
             two.agg(F.sum(scaled_long(F.col("x"), 100))).collect()
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", before)
 
 
 def test_approx_percentile_close_to_exact(spark, sf_dir):

@@ -484,6 +484,26 @@ def test_q180_incremental_index_matches_full_recompute(spark, sf_dir):
     assert inc == full and len(inc) > 0
 
 
+def test_q174_failing_build_leaves_no_table(spark, sf_dir, monkeypatch):
+    """A maintained-layout builder that raises after its saveAsTable must
+    not leak its scratch table: neither the catalog entry nor the
+    warehouse directory may outlive the failed call."""
+    from pathlib import Path
+    from urllib.parse import urlparse
+
+    from wikipediaetl_spark.operators import dedup
+
+    def boom(idx):
+        raise RuntimeError("injected self-join failure")
+
+    monkeypatch.setattr(dedup, "lsh_index_self_pairs", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        dedup.q174_lsh_index_maintenance(spark, sf_dir)
+    assert not spark.catalog.tableExists("q174_lsh_band_index")
+    wh = Path(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path)
+    assert not (wh / "q174_lsh_band_index").exists()
+
+
 def test_q184_incremental_merge_unites_components(spark):
     """The case the fixture graph is too sparse to produce: one batch edge
     MERGING two existing multi-doc components (plus a brand-new pair and a
@@ -491,38 +511,36 @@ def test_q184_incremental_merge_unites_components(spark):
     must equal full connected components over the union of all edges —
     including the min-label flowing through the contracted label graph.
     A replay of the same batch_id must be a no-op."""
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.relational_ext import (
         connected_components,
         merge_pairs_into_cluster_ledger,
     )
 
     table = "t_q184_synth_ledger"
-    _drop_table(spark, table)
-    _drop_table(spark, f"{table}_staging")
-    base = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
-    )
-    connected_components(base).write.bucketBy(4, "doc_id").sortBy(
-        "doc_id"
-    ).saveAsTable(table)
-    # (3,10) merges {1,2,3} with {10,11}; (20,21) is a fresh component;
-    # (11,30) pulls a never-seen node into the merged component
-    batch = spark.createDataFrame(
-        [(3, 10), (20, 21), (11, 30)], "doc_a long, doc_b long"
-    )
-    merge_pairs_into_cluster_ledger(spark, batch, table, batch_id=1)
-    got = sorted(map(tuple, spark.table(table).collect()))
-    want = sorted(
-        map(tuple, connected_components(base.unionByName(batch)).collect())
-    )
-    assert got == want
-    assert {r for r in got if r[0] in (10, 11, 30)} == {(10, 1), (11, 1), (30, 1)}
-    assert (20, 20) in got and (21, 20) in got
-    # replay: watermark makes it a no-op (and must not corrupt labels)
-    merge_pairs_into_cluster_ledger(spark, batch, table, batch_id=1)
-    assert sorted(map(tuple, spark.table(table).collect())) == want
-    _drop_table(spark, table)
+    with scoped_tables(spark, table):
+        base = spark.createDataFrame(
+            [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
+        )
+        connected_components(base).write.bucketBy(4, "doc_id").sortBy(
+            "doc_id"
+        ).saveAsTable(table)
+        # (3,10) merges {1,2,3} with {10,11}; (20,21) is a fresh component;
+        # (11,30) pulls a never-seen node into the merged component
+        batch = spark.createDataFrame(
+            [(3, 10), (20, 21), (11, 30)], "doc_a long, doc_b long"
+        )
+        merge_pairs_into_cluster_ledger(spark, batch, table, batch_id=1)
+        got = sorted(map(tuple, spark.table(table).collect()))
+        want = sorted(
+            map(tuple, connected_components(base.unionByName(batch)).collect())
+        )
+        assert got == want
+        assert {r for r in got if r[0] in (10, 11, 30)} == {(10, 1), (11, 1), (30, 1)}
+        assert (20, 20) in got and (21, 20) in got
+        # replay: watermark makes it a no-op (and must not corrupt labels)
+        merge_pairs_into_cluster_ledger(spark, batch, table, batch_id=1)
+        assert sorted(map(tuple, spark.table(table).collect())) == want
 
 
 def test_q184_incremental_merge_batching_invariance(spark):
@@ -532,7 +550,7 @@ def test_q184_incremental_merge_batching_invariance(spark):
     contract rests on. Random but seeded (permanent reproducers)."""
     import random
 
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.relational_ext import (
         connected_components,
         merge_pairs_into_cluster_ledger,
@@ -552,31 +570,29 @@ def test_q184_incremental_merge_batching_invariance(spark):
         lo, hi = min(cut1, cut2), max(cut1, cut2)
         parts = [edges[:lo], edges[lo:hi], edges[hi:]]
         table = f"t_q184_prop_{seed}"
-        _drop_table(spark, table)
-        _drop_table(spark, f"{table}_staging")
-        spark.createDataFrame([], "doc_id long, cluster_id long").write.bucketBy(
-            4, "doc_id"
-        ).sortBy("doc_id").saveAsTable(table)
-        for i, part in enumerate(parts):
-            if not part:
-                continue
-            merge_pairs_into_cluster_ledger(
-                spark,
-                spark.createDataFrame(part, "doc_a long, doc_b long"),
-                table,
-                batch_id=i,
+        with scoped_tables(spark, table):
+            spark.createDataFrame([], "doc_id long, cluster_id long").write.bucketBy(
+                4, "doc_id"
+            ).sortBy("doc_id").saveAsTable(table)
+            for i, part in enumerate(parts):
+                if not part:
+                    continue
+                merge_pairs_into_cluster_ledger(
+                    spark,
+                    spark.createDataFrame(part, "doc_a long, doc_b long"),
+                    table,
+                    batch_id=i,
+                )
+            want = sorted(
+                map(
+                    tuple,
+                    connected_components(
+                        spark.createDataFrame(edges, "doc_a long, doc_b long")
+                    ).collect(),
+                )
             )
-        want = sorted(
-            map(
-                tuple,
-                connected_components(
-                    spark.createDataFrame(edges, "doc_a long, doc_b long")
-                ).collect(),
-            )
-        )
-        got = sorted(map(tuple, spark.table(table).collect()))
-        assert got == want, f"seed {seed}: batched merge != one-shot CC"
-        _drop_table(spark, table)
+            got = sorted(map(tuple, spark.table(table).collect()))
+            assert got == want, f"seed {seed}: batched merge != one-shot CC"
 
 
 def test_cluster_ledger_crash_window_recovers_not_bootstraps(spark):
@@ -587,7 +603,7 @@ def test_cluster_ledger_crash_window_recovers_not_bootstraps(spark):
     the next merge drop the committed staging (total silent history loss).
     The direct merge entry point (ADVICE r9 medium) must likewise recover
     instead of raising table-not-found on its eager ledger read."""
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.relational_ext import (
         cluster_ledger_sink,
         connected_components,
@@ -595,28 +611,26 @@ def test_cluster_ledger_crash_window_recovers_not_bootstraps(spark):
     )
 
     table = "t_ledger_crashwin"
-    _drop_table(spark, table)
-    _drop_table(spark, f"{table}_staging")
-    sink = cluster_ledger_sink(spark, table)
-    b0 = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long")
-    sink(b0, 0)
-    want0 = sorted(map(tuple, spark.table(table).collect()))
-    # simulate the crash between drop(table) and rename(staging→table): the
-    # committed result (props ride the rename) sits in staging, main gone
-    spark.sql(f"ALTER TABLE {table} RENAME TO {table}_staging")
-    # sink path: redelivered batch 0 must recover + no-op, preserving history
-    sink(b0, 0)
-    assert sorted(map(tuple, spark.table(table).collect())) == want0
-    # again crash, then the DIRECT merge path with a NEW batch: must recover
-    # (not raise), keep history, and fold the new edge exactly once
-    spark.sql(f"ALTER TABLE {table} RENAME TO {table}_staging")
-    b1 = spark.createDataFrame([(3, 10)], "doc_a long, doc_b long")
-    merge_pairs_into_cluster_ledger(spark, b1, table, batch_id=1)
-    want1 = sorted(
-        map(tuple, connected_components(b0.unionByName(b1)).collect())
-    )
-    assert sorted(map(tuple, spark.table(table).collect())) == want1
-    _drop_table(spark, table)
+    with scoped_tables(spark, table):
+        sink = cluster_ledger_sink(spark, table)
+        b0 = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long")
+        sink(b0, 0)
+        want0 = sorted(map(tuple, spark.table(table).collect()))
+        # simulate the crash between drop(table) and rename(staging→table): the
+        # committed result (props ride the rename) sits in staging, main gone
+        spark.sql(f"ALTER TABLE {table} RENAME TO {table}_staging")
+        # sink path: redelivered batch 0 must recover + no-op, preserving history
+        sink(b0, 0)
+        assert sorted(map(tuple, spark.table(table).collect())) == want0
+        # again crash, then the DIRECT merge path with a NEW batch: must recover
+        # (not raise), keep history, and fold the new edge exactly once
+        spark.sql(f"ALTER TABLE {table} RENAME TO {table}_staging")
+        b1 = spark.createDataFrame([(3, 10)], "doc_a long, doc_b long")
+        merge_pairs_into_cluster_ledger(spark, b1, table, batch_id=1)
+        want1 = sorted(
+            map(tuple, connected_components(b0.unionByName(b1)).collect())
+        )
+        assert sorted(map(tuple, spark.table(table).collect())) == want1
 
 
 def test_connected_components_long_chain_converges(spark):

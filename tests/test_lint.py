@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -10,6 +11,7 @@ from pyspark.sql import types as T
 
 from wikipediaetl_spark.operators.relational import q11_star_join
 from wikipediaetl_spark.plans import lint_plan
+from wikipediaetl_spark.session import scoped_confs
 from wikipediaetl_spark.sources import load_table
 
 REPO_ROOT = Path(__file__).resolve().parents[1]
@@ -27,13 +29,10 @@ def test_lint_flags_row_udf(spark, sf_dir):
 
 def test_lint_flags_cartesian(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         cross = o.crossJoin(o.select(F.col("o_orderkey").alias("k2")))
         findings = lint_plan(cross)
         assert any("CARTESIAN" in f for f in findings)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
 
 
 def test_lint_quiet_on_good_plan(spark, sf_dir):
@@ -130,9 +129,9 @@ def _is_half(node: ast.expr) -> bool:
     return isinstance(node, ast.Constant) and node.value == 0.5
 
 
-def _engine_and_tool_sources(owner: Path):
-    """Every ``.py`` file under wikipediaetl_spark/ and tools/ but ``owner``."""
-    for d in ("wikipediaetl_spark", "tools"):
+def _sources(owner: Path, *dirs: str):
+    """Every ``.py`` file under the repo-root ``dirs`` but ``owner``."""
+    for d in dirs:
         for path in sorted((REPO_ROOT / d).rglob("*.py")):
             if path != owner:
                 yield path
@@ -145,7 +144,7 @@ def test_half_up_quantizers_live_only_in_fixedpoint():
     oracle SQL are not calls."""
     owner = REPO_ROOT / "wikipediaetl_spark" / "functions" / "fixedpoint.py"
     hits = []
-    for path in _engine_and_tool_sources(owner):
+    for path in _sources(owner, "wikipediaetl_spark", "tools"):
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
             if (
                 isinstance(node, ast.Call)
@@ -165,10 +164,11 @@ def test_half_up_quantizers_live_only_in_fixedpoint():
 def test_temporary_conf_overrides_go_through_scoped_confs():
     """A ``spark.conf.set``/``unset`` inside a ``finally:`` is a hand-written
     save/set/restore block. ``session.scoped_confs`` owns that pattern: it
-    sets inside its ``try`` and unsets keys that were unset on entry."""
+    sets inside its ``try`` and unsets keys that were unset on entry. Tests
+    are walked too: a hard-coded "restore" value leaks into later tests."""
     owner = REPO_ROOT / "wikipediaetl_spark" / "session.py"
     hits = []
-    for path in _engine_and_tool_sources(owner):
+    for path in _sources(owner, "wikipediaetl_spark", "tools", "tests"):
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
             if not isinstance(node, ast.Try):
                 continue
@@ -183,6 +183,60 @@ def test_temporary_conf_overrides_go_through_scoped_confs():
                     ):
                         hits.append(f"{path.relative_to(REPO_ROOT)}:{call.lineno}")
     assert hits == [], hits
+
+
+def _is_table_drop(call: ast.Call) -> bool:
+    """A ``_drop_table(...)`` call, or a call passed ``DROP TABLE`` SQL."""
+    f = call.func
+    if (isinstance(f, ast.Name) and f.id == "_drop_table") or (
+        isinstance(f, ast.Attribute) and f.attr == "_drop_table"
+    ):
+        return True
+    return any(
+        isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and re.search(r"\bDROP\s+TABLE\b", n.value, re.I)
+        for arg in call.args
+        for n in ast.walk(arg)
+    )
+
+
+def _is_query_decorator(dec: ast.expr) -> bool:
+    f = dec.func if isinstance(dec, ast.Call) else dec
+    return (isinstance(f, ast.Name) and f.id == "query") or (
+        isinstance(f, ast.Attribute) and f.attr == "query"
+    )
+
+
+def hand_written_table_drops(pkg: Path) -> list[str]:
+    """``module:function`` of every table drop under ``pkg`` outside
+    operators/layout.py, or inside a ``@query`` builder anywhere."""
+    owner = pkg / "operators" / "layout.py"
+    hits = set()
+
+    def visit(node: ast.AST, rel: str, fn: str | None, in_query: bool) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+            in_query = in_query or any(map(_is_query_decorator, node.decorator_list))
+        if isinstance(node, ast.Call) and _is_table_drop(node):
+            if in_query or rel != owner.relative_to(pkg).as_posix():
+                hits.add(f"{rel}:{fn}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, fn, in_query)
+
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        visit(ast.parse(path.read_text(), filename=str(path)), rel, None, False)
+    return sorted(hits)
+
+
+def test_scratch_tables_go_through_scoped_tables():
+    """Dropping a table by hand before and after a build leaks it when the
+    build raises. ``layout.scoped_tables`` owns the scratch-table lifecycle:
+    it drops each table and its ``_staging`` sibling on entry and again on
+    exit, even on an exception. Only the commit protocol in
+    operators/layout.py drops tables itself, and never in a ``@query``."""
+    assert hand_written_table_drops(REPO_ROOT / "wikipediaetl_spark") == []
 
 
 # (module under wikipediaetl_spark/, innermost enclosing function or None

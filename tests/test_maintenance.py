@@ -334,6 +334,7 @@ class TestPartitionedUpsert:
             read_partitioned,
             upsert_partitioned,
         )
+        from wikipediaetl_spark.session import scoped_confs
 
         path = str(tmp_path / "wh")
         base = spark.createDataFrame(
@@ -365,11 +366,8 @@ class TestPartitionedUpsert:
 
         assert not list(pathlib.Path(path).glob("_upsert_staging_*"))
         # (d): conf-selected durable path, replay idempotent
-        spark.conf.set(_DURABLE_CONF, "true")
-        try:
+        with scoped_confs(spark, {_DURABLE_CONF: "true"}):
             upsert_partitioned(spark, path, batch, "o_orderkey")
-        finally:
-            spark.conf.set(_DURABLE_CONF, "false")
         rows2 = {
             r.o_orderkey: (r.o_orderstatus, r.o_totalprice)
             for r in read_partitioned(spark, path).collect()
@@ -384,39 +382,38 @@ def test_lineitem_rollup_incremental_equals_rebuild(spark, sf_dir):
     BIT-IDENTICAL to a one-shot rebuild — the associativity invariant that
     makes the stored aggregate a trustworthy serving layer."""
     from wikipediaetl_spark.operators.layout import (
-        _drop_table,
         merge_batch_into_lineitem_rollup,
+        scoped_tables,
     )
     from wikipediaetl_spark.sources import load_table
 
     table = "t_li_rollup_test"
-    _drop_table(spark, table)
-    li = load_table(spark, sf_dir, "lineitem")
-    for part in range(3):
-        merge_batch_into_lineitem_rollup(
-            spark, li.filter(F.pmod("l_orderkey", F.lit(3)) == part), table, n_buckets=4
-        )
-    got = {
-        r.l_orderkey: (r.n_lines, str(r.revenue_d))
-        for r in spark.table(table).collect()
-    }
-    want = {
-        r.l_orderkey: (r.n_lines, str(r.revenue_d))
-        for r in li.groupBy("l_orderkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,6)"
-                )
+    with scoped_tables(spark, table):
+        li = load_table(spark, sf_dir, "lineitem")
+        for part in range(3):
+            merge_batch_into_lineitem_rollup(
+                spark, li.filter(F.pmod("l_orderkey", F.lit(3)) == part), table, n_buckets=4
             )
-            .cast("decimal(28,6)")
-            .alias("revenue_d"),
-        )
-        .collect()
-    }
-    assert got == want
-    _drop_table(spark, table)
+        got = {
+            r.l_orderkey: (r.n_lines, str(r.revenue_d))
+            for r in spark.table(table).collect()
+        }
+        want = {
+            r.l_orderkey: (r.n_lines, str(r.revenue_d))
+            for r in li.groupBy("l_orderkey")
+            .agg(
+                F.count(F.lit(1)).alias("n_lines"),
+                F.sum(
+                    (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
+                        "decimal(18,6)"
+                    )
+                )
+                .cast("decimal(28,6)")
+                .alias("revenue_d"),
+            )
+            .collect()
+        }
+        assert got == want
 
 
 def test_keyed_rollup_merge_incremental_equals_rebuild(spark, tmp_path):
@@ -426,8 +423,8 @@ def test_keyed_rollup_merge_incremental_equals_rebuild(spark, tmp_path):
     rebuilding from the union, and the partitioned variant must survive the
     staged RENAME with its partitions intact (the RECOVER PARTITIONS fix)."""
     from wikipediaetl_spark.operators.layout import (
-        _drop_table,
         merge_batch_into_keyed_rollup,
+        scoped_tables,
     )
     from pyspark.sql import functions as F
 
@@ -439,35 +436,33 @@ def test_keyed_rollup_merge_incremental_equals_rebuild(spark, tmp_path):
     )
     # max algebra, unpartitioned
     t = "t_keyed_rollup_max"
-    _drop_table(spark, t)
-    agg = lambda d: d.groupBy("k").agg(F.max("v").alias("mx"))
-    agg(b1).write.bucketBy(4, "k").sortBy("k").saveAsTable(t)
-    merge_batch_into_keyed_rollup(
-        spark, agg(b2), t, keys=["k"], merge_aggs=[F.max("mx").alias("mx")],
-        bucket_key="k", n_buckets=4,
-    )
-    got = {r.k: r.mx for r in spark.table(t).collect()}
-    assert got == {1: 30, 2: 50, 3: 7}
-    _drop_table(spark, t)
+    with scoped_tables(spark, t):
+        agg = lambda d: d.groupBy("k").agg(F.max("v").alias("mx"))
+        agg(b1).write.bucketBy(4, "k").sortBy("k").saveAsTable(t)
+        merge_batch_into_keyed_rollup(
+            spark, agg(b2), t, keys=["k"], merge_aggs=[F.max("mx").alias("mx")],
+            bucket_key="k", n_buckets=4,
+        )
+        got = {r.k: r.mx for r in spark.table(t).collect()}
+        assert got == {1: 30, 2: 50, 3: 7}
     # sum algebra, partitioned on g: partitions must survive the swap
     t = "t_keyed_rollup_sum"
-    _drop_table(spark, t)
-    agg2 = lambda d: d.groupBy("g", "k").agg(F.sum("v").cast("long").alias("s"))
-    agg2(b1).write.partitionBy("g").bucketBy(4, "k").sortBy("k").saveAsTable(t)
-    merge_batch_into_keyed_rollup(
-        spark, agg2(b2), t, keys=["g", "k"],
-        merge_aggs=[F.sum("s").cast("long").alias("s")],
-        bucket_key="k", n_buckets=4, partition_cols=("g",),
-    )
-    got = {(r.g, r.k): r.s for r in spark.table(t).collect()}
-    assert got == {("A", 1): 60, ("B", 2): 55, ("B", 3): 7}
-    # a partition-pruned serve read actually prunes (directory pruning)
-    plan = (
-        spark.table(t).filter(F.col("g") == "A")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PartitionFilters" in plan and "g#" in plan.split("PartitionFilters")[1][:120]
-    _drop_table(spark, t)
+    with scoped_tables(spark, t):
+        agg2 = lambda d: d.groupBy("g", "k").agg(F.sum("v").cast("long").alias("s"))
+        agg2(b1).write.partitionBy("g").bucketBy(4, "k").sortBy("k").saveAsTable(t)
+        merge_batch_into_keyed_rollup(
+            spark, agg2(b2), t, keys=["g", "k"],
+            merge_aggs=[F.sum("s").cast("long").alias("s")],
+            bucket_key="k", n_buckets=4, partition_cols=("g",),
+        )
+        got = {(r.g, r.k): r.s for r in spark.table(t).collect()}
+        assert got == {("A", 1): 60, ("B", 2): 55, ("B", 3): 7}
+        # a partition-pruned serve read actually prunes (directory pruning)
+        plan = (
+            spark.table(t).filter(F.col("g") == "A")
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert "PartitionFilters" in plan and "g#" in plan.split("PartitionFilters")[1][:120]
 
 
 def test_ledger_min_sum_algebra_replay_idempotent(spark, tmp_path):
@@ -479,38 +474,37 @@ def test_ledger_min_sum_algebra_replay_idempotent(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from wikipediaetl_spark.operators.layout import (
-        _drop_table,
         merge_batch_into_keyed_rollup,
+        scoped_tables,
     )
 
     t = "t_ledger_min_sum"
-    _drop_table(spark, t)
-    base = spark.createDataFrame(
-        [("h1", 10, 3), ("h2", 5, 1)], "content_key string, keeper long, n long"
-    )
-    base.write.bucketBy(4, "content_key").sortBy("content_key").saveAsTable(t)
-    batch = spark.createDataFrame(
-        [("h1", 2, 2), ("h3", 9, 1)], "content_key string, keeper long, n long"
-    )
-    aggs = [
-        F.min("keeper").alias("keeper"),
-        F.sum("n").cast("long").alias("n"),
-    ]
-    merge_batch_into_keyed_rollup(
-        spark, batch, t, keys=["content_key"], merge_aggs=aggs,
-        bucket_key="content_key", n_buckets=4, batch_id=1,
-    )
-    want = {("h1"): (2, 5), ("h2"): (5, 1), ("h3"): (9, 1)}
-    got = {r.content_key: (r.keeper, r.n) for r in spark.table(t).collect()}
-    assert got == want
-    # replay of batch 1: watermark makes it a no-op, not a double-merge
-    merge_batch_into_keyed_rollup(
-        spark, batch, t, keys=["content_key"], merge_aggs=aggs,
-        bucket_key="content_key", n_buckets=4, batch_id=1,
-    )
-    got = {r.content_key: (r.keeper, r.n) for r in spark.table(t).collect()}
-    assert got == want, "replayed batch must not double-count or move keepers"
-    _drop_table(spark, t)
+    with scoped_tables(spark, t):
+        base = spark.createDataFrame(
+            [("h1", 10, 3), ("h2", 5, 1)], "content_key string, keeper long, n long"
+        )
+        base.write.bucketBy(4, "content_key").sortBy("content_key").saveAsTable(t)
+        batch = spark.createDataFrame(
+            [("h1", 2, 2), ("h3", 9, 1)], "content_key string, keeper long, n long"
+        )
+        aggs = [
+            F.min("keeper").alias("keeper"),
+            F.sum("n").cast("long").alias("n"),
+        ]
+        merge_batch_into_keyed_rollup(
+            spark, batch, t, keys=["content_key"], merge_aggs=aggs,
+            bucket_key="content_key", n_buckets=4, batch_id=1,
+        )
+        want = {("h1"): (2, 5), ("h2"): (5, 1), ("h3"): (9, 1)}
+        got = {r.content_key: (r.keeper, r.n) for r in spark.table(t).collect()}
+        assert got == want
+        # replay of batch 1: watermark makes it a no-op, not a double-merge
+        merge_batch_into_keyed_rollup(
+            spark, batch, t, keys=["content_key"], merge_aggs=aggs,
+            bucket_key="content_key", n_buckets=4, batch_id=1,
+        )
+        got = {r.content_key: (r.keeper, r.n) for r in spark.table(t).collect()}
+        assert got == want, "replayed batch must not double-count or move keepers"
 
 
 def test_serving_layout_queries_match_stock_plans(spark, sf_dir):
@@ -547,46 +541,69 @@ def test_append_layout_replay_and_crash_scrub(spark):
     from wikipediaetl_spark.operators.layout import (
         _BATCH_PROP,
         _PENDING_PROP,
-        _drop_table,
         append_batch_to_layout,
+        scoped_tables,
     )
 
     t = "t_append_layout"
-    _drop_table(spark, t)
-    _drop_table(spark, f"{t}_staging")
+    with scoped_tables(spark, t):
 
-    def rows(vals):
-        return spark.createDataFrame([(v, v * 10) for v in vals], "k long, n long")
+        def rows(vals):
+            return spark.createDataFrame([(v, v * 10) for v in vals], "k long, n long")
 
-    def total():
-        return spark.table(t).agg(F.sum("n")).first()[0]
+        def total():
+            return spark.table(t).agg(F.sum("n")).first()[0]
 
-    # bootstrap routes through the staged swap and stamps the watermark
-    assert append_batch_to_layout(spark, rows([1, 2, 3]), t, "k", batch_id=0)
-    assert total() == 60
-    # replayed batch 0: no-op
-    assert not append_batch_to_layout(spark, rows([1, 2, 3]), t, "k", batch_id=0)
-    assert total() == 60
-    # batch 1 appends once, replay suppressed
-    assert append_batch_to_layout(spark, rows([4]), t, "k", batch_id=1)
-    assert not append_batch_to_layout(spark, rows([4]), t, "k", batch_id=1)
-    assert total() == 100
-    # simulate a crash mid-append of batch 2: pending stamped, PARTIAL rows
-    # of the batch on disk, commit stamp never written
-    spark.sql(f"ALTER TABLE {t} SET TBLPROPERTIES ('{_PENDING_PROP}'='2')")
-    rows([5]).withColumn("ingest_batch", F.lit(2).cast("long")).write.mode(
-        "append"
-    ).bucketBy(8, "k").sortBy("k").saveAsTable(t)
-    # redelivery of batch 2 (full contents): partial rows scrubbed first,
-    # then the full batch lands exactly once
-    assert append_batch_to_layout(spark, rows([5, 6]), t, "k", batch_id=2)
-    assert total() == 210
-    got = sorted(r[0] for r in spark.table(t).select("k").collect())
-    assert got == [1, 2, 3, 4, 5, 6]
-    # commit stamp advanced; a late replay of batch 2 is suppressed
-    assert not append_batch_to_layout(spark, rows([5, 6]), t, "k", batch_id=2)
-    assert total() == 210
-    _drop_table(spark, t)
+        # bootstrap routes through the staged swap and stamps the watermark
+        assert append_batch_to_layout(spark, rows([1, 2, 3]), t, "k", batch_id=0)
+        assert total() == 60
+        # replayed batch 0: no-op
+        assert not append_batch_to_layout(spark, rows([1, 2, 3]), t, "k", batch_id=0)
+        assert total() == 60
+        # batch 1 appends once, replay suppressed
+        assert append_batch_to_layout(spark, rows([4]), t, "k", batch_id=1)
+        assert not append_batch_to_layout(spark, rows([4]), t, "k", batch_id=1)
+        assert total() == 100
+        # simulate a crash mid-append of batch 2: pending stamped, PARTIAL rows
+        # of the batch on disk, commit stamp never written
+        spark.sql(f"ALTER TABLE {t} SET TBLPROPERTIES ('{_PENDING_PROP}'='2')")
+        rows([5]).withColumn("ingest_batch", F.lit(2).cast("long")).write.mode(
+            "append"
+        ).bucketBy(8, "k").sortBy("k").saveAsTable(t)
+        # redelivery of batch 2 (full contents): partial rows scrubbed first,
+        # then the full batch lands exactly once
+        assert append_batch_to_layout(spark, rows([5, 6]), t, "k", batch_id=2)
+        assert total() == 210
+        got = sorted(r[0] for r in spark.table(t).select("k").collect())
+        assert got == [1, 2, 3, 4, 5, 6]
+        # commit stamp advanced; a late replay of batch 2 is suppressed
+        assert not append_batch_to_layout(spark, rows([5, 6]), t, "k", batch_id=2)
+        assert total() == 210
+
+
+def test_scoped_tables_clears_orphans_and_staging(spark):
+    """scoped_tables on entry removes a warehouse directory an earlier
+    session orphaned (no catalog entry, so saveAsTable would fail with
+    LOCATION_ALREADY_EXISTS), and on exit drops the ``_staging`` sibling the
+    body wrote, directory included."""
+    from pathlib import Path
+    from urllib.parse import urlparse
+
+    from wikipediaetl_spark.operators.layout import scoped_tables
+
+    t = "t_scoped_orphan"
+    wh = Path(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path)
+    orphan = wh / t
+    orphan.mkdir(parents=True, exist_ok=True)
+    (orphan / "part-00000.parquet").write_bytes(b"left by a dead session")
+    assert not spark.catalog.tableExists(t)
+    with scoped_tables(spark, t):
+        spark.range(3).write.saveAsTable(t)
+        spark.range(2).write.saveAsTable(f"{t}_staging")
+        assert spark.table(t).count() == 3
+    for name in (t, f"{t}_staging"):
+        assert not spark.catalog.tableExists(name)
+        assert not (wh / name).exists()
 
 
 def test_append_layout_bootstrap_crash_not_adopted(spark):
@@ -598,31 +615,29 @@ def test_append_layout_bootstrap_crash_not_adopted(spark):
     from pyspark.sql import functions as F
 
     from wikipediaetl_spark.operators.layout import (
-        _drop_table,
         append_batch_to_layout,
+        scoped_tables,
     )
 
     t = "t_append_bootstrap_crash"
-    _drop_table(spark, t)
-    _drop_table(spark, f"{t}_staging")
+    with scoped_tables(spark, t):
 
-    def rows(vals):
-        return spark.createDataFrame([(v, v * 10) for v in vals], "k long, n long")
+        def rows(vals):
+            return spark.createDataFrame([(v, v * 10) for v in vals], "k long, n long")
 
-    # fabricate a partial bootstrap write: wrong contents, NO commit marker
-    rows([99]).withColumn("ingest_batch", F.lit(0).cast("long")).write.saveAsTable(
-        f"{t}_staging"
-    )
-    assert append_batch_to_layout(spark, rows([1, 2]), t, "k", batch_id=0)
-    got = sorted(r[0] for r in spark.table(t).select("k").collect())
-    assert got == [1, 2]  # the partial 99-row staging was discarded
-    # committed staging caught between drop and rename: recover, then the
-    # replayed bootstrap batch is a no-op on the recovered watermark
-    spark.sql(f"ALTER TABLE {t} RENAME TO {t}_staging")
-    assert not append_batch_to_layout(spark, rows([1, 2]), t, "k", batch_id=0)
-    got = sorted(r[0] for r in spark.table(t).select("k").collect())
-    assert got == [1, 2]
-    _drop_table(spark, t)
+        # fabricate a partial bootstrap write: wrong contents, NO commit marker
+        rows([99]).withColumn("ingest_batch", F.lit(0).cast("long")).write.saveAsTable(
+            f"{t}_staging"
+        )
+        assert append_batch_to_layout(spark, rows([1, 2]), t, "k", batch_id=0)
+        got = sorted(r[0] for r in spark.table(t).select("k").collect())
+        assert got == [1, 2]  # the partial 99-row staging was discarded
+        # committed staging caught between drop and rename: recover, then the
+        # replayed bootstrap batch is a no-op on the recovered watermark
+        spark.sql(f"ALTER TABLE {t} RENAME TO {t}_staging")
+        assert not append_batch_to_layout(spark, rows([1, 2]), t, "k", batch_id=0)
+        got = sorted(r[0] for r in spark.table(t).select("k").collect())
+        assert got == [1, 2]
 
 
 def test_tblproperties_helpers_distinguish_missing_from_broken(spark):
@@ -668,39 +683,37 @@ def test_maintained_layout_sink_order_is_structural(spark):
     from wikipediaetl_spark.operators.layout import (
         _drop_table,
         maintained_layout_sink,
+        scoped_tables,
         staged_swap_write,
     )
 
     t = "t_skel_order"
-    _drop_table(spark, t)
-    _drop_table(spark, f"{t}_staging")
-    calls: list[str] = []
+    with scoped_tables(spark, t):
+        calls: list[str] = []
 
-    # fabricate the drop->rename crash window: committed staging, no table
-    staged_swap_write(
-        spark,
-        lambda: spark.createDataFrame([(1, 10)], "k long, v long"),
-        t,
-        bucket_key="k",
-        batch_id=3,
-    )
-    spark.sql(f"ALTER TABLE {t} RENAME TO {t}_staging")
+        # fabricate the drop->rename crash window: committed staging, no table
+        staged_swap_write(
+            spark,
+            lambda: spark.createDataFrame([(1, 10)], "k long, v long"),
+            t,
+            bucket_key="k",
+            batch_id=3,
+        )
+        spark.sql(f"ALTER TABLE {t} RENAME TO {t}_staging")
 
-    sink = maintained_layout_sink(
-        spark,
-        lambda b, bid: calls.append(f"apply:{bid}"),
-        recover_tables=[t],
-        bootstrap=lambda: calls.append("bootstrap"),
-    )
-    sink(None, 4)
-    # recovery renamed the committed staging back -> bootstrap must NOT run
-    assert calls == ["apply:4"]
-    assert [r[0] for r in spark.table(t).collect()] == [1]
+        sink = maintained_layout_sink(
+            spark,
+            lambda b, bid: calls.append(f"apply:{bid}"),
+            recover_tables=[t],
+            bootstrap=lambda: calls.append("bootstrap"),
+        )
+        sink(None, 4)
+        # recovery renamed the committed staging back -> bootstrap must NOT run
+        assert calls == ["apply:4"]
+        assert [r[0] for r in spark.table(t).collect()] == [1]
 
-    # genuinely absent table -> bootstrap runs exactly once, before apply
-    _drop_table(spark, t)
-    calls.clear()
-    sink(None, 5)
-    assert calls == ["bootstrap", "apply:5"]
-    _drop_table(spark, t)
-    _drop_table(spark, f"{t}_staging")
+        # genuinely absent table -> bootstrap runs exactly once, before apply
+        _drop_table(spark, t)
+        calls.clear()
+        sink(None, 5)
+        assert calls == ["bootstrap", "apply:5"]

@@ -57,25 +57,20 @@ def test_runtime_bloom_filter_injection(spark, sf_dir):
     cannot match are dropped before the exchange (the at-scale default)."""
     from pyspark.sql import functions as F
 
+    from wikipediaetl_spark.session import scoped_confs
     from wikipediaetl_spark.sources import load_table
 
     confs = {
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1KB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, confs):
         li = load_table(spark, sf_dir, "lineitem")
         o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
         j = li.join(o, li.l_orderkey == o.o_orderkey).groupBy("o_orderpriority").count()
         plan = j._jdf.queryExecution().optimizedPlan().toString()
         assert "bloom" in plan.lower()
         assert j.count() > 0  # and it still computes correctly
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
 
 
 def test_duplicate_spans_is_keyed_join(spark, sf_dir):
@@ -270,37 +265,32 @@ def test_lsh_index_joins_reuse_bucketing(spark, sf_dir):
         lsh_index_self_pairs,
         portable_minhash_bands,
     )
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
+    from wikipediaetl_spark.session import scoped_confs
     from wikipediaetl_spark.sources import load_table
 
     t = "t_plans_lsh_index"
     d = load_table(spark, sf_dir, "documents")
     is_batch = F.pmod(F.col("doc_id") * 31 + 7, F.lit(10)) == 3
-    _drop_table(spark, t)
-    (
-        portable_minhash_bands(_shingles(d.filter(~is_batch), n=2))
-        .write.bucketBy(16, "band_idx", "band_hash")
-        .sortBy("band_idx", "band_hash")
-        .saveAsTable(t)
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        idx = spark.table(t)
-        self_plan = explain_str(lsh_index_self_pairs(idx), mode="simple")
-        assert self_plan.count("Exchange hashpartitioning") == 0, self_plan[:800]
-        assert self_plan.count("Bucketed: true") == 2, self_plan[:800]
-        batch = portable_minhash_bands(
-            _shingles(d.filter(is_batch), n=2)
-        ).localCheckpoint(eager=True)
-        probe_plan = explain_str(lsh_index_probe(batch, idx), mode="simple")
-        # exactly ONE exchange — the batch side; the index scan stays bucketed
-        assert probe_plan.count("Exchange hashpartitioning") == 1, probe_plan[:800]
-        assert probe_plan.count("Bucketed: true") == 1, probe_plan[:800]
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
+    with scoped_tables(spark, t):
+        (
+            portable_minhash_bands(_shingles(d.filter(~is_batch), n=2))
+            .write.bucketBy(16, "band_idx", "band_hash")
+            .sortBy("band_idx", "band_hash")
+            .saveAsTable(t)
         )
-        _drop_table(spark, t)
+        with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            idx = spark.table(t)
+            self_plan = explain_str(lsh_index_self_pairs(idx), mode="simple")
+            assert self_plan.count("Exchange hashpartitioning") == 0, self_plan[:800]
+            assert self_plan.count("Bucketed: true") == 2, self_plan[:800]
+            batch = portable_minhash_bands(
+                _shingles(d.filter(is_batch), n=2)
+            ).localCheckpoint(eager=True)
+            probe_plan = explain_str(lsh_index_probe(batch, idx), mode="simple")
+            # exactly ONE exchange — the batch side; the index scan stays bucketed
+            assert probe_plan.count("Exchange hashpartitioning") == 1, probe_plan[:800]
+            assert probe_plan.count("Bucketed: true") == 1, probe_plan[:800]
 
 
 def test_semdedup_index_joins_reuse_bucketing(spark, sf_dir):
@@ -317,8 +307,9 @@ def test_semdedup_index_joins_reuse_bucketing(spark, sf_dir):
         semdedup_index_probe,
         semdedup_index_self_pairs,
     )
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.similarity import dot_expr
+    from wikipediaetl_spark.session import scoped_confs
     from wikipediaetl_spark.sources import load_table
 
     t = "t_plans_semdedup_index"
@@ -327,23 +318,17 @@ def test_semdedup_index_joins_reuse_bucketing(spark, sf_dir):
     )
     e = e.withColumn("nrm", F.sqrt(dot_expr(F.col("v"), F.col("v"))))
     is_batch = F.pmod(F.col("vec_id") * 31 + 7, F.lit(10)) == 3
-    _drop_table(spark, t)
-    e.filter(~is_batch).write.bucketBy(8, "label").sortBy("label").saveAsTable(t)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        idx = spark.table(t)
-        self_plan = explain_str(semdedup_index_self_pairs(idx), mode="simple")
-        assert self_plan.count("Exchange hashpartitioning") == 0, self_plan[:800]
-        assert self_plan.count("Bucketed: true") == 2, self_plan[:800]
-        batch = e.filter(is_batch).localCheckpoint(eager=True)
-        probe_plan = explain_str(semdedup_index_probe(batch, idx), mode="simple")
-        assert probe_plan.count("Exchange hashpartitioning") == 2, probe_plan[:800]
-        assert probe_plan.count("Bucketed: true") == 1, probe_plan[:800]
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
-        _drop_table(spark, t)
+    with scoped_tables(spark, t):
+        e.filter(~is_batch).write.bucketBy(8, "label").sortBy("label").saveAsTable(t)
+        with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            idx = spark.table(t)
+            self_plan = explain_str(semdedup_index_self_pairs(idx), mode="simple")
+            assert self_plan.count("Exchange hashpartitioning") == 0, self_plan[:800]
+            assert self_plan.count("Bucketed: true") == 2, self_plan[:800]
+            batch = e.filter(is_batch).localCheckpoint(eager=True)
+            probe_plan = explain_str(semdedup_index_probe(batch, idx), mode="simple")
+            assert probe_plan.count("Exchange hashpartitioning") == 2, probe_plan[:800]
+            assert probe_plan.count("Bucketed: true") == 1, probe_plan[:800]
 
 
 def test_decontam_ledger_serve_plan(spark, sf_dir):
@@ -354,42 +339,35 @@ def test_decontam_ledger_serve_plan(spark, sf_dir):
     and the only exchanges are the two O(survivors) aggregations."""
     from pyspark.sql import functions as F
 
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.pipeline_ops import (
         _trigram_occurrences,
         decontam_ledger_serve,
     )
+    from wikipediaetl_spark.session import scoped_confs
     from wikipediaetl_spark.sources import load_table
 
     pt, dt = "t_plans_decontam_post", "t_plans_decontam_df"
     d = load_table(spark, sf_dir, "documents")
     is_batch = F.pmod(F.col("doc_id") * 31 + 7, F.lit(10)) == 3
-    _drop_table(spark, pt)
-    _drop_table(spark, dt)
-    base = _trigram_occurrences(d.filter(~is_batch)).distinct()
-    base.write.bucketBy(8, "tok").sortBy("tok").saveAsTable(pt)
-    (
-        spark.table(pt)
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .write.bucketBy(8, "tok")
-        .sortBy("tok")
-        .saveAsTable(dt)
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = explain_str(
-            decontam_ledger_serve(spark.table(pt), spark.table(dt), 500),
-            mode="simple",
+    with scoped_tables(spark, pt, dt):
+        base = _trigram_occurrences(d.filter(~is_batch)).distinct()
+        base.write.bucketBy(8, "tok").sortBy("tok").saveAsTable(pt)
+        (
+            spark.table(pt)
+            .groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .write.bucketBy(8, "tok")
+            .sortBy("tok")
+            .saveAsTable(dt)
         )
-        assert plan.count("Exchange hashpartitioning") == 2, plan[:1200]
-        assert "LessThan(doc_id,50)" in plan, plan[:1200]
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
-        _drop_table(spark, pt)
-        _drop_table(spark, dt)
+        with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            plan = explain_str(
+                decontam_ledger_serve(spark.table(pt), spark.table(dt), 500),
+                mode="simple",
+            )
+            assert plan.count("Exchange hashpartitioning") == 2, plan[:1200]
+            assert "LessThan(doc_id,50)" in plan, plan[:1200]
 
 
 def test_ccnet_serve_plan_scans_only_feature_layout(spark, sf_dir):
@@ -397,7 +375,7 @@ def test_ccnet_serve_plan_scans_only_feature_layout(spark, sf_dir):
     feature table alone — a single bucketed scan, the ntile window and the
     grain aggregate both riding the lang bucketing with ZERO exchanges, and
     no token pass / documents scan anywhere in the plan."""
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.text_analysis import (
         ccnet_serve_from_features,
         score_docs,
@@ -408,21 +386,18 @@ def test_ccnet_serve_plan_scans_only_feature_layout(spark, sf_dir):
     t = "t_plans_ccnet_feats"
     d = load_table(spark, sf_dir, "documents")
     lp, oov = unigram_lm(spark, sf_dir)
-    _drop_table(spark, t)
-    (
-        score_docs(d, lp, oov)
-        .join(d.select("doc_id", "lang"), "doc_id")
-        .write.bucketBy(4, "lang")
-        .sortBy("lang")
-        .saveAsTable(t)
-    )
-    try:
+    with scoped_tables(spark, t):
+        (
+            score_docs(d, lp, oov)
+            .join(d.select("doc_id", "lang"), "doc_id")
+            .write.bucketBy(4, "lang")
+            .sortBy("lang")
+            .saveAsTable(t)
+        )
         plan = explain_str(ccnet_serve_from_features(spark.table(t)), mode="simple")
         assert plan.count("Exchange") == 0, plan[:900]
         assert plan.count("FileScan") == 1 and "Bucketed: true" in plan, plan[:900]
         assert "documents" not in plan  # no raw-corpus scan at serve time
-    finally:
-        _drop_table(spark, t)
 
 
 def test_star_mv_serve_plan_is_single_scan(spark, sf_dir):
@@ -432,7 +407,7 @@ def test_star_mv_serve_plan_is_single_scan(spark, sf_dir):
     immaterial; what matters is that NO fact table appears."""
     from pyspark.sql import functions as F
 
-    from wikipediaetl_spark.operators.layout import _drop_table, star_mv_serve
+    from wikipediaetl_spark.operators.layout import scoped_tables, star_mv_serve
     from wikipediaetl_spark.operators.relational import _t
     from wikipediaetl_spark.sources import load_table
 
@@ -445,28 +420,25 @@ def test_star_mv_serve_plan_is_single_scan(spark, sf_dir):
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey", "n_name")
     r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    _drop_table(spark, t)
-    (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name", "n_name", "o_year")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.sum("o_cents").alias("cents"),
+    with scoped_tables(spark, t):
+        (
+            o.join(c, o.o_custkey == c.c_custkey)
+            .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+            .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+            .groupBy("r_name", "n_name", "o_year")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_orders"),
+                F.sum("o_cents").alias("cents"),
+            )
+            .write.bucketBy(4, "o_year")
+            .sortBy("o_year")
+            .saveAsTable(t)
         )
-        .write.bucketBy(4, "o_year")
-        .sortBy("o_year")
-        .saveAsTable(t)
-    )
-    try:
         plan = explain_str(star_mv_serve(spark, t), mode="simple")
         assert "Join" not in plan, plan[:900]
         assert plan.count("FileScan") == 1, plan[:900]
         # the single scan is the MV table — no raw-fact parquet anywhere
         assert "t_plans_star_mv" in plan and "testdata" not in plan, plan[:900]
-    finally:
-        _drop_table(spark, t)
 
 
 def test_ivf_probe_plan_prunes_partitions_and_broadcasts(spark, sf_dir):
@@ -477,18 +449,17 @@ def test_ivf_probe_plan_prunes_partitions_and_broadcasts(spark, sf_dir):
     per-query top-k window (whose input is candidates only)."""
     from pyspark.sql import functions as F
 
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.similarity import _vectors, ivf_index_probe
 
     t = "t_plans_ivf_index"
     e = _vectors(spark, sf_dir)
-    _drop_table(spark, t)
-    (
-        e.select("vec_id", "v", F.col("label").alias("cell"))
-        .write.partitionBy("cell")
-        .saveAsTable(t)
-    )
-    try:
+    with scoped_tables(spark, t):
+        (
+            e.select("vec_id", "v", F.col("label").alias("cell"))
+            .write.partitionBy("cell")
+            .saveAsTable(t)
+        )
         probes = (
             e.filter(F.col("vec_id") < 10)
             .select(
@@ -505,8 +476,6 @@ def test_ivf_probe_plan_prunes_partitions_and_broadcasts(spark, sf_dir):
             assert "SortMergeJoin" not in plan, plan[:900]
             # the scan itself prunes to the probed cells' directories
             assert "PartitionFilters" in plan and "cell" in plan, plan[:900]
-    finally:
-        _drop_table(spark, t)
 
 
 def test_dedup_ledger_probe_reuses_bucketing(spark, sf_dir):
@@ -517,46 +486,41 @@ def test_dedup_ledger_probe_reuses_bucketing(spark, sf_dir):
     broadcasts."""
     from pyspark.sql import functions as F
 
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
+    from wikipediaetl_spark.session import scoped_confs
     from wikipediaetl_spark.sources import load_table
 
     t = "t_plans_dedup_ledger"
     d = load_table(spark, sf_dir, "documents")
     is_batch = F.pmod(F.col("doc_id") * 17 + 3, F.lit(10)) == 6
-    _drop_table(spark, t)
-    (
-        d.filter(~is_batch)
-        .groupBy(F.md5(F.col("text")).alias("content_key"))
-        .agg(
-            F.min("doc_id").alias("keeper_doc_id"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
+    with scoped_tables(spark, t):
+        (
+            d.filter(~is_batch)
+            .groupBy(F.md5(F.col("text")).alias("content_key"))
+            .agg(
+                F.min("doc_id").alias("keeper_doc_id"),
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+            )
+            .write.bucketBy(16, "content_key")
+            .sortBy("content_key")
+            .saveAsTable(t)
         )
-        .write.bucketBy(16, "content_key")
-        .sortBy("content_key")
-        .saveAsTable(t)
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        batch_keys = (
-            d.filter(is_batch)
-            .select(F.md5(F.col("text")).alias("content_key"))
-            .distinct()
-        )
-        new_keys = batch_keys.join(spark.table(t), "content_key", "left_anti")
-        plan = explain_str(new_keys, mode="simple")
-        # both exchanges are BATCH-side (the distinct's partial agg, then
-        # alignment into the 16-bucket hashing); the ledger side must stay
-        # a bucketed scan feeding the anti-join with no exchange of its own
-        assert plan.count("Exchange hashpartitioning") <= 2, plan[:900]
-        assert plan.count("Bucketed: true") == 1, plan[:900]
-        ledger_side = plan.split("FileScan parquet spark_catalog.default." + t, 1)
-        assert len(ledger_side) == 2, plan[:900]
-        assert new_keys.count() >= 0
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
-        _drop_table(spark, t)
+        with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            batch_keys = (
+                d.filter(is_batch)
+                .select(F.md5(F.col("text")).alias("content_key"))
+                .distinct()
+            )
+            new_keys = batch_keys.join(spark.table(t), "content_key", "left_anti")
+            plan = explain_str(new_keys, mode="simple")
+            # both exchanges are BATCH-side (the distinct's partial agg, then
+            # alignment into the 16-bucket hashing); the ledger side must stay
+            # a bucketed scan feeding the anti-join with no exchange of its own
+            assert plan.count("Exchange hashpartitioning") <= 2, plan[:900]
+            assert plan.count("Bucketed: true") == 1, plan[:900]
+            ledger_side = plan.split("FileScan parquet spark_catalog.default." + t, 1)
+            assert len(ledger_side) == 2, plan[:900]
+            assert new_keys.count() >= 0
 
 
 def test_bm25_probe_bucket_prunes_and_never_scans_corpus(spark, sf_dir):
@@ -566,34 +530,32 @@ def test_bm25_probe_bucket_prunes_and_never_scans_corpus(spark, sf_dir):
     and never touch the raw documents table."""
     from pyspark.sql import functions as F
 
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.text_analysis import bm25_index_probe
     from wikipediaetl_spark.sources import load_table
 
     pt, lt = "t_plans_bm25_postings", "t_plans_bm25_doclen"
     d = load_table(spark, sf_dir, "documents")
-    _drop_table(spark, pt)
-    _drop_table(spark, lt)
-    (
-        d.select("doc_id", F.split(F.col("text"), " ").alias("w"))
-        .localCheckpoint(eager=False)
-        .select(
-            "doc_id",
-            F.size("w").cast("long").alias("dl"),
-            F.explode("w").alias("tok"),
+    with scoped_tables(spark, pt, lt):
+        (
+            d.select("doc_id", F.split(F.col("text"), " ").alias("w"))
+            .localCheckpoint(eager=False)
+            .select(
+                "doc_id",
+                F.size("w").cast("long").alias("dl"),
+                F.explode("w").alias("tok"),
+            )
+            .groupBy("tok", "doc_id", "dl")
+            .agg(F.count(F.lit(1)).cast("long").alias("tf"))
+            .write.bucketBy(8, "tok")
+            .sortBy("tok")
+            .saveAsTable(pt)
         )
-        .groupBy("tok", "doc_id", "dl")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .write.bucketBy(8, "tok")
-        .sortBy("tok")
-        .saveAsTable(pt)
-    )
-    (
-        d.select(
-            "doc_id", F.size(F.split(F.col("text"), " ")).cast("long").alias("dl")
-        ).write.saveAsTable(lt)
-    )
-    try:
+        (
+            d.select(
+                "doc_id", F.size(F.split(F.col("text"), " ")).cast("long").alias("dl")
+            ).write.saveAsTable(lt)
+        )
         plan = explain_str(
             bm25_index_probe(spark.table(pt), spark.table(lt)), mode="simple"
         )
@@ -602,9 +564,6 @@ def test_bm25_probe_bucket_prunes_and_never_scans_corpus(spark, sf_dir):
         assert "out of 8" in m[0] and "8 out of 8" not in m[0], m[0]
         assert "documents" not in plan  # layouts only, no corpus text scan
         assert "BroadcastHashJoin" in plan, plan[:900]
-    finally:
-        _drop_table(spark, pt)
-        _drop_table(spark, lt)
 
 
 def test_cluster_ledger_relabel_plan_broadcasts_mapping(spark):
@@ -614,15 +573,14 @@ def test_cluster_ledger_relabel_plan_broadcasts_mapping(spark):
     the ledger is corpus-sized while the touched-label map is O(batch)."""
     from pyspark.sql import functions as F
 
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
 
     t = "t_plans_q184_ledger"
-    _drop_table(spark, t)
-    spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)],
-        "doc_id long, cluster_id long",
-    ).write.bucketBy(8, "doc_id").sortBy("doc_id").saveAsTable(t)
-    try:
+    with scoped_tables(spark, t):
+        spark.createDataFrame(
+            [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)],
+            "doc_id long, cluster_id long",
+        ).write.bucketBy(8, "doc_id").sortBy("doc_id").saveAsTable(t)
         mapping = spark.createDataFrame(
             [(1, 1), (10, 1)], "old_label long, new_label long"
         )
@@ -636,8 +594,6 @@ def test_cluster_ledger_relabel_plan_broadcasts_mapping(spark):
         assert "BroadcastHashJoin" in plan, plan[:900]
         # the only exchange allowed is the broadcast of the mapping side
         assert "Exchange hashpartitioning" not in plan, plan[:900]
-    finally:
-        _drop_table(spark, t)
 
 
 def test_dsir_serve_plan_rides_histogram_bucketing(spark, sf_dir):
@@ -646,7 +602,7 @@ def test_dsir_serve_plan_rides_histogram_bucketing(spark, sf_dir):
     before the aggregate on the hist side — broadcast of the 64-row ratio
     table is the only data movement), and no documents/text scan appears
     anywhere in the serve plan."""
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.pipeline_ops import (
         _dsir_buckets,
         dsir_serve,
@@ -655,40 +611,35 @@ def test_dsir_serve_plan_rides_histogram_bucketing(spark, sf_dir):
 
     ht, ct_t = "t_plans_dsir_hist", "t_plans_dsir_counts"
     d = load_table(spark, sf_dir, "documents")
-    for t in (ht, ct_t):
-        _drop_table(spark, t)
-    toks = _dsir_buckets(d)
-    from pyspark.sql import functions as F
+    with scoped_tables(spark, ht, ct_t):
+        toks = _dsir_buckets(d)
+        from pyspark.sql import functions as F
 
-    (
-        toks.groupBy("doc_id", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .write.bucketBy(8, "doc_id")
-        .sortBy("doc_id")
-        .saveAsTable(ht)
-    )
-    (
-        toks.groupBy("b")
-        .agg(
-            F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
-            .cast("long")
-            .alias("ct"),
-            F.count(F.lit(1)).cast("long").alias("cs"),
+        (
+            toks.groupBy("doc_id", "b")
+            .agg(F.count(F.lit(1)).cast("long").alias("n"))
+            .write.bucketBy(8, "doc_id")
+            .sortBy("doc_id")
+            .saveAsTable(ht)
         )
-        .write.bucketBy(8, "b")
-        .sortBy("b")
-        .saveAsTable(ct_t)
-    )
-    try:
+        (
+            toks.groupBy("b")
+            .agg(
+                F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
+                .cast("long")
+                .alias("ct"),
+                F.count(F.lit(1)).cast("long").alias("cs"),
+            )
+            .write.bucketBy(8, "b")
+            .sortBy("b")
+            .saveAsTable(ct_t)
+        )
         plan = explain_str(dsir_serve(spark.table(ht), spark.table(ct_t)), mode="simple")
         assert "documents" not in plan  # no raw-corpus scan at serve time
         # the doc-grain agg must consume the bucketed scan directly: no
         # hash-partitioning exchange keyed on doc_id anywhere
         assert "Exchange hashpartitioning(doc_id" not in plan, plan[:1200]
         assert "BroadcastExchange" in plan, plan[:1200]
-    finally:
-        for t in (ht, ct_t):
-            _drop_table(spark, t)
 
 
 def test_q116_static_shipdate_pushdown_reaches_scan(spark, sf_dir):

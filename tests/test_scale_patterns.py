@@ -7,6 +7,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from wikipediaetl_spark.operators.etl import categorizer_tables, process_corpus
+from wikipediaetl_spark.operators.layout import scoped_tables
+from wikipediaetl_spark.session import scoped_confs
 from wikipediaetl_spark.sources import load_table
 
 
@@ -15,27 +17,21 @@ def test_bucketed_join_skips_shuffle(spark, sf_dir):
     no Exchange — the 100 TB answer to repeated fact-fact joins."""
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    o.write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(
-        "b_orders"
-    )
-    li.write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(
-        "b_lineitem"
-    )
-    bo = spark.table("b_orders")
-    bl = spark.table("b_lineitem")
-    # disable broadcast so the test exercises the co-located path
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bl.join(bo, bl.l_orderkey == bo.o_orderkey).groupBy("o_orderstatus").count()
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        n = joined.count()
-        assert n > 0
-        assert "Exchange hashpartitioning(l_orderkey" not in plan
-        assert "Exchange hashpartitioning(o_orderkey" not in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
+    with scoped_tables(spark, "b_orders", "b_lineitem"):
+        o.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable("b_orders")
+        li.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable("b_lineitem")
+        bo = spark.table("b_orders")
+        bl = spark.table("b_lineitem")
+        # disable broadcast so the test exercises the co-located path
+        with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            joined = (
+                bl.join(bo, bl.l_orderkey == bo.o_orderkey).groupBy("o_orderstatus").count()
+            )
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            n = joined.count()
+            assert n > 0
+            assert "Exchange hashpartitioning(l_orderkey" not in plan
+            assert "Exchange hashpartitioning(o_orderkey" not in plan
 
 
 def test_shared_scan_pipeline_equivalence(spark, sf_dir):
@@ -69,16 +65,12 @@ def test_results_invariant_to_partitioning(spark, sf_dir):
     from wikipediaetl_spark.catalog import all_queries
 
     qs = all_queries()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     results = {}
-    try:
-        for parts in ("3", "17"):
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
+    for parts in ("3", "17"):
+        with scoped_confs(spark, {"spark.sql.shuffle.partitions": parts}):
             for name in ("q01_pricing_summary", "q44_category_distribution", "q77_string_agg"):
                 rows = sorted(map(str, qs[name].fn(spark, sf_dir).collect()))
                 results.setdefault(name, []).append(rows)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     for name, (a, b) in results.items():
         assert a == b, f"partitioning-dependent result in {name}"
 

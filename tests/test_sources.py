@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from wikipediaetl_spark.session import scoped_confs
 from wikipediaetl_spark.sources import TABLE_NAMES, load_table, parquet_schema, read_wholetext
 from wikipediaetl_spark.sources.formats import (
     archive_processed,
@@ -88,14 +89,10 @@ def test_inference_confs_are_in_the_schema_memo_key(spark, tmp_path):
     p = str(tmp_path / "naive_ts.parquet")
     pq.write_table(pa.table({"t": pa.array([0], pa.timestamp("us"))}), p)
     key = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    before = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "true")
+    with scoped_confs(spark, {key: "true"}):
         ntz = parquet_schema(spark, p)
-        spark.conf.set(key, "false")
+    with scoped_confs(spark, {key: "false"}):
         ltz = parquet_schema(spark, p)
-    finally:
-        spark.conf.set(key, before)
     assert ntz["t"].dataType == T.TimestampNTZType()
     assert ltz["t"].dataType == T.TimestampType()
 

@@ -341,47 +341,45 @@ def test_cluster_ledger_sink_streaming_chained_merges(spark, tmp_path):
     batching."""
     from pyspark.sql import functions as F
 
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.relational_ext import (
         cluster_ledger_sink,
         connected_components,
     )
 
     table = "t_ledger_stream"
-    _drop_table(spark, table)
-    _drop_table(spark, f"{table}_staging")
-    edges_dir = tmp_path / "edges"
-    batches = [
-        [(1, 2), (10, 11), (20, 21)],
-        [(2, 3), (11, 12)],
-        [(3, 10)],  # unites {1,2,3} with {10,11,12}
-    ]
-    for rows in batches:
-        spark.createDataFrame(rows, "doc_a long, doc_b long").coalesce(
-            1
-        ).write.mode("append").parquet(str(edges_dir))
-    stream = (
-        spark.readStream.schema("doc_a long, doc_b long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(edges_dir))
-    )
-    q = (
-        stream.writeStream.foreachBatch(cluster_ledger_sink(spark, table))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    all_edges = spark.createDataFrame(
-        [e for rows in batches for e in rows], "doc_a long, doc_b long"
-    )
-    want = sorted(map(tuple, connected_components(all_edges).collect()))
-    got = sorted(map(tuple, spark.table(table).collect()))
-    assert got == want
-    # the merged mega-component carries the global min label through the
-    # cross-batch contraction chain
-    assert {r for r in got if r[0] in (10, 11, 12)} == {(10, 1), (11, 1), (12, 1)}
-    _drop_table(spark, table)
+    with scoped_tables(spark, table):
+        edges_dir = tmp_path / "edges"
+        batches = [
+            [(1, 2), (10, 11), (20, 21)],
+            [(2, 3), (11, 12)],
+            [(3, 10)],  # unites {1,2,3} with {10,11,12}
+        ]
+        for rows in batches:
+            spark.createDataFrame(rows, "doc_a long, doc_b long").coalesce(
+                1
+            ).write.mode("append").parquet(str(edges_dir))
+        stream = (
+            spark.readStream.schema("doc_a long, doc_b long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(edges_dir))
+        )
+        q = (
+            stream.writeStream.foreachBatch(cluster_ledger_sink(spark, table))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        all_edges = spark.createDataFrame(
+            [e for rows in batches for e in rows], "doc_a long, doc_b long"
+        )
+        want = sorted(map(tuple, connected_components(all_edges).collect()))
+        got = sorted(map(tuple, spark.table(table).collect()))
+        assert got == want
+        # the merged mega-component carries the global min label through the
+        # cross-batch contraction chain
+        assert {r for r in got if r[0] in (10, 11, 12)} == {(10, 1), (11, 1), (12, 1)}
 
 
 def test_bm25_index_sink_streaming_batching_invariance(spark, sf_dir, tmp_path):
@@ -392,7 +390,7 @@ def test_bm25_index_sink_streaming_batching_invariance(spark, sf_dir, tmp_path):
     maintenance contract promises."""
     from pyspark.sql import functions as F
 
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.text_analysis import (
         _bm25_doclen,
         _bm25_postings,
@@ -401,38 +399,35 @@ def test_bm25_index_sink_streaming_batching_invariance(spark, sf_dir, tmp_path):
     from wikipediaetl_spark.sources import load_table
 
     pt, lt = "t_bm25_stream_postings", "t_bm25_stream_doclen"
-    for t in (pt, f"{pt}_staging", lt, f"{lt}_staging"):
-        _drop_table(spark, t)
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60).select(
-        "doc_id", "text"
-    )
-    docs_dir = tmp_path / "docs"
-    for lo, hi in ((0, 20), (20, 40), (40, 60)):
-        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)).coalesce(
-            1
-        ).write.mode("append").parquet(str(docs_dir))
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(docs_dir))
-    )
-    q = (
-        stream.writeStream.foreachBatch(bm25_index_sink(spark, pt, lt))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got_p = sorted(
-        map(tuple, spark.table(pt).select("tok", "doc_id", "dl", "tf").collect())
-    )
-    want_p = sorted(map(tuple, _bm25_postings(docs).collect()))
-    assert got_p == want_p
-    got_l = sorted(map(tuple, spark.table(lt).select("doc_id", "dl").collect()))
-    want_l = sorted(map(tuple, _bm25_doclen(docs).collect()))
-    assert got_l == want_l
-    for t in (pt, lt):
-        _drop_table(spark, t)
+    with scoped_tables(spark, pt, lt):
+        docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60).select(
+            "doc_id", "text"
+        )
+        docs_dir = tmp_path / "docs"
+        for lo, hi in ((0, 20), (20, 40), (40, 60)):
+            docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)).coalesce(
+                1
+            ).write.mode("append").parquet(str(docs_dir))
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(docs_dir))
+        )
+        q = (
+            stream.writeStream.foreachBatch(bm25_index_sink(spark, pt, lt))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        got_p = sorted(
+            map(tuple, spark.table(pt).select("tok", "doc_id", "dl", "tf").collect())
+        )
+        want_p = sorted(map(tuple, _bm25_postings(docs).collect()))
+        assert got_p == want_p
+        got_l = sorted(map(tuple, spark.table(lt).select("doc_id", "dl").collect()))
+        want_l = sorted(map(tuple, _bm25_doclen(docs).collect()))
+        assert got_l == want_l
 
 
 def test_ivf_index_sink_streaming_batching_invariance(spark, sf_dir, tmp_path):
@@ -444,7 +439,7 @@ def test_ivf_index_sink_streaming_batching_invariance(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql import Window as W
 
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.similarity import (
         _ivf_assign,
         _vectors,
@@ -453,50 +448,48 @@ def test_ivf_index_sink_streaming_batching_invariance(spark, sf_dir, tmp_path):
     from wikipediaetl_spark.sources import load_table
 
     t = "t_ivf_stream_index"
-    _drop_table(spark, t)
-    _drop_table(spark, f"{t}_staging")
-    e = _vectors(spark, sf_dir)
-    wc = W.partitionBy("label").orderBy(F.col("vec_id").asc())
-    cents = (
-        e.withColumn("rn", F.row_number().over(wc))
-        .filter(F.col("rn") == 1)
-        .select(F.col("label").alias("cell"), F.col("v").alias("centroid"))
-        .localCheckpoint(eager=True)  # frozen quantizer, reused per batch
-    )
-    vecs = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    vec_dir = tmp_path / "vecs"
-    for m in range(3):
-        vecs.filter(F.pmod(F.col("vec_id"), F.lit(3)) == m).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(vec_dir))
-    stream = (
-        spark.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(vec_dir))
-    )
-    q = (
-        stream.writeStream.foreachBatch(ivf_index_sink(spark, t, cents))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(map(tuple, spark.table(t).select("vec_id", "cell").collect()))
-    want = sorted(
-        map(
-            tuple,
-            _ivf_assign(
-                vecs.select(
-                    "vec_id", F.col("embedding").cast("array<double>").alias("v")
-                ),
-                cents,
-            )
-            .select("vec_id", "cell")
-            .collect(),
+    with scoped_tables(spark, t):
+        e = _vectors(spark, sf_dir)
+        wc = W.partitionBy("label").orderBy(F.col("vec_id").asc())
+        cents = (
+            e.withColumn("rn", F.row_number().over(wc))
+            .filter(F.col("rn") == 1)
+            .select(F.col("label").alias("cell"), F.col("v").alias("centroid"))
+            .localCheckpoint(eager=True)  # frozen quantizer, reused per batch
         )
-    )
-    assert got == want
-    _drop_table(spark, t)
+        vecs = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        vec_dir = tmp_path / "vecs"
+        for m in range(3):
+            vecs.filter(F.pmod(F.col("vec_id"), F.lit(3)) == m).coalesce(1).write.mode(
+                "append"
+            ).parquet(str(vec_dir))
+        stream = (
+            spark.readStream.schema(vecs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(vec_dir))
+        )
+        q = (
+            stream.writeStream.foreachBatch(ivf_index_sink(spark, t, cents))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        got = sorted(map(tuple, spark.table(t).select("vec_id", "cell").collect()))
+        want = sorted(
+            map(
+                tuple,
+                _ivf_assign(
+                    vecs.select(
+                        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+                    ),
+                    cents,
+                )
+                .select("vec_id", "cell")
+                .collect(),
+            )
+        )
+        assert got == want
 
 
 def test_dedup_ledger_sink_streaming_batching_invariance(spark, sf_dir, tmp_path):
@@ -508,51 +501,49 @@ def test_dedup_ledger_sink_streaming_batching_invariance(spark, sf_dir, tmp_path
     from pyspark.sql import functions as F
 
     from wikipediaetl_spark.operators.dedup import dedup_ledger_sink
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.sources import load_table
 
     t = "t_dedup_ledger_stream"
-    _drop_table(spark, t)
-    _drop_table(spark, f"{t}_staging")
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 90).select(
-        "doc_id", "text"
-    )
-    docs_dir = tmp_path / "docs"
-    for lo, hi in ((0, 30), (30, 60), (60, 90)):
-        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)).coalesce(
-            1
-        ).write.mode("append").parquet(str(docs_dir))
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(docs_dir))
-    )
-    q = (
-        stream.writeStream.foreachBatch(dedup_ledger_sink(spark, t))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        map(
-            tuple,
-            spark.table(t).select("content_key", "keeper_doc_id", "n_docs").collect(),
+    with scoped_tables(spark, t):
+        docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 90).select(
+            "doc_id", "text"
         )
-    )
-    want = sorted(
-        map(
-            tuple,
-            docs.groupBy(F.md5(F.col("text")).alias("content_key"))
-            .agg(
-                F.min("doc_id").alias("keeper_doc_id"),
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
+        docs_dir = tmp_path / "docs"
+        for lo, hi in ((0, 30), (30, 60), (60, 90)):
+            docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)).coalesce(
+                1
+            ).write.mode("append").parquet(str(docs_dir))
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(docs_dir))
+        )
+        q = (
+            stream.writeStream.foreachBatch(dedup_ledger_sink(spark, t))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        got = sorted(
+            map(
+                tuple,
+                spark.table(t).select("content_key", "keeper_doc_id", "n_docs").collect(),
             )
-            .collect(),
         )
-    )
-    assert got == want and len(got) > 0
-    _drop_table(spark, t)
+        want = sorted(
+            map(
+                tuple,
+                docs.groupBy(F.md5(F.col("text")).alias("content_key"))
+                .agg(
+                    F.min("doc_id").alias("keeper_doc_id"),
+                    F.count(F.lit(1)).cast("long").alias("n_docs"),
+                )
+                .collect(),
+            )
+        )
+        assert got == want and len(got) > 0
 
 
 def test_decontam_ledger_sink_streaming_batching_invariance(spark, sf_dir, tmp_path):
@@ -563,7 +554,7 @@ def test_decontam_ledger_sink_streaming_batching_invariance(spark, sf_dir, tmp_p
     contamination answer must match serving from a one-shot build."""
     from pyspark.sql import functions as F
 
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.pipeline_ops import (
         _trigram_occurrences,
         decontam_ledger_serve,
@@ -572,55 +563,51 @@ def test_decontam_ledger_sink_streaming_batching_invariance(spark, sf_dir, tmp_p
     from wikipediaetl_spark.sources import load_table
 
     post_t, df_t, st_t = "t_dc_post", "t_dc_df", "t_dc_stats"
-    for t in (post_t, df_t, st_t):
-        _drop_table(spark, t)
-        _drop_table(spark, f"{t}_staging")
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 90).select(
-        "doc_id", "text"
-    )
-    docs_dir = tmp_path / "docs"
-    for m in range(3):
-        docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == m).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(docs_dir))
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(docs_dir))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            decontam_ledger_sink(spark, post_t, df_t, st_t)
+    with scoped_tables(spark, post_t, df_t, st_t):
+        docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 90).select(
+            "doc_id", "text"
         )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got_post = sorted(
-        map(tuple, spark.table(post_t).select("doc_id", "tok").collect())
-    )
-    want_post = sorted(map(tuple, _trigram_occurrences(docs).distinct().collect()))
-    assert got_post == want_post and len(got_post) > 0
-    n_docs = spark.table(st_t).first()["n_docs"]
-    assert n_docs == docs.count()
-    served = sorted(
-        map(
-            tuple,
-            decontam_ledger_serve(
-                spark.table(post_t), spark.table(df_t), int(n_docs)
-            ).collect(),
+        docs_dir = tmp_path / "docs"
+        for m in range(3):
+            docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == m).coalesce(1).write.mode(
+                "append"
+            ).parquet(str(docs_dir))
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(docs_dir))
         )
-    )
-    # one-shot comparison build
-    for t in (post_t, df_t, st_t):
-        _drop_table(spark, t)
-    one = _trigram_occurrences(docs).distinct()
-    one_df = one.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    want_served = sorted(
-        map(tuple, decontam_ledger_serve(one, one_df, int(n_docs)).collect())
-    )
-    assert served == want_served
+        q = (
+            stream.writeStream.foreachBatch(
+                decontam_ledger_sink(spark, post_t, df_t, st_t)
+            )
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        got_post = sorted(
+            map(tuple, spark.table(post_t).select("doc_id", "tok").collect())
+        )
+        want_post = sorted(map(tuple, _trigram_occurrences(docs).distinct().collect()))
+        assert got_post == want_post and len(got_post) > 0
+        n_docs = spark.table(st_t).first()["n_docs"]
+        assert n_docs == docs.count()
+        served = sorted(
+            map(
+                tuple,
+                decontam_ledger_serve(
+                    spark.table(post_t), spark.table(df_t), int(n_docs)
+                ).collect(),
+            )
+        )
+        # one-shot comparison build
+        one = _trigram_occurrences(docs).distinct()
+        one_df = one.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+        want_served = sorted(
+            map(tuple, decontam_ledger_serve(one, one_df, int(n_docs)).collect())
+        )
+        assert served == want_served
 
 
 def test_dsir_layout_sink_streaming_batching_invariance(spark, sf_dir, tmp_path):
@@ -631,7 +618,7 @@ def test_dsir_layout_sink_streaming_batching_invariance(spark, sf_dir, tmp_path)
     retroactive weights recompute at serve."""
     from pyspark.sql import functions as F
 
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.pipeline_ops import (
         _dsir_counts_of,
         _dsir_hist_of,
@@ -641,36 +628,32 @@ def test_dsir_layout_sink_streaming_batching_invariance(spark, sf_dir, tmp_path)
     from wikipediaetl_spark.sources import load_table
 
     ht, ct_t = "t_dsir_hist_stream", "t_dsir_counts_stream"
-    for t in (ht, ct_t):
-        _drop_table(spark, t)
-        _drop_table(spark, f"{t}_staging")
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 90)
-    docs_dir = tmp_path / "docs"
-    for m in range(3):
-        docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == m).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(docs_dir))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(docs_dir))
-    )
-    q = (
-        stream.writeStream.foreachBatch(dsir_layout_sink(spark, ht, ct_t))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    served = sorted(
-        map(tuple, dsir_serve(spark.table(ht), spark.table(ct_t)).collect())
-    )
-    want = sorted(
-        map(tuple, dsir_serve(_dsir_hist_of(docs), _dsir_counts_of(docs)).collect())
-    )
-    assert served == want and len(served) > 0
-    for t in (ht, ct_t):
-        _drop_table(spark, t)
+    with scoped_tables(spark, ht, ct_t):
+        docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 90)
+        docs_dir = tmp_path / "docs"
+        for m in range(3):
+            docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == m).coalesce(1).write.mode(
+                "append"
+            ).parquet(str(docs_dir))
+        stream = (
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(docs_dir))
+        )
+        q = (
+            stream.writeStream.foreachBatch(dsir_layout_sink(spark, ht, ct_t))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        served = sorted(
+            map(tuple, dsir_serve(spark.table(ht), spark.table(ct_t)).collect())
+        )
+        want = sorted(
+            map(tuple, dsir_serve(_dsir_hist_of(docs), _dsir_counts_of(docs)).collect())
+        )
+        assert served == want and len(served) > 0
 
 
 def test_curation_sink_streaming_matches_catalog_funnel(spark, sf_dir, tmp_path):
@@ -681,7 +664,7 @@ def test_curation_sink_streaming_matches_catalog_funnel(spark, sf_dir, tmp_path)
     first-seen from global-min-id dedup."""
     from pyspark.sql import functions as F
 
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.pipeline_ops import (
         _trigram_occurrences,
         curation_sink,
@@ -693,68 +676,64 @@ def test_curation_sink_streaming_matches_catalog_funnel(spark, sf_dir, tmp_path)
         map(tuple, q188_streaming_curation_capstone(spark, sf_dir).collect())
     )
     led, acc = "t_curation_ledger", "t_curation_accepted"
-    for t in (led, acc):
-        _drop_table(spark, t)
-        _drop_table(spark, f"{t}_staging")
-    d = load_table(spark, sf_dir, "documents")
-    corpus0 = d.filter(F.col("doc_id") >= 50).select("doc_id", "text")
-    ingest = corpus0.unionByName(
-        corpus0.filter(F.pmod(F.col("doc_id"), F.lit(7)) == 2).select(
-            (F.col("doc_id") + 10000).alias("doc_id"), "text"
-        )
-    )
-    bench_set = (
-        _trigram_occurrences(d.filter(F.col("doc_id") < 50).select("doc_id", "text"))
-        .select("tok")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    docs_dir = tmp_path / "docs"
-    # one file per wave, with mtimes FORCED strictly increasing per wave:
-    # FileStreamSource orders by modification time, and back-to-back writes
-    # can land on the same (coarse) mtime and reorder the waves (ADVICE r10
-    # low — a flaky test, not a product bug). os.utime pins batch_id==wave.
-    import os
-    import time
-
-    base = time.time() - 3600
-    stamped: set[str] = set()
-    for wave in range(3):
-        ingest.filter(F.pmod(F.col("doc_id"), F.lit(3)) == wave).coalesce(
-            1
-        ).write.mode("append").parquet(str(docs_dir))
-        for fn in os.listdir(docs_dir):
-            path = str(docs_dir / fn)
-            if fn.endswith(".parquet") and path not in stamped:
-                os.utime(path, (base + 10 * wave, base + 10 * wave))
-                stamped.add(path)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(docs_dir))
-    )
-    q = (
-        stream.writeStream.foreachBatch(curation_sink(spark, bench_set, led, acc))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted(
-        map(
-            tuple,
-            spark.table(acc)
-            .select(
-                "doc_id", F.col("ingest_batch").cast("long").alias("wave"), "n_words"
+    with scoped_tables(spark, led, acc):
+        d = load_table(spark, sf_dir, "documents")
+        corpus0 = d.filter(F.col("doc_id") >= 50).select("doc_id", "text")
+        ingest = corpus0.unionByName(
+            corpus0.filter(F.pmod(F.col("doc_id"), F.lit(7)) == 2).select(
+                (F.col("doc_id") + 10000).alias("doc_id"), "text"
             )
-            .collect(),
         )
-    )
-    assert got == want and len(got) > 0
-    # the clone-first case actually occurred: some accepted doc_id > 10000
-    assert any(r[0] > 10000 for r in got)
-    for t in (led, acc):
-        _drop_table(spark, t)
+        bench_set = (
+            _trigram_occurrences(d.filter(F.col("doc_id") < 50).select("doc_id", "text"))
+            .select("tok")
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        docs_dir = tmp_path / "docs"
+        # one file per wave, with mtimes FORCED strictly increasing per wave:
+        # FileStreamSource orders by modification time, and back-to-back writes
+        # can land on the same (coarse) mtime and reorder the waves (ADVICE r10
+        # low — a flaky test, not a product bug). os.utime pins batch_id==wave.
+        import os
+        import time
+
+        base = time.time() - 3600
+        stamped: set[str] = set()
+        for wave in range(3):
+            ingest.filter(F.pmod(F.col("doc_id"), F.lit(3)) == wave).coalesce(
+                1
+            ).write.mode("append").parquet(str(docs_dir))
+            for fn in os.listdir(docs_dir):
+                path = str(docs_dir / fn)
+                if fn.endswith(".parquet") and path not in stamped:
+                    os.utime(path, (base + 10 * wave, base + 10 * wave))
+                    stamped.add(path)
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(docs_dir))
+        )
+        q = (
+            stream.writeStream.foreachBatch(curation_sink(spark, bench_set, led, acc))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        got = sorted(
+            map(
+                tuple,
+                spark.table(acc)
+                .select(
+                    "doc_id", F.col("ingest_batch").cast("long").alias("wave"), "n_words"
+                )
+                .collect(),
+            )
+        )
+        assert got == want and len(got) > 0
+        # the clone-first case actually occurred: some accepted doc_id > 10000
+        assert any(r[0] > 10000 for r in got)
 
 
 def test_enrich_rollup_sink_bootstrap_then_attach(spark, sf_dir, tmp_path):
@@ -766,8 +745,8 @@ def test_enrich_rollup_sink_bootstrap_then_attach(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from wikipediaetl_spark.operators.layout import (
-        _drop_table,
         merge_batch_into_keyed_rollup,
+        scoped_tables,
     )
     from wikipediaetl_spark.sources import load_table
     from wikipediaetl_spark.streaming.queries import (
@@ -776,72 +755,70 @@ def test_enrich_rollup_sink_bootstrap_then_attach(spark, sf_dir, tmp_path):
     )
 
     t = "t_enrich_rollup_stream"
-    _drop_table(spark, t)
-    _drop_table(spark, f"{t}_staging")
-    ev = load_table(spark, sf_dir, "events")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    hist = ev.filter(F.pmod(F.col("event_id"), F.lit(10)) != 7)
-    delta = ev.filter(F.pmod(F.col("event_id"), F.lit(10)) == 7).select(
-        "event_id", "user_id", "value"
-    )
-    merge_batch_into_keyed_rollup(
-        spark,
-        _segment_partials(hist, cust),
-        t,
-        keys=["c_mktsegment"],
-        merge_aggs=[
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("total_d").cast("decimal(30,2)").alias("total_d"),
-        ],
-        bucket_key="c_mktsegment",
-        n_buckets=1,
-    )
-    # arbitrary 3-way micro-batch split of the delta, via a real file stream
-    docs_dir = tmp_path / "delta"
-    for m in range(3):
-        delta.filter(F.pmod(F.col("event_id"), F.lit(3)) == m).coalesce(
-            1
-        ).write.mode("append").parquet(str(docs_dir))
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(docs_dir))
-    )
-    q = (
-        stream.writeStream.foreachBatch(enrich_rollup_sink(spark, t, cust))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    served = sorted(
-        map(
-            tuple,
-            spark.table(t)
-            .select(
-                "c_mktsegment",
-                "n_events",
-                F.col("total_d").cast("double").alias("total_value"),
-            )
-            .collect(),
+    with scoped_tables(spark, t):
+        ev = load_table(spark, sf_dir, "events")
+        cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+        hist = ev.filter(F.pmod(F.col("event_id"), F.lit(10)) != 7)
+        delta = ev.filter(F.pmod(F.col("event_id"), F.lit(10)) == 7).select(
+            "event_id", "user_id", "value"
         )
-    )
-    want = sorted(
-        map(
-            tuple,
-            ev.join(F.broadcast(cust), ev["user_id"] == cust["c_custkey"])
-            .groupBy("c_mktsegment")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_events"),
-                F.sum(F.col("value").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("total_value"),
-            )
-            .collect(),
+        merge_batch_into_keyed_rollup(
+            spark,
+            _segment_partials(hist, cust),
+            t,
+            keys=["c_mktsegment"],
+            merge_aggs=[
+                F.sum("n_events").cast("long").alias("n_events"),
+                F.sum("total_d").cast("decimal(30,2)").alias("total_d"),
+            ],
+            bucket_key="c_mktsegment",
+            n_buckets=1,
         )
-    )
-    assert served == want and len(served) > 0
-    _drop_table(spark, t)
+        # arbitrary 3-way micro-batch split of the delta, via a real file stream
+        docs_dir = tmp_path / "delta"
+        for m in range(3):
+            delta.filter(F.pmod(F.col("event_id"), F.lit(3)) == m).coalesce(
+                1
+            ).write.mode("append").parquet(str(docs_dir))
+        stream = (
+            spark.readStream.schema(delta.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(docs_dir))
+        )
+        q = (
+            stream.writeStream.foreachBatch(enrich_rollup_sink(spark, t, cust))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        served = sorted(
+            map(
+                tuple,
+                spark.table(t)
+                .select(
+                    "c_mktsegment",
+                    "n_events",
+                    F.col("total_d").cast("double").alias("total_value"),
+                )
+                .collect(),
+            )
+        )
+        want = sorted(
+            map(
+                tuple,
+                ev.join(F.broadcast(cust), ev["user_id"] == cust["c_custkey"])
+                .groupBy("c_mktsegment")
+                .agg(
+                    F.count(F.lit(1)).cast("long").alias("n_events"),
+                    F.sum(F.col("value").cast("decimal(18,2)"))
+                    .cast("double")
+                    .alias("total_value"),
+                )
+                .collect(),
+            )
+        )
+        assert served == want and len(served) > 0
 
 
 def test_combined_ingest_sink_all_layouts_match_batch_twins(spark, sf_dir):
@@ -856,6 +833,7 @@ def test_combined_ingest_sink_all_layouts_match_batch_twins(spark, sf_dir):
         lsh_index_self_pairs,
         portable_minhash_bands,
     )
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.pipeline_ops import (
         _dsir_counts_of,
         _dsir_hist_of,
@@ -863,7 +841,6 @@ def test_combined_ingest_sink_all_layouts_match_batch_twins(spark, sf_dir):
         _trigram_occurrences,
         combined_ingest_sink,
         demo_centroids,
-        drop_combined_ingest_tables,
     )
     from wikipediaetl_spark.operators.relational_ext import connected_components
     from wikipediaetl_spark.operators.similarity import _ivf_assign
@@ -874,63 +851,67 @@ def test_combined_ingest_sink_all_layouts_match_batch_twins(spark, sf_dir):
     from wikipediaetl_spark.sources import load_table
 
     p = "t_comb"
-    drop_combined_ingest_tables(spark, p)
-    cents = demo_centroids(spark).localCheckpoint(eager=True)
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 150)
-        .select("doc_id", "lang", "text")
+    layouts = (
+        "dedup_ledger", "decontam_postings", "decontam_df", "decontam_stats",
+        "bm25_postings", "bm25_doclens", "dsir_hist", "dsir_counts",
+        "lsh_bands", "cluster_ledger", "ivf_cells",
     )
-    sink = combined_ingest_sink(spark, p, cents)
-    for i in range(3):
-        sink(docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i), i)
+    with scoped_tables(spark, *(f"{p}_{t}" for t in layouts)):
+        cents = demo_centroids(spark).localCheckpoint(eager=True)
+        docs = (
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 150)
+            .select("doc_id", "lang", "text")
+        )
+        sink = combined_ingest_sink(spark, p, cents)
+        for i in range(3):
+            sink(docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i), i)
 
-    def rows(df, *cols):
-        return sorted(map(tuple, df.select(*cols).collect()))
+        def rows(df, *cols):
+            return sorted(map(tuple, df.select(*cols).collect()))
 
-    # exact-dedup ledger twin
-    want = docs.groupBy(F.md5(F.col("text")).alias("content_key")).agg(
-        F.min("doc_id").alias("keeper_doc_id"),
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-    )
-    assert rows(spark.table(f"{p}_dedup_ledger"), "content_key",
-                "keeper_doc_id", "n_docs") == rows(want, "content_key",
-                                                   "keeper_doc_id", "n_docs")
-    # decontamination twins
-    post_tw = _trigram_occurrences(docs.select("doc_id", "text")).distinct()
-    assert rows(spark.table(f"{p}_decontam_postings"), "doc_id", "tok") == rows(
-        post_tw, "doc_id", "tok"
-    )
-    assert rows(spark.table(f"{p}_decontam_df"), "tok", "df") == rows(
-        post_tw.groupBy("tok").agg(F.count(F.lit(1)).alias("df")), "tok", "df"
-    )
-    assert spark.table(f"{p}_decontam_stats").collect()[0]["n_docs"] == docs.count()
-    # BM25 twins
-    assert rows(spark.table(f"{p}_bm25_postings"), "tok", "doc_id", "dl",
-                "tf") == rows(_bm25_postings(docs.select("doc_id", "text")),
-                              "tok", "doc_id", "dl", "tf")
-    assert rows(spark.table(f"{p}_bm25_doclens"), "doc_id", "dl") == rows(
-        _bm25_doclen(docs.select("doc_id", "text")), "doc_id", "dl"
-    )
-    # DSIR twins
-    assert rows(spark.table(f"{p}_dsir_hist"), "doc_id", "b", "n") == rows(
-        _dsir_hist_of(docs), "doc_id", "b", "n"
-    )
-    assert rows(spark.table(f"{p}_dsir_counts"), "b", "ct", "cs") == rows(
-        _dsir_counts_of(docs), "b", "ct", "cs"
-    )
-    # LSH band index + cluster ledger twins: the streamed ledger must equal
-    # the one-shot closure over the FULL index's self-join pairs
-    bands_tw = portable_minhash_bands(_shingles(docs.select("doc_id", "text"), n=2))
-    assert rows(spark.table(f"{p}_lsh_bands"), "doc_id", "band_idx",
-                "band_hash") == rows(bands_tw, "doc_id", "band_idx", "band_hash")
-    pairs_tw = lsh_index_self_pairs(bands_tw).select("doc_a", "doc_b").distinct()
-    ledger_tw = connected_components(pairs_tw)
-    got_ledger = rows(spark.table(f"{p}_cluster_ledger"), "doc_id", "cluster_id")
-    assert got_ledger == rows(ledger_tw, "doc_id", "cluster_id")
-    assert len(got_ledger) > 0  # the fixture has near-dup pairs
-    # IVF twin
-    assert rows(spark.table(f"{p}_ivf_cells"), "vec_id", "cell") == rows(
-        _ivf_assign(_synthetic_embedding(docs), cents), "vec_id", "cell"
-    )
-    drop_combined_ingest_tables(spark, p)
+        # exact-dedup ledger twin
+        want = docs.groupBy(F.md5(F.col("text")).alias("content_key")).agg(
+            F.min("doc_id").alias("keeper_doc_id"),
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+        )
+        assert rows(spark.table(f"{p}_dedup_ledger"), "content_key",
+                    "keeper_doc_id", "n_docs") == rows(want, "content_key",
+                                                       "keeper_doc_id", "n_docs")
+        # decontamination twins
+        post_tw = _trigram_occurrences(docs.select("doc_id", "text")).distinct()
+        assert rows(spark.table(f"{p}_decontam_postings"), "doc_id", "tok") == rows(
+            post_tw, "doc_id", "tok"
+        )
+        assert rows(spark.table(f"{p}_decontam_df"), "tok", "df") == rows(
+            post_tw.groupBy("tok").agg(F.count(F.lit(1)).alias("df")), "tok", "df"
+        )
+        assert spark.table(f"{p}_decontam_stats").collect()[0]["n_docs"] == docs.count()
+        # BM25 twins
+        assert rows(spark.table(f"{p}_bm25_postings"), "tok", "doc_id", "dl",
+                    "tf") == rows(_bm25_postings(docs.select("doc_id", "text")),
+                                  "tok", "doc_id", "dl", "tf")
+        assert rows(spark.table(f"{p}_bm25_doclens"), "doc_id", "dl") == rows(
+            _bm25_doclen(docs.select("doc_id", "text")), "doc_id", "dl"
+        )
+        # DSIR twins
+        assert rows(spark.table(f"{p}_dsir_hist"), "doc_id", "b", "n") == rows(
+            _dsir_hist_of(docs), "doc_id", "b", "n"
+        )
+        assert rows(spark.table(f"{p}_dsir_counts"), "b", "ct", "cs") == rows(
+            _dsir_counts_of(docs), "b", "ct", "cs"
+        )
+        # LSH band index + cluster ledger twins: the streamed ledger must equal
+        # the one-shot closure over the FULL index's self-join pairs
+        bands_tw = portable_minhash_bands(_shingles(docs.select("doc_id", "text"), n=2))
+        assert rows(spark.table(f"{p}_lsh_bands"), "doc_id", "band_idx",
+                    "band_hash") == rows(bands_tw, "doc_id", "band_idx", "band_hash")
+        pairs_tw = lsh_index_self_pairs(bands_tw).select("doc_a", "doc_b").distinct()
+        ledger_tw = connected_components(pairs_tw)
+        got_ledger = rows(spark.table(f"{p}_cluster_ledger"), "doc_id", "cluster_id")
+        assert got_ledger == rows(ledger_tw, "doc_id", "cluster_id")
+        assert len(got_ledger) > 0  # the fixture has near-dup pairs
+        # IVF twin
+        assert rows(spark.table(f"{p}_ivf_cells"), "vec_id", "cell") == rows(
+            _ivf_assign(_synthetic_embedding(docs), cents), "vec_id", "cell"
+        )

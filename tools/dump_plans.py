@@ -5,6 +5,7 @@ with the scale-relevant properties called out. Run from the repo root:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -217,16 +218,18 @@ SHOWCASE = {
 }
 
 
+@contextlib.contextmanager
 def _pre_checkpoint_plans(spark, sf_dir: str, name: str):
     """(title, DataFrame) pairs for operators whose catalog fn returns a
     materialized checkpoint (VERDICT r8 #5): the scale-bearing plans are the
     PRE-checkpoint ones, rebuilt here exactly as the operator builds them —
     broadcast disabled to show the 100 TB shape (a corpus index/layout never
-    broadcasts). Asserted by tests/test_plans.py."""
+    broadcasts). The tables they read live for the ``with`` body. Asserted
+    by tests/test_plans.py."""
     from pyspark.sql import functions as F
 
     from wikipediaetl_spark.functions.fixedpoint import scaled_long
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.sources import load_table
 
     if name == "q174_lsh_index_maintenance":
@@ -240,22 +243,22 @@ def _pre_checkpoint_plans(spark, sf_dir: str, name: str):
         t = "plans_q174_idx"
         d = load_table(spark, sf_dir, "documents")
         is_batch = F.pmod(F.col("doc_id") * 31 + 7, F.lit(10)) == 3
-        _drop_table(spark, t)
-        (
-            portable_minhash_bands(_shingles(d.filter(~is_batch), n=2))
-            .write.bucketBy(16, "band_idx", "band_hash")
-            .sortBy("band_idx", "band_hash")
-            .saveAsTable(t)
-        )
-        idx = spark.table(t)
-        batch = portable_minhash_bands(
-            _shingles(d.filter(is_batch), n=2)
-        ).localCheckpoint(eager=True)
-        return t, [
-            ("base-base self-join over the bucketed index", lsh_index_self_pairs(idx)),
-            ("batch probe (only the batch side shuffles)", lsh_index_probe(batch, idx)),
-        ]
-    if name == "q175_ccnet_serving":
+        with scoped_tables(spark, t):
+            (
+                portable_minhash_bands(_shingles(d.filter(~is_batch), n=2))
+                .write.bucketBy(16, "band_idx", "band_hash")
+                .sortBy("band_idx", "band_hash")
+                .saveAsTable(t)
+            )
+            idx = spark.table(t)
+            batch = portable_minhash_bands(
+                _shingles(d.filter(is_batch), n=2)
+            ).localCheckpoint(eager=True)
+            yield [
+                ("base-base self-join over the bucketed index", lsh_index_self_pairs(idx)),
+                ("batch probe (only the batch side shuffles)", lsh_index_probe(batch, idx)),
+            ]
+    elif name == "q175_ccnet_serving":
         from wikipediaetl_spark.operators.text_analysis import (
             ccnet_serve_from_features,
             score_docs,
@@ -265,18 +268,18 @@ def _pre_checkpoint_plans(spark, sf_dir: str, name: str):
         t = "plans_q175_feats"
         d = load_table(spark, sf_dir, "documents")
         lp, oov = unigram_lm(spark, sf_dir)
-        _drop_table(spark, t)
-        (
-            score_docs(d, lp, oov)
-            .join(d.select("doc_id", "lang"), "doc_id")
-            .write.bucketBy(4, "lang")
-            .sortBy("lang")
-            .saveAsTable(t)
-        )
-        return t, [
-            ("serve from the lang-bucketed feature layout", ccnet_serve_from_features(spark.table(t))),
-        ]
-    if name == "q176_star_mv_serving":
+        with scoped_tables(spark, t):
+            (
+                score_docs(d, lp, oov)
+                .join(d.select("doc_id", "lang"), "doc_id")
+                .write.bucketBy(4, "lang")
+                .sortBy("lang")
+                .saveAsTable(t)
+            )
+            yield [
+                ("serve from the lang-bucketed feature layout", ccnet_serve_from_features(spark.table(t))),
+            ]
+    elif name == "q176_star_mv_serving":
         from wikipediaetl_spark.operators.layout import star_mv_serve
         from wikipediaetl_spark.operators.relational import _t
 
@@ -289,24 +292,24 @@ def _pre_checkpoint_plans(spark, sf_dir: str, name: str):
         c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
         n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey", "n_name")
         r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
-        _drop_table(spark, t)
-        (
-            o.join(c, o.o_custkey == c.c_custkey)
-            .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-            .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-            .groupBy("r_name", "n_name", "o_year")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_orders"),
-                F.sum("o_cents").alias("cents"),
+        with scoped_tables(spark, t):
+            (
+                o.join(c, o.o_custkey == c.c_custkey)
+                .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+                .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+                .groupBy("r_name", "n_name", "o_year")
+                .agg(
+                    F.count(F.lit(1)).cast("long").alias("n_orders"),
+                    F.sum("o_cents").alias("cents"),
+                )
+                .write.bucketBy(4, "o_year")
+                .sortBy("o_year")
+                .saveAsTable(t)
             )
-            .write.bucketBy(4, "o_year")
-            .sortBy("o_year")
-            .saveAsTable(t)
-        )
-        return t, [
-            ("serve: one MV scan + 2-key agg, no join", star_mv_serve(spark, t)),
-        ]
-    if name == "q177_ivf_index_maintenance":
+            yield [
+                ("serve: one MV scan + 2-key agg, no join", star_mv_serve(spark, t)),
+            ]
+    elif name == "q177_ivf_index_maintenance":
         from wikipediaetl_spark.operators.similarity import (
             _vectors,
             ivf_index_probe,
@@ -314,61 +317,60 @@ def _pre_checkpoint_plans(spark, sf_dir: str, name: str):
 
         t = "plans_q177_idx"
         e = _vectors(spark, sf_dir)
-        _drop_table(spark, t)
-        (
-            e.select("vec_id", "v", F.col("label").alias("cell"))
-            .write.partitionBy("cell")
-            .saveAsTable(t)
-        )
-        probes = (
-            e.filter(F.col("vec_id") < 10)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.col("v").alias("qv"),
-                F.col("label").alias("cell"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        idx = spark.table(t).filter(F.col("cell").isin([0, 1, 2]))
-        return t, [
+        with scoped_tables(spark, t):
             (
-                "batch probe: partition-pruned cell scan + broadcast probe join",
-                ivf_index_probe(probes, idx),
-            ),
-        ]
-    if name == "q179_bm25_index_maintenance":
+                e.select("vec_id", "v", F.col("label").alias("cell"))
+                .write.partitionBy("cell")
+                .saveAsTable(t)
+            )
+            probes = (
+                e.filter(F.col("vec_id") < 10)
+                .select(
+                    F.col("vec_id").alias("query_id"),
+                    F.col("v").alias("qv"),
+                    F.col("label").alias("cell"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            idx = spark.table(t).filter(F.col("cell").isin([0, 1, 2]))
+            yield [
+                (
+                    "batch probe: partition-pruned cell scan + broadcast probe join",
+                    ivf_index_probe(probes, idx),
+                ),
+            ]
+    elif name == "q179_bm25_index_maintenance":
         from wikipediaetl_spark.operators.text_analysis import bm25_index_probe
 
         t = "plans_q179_postings"
         lt = "plans_q179_doclen"
         d = load_table(spark, sf_dir, "documents")
-        _drop_table(spark, t)
-        _drop_table(spark, lt)
-        (
-            d.select("doc_id", F.split(F.col("text"), " ").alias("w"))
-            .localCheckpoint(eager=False)
-            .select(
-                "doc_id",
-                F.size("w").cast("long").alias("dl"),
-                F.explode("w").alias("tok"),
+        with scoped_tables(spark, t, lt):
+            (
+                d.select("doc_id", F.split(F.col("text"), " ").alias("w"))
+                .localCheckpoint(eager=False)
+                .select(
+                    "doc_id",
+                    F.size("w").cast("long").alias("dl"),
+                    F.explode("w").alias("tok"),
+                )
+                .groupBy("tok", "doc_id", "dl")
+                .agg(F.count(F.lit(1)).cast("long").alias("tf"))
+                .write.bucketBy(8, "tok")
+                .sortBy("tok")
+                .saveAsTable(t)
             )
-            .groupBy("tok", "doc_id", "dl")
-            .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-            .write.bucketBy(8, "tok")
-            .sortBy("tok")
-            .saveAsTable(t)
-        )
-        (
-            d.select(
-                "doc_id",
-                F.size(F.split(F.col("text"), " ")).cast("long").alias("dl"),
-            ).write.saveAsTable(lt)
-        )
-        probe_df = bm25_index_probe(spark.table(t), spark.table(lt))
-        return [t, lt], [
-            ("keyword probe: bucket-pruned postings + doc-grain stats", probe_df),
-        ]
-    if name == "q185_dsir_layout_maintenance":
+            (
+                d.select(
+                    "doc_id",
+                    F.size(F.split(F.col("text"), " ")).cast("long").alias("dl"),
+                ).write.saveAsTable(lt)
+            )
+            probe_df = bm25_index_probe(spark.table(t), spark.table(lt))
+            yield [
+                ("keyword probe: bucket-pruned postings + doc-grain stats", probe_df),
+            ]
+    elif name == "q185_dsir_layout_maintenance":
         from wikipediaetl_spark.operators.pipeline_ops import (
             _dsir_buckets,
             dsir_serve,
@@ -376,57 +378,57 @@ def _pre_checkpoint_plans(spark, sf_dir: str, name: str):
 
         ht, ct_t = "plans_q185_hist", "plans_q185_counts"
         d = load_table(spark, sf_dir, "documents")
-        for t in (ht, ct_t):
-            _drop_table(spark, t)
-        toks = _dsir_buckets(d)
-        (
-            toks.groupBy("doc_id", "b")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .write.bucketBy(8, "doc_id")
-            .sortBy("doc_id")
-            .saveAsTable(ht)
-        )
-        (
-            toks.groupBy("b")
-            .agg(
-                F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
-                .cast("long")
-                .alias("ct"),
-                F.count(F.lit(1)).cast("long").alias("cs"),
+        with scoped_tables(spark, ht, ct_t):
+            toks = _dsir_buckets(d)
+            (
+                toks.groupBy("doc_id", "b")
+                .agg(F.count(F.lit(1)).cast("long").alias("n"))
+                .write.bucketBy(8, "doc_id")
+                .sortBy("doc_id")
+                .saveAsTable(ht)
             )
-            .write.bucketBy(8, "b")
-            .sortBy("b")
-            .saveAsTable(ct_t)
-        )
-        return [ht, ct_t], [
             (
-                "selection serve: broadcast O(buckets) ratio over bucketed "
-                "histograms, exchange-free doc-grain sum",
-                dsir_serve(spark.table(ht), spark.table(ct_t)),
-            ),
-        ]
-    if name == "q184_cluster_ledger_maintenance":
+                toks.groupBy("b")
+                .agg(
+                    F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
+                    .cast("long")
+                    .alias("ct"),
+                    F.count(F.lit(1)).cast("long").alias("cs"),
+                )
+                .write.bucketBy(8, "b")
+                .sortBy("b")
+                .saveAsTable(ct_t)
+            )
+            yield [
+                (
+                    "selection serve: broadcast O(buckets) ratio over bucketed "
+                    "histograms, exchange-free doc-grain sum",
+                    dsir_serve(spark.table(ht), spark.table(ct_t)),
+                ),
+            ]
+    elif name == "q184_cluster_ledger_maintenance":
         t = "plans_q184_ledger"
-        _drop_table(spark, t)
-        spark.createDataFrame(
-            [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)],
-            "doc_id long, cluster_id long",
-        ).write.bucketBy(8, "doc_id").sortBy("doc_id").saveAsTable(t)
-        mapping = spark.createDataFrame(
-            [(1, 1), (10, 1)], "old_label long, new_label long"
-        )
-        old = spark.table(t)
-        relabel = old.join(
-            F.broadcast(mapping), old.cluster_id == mapping.old_label, "left"
-        ).select("doc_id", F.coalesce("new_label", "cluster_id").alias("cluster_id"))
-        return t, [
-            (
-                "batch apply: history relabel via broadcast touched-label map "
-                "(ledger side never shuffles)",
-                relabel,
-            ),
-        ]
-    return None, []
+        with scoped_tables(spark, t):
+            spark.createDataFrame(
+                [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)],
+                "doc_id long, cluster_id long",
+            ).write.bucketBy(8, "doc_id").sortBy("doc_id").saveAsTable(t)
+            mapping = spark.createDataFrame(
+                [(1, 1), (10, 1)], "old_label long, new_label long"
+            )
+            old = spark.table(t)
+            relabel = old.join(
+                F.broadcast(mapping), old.cluster_id == mapping.old_label, "left"
+            ).select("doc_id", F.coalesce("new_label", "cluster_id").alias("cluster_id"))
+            yield [
+                (
+                    "batch apply: history relabel via broadcast touched-label map "
+                    "(ledger side never shuffles)",
+                    relabel,
+                ),
+            ]
+    else:
+        yield []
 
 
 def main() -> None:
@@ -459,23 +461,18 @@ def main() -> None:
         ]
         print("\n".join(keep + ["..."] + detail[:6]))
         print("```")
-        table, pres = _pre_checkpoint_plans(spark, sf_dir, name)
-        if pres:
-            from wikipediaetl_spark.operators.layout import _drop_table
-
-            try:
-                with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
-                    for title, pdf in pres:
-                        print(f"\n**Pre-checkpoint plan — {title}** "
-                              f"(broadcast off = the at-scale shape; "
-                              f"exchanges: {count_exchanges(pdf)}):")
-                        print("\n```")
-                        plines = explain_str(pdf, "simple").splitlines()
-                        print("\n".join(ln.rstrip()[:160] for ln in plines[:24]))
-                        print("```")
-            finally:
-                for tbl in table if isinstance(table, list) else [table]:
-                    _drop_table(spark, tbl)
+        with (
+            _pre_checkpoint_plans(spark, sf_dir, name) as pres,
+            scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}),
+        ):
+            for title, pdf in pres:
+                print(f"\n**Pre-checkpoint plan — {title}** "
+                      f"(broadcast off = the at-scale shape; "
+                      f"exchanges: {count_exchanges(pdf)}):")
+                print("\n```")
+                plines = explain_str(pdf, "simple").splitlines()
+                print("\n".join(ln.rstrip()[:160] for ln in plines[:24]))
+                print("```")
 
 
 if __name__ == "__main__":

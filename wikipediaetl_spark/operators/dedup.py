@@ -498,48 +498,46 @@ def q174_lsh_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-modify-write — no MERGE, no rewrite of history. count_distinct on
     band_idx collapses the batch-batch pairs the canonicalized probe sees
     in both directions."""
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
 
     table = "q174_lsh_band_index"
     d = load_table(spark, sf_dir, "documents")
     is_batch = F.pmod(F.col("doc_id") * 31 + 7, F.lit(10)) == 3
-    _drop_table(spark, table)
-    # bucketed on BOTH probe-join keys: hashpartitioning(band_idx, band_hash)
-    # matches the joins' required distribution exactly, so the self-join is
-    # exchange-free on both sides and a probe shuffles only the batch
-    # (band_hash alone measured as "Bucketed: false (disabled by query
-    # planner)" — Spark 4.1 does not exploit subset bucketing for joins)
-    (
-        portable_minhash_bands(_shingles(d.filter(~is_batch), n=2))
-        .write.bucketBy(16, "band_idx", "band_hash")
-        .sortBy("band_idx", "band_hash")
-        .saveAsTable(table)
-    )
-    idx = spark.table(table)
-    # snapshot BEFORE the append below: base-base pairs must come from
-    # the pre-batch index state, exactly as an online system would have
-    # already emitted them in earlier batches
-    base_rows = lsh_index_self_pairs(idx).localCheckpoint(eager=True)
-    batch_bands = portable_minhash_bands(
-        _shingles(d.filter(is_batch), n=2)
-    ).localCheckpoint(eager=True)  # computed once, used for append AND probe
-    # append keeps the table's bucket spec: new files land in the same
-    # 16-bucket layout, so post-append probes still reuse the bucketing
-    (
-        batch_bands.write.mode("append")
-        .bucketBy(16, "band_idx", "band_hash")
-        .sortBy("band_idx", "band_hash")
-        .saveAsTable(table)
-    )
-    new_rows = lsh_index_probe(batch_bands, spark.table(table))
-    res = (
-        base_rows.unionByName(new_rows)
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count_distinct("band_idx").alias("n_shared_bands"))
-        .localCheckpoint(eager=True)
-    )
-    _drop_table(spark, table)
-    return res
+    with scoped_tables(spark, table):
+        # bucketed on BOTH probe-join keys: hashpartitioning(band_idx, band_hash)
+        # matches the joins' required distribution exactly, so the self-join is
+        # exchange-free on both sides and a probe shuffles only the batch
+        # (band_hash alone measured as "Bucketed: false (disabled by query
+        # planner)" — Spark 4.1 does not exploit subset bucketing for joins)
+        (
+            portable_minhash_bands(_shingles(d.filter(~is_batch), n=2))
+            .write.bucketBy(16, "band_idx", "band_hash")
+            .sortBy("band_idx", "band_hash")
+            .saveAsTable(table)
+        )
+        idx = spark.table(table)
+        # snapshot BEFORE the append below: base-base pairs must come from
+        # the pre-batch index state, exactly as an online system would have
+        # already emitted them in earlier batches
+        base_rows = lsh_index_self_pairs(idx).localCheckpoint(eager=True)
+        batch_bands = portable_minhash_bands(
+            _shingles(d.filter(is_batch), n=2)
+        ).localCheckpoint(eager=True)  # computed once, used for append AND probe
+        # append keeps the table's bucket spec: new files land in the same
+        # 16-bucket layout, so post-append probes still reuse the bucketing
+        (
+            batch_bands.write.mode("append")
+            .bucketBy(16, "band_idx", "band_hash")
+            .sortBy("band_idx", "band_hash")
+            .saveAsTable(table)
+        )
+        new_rows = lsh_index_probe(batch_bands, spark.table(table))
+        return (
+            base_rows.unionByName(new_rows)
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count_distinct("band_idx").alias("n_shared_bands"))
+            .localCheckpoint(eager=True)
+        )
 
 
 # Shared CTE prefix: documents → exact-dedup reps → bigram shingles → q150's
@@ -1409,7 +1407,7 @@ def q180_semdedup_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
     right tool for the loose thresholds where sign-LSH cannot prune (q56's
     note). Extends the reference's whole-page Redis admission check
     (filter/app/main.py:16-24) to semantic near-dup admission."""
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.similarity import dot_expr
 
     table = "q180_semdedup_block_index"
@@ -1418,30 +1416,28 @@ def q180_semdedup_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
     )
     e = e.withColumn("nrm", F.sqrt(dot_expr(F.col("v"), F.col("v"))))
     is_batch = F.pmod(F.col("vec_id") * 31 + 7, F.lit(10)) == 3
-    _drop_table(spark, table)
-    (
-        e.filter(~is_batch)
-        .write.bucketBy(8, "label")
-        .sortBy("label")
-        .saveAsTable(table)
-    )
-    # snapshot BEFORE the append: base-base pairs must come from the
-    # pre-batch index state, exactly as an online system would have
-    # already emitted them in earlier batches
-    base_rows = semdedup_index_self_pairs(spark.table(table)).localCheckpoint(
-        eager=True
-    )
-    batch = e.filter(is_batch).localCheckpoint(eager=True)  # norms once
-    (
-        batch.write.mode("append")
-        .bucketBy(8, "label")
-        .sortBy("label")
-        .saveAsTable(table)
-    )
-    new_rows = semdedup_index_probe(batch, spark.table(table))
-    res = base_rows.unionByName(new_rows).localCheckpoint(eager=True)
-    _drop_table(spark, table)
-    return res
+    with scoped_tables(spark, table):
+        (
+            e.filter(~is_batch)
+            .write.bucketBy(8, "label")
+            .sortBy("label")
+            .saveAsTable(table)
+        )
+        # snapshot BEFORE the append: base-base pairs must come from the
+        # pre-batch index state, exactly as an online system would have
+        # already emitted them in earlier batches
+        base_rows = semdedup_index_self_pairs(spark.table(table)).localCheckpoint(
+            eager=True
+        )
+        batch = e.filter(is_batch).localCheckpoint(eager=True)  # norms once
+        (
+            batch.write.mode("append")
+            .bucketBy(8, "label")
+            .sortBy("label")
+            .saveAsTable(table)
+        )
+        new_rows = semdedup_index_probe(batch, spark.table(table))
+        return base_rows.unionByName(new_rows).localCheckpoint(eager=True)
 
 
 @query(
@@ -1677,8 +1673,8 @@ def q178_dedup_ledger_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     argument); the ledger is bucketed on content_key so downstream probes
     (anti-join "is this new?") ride the layout exchange-free."""
     from wikipediaetl_spark.operators.layout import (
-        _drop_table,
         merge_batch_into_keyed_rollup,
+        scoped_tables,
     )
 
     table = "q178_dedup_ledger"
@@ -1690,28 +1686,26 @@ def q178_dedup_ledger_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
         F.min("doc_id").alias("keeper_doc_id"),
         F.count(F.lit(1)).cast("long").alias("n_docs"),
     )
-    _drop_table(spark, table)
-    (
-        partial(d.filter(~is_batch))
-        .write.bucketBy(16, "content_key")
-        .sortBy("content_key")
-        .saveAsTable(table)
-    )
-    merge_batch_into_keyed_rollup(
-        spark,
-        partial(d.filter(is_batch)),
-        table,
-        keys=["content_key"],
-        merge_aggs=[
-            F.min("keeper_doc_id").alias("keeper_doc_id"),
-            F.sum("n_docs").cast("long").alias("n_docs"),
-        ],
-        bucket_key="content_key",
-        n_buckets=16,
-    )
-    res = spark.table(table).localCheckpoint(eager=True)
-    _drop_table(spark, table)
-    return res
+    with scoped_tables(spark, table):
+        (
+            partial(d.filter(~is_batch))
+            .write.bucketBy(16, "content_key")
+            .sortBy("content_key")
+            .saveAsTable(table)
+        )
+        merge_batch_into_keyed_rollup(
+            spark,
+            partial(d.filter(is_batch)),
+            table,
+            keys=["content_key"],
+            merge_aggs=[
+                F.min("keeper_doc_id").alias("keeper_doc_id"),
+                F.sum("n_docs").cast("long").alias("n_docs"),
+            ],
+            bucket_key="content_key",
+            n_buckets=16,
+        )
+        return spark.table(table).localCheckpoint(eager=True)
 
 
 def dedup_ledger_sink(spark: SparkSession, table: str):

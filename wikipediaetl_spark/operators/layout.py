@@ -29,8 +29,10 @@ Spark specifics encoded by these helpers:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -148,6 +150,23 @@ def _drop_table(spark: SparkSession, table: str) -> None:
         _hadoop_delete(spark, f"{wh}/{table}")
     except Exception:
         pass
+
+
+@contextlib.contextmanager
+def scoped_tables(spark: SparkSession, *names: str) -> Iterator[None]:
+    """Scratch tables for the ``with`` body. Every name and its
+    ``{name}_staging`` sibling is dropped with its warehouse location on
+    entry, so an orphan of an earlier run cannot fail ``saveAsTable``, and
+    again on exit, also when the body raises. A builder that returns data
+    read from these tables materializes it inside the body."""
+    tables = [t for name in names for t in (name, f"{name}_staging")]
+    for t in tables:
+        _drop_table(spark, t)
+    try:
+        yield
+    finally:
+        for t in tables:
+            _drop_table(spark, t)
 
 
 def recover_interrupted_swap(
@@ -1000,54 +1019,52 @@ def q170_priority_rollup_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_linenumber", "l_shipdate"
     )
     is_batch = F.pmod(F.col("l_orderkey") * 7 + F.col("l_linenumber"), F.lit(10)) == 3
-    _drop_table(spark, table)
-    hist = (
-        li.filter(~is_batch)
-        .groupBy("l_orderkey")
-        .agg(F.max("l_shipdate").alias("max_ship"))
-    )
-    hist.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(table)
-    batch_partial = (
-        li.filter(is_batch)
-        .groupBy("l_orderkey")
-        .agg(F.max("l_shipdate").alias("max_ship"))
-    )
-    merge_batch_into_keyed_rollup(
-        spark,
-        batch_partial,
-        table,
-        keys=["l_orderkey"],
-        merge_aggs=[F.max("max_ship").alias("max_ship")],
-        bucket_key="l_orderkey",
-    )
-    # Serve (400x A/B, tools/bench_bucketed + BENCH_NOTES r8): the DERIVED
-    # STATIC filter max_ship > window_start prunes the rollup scan (any
-    # order satisfying EXISTS against a windowed orderdate must have
-    # max_ship past the window start), and the 3.8%-selectivity orders side
-    # is the SHUFFLE_HASH build against the pruned rollup stream — measured
-    # 1.91 s vs 2.61 s for the bucketed-SMJ form (32 bucket tasks cap the
-    # 60M-row rollup scan's parallelism, the same geometry that loses the
-    # plain bucketed q12).
-    rollup = spark.table(table).filter(
-        F.col("max_ship") > F.lit("1997-01-01 00:00:00").cast("timestamp")
-    )
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
+    with scoped_tables(spark, table):
+        hist = (
+            li.filter(~is_batch)
+            .groupBy("l_orderkey")
+            .agg(F.max("l_shipdate").alias("max_ship"))
         )
-        .hint("shuffle_hash")
-    )
-    res = (
-        rollup.join(o, o.o_orderkey == rollup.l_orderkey)
-        .filter(F.col("max_ship") > F.col("o_orderdate"))
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .localCheckpoint(eager=True)
-    )
-    _drop_table(spark, table)
-    return res
+        hist.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(table)
+        batch_partial = (
+            li.filter(is_batch)
+            .groupBy("l_orderkey")
+            .agg(F.max("l_shipdate").alias("max_ship"))
+        )
+        merge_batch_into_keyed_rollup(
+            spark,
+            batch_partial,
+            table,
+            keys=["l_orderkey"],
+            merge_aggs=[F.max("max_ship").alias("max_ship")],
+            bucket_key="l_orderkey",
+        )
+        # Serve (400x A/B, tools/bench_bucketed + BENCH_NOTES r8): the DERIVED
+        # STATIC filter max_ship > window_start prunes the rollup scan (any
+        # order satisfying EXISTS against a windowed orderdate must have
+        # max_ship past the window start), and the 3.8%-selectivity orders side
+        # is the SHUFFLE_HASH build against the pruned rollup stream — measured
+        # 1.91 s vs 2.61 s for the bucketed-SMJ form (32 bucket tasks cap the
+        # 60M-row rollup scan's parallelism, the same geometry that loses the
+        # plain bucketed q12).
+        rollup = spark.table(table).filter(
+            F.col("max_ship") > F.lit("1997-01-01 00:00:00").cast("timestamp")
+        )
+        o = (
+            load_table(spark, sf_dir, "orders")
+            .filter(
+                (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
+                & (F.col("o_orderdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
+            )
+            .hint("shuffle_hash")
+        )
+        return (
+            rollup.join(o, o.o_orderkey == rollup.l_orderkey)
+            .filter(F.col("max_ship") > F.col("o_orderdate"))
+            .groupBy("o_orderpriority")
+            .agg(F.count(F.lit(1)).alias("order_count"))
+            .localCheckpoint(eager=True)
+        )
 
 
 # Serving-layout queries share their raw-fact oracles with the stock
@@ -1116,49 +1133,47 @@ def q171_shipmode_rollup_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
     ]
     is_batch = F.pmod(F.col("l_orderkey") * 7 + F.col("l_linenumber"), F.lit(10)) == 3
-    _drop_table(spark, table)
-    hist = (
-        li.filter(~is_batch)
-        .groupBy(*grain)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    hist.write.partitionBy("l_rcptyear", "l_shipmode").bucketBy(
-        8, "l_orderkey"
-    ).sortBy("l_orderkey").saveAsTable(table)
-    batch_partial = (
-        li.filter(is_batch).groupBy(*grain).agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    merge_batch_into_keyed_rollup(
-        spark,
-        batch_partial,
-        table,
-        keys=["l_rcptyear", "l_shipmode", "l_orderkey"],
-        merge_aggs=[F.sum("cnt").cast("long").alias("cnt")],
-        bucket_key="l_orderkey",
-        partition_cols=("l_rcptyear", "l_shipmode"),
-    )
-    # Serve (400x A/B, BENCH_NOTES r8): the directory-pruned rollup slice is
-    # the SHUFFLE_HASH build against the RAW orders stream — 3.51 s vs
-    # 7.75 s for joining the bucketed orders table (exchange-free but the
-    # 32-bucket scan caps the 60M-row side's parallelism). The residual
-    # serve cost IS the orders stream; q173 is the next rung of the same
-    # ladder (priority folded into the grain at ingest → O(answer) serve).
-    rollup = spark.table(table).filter(
-        (F.col("l_rcptyear") == 1996) & F.col("l_shipmode").isin("MAIL", "SHIP")
-    ).hint("shuffle_hash")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    res = (
-        rollup.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy("l_shipmode")
-        .agg(
-            F.sum(F.when(high, F.col("cnt")).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, F.col("cnt")).otherwise(0)).alias("low_line_count"),
+    with scoped_tables(spark, table):
+        hist = (
+            li.filter(~is_batch)
+            .groupBy(*grain)
+            .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        .localCheckpoint(eager=True)
-    )
-    _drop_table(spark, table)
-    return res
+        hist.write.partitionBy("l_rcptyear", "l_shipmode").bucketBy(
+            8, "l_orderkey"
+        ).sortBy("l_orderkey").saveAsTable(table)
+        batch_partial = (
+            li.filter(is_batch).groupBy(*grain).agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        merge_batch_into_keyed_rollup(
+            spark,
+            batch_partial,
+            table,
+            keys=["l_rcptyear", "l_shipmode", "l_orderkey"],
+            merge_aggs=[F.sum("cnt").cast("long").alias("cnt")],
+            bucket_key="l_orderkey",
+            partition_cols=("l_rcptyear", "l_shipmode"),
+        )
+        # Serve (400x A/B, BENCH_NOTES r8): the directory-pruned rollup slice is
+        # the SHUFFLE_HASH build against the RAW orders stream — 3.51 s vs
+        # 7.75 s for joining the bucketed orders table (exchange-free but the
+        # 32-bucket scan caps the 60M-row side's parallelism). The residual
+        # serve cost IS the orders stream; q173 is the next rung of the same
+        # ladder (priority folded into the grain at ingest → O(answer) serve).
+        rollup = spark.table(table).filter(
+            (F.col("l_rcptyear") == 1996) & F.col("l_shipmode").isin("MAIL", "SHIP")
+        ).hint("shuffle_hash")
+        o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+        high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+        return (
+            rollup.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
+            .groupBy("l_shipmode")
+            .agg(
+                F.sum(F.when(high, F.col("cnt")).otherwise(0)).alias("high_line_count"),
+                F.sum(F.when(~high, F.col("cnt")).otherwise(0)).alias("low_line_count"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 @query("q173_shipmode_mv_serving", oracle=_Q171_ORACLE)
@@ -1194,43 +1209,41 @@ def q173_shipmode_mv_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
     ]
     is_batch = F.pmod(F.col("l_orderkey") * 7 + F.col("l_linenumber"), F.lit(10)) == 3
-    _drop_table(spark, table)
-    (
-        enriched.filter(~is_batch)
-        .groupBy(*grain)
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .write.bucketBy(4, "l_rcptyear")
-        .sortBy("l_rcptyear")
-        .saveAsTable(table)
-    )
-    batch_partial = (
-        enriched.filter(is_batch)
-        .groupBy(*grain)
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    merge_batch_into_keyed_rollup(
-        spark,
-        batch_partial,
-        table,
-        keys=["l_rcptyear", "l_shipmode", "o_orderpriority"],
-        merge_aggs=[F.sum("cnt").cast("long").alias("cnt")],
-        bucket_key="l_rcptyear",
-        n_buckets=4,
-    )
-    mv = spark.table(table).filter(
-        (F.col("l_rcptyear") == 1996) & F.col("l_shipmode").isin("MAIL", "SHIP")
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    res = (
-        mv.groupBy("l_shipmode")
-        .agg(
-            F.sum(F.when(high, F.col("cnt")).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, F.col("cnt")).otherwise(0)).alias("low_line_count"),
+    with scoped_tables(spark, table):
+        (
+            enriched.filter(~is_batch)
+            .groupBy(*grain)
+            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+            .write.bucketBy(4, "l_rcptyear")
+            .sortBy("l_rcptyear")
+            .saveAsTable(table)
         )
-        .localCheckpoint(eager=True)
-    )
-    _drop_table(spark, table)
-    return res
+        batch_partial = (
+            enriched.filter(is_batch)
+            .groupBy(*grain)
+            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+        )
+        merge_batch_into_keyed_rollup(
+            spark,
+            batch_partial,
+            table,
+            keys=["l_rcptyear", "l_shipmode", "o_orderpriority"],
+            merge_aggs=[F.sum("cnt").cast("long").alias("cnt")],
+            bucket_key="l_rcptyear",
+            n_buckets=4,
+        )
+        mv = spark.table(table).filter(
+            (F.col("l_rcptyear") == 1996) & F.col("l_shipmode").isin("MAIL", "SHIP")
+        )
+        high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+        return (
+            mv.groupBy("l_shipmode")
+            .agg(
+                F.sum(F.when(high, F.col("cnt")).otherwise(0)).alias("high_line_count"),
+                F.sum(F.when(~high, F.col("cnt")).otherwise(0)).alias("low_line_count"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 def _with_transport_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1302,53 +1315,51 @@ def q172_market_share_denorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     enrich = lambda lines: lines.join(  # noqa: E731
         o, lines.l_orderkey == o.o_orderkey
     ).select("l_partkey", "l_suppkey", "vu", "o_year", "o_custkey")
-    _drop_table(spark, table)
-    enrich(li.filter(~is_batch)).write.partitionBy("o_year").saveAsTable(table)
-    enrich(li.filter(is_batch)).write.mode("append").partitionBy("o_year").saveAsTable(
-        table
-    )
-    from wikipediaetl_spark.operators.relational import _t
-
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select("p_partkey")
-    n2 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
-    )
-    s = (
-        _t(spark, sf_dir, "supplier")
-        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("s_nk"))
-        .select("s_suppkey", "supp_nation")
-    )
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    eu_keys = (
-        _t(spark, sf_dir, "nation")
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .select("n_nationkey")
-    )
-    c = _t(spark, sf_dir, "customer").join(
-        F.broadcast(eu_keys), F.col("c_nationkey") == F.col("n_nationkey"), "left_semi"
-    )
-    fact = spark.table(table).filter(F.col("o_year").isin(1996, 1997))
-    partial = (
-        fact.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"), "left_semi")
-        .groupBy("o_year", F.spark_partition_id().alias("pid"))
-        .agg(
-            F.sum(
-                F.when(F.col("supp_nation") == "NATION_3", F.col("vu")).otherwise(0)
-            ).alias("pnum"),
-            F.sum("vu").alias("pden"),
+    with scoped_tables(spark, table):
+        enrich(li.filter(~is_batch)).write.partitionBy("o_year").saveAsTable(table)
+        enrich(li.filter(is_batch)).write.mode("append").partitionBy("o_year").saveAsTable(
+            table
         )
-    )
-    num = sum_unscaled(F.col("pnum"), 10_000)
-    den = sum_unscaled(F.col("pden"), 10_000)
-    res = (
-        partial.groupBy("o_year")
-        .agg((num / den).alias("mkt_share"))
-        .localCheckpoint(eager=True)
-    )
-    _drop_table(spark, table)
-    return res
+        from wikipediaetl_spark.operators.relational import _t
+
+        p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select("p_partkey")
+        n2 = _t(spark, sf_dir, "nation").select(
+            F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
+        )
+        s = (
+            _t(spark, sf_dir, "supplier")
+            .join(F.broadcast(n2), F.col("s_nationkey") == F.col("s_nk"))
+            .select("s_suppkey", "supp_nation")
+        )
+        r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+        eu_keys = (
+            _t(spark, sf_dir, "nation")
+            .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
+            .select("n_nationkey")
+        )
+        c = _t(spark, sf_dir, "customer").join(
+            F.broadcast(eu_keys), F.col("c_nationkey") == F.col("n_nationkey"), "left_semi"
+        )
+        fact = spark.table(table).filter(F.col("o_year").isin(1996, 1997))
+        partial = (
+            fact.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+            .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
+            .join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"), "left_semi")
+            .groupBy("o_year", F.spark_partition_id().alias("pid"))
+            .agg(
+                F.sum(
+                    F.when(F.col("supp_nation") == "NATION_3", F.col("vu")).otherwise(0)
+                ).alias("pnum"),
+                F.sum("vu").alias("pden"),
+            )
+        )
+        num = sum_unscaled(F.col("pnum"), 10_000)
+        den = sum_unscaled(F.col("pden"), 10_000)
+        return (
+            partial.groupBy("o_year")
+            .agg((num / den).alias("mkt_share"))
+            .localCheckpoint(eager=True)
+        )
 
 
 @query(
@@ -1391,35 +1402,33 @@ def q167_rollup_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     is_batch = F.pmod(F.col("l_orderkey"), F.lit(10)) == 7
-    _drop_table(spark, table)
-    hist_partial = (
-        li.filter(~is_batch)
-        .groupBy("l_orderkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,6)"
+    with scoped_tables(spark, table):
+        hist_partial = (
+            li.filter(~is_batch)
+            .groupBy("l_orderkey")
+            .agg(
+                F.count(F.lit(1)).alias("n_lines"),
+                F.sum(
+                    (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
+                        "decimal(18,6)"
+                    )
                 )
+                .cast("decimal(28,6)")
+                .alias("revenue_d"),
             )
-            .cast("decimal(28,6)")
-            .alias("revenue_d"),
         )
-    )
-    hist_partial.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(table)
-    merge_batch_into_lineitem_rollup(spark, li.filter(is_batch), table, n_buckets=8)
-    rollup = spark.table(table)
-    res = (
-        rollup.join(o, rollup.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.sum("n_lines").cast("long").alias("n_lines"),
-            F.sum("revenue_d").cast("double").alias("revenue"),
+        hist_partial.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(table)
+        merge_batch_into_lineitem_rollup(spark, li.filter(is_batch), table, n_buckets=8)
+        rollup = spark.table(table)
+        return (
+            rollup.join(o, rollup.l_orderkey == o.o_orderkey)
+            .groupBy("o_orderpriority")
+            .agg(
+                F.sum("n_lines").cast("long").alias("n_lines"),
+                F.sum("revenue_d").cast("double").alias("revenue"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    _drop_table(spark, table)
-    return res
 
 
 @query(
@@ -1581,25 +1590,23 @@ def q176_star_mv_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     is_batch = F.pmod(F.col("o_orderkey") * 13 + 5, F.lit(10)) == 3
-    _drop_table(spark, table)
-    (
-        partial(o.filter(~is_batch))
-        .write.bucketBy(4, "o_year")
-        .sortBy("o_year")
-        .saveAsTable(table)
-    )
-    merge_batch_into_keyed_rollup(
-        spark,
-        partial(o.filter(is_batch)),
-        table,
-        keys=grain,
-        merge_aggs=[
-            F.sum("n_orders").cast("long").alias("n_orders"),
-            F.sum("cents").cast("long").alias("cents"),
-        ],
-        bucket_key="o_year",
-        n_buckets=4,
-    )
-    res = star_mv_serve(spark, table).localCheckpoint(eager=True)
-    _drop_table(spark, table)
-    return res
+    with scoped_tables(spark, table):
+        (
+            partial(o.filter(~is_batch))
+            .write.bucketBy(4, "o_year")
+            .sortBy("o_year")
+            .saveAsTable(table)
+        )
+        merge_batch_into_keyed_rollup(
+            spark,
+            partial(o.filter(is_batch)),
+            table,
+            keys=grain,
+            merge_aggs=[
+                F.sum("n_orders").cast("long").alias("n_orders"),
+                F.sum("cents").cast("long").alias("cents"),
+            ],
+            bucket_key="o_year",
+            n_buckets=4,
+        )
+        return star_mv_serve(spark, table).localCheckpoint(eager=True)

@@ -225,87 +225,76 @@ def q181_decontam_ledger_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
     Extends the reference's planned 'Filter (validate content)' stage
     (README.md:24) to the eval-leakage audit a pretraining pipeline runs."""
     from wikipediaetl_spark.operators.layout import (
-        _drop_table,
         append_batch_to_layout,
         merge_batch_into_keyed_rollup,
+        scoped_tables,
     )
 
     post_t = "q181_trigram_postings"
     df_t = "q181_trigram_df"
     st_t = "q181_corpus_stats"
-    for t in (
-        post_t,
-        df_t,
-        st_t,
-        f"{post_t}_staging",
-        f"{df_t}_staging",
-        f"{st_t}_staging",
-    ):
-        _drop_table(spark, t)
-    d = load_table(spark, sf_dir, "documents")
-    is_batch = F.pmod(F.col("doc_id") * 31 + 7, F.lit(10)) == 3
-    base_post = _trigram_occurrences(d.filter(~is_batch)).distinct()
-    append_batch_to_layout(spark, base_post, post_t, bucket_key="tok", batch_id=0)
-    # df bootstrap from the STORED postings: tok-bucketed scan → the groupBy
-    # is exchange-free; count(*) = distinct-doc df because postings are
-    # per-doc distinct
-    (
-        spark.table(post_t)
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .write.bucketBy(8, "tok")
-        .sortBy("tok")
-        .saveAsTable(df_t)
-    )
-    (
-        d.filter(~is_batch)
-        .select(F.lit(0).alias("k"))
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .write.bucketBy(1, "k")
-        .sortBy("k")
-        .saveAsTable(st_t)
-    )
-    # ingest batch: trigrams for ITS docs only — postings append keeps the
-    # bucket layout; df/count partials merge through the staged-swap path
-    batch_post = (
-        _trigram_occurrences(d.filter(is_batch)).distinct().localCheckpoint(eager=True)
-    )
-    # replay-gated append (ADVICE r9: a bare mode('append') here would
-    # double-append postings on redelivery while the df merge no-ops)
-    append_batch_to_layout(spark, batch_post, post_t, bucket_key="tok", batch_id=1)
-    merge_batch_into_keyed_rollup(
-        spark,
-        batch_post.groupBy("tok").agg(F.count(F.lit(1)).alias("df")),
-        df_t,
-        keys=["tok"],
-        merge_aggs=[F.sum("df").alias("df")],
-        bucket_key="tok",
-        batch_id=1,
-    )
-    merge_batch_into_keyed_rollup(
-        spark,
-        d.filter(is_batch)
-        .select(F.lit(0).alias("k"))
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n_docs")),
-        st_t,
-        keys=["k"],
-        merge_aggs=[F.sum("n_docs").alias("n_docs")],
-        bucket_key="k",
-        n_buckets=1,
-        batch_id=1,
-    )
-    stat_rows = spark.table(st_t).collect()  # bounded: ≤1 stats row
-    # empty corpus → the count rollup has no grain row; serve with n_docs=0
-    # (df cap 0 keeps nothing, result is the empty ledger answer)
-    n_docs = stat_rows[0]["n_docs"] if stat_rows else 0
-    res = decontam_ledger_serve(
-        spark.table(post_t), spark.table(df_t), int(n_docs)
-    ).localCheckpoint(eager=True)
-    for t in (post_t, df_t, st_t):
-        _drop_table(spark, t)
-    return res
+    with scoped_tables(spark, post_t, df_t, st_t):
+        d = load_table(spark, sf_dir, "documents")
+        is_batch = F.pmod(F.col("doc_id") * 31 + 7, F.lit(10)) == 3
+        base_post = _trigram_occurrences(d.filter(~is_batch)).distinct()
+        append_batch_to_layout(spark, base_post, post_t, bucket_key="tok", batch_id=0)
+        # df bootstrap from the STORED postings: tok-bucketed scan → the groupBy
+        # is exchange-free; count(*) = distinct-doc df because postings are
+        # per-doc distinct
+        (
+            spark.table(post_t)
+            .groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .write.bucketBy(8, "tok")
+            .sortBy("tok")
+            .saveAsTable(df_t)
+        )
+        (
+            d.filter(~is_batch)
+            .select(F.lit(0).alias("k"))
+            .groupBy("k")
+            .agg(F.count(F.lit(1)).alias("n_docs"))
+            .write.bucketBy(1, "k")
+            .sortBy("k")
+            .saveAsTable(st_t)
+        )
+        # ingest batch: trigrams for ITS docs only — postings append keeps the
+        # bucket layout; df/count partials merge through the staged-swap path
+        batch_post = (
+            _trigram_occurrences(d.filter(is_batch)).distinct().localCheckpoint(eager=True)
+        )
+        # replay-gated append (ADVICE r9: a bare mode('append') here would
+        # double-append postings on redelivery while the df merge no-ops)
+        append_batch_to_layout(spark, batch_post, post_t, bucket_key="tok", batch_id=1)
+        merge_batch_into_keyed_rollup(
+            spark,
+            batch_post.groupBy("tok").agg(F.count(F.lit(1)).alias("df")),
+            df_t,
+            keys=["tok"],
+            merge_aggs=[F.sum("df").alias("df")],
+            bucket_key="tok",
+            batch_id=1,
+        )
+        merge_batch_into_keyed_rollup(
+            spark,
+            d.filter(is_batch)
+            .select(F.lit(0).alias("k"))
+            .groupBy("k")
+            .agg(F.count(F.lit(1)).alias("n_docs")),
+            st_t,
+            keys=["k"],
+            merge_aggs=[F.sum("n_docs").alias("n_docs")],
+            bucket_key="k",
+            n_buckets=1,
+            batch_id=1,
+        )
+        stat_rows = spark.table(st_t).collect()  # bounded: ≤1 stats row
+        # empty corpus → the count rollup has no grain row; serve with n_docs=0
+        # (df cap 0 keeps nothing, result is the empty ledger answer)
+        n_docs = stat_rows[0]["n_docs"] if stat_rows else 0
+        return decontam_ledger_serve(
+            spark.table(post_t), spark.table(df_t), int(n_docs)
+        ).localCheckpoint(eager=True)
 
 
 def decontam_ledger_sink(spark: SparkSession, post_t: str, df_t: str, st_t: str):
@@ -1105,43 +1094,39 @@ def q185_dsir_layout_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     are that stage grown into distribution-targeted selection at corpus
     scale."""
     from wikipediaetl_spark.operators.layout import (
-        _drop_table,
         append_batch_to_layout,
         merge_batch_into_keyed_rollup,
+        scoped_tables,
     )
 
     ht, ct_t = "q185_dsir_hist", "q185_dsir_bucket_counts"
-    for t in (ht, f"{ht}_staging", ct_t, f"{ct_t}_staging"):
-        _drop_table(spark, t)
-    d = load_table(spark, sf_dir, "documents")
-    is_batch = F.pmod(F.col("doc_id") * 17 + 3, F.lit(10)) == 6
+    with scoped_tables(spark, ht, ct_t):
+        d = load_table(spark, sf_dir, "documents")
+        is_batch = F.pmod(F.col("doc_id") * 17 + 3, F.lit(10)) == 6
 
-    base, batch = d.filter(~is_batch), d.filter(is_batch)
-    append_batch_to_layout(
-        spark, _dsir_hist_of(base), ht, bucket_key="doc_id", batch_id=0
-    )
-    _dsir_counts_of(base).write.bucketBy(8, "b").sortBy("b").saveAsTable(ct_t)
-    # append-only histogram maintenance: O(batch tokens), layout preserved,
-    # replay-gated on the same batch stamp as the counts rollup below
-    append_batch_to_layout(
-        spark, _dsir_hist_of(batch), ht, bucket_key="doc_id", batch_id=1
-    )
-    merge_batch_into_keyed_rollup(
-        spark,
-        _dsir_counts_of(batch),
-        ct_t,
-        keys=["b"],
-        merge_aggs=[
-            F.sum("ct").cast("long").alias("ct"),
-            F.sum("cs").cast("long").alias("cs"),
-        ],
-        bucket_key="b",
-        batch_id=1,
-    )
-    res = dsir_serve(spark.table(ht), spark.table(ct_t)).localCheckpoint(eager=True)
-    for t in (ht, ct_t):
-        _drop_table(spark, t)
-    return res
+        base, batch = d.filter(~is_batch), d.filter(is_batch)
+        append_batch_to_layout(
+            spark, _dsir_hist_of(base), ht, bucket_key="doc_id", batch_id=0
+        )
+        _dsir_counts_of(base).write.bucketBy(8, "b").sortBy("b").saveAsTable(ct_t)
+        # append-only histogram maintenance: O(batch tokens), layout preserved,
+        # replay-gated on the same batch stamp as the counts rollup below
+        append_batch_to_layout(
+            spark, _dsir_hist_of(batch), ht, bucket_key="doc_id", batch_id=1
+        )
+        merge_batch_into_keyed_rollup(
+            spark,
+            _dsir_counts_of(batch),
+            ct_t,
+            keys=["b"],
+            merge_aggs=[
+                F.sum("ct").cast("long").alias("ct"),
+                F.sum("cs").cast("long").alias("cs"),
+            ],
+            bucket_key="b",
+            batch_id=1,
+        )
+        return dsir_serve(spark.table(ht), spark.table(ct_t)).localCheckpoint(eager=True)
 
 
 # ------------------------------------------------- streaming curation capstone
@@ -1320,34 +1305,30 @@ def q188_streaming_curation_capstone(spark: SparkSession, sf_dir: str) -> DataFr
     ``curation_sink`` — exercised with forced micro-batches in
     tests/test_streaming.py; this catalog query drives the same sink
     batch-style so the funnel is externally hash-checked."""
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
 
     led, acc = "q188_dedup_ledger", "q188_accepted"
-    for t in (led, acc, f"{led}_staging", f"{acc}_staging"):
-        _drop_table(spark, t)
-    d = load_table(spark, sf_dir, "documents")
-    corpus0 = d.filter(F.col("doc_id") >= 50).select("doc_id", "text")
-    clones = corpus0.filter(F.pmod(F.col("doc_id"), F.lit(7)) == 2).select(
-        (F.col("doc_id") + 10000).alias("doc_id"), "text"
-    )
-    ingest = corpus0.unionByName(clones)
-    bench_set = (
-        _trigram_occurrences(d.filter(F.col("doc_id") < 50).select("doc_id", "text"))
-        .select("tok")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sink = curation_sink(spark, bench_set, led, acc)
-    for wave in range(3):
-        sink(ingest.filter(F.pmod(F.col("doc_id"), F.lit(3)) == wave), wave)
-    res = (
-        spark.table(acc)
-        .select("doc_id", F.col("ingest_batch").cast("long").alias("wave"), "n_words")
-        .localCheckpoint(eager=True)
-    )
-    for t in (led, acc):
-        _drop_table(spark, t)
-    return res
+    with scoped_tables(spark, led, acc):
+        d = load_table(spark, sf_dir, "documents")
+        corpus0 = d.filter(F.col("doc_id") >= 50).select("doc_id", "text")
+        clones = corpus0.filter(F.pmod(F.col("doc_id"), F.lit(7)) == 2).select(
+            (F.col("doc_id") + 10000).alias("doc_id"), "text"
+        )
+        ingest = corpus0.unionByName(clones)
+        bench_set = (
+            _trigram_occurrences(d.filter(F.col("doc_id") < 50).select("doc_id", "text"))
+            .select("tok")
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        sink = curation_sink(spark, bench_set, led, acc)
+        for wave in range(3):
+            sink(ingest.filter(F.pmod(F.col("doc_id"), F.lit(3)) == wave), wave)
+        return (
+            spark.table(acc)
+            .select("doc_id", F.col("ingest_batch").cast("long").alias("wave"), "n_words")
+            .localCheckpoint(eager=True)
+        )
 
 
 # ---------------------------------------------------- combined-ingest sink
@@ -1576,15 +1557,3 @@ def combined_ingest_sink(spark: SparkSession, prefix: str, cents: DataFrame):
         bootstrap=bootstrap,
         bootstrap_table=f"{p}_cluster_ledger",
     )
-
-
-def drop_combined_ingest_tables(spark: SparkSession, prefix: str) -> None:
-    from wikipediaetl_spark.operators.layout import _drop_table
-
-    for t in (
-        "dedup_ledger", "decontam_postings", "decontam_df", "decontam_stats",
-        "bm25_postings", "bm25_doclens", "dsir_hist", "dsir_counts",
-        "lsh_bands", "cluster_ledger", "ivf_cells",
-    ):
-        _drop_table(spark, f"{prefix}_{t}")
-        _drop_table(spark, f"{prefix}_{t}_staging")

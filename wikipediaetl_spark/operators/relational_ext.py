@@ -621,67 +621,64 @@ def q184_cluster_ledger_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
     synthetically in tests/test_dedup.py since the fixture graph is too
     sparse to produce it."""
     from wikipediaetl_spark.operators.dedup import _shingles, jaccard_pairs
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
 
     table = "q184_cluster_ledger"
-    _drop_table(spark, table)
-    _drop_table(spark, f"{table}_staging")
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    isb = F.pmod(F.col("doc_id"), F.lit(10)).isin(4, 5)
-    base, batch = d.filter(~isb), d.filter(isb)
+    with scoped_tables(spark, table):
+        d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
+        isb = F.pmod(F.col("doc_id"), F.lit(10)).isin(4, 5)
+        base, batch = d.filter(~isb), d.filter(isb)
 
-    # bootstrap: the one-time closure over history (base↔base pairs only)
-    base_pairs = jaccard_pairs(_shingles(base, n=2), threshold=0.5).select(
-        "doc_a", "doc_b"
-    )
-    connected_components(base_pairs).write.bucketBy(8, "doc_id").sortBy(
-        "doc_id"
-    ).saveAsTable(table)
+        # bootstrap: the one-time closure over history (base↔base pairs only)
+        base_pairs = jaccard_pairs(_shingles(base, n=2), threshold=0.5).select(
+            "doc_a", "doc_b"
+        )
+        connected_components(base_pairs).write.bucketBy(8, "doc_id").sortBy(
+            "doc_id"
+        ).saveAsTable(table)
 
-    # ingest batch: exact Jaccard pairs touching >= 1 batch doc. The shingle
-    # probe joins batch shingles against the corpus posting stream — one
-    # corpus scan here (stand-in for a q174 index probe), never a corpus
-    # self-join; batch-batch pairs are kept once via the (not-batch OR
-    # greater-id) guard on the right side.
-    sh_all = _shingles(d, n=2)
-    sh_batch = _shingles(batch, n=2)
-    isb_b = F.pmod(F.col("db"), F.lit(10)).isin(4, 5)
-    cand = (
-        sh_batch.select(F.col("doc_id").alias("da"), "tok")
-        .join(sh_all.select(F.col("doc_id").alias("db"), "tok"), "tok")
-        .filter((F.col("db") != F.col("da")) & (~isb_b | (F.col("db") > F.col("da"))))
-    )
-    inter = (
-        cand.select(
-            F.least("da", "db").alias("doc_a"), F.greatest("da", "db").alias("doc_b")
+        # ingest batch: exact Jaccard pairs touching >= 1 batch doc. The shingle
+        # probe joins batch shingles against the corpus posting stream — one
+        # corpus scan here (stand-in for a q174 index probe), never a corpus
+        # self-join; batch-batch pairs are kept once via the (not-batch OR
+        # greater-id) guard on the right side.
+        sh_all = _shingles(d, n=2)
+        sh_batch = _shingles(batch, n=2)
+        isb_b = F.pmod(F.col("db"), F.lit(10)).isin(4, 5)
+        cand = (
+            sh_batch.select(F.col("doc_id").alias("da"), "tok")
+            .join(sh_all.select(F.col("doc_id").alias("db"), "tok"), "tok")
+            .filter((F.col("db") != F.col("da")) & (~isb_b | (F.col("db") > F.col("da"))))
         )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sizes = sh_all.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("szb"))
-    batch_pairs = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(
-            F.col("i") * 1.0 / (F.col("sza") + F.col("szb") - F.col("i")) >= 0.5
+        inter = (
+            cand.select(
+                F.least("da", "db").alias("doc_a"), F.greatest("da", "db").alias("doc_b")
+            )
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count(F.lit(1)).alias("i"))
         )
-        .select("doc_a", "doc_b")
-    )
-    merge_pairs_into_cluster_ledger(spark, batch_pairs, table, batch_id=1)
+        sizes = sh_all.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+        sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sza"))
+        sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("szb"))
+        batch_pairs = (
+            inter.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .filter(
+                F.col("i") * 1.0 / (F.col("sza") + F.col("szb") - F.col("i")) >= 0.5
+            )
+            .select("doc_a", "doc_b")
+        )
+        merge_pairs_into_cluster_ledger(spark, batch_pairs, table, batch_id=1)
 
-    res = (
-        spark.table(table)
-        .select(
-            "doc_id",
-            "cluster_id",
-            (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
+        return (
+            spark.table(table)
+            .select(
+                "doc_id",
+                "cluster_id",
+                (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    _drop_table(spark, table)
-    return res
 
 
 @query(

@@ -652,8 +652,9 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     ``append_batch_to_layout`` (partition-only form), so the layout carries
     the replay watermark the streaming sink (``ivf_index_sink``) relies
     on. Returns the (cell, centroid) quantizer table for probe-side cell
-    selection."""
-    from wikipediaetl_spark.operators.layout import _drop_table, append_batch_to_layout
+    selection. The caller holds ``table`` in ``scoped_tables``, so the
+    build starts from no table."""
+    from wikipediaetl_spark.operators.layout import append_batch_to_layout
 
     e = _vectors(spark, sf_dir)
     is_batch = F.pmod(F.col("vec_id") * 31 + 7, F.lit(10)) == 3
@@ -664,8 +665,6 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select(F.col("label").alias("cell"), F.col("v").alias("centroid"))
     )
-    _drop_table(spark, table)
-    _drop_table(spark, f"{table}_staging")
     append_batch_to_layout(
         spark, _ivf_assign(base, cents), table, partition_cols=("cell",), batch_id=0
     )
@@ -794,31 +793,30 @@ def q177_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Note the assignment window: at ingest it runs over O(batch × k) rows
     only — the base-corpus assignment here is the one-time bootstrap a real
     deployment also pays once, not a per-batch cost."""
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
 
     table = "q177_ivf_cell_index"
-    cents = build_ivf_index(spark, sf_dir, table)
-    e = _vectors(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    c_sim = F.round(cosine_expr(F.col("qv"), F.col("centroid")), 6)
-    wq = W.partitionBy("query_id").orderBy(F.col("c_sim").desc(), F.col("cell").asc())
-    probes = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cents))
-        .select("query_id", "qv", "cell", c_sim.alias("c_sim"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "qv", "cell")
-    )
-    # bounded collect: ≤ 3 cells per query over a 10-query batch — the probe
-    # set IS the serve-time parameter, same class as q57's query list
-    cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
-    idx = spark.table(table).filter(F.col("cell").isin(cells))
-    res = ivf_index_probe(probes, idx).localCheckpoint(eager=True)
-    _drop_table(spark, table)
-    return res
+    with scoped_tables(spark, table):
+        cents = build_ivf_index(spark, sf_dir, table)
+        e = _vectors(spark, sf_dir)
+        q = e.filter(F.col("vec_id") < 10).select(
+            F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+        )
+        c_sim = F.round(cosine_expr(F.col("qv"), F.col("centroid")), 6)
+        wq = W.partitionBy("query_id").orderBy(F.col("c_sim").desc(), F.col("cell").asc())
+        probes = (
+            F.broadcast(q)
+            .crossJoin(F.broadcast(cents))
+            .select("query_id", "qv", "cell", c_sim.alias("c_sim"))
+            .withColumn("rn", F.row_number().over(wq))
+            .filter(F.col("rn") <= 3)
+            .select("query_id", "qv", "cell")
+        )
+        # bounded collect: ≤ 3 cells per query over a 10-query batch — the probe
+        # set IS the serve-time parameter, same class as q57's query list
+        cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
+        idx = spark.table(table).filter(F.col("cell").isin(cells))
+        return ivf_index_probe(probes, idx).localCheckpoint(eager=True)
 
 
 # ------------------------------------------------------ hybrid retrieval (RRF)
@@ -1010,21 +1008,19 @@ def q186_hybrid_index_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     fusion, with O(batch tokens) index maintenance per ingest. Reference
     tie: the planned search/analysis stage the reference never built
     (README.md:24,41)."""
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.text_analysis import (
         bm25_index_probe,
         build_bm25_layouts,
     )
 
     pt, lt = "q186_bm25_postings", "q186_bm25_doclen"
-    build_bm25_layouts(spark, sf_dir, pt, lt)
-    lex = bm25_index_probe(spark.table(pt), spark.table(lt), k=20).select(
-        "doc_id", F.col("rnk").alias("lex_rnk")
-    )
-    res = rrf_fuse(lex, semantic_top20(spark, sf_dir)).localCheckpoint(eager=True)
-    _drop_table(spark, pt)
-    _drop_table(spark, lt)
-    return res
+    with scoped_tables(spark, pt, lt):
+        build_bm25_layouts(spark, sf_dir, pt, lt)
+        lex = bm25_index_probe(spark.table(pt), spark.table(lt), k=20).select(
+            "doc_id", F.col("rnk").alias("lex_rnk")
+        )
+        return rrf_fuse(lex, semantic_top20(spark, sf_dir)).localCheckpoint(eager=True)
 
 
 # Full-recompute oracle for the IVF-served hybrid: the lexical CTEs are
@@ -1156,42 +1152,40 @@ def q187_hybrid_ivf_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate fusion against q182's exact one is measured separately in
     tests (the q58-vs-q57 pattern). Reference tie: the planned
     search/analysis stage the reference never built (README.md:24,41)."""
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
     from wikipediaetl_spark.operators.text_analysis import (
         bm25_index_probe,
         build_bm25_layouts,
     )
 
     pt, lt = "q187_bm25_postings", "q187_bm25_doclen"
-    build_bm25_layouts(spark, sf_dir, pt, lt)
-    lex = bm25_index_probe(spark.table(pt), spark.table(lt), k=20).select(
-        "doc_id", F.col("rnk").alias("lex_rnk")
-    )
-
     it = "q187_ivf_cell_index"
-    cents = build_ivf_index(spark, sf_dir, it)
-    e = _vectors(spark, sf_dir)
-    q = e.filter(F.col("vec_id") == 7).select(
-        F.col("vec_id").cast("long").alias("query_id"), F.col("v").alias("qv")
-    )
-    c_sim = F.round(cosine_expr(F.col("qv"), F.col("centroid")), 6)
-    wq = W.partitionBy("query_id").orderBy(F.col("c_sim").desc(), F.col("cell").asc())
-    probes = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cents))
-        .select("query_id", "qv", "cell", c_sim.alias("c_sim"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "qv", "cell")
-    )
-    # bounded collect: ≤ 3 cell ids for ONE query vector — the serve-time
-    # partition-pruning parameter, same class as q177's probe set
-    cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
-    idx = spark.table(it).filter(F.col("cell").isin(cells))
-    sem = ivf_index_probe(probes, idx, k=20).select(
-        F.col("neighbor_id").alias("doc_id"), F.col("rnk").alias("sem_rnk")
-    )
-    res = rrf_fuse(lex, sem).localCheckpoint(eager=True)
-    for t in (pt, f"{pt}_staging", lt, f"{lt}_staging", it):
-        _drop_table(spark, t)
-    return res
+    with scoped_tables(spark, pt, lt, it):
+        build_bm25_layouts(spark, sf_dir, pt, lt)
+        lex = bm25_index_probe(spark.table(pt), spark.table(lt), k=20).select(
+            "doc_id", F.col("rnk").alias("lex_rnk")
+        )
+
+        cents = build_ivf_index(spark, sf_dir, it)
+        e = _vectors(spark, sf_dir)
+        q = e.filter(F.col("vec_id") == 7).select(
+            F.col("vec_id").cast("long").alias("query_id"), F.col("v").alias("qv")
+        )
+        c_sim = F.round(cosine_expr(F.col("qv"), F.col("centroid")), 6)
+        wq = W.partitionBy("query_id").orderBy(F.col("c_sim").desc(), F.col("cell").asc())
+        probes = (
+            F.broadcast(q)
+            .crossJoin(F.broadcast(cents))
+            .select("query_id", "qv", "cell", c_sim.alias("c_sim"))
+            .withColumn("rn", F.row_number().over(wq))
+            .filter(F.col("rn") <= 3)
+            .select("query_id", "qv", "cell")
+        )
+        # bounded collect: ≤ 3 cell ids for ONE query vector — the serve-time
+        # partition-pruning parameter, same class as q177's probe set
+        cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
+        idx = spark.table(it).filter(F.col("cell").isin(cells))
+        sem = ivf_index_probe(probes, idx, k=20).select(
+            F.col("neighbor_id").alias("doc_id"), F.col("rnk").alias("sem_rnk")
+        )
+        return rrf_fuse(lex, sem).localCheckpoint(eager=True)

@@ -744,7 +744,7 @@ def q175_ccnet_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     never happen. In-query exercise: 90/10 doc split, batch scored and
     APPENDED (pure append — per-doc scalars never merge), result
     hash-matched against q159's full-recompute oracle."""
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
 
     table = "q175_doc_features"
     d = load_table(spark, sf_dir, "documents")
@@ -753,25 +753,23 @@ def q175_ccnet_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     oov = oov.localCheckpoint(eager=True)
     is_batch = F.pmod(F.col("doc_id") * 13 + 5, F.lit(10)) == 7
     lang = d.select("doc_id", "lang")
-    _drop_table(spark, table)
-    (
-        score_docs(d.filter(~is_batch), lp, oov)
-        .join(lang, "doc_id")
-        .write.bucketBy(4, "lang")
-        .sortBy("lang")
-        .saveAsTable(table)
-    )
-    (
-        score_docs(d.filter(is_batch), lp, oov)
-        .join(lang, "doc_id")
-        .write.mode("append")
-        .bucketBy(4, "lang")
-        .sortBy("lang")
-        .saveAsTable(table)
-    )
-    res = ccnet_serve_from_features(spark.table(table)).localCheckpoint(eager=True)
-    _drop_table(spark, table)
-    return res
+    with scoped_tables(spark, table):
+        (
+            score_docs(d.filter(~is_batch), lp, oov)
+            .join(lang, "doc_id")
+            .write.bucketBy(4, "lang")
+            .sortBy("lang")
+            .saveAsTable(table)
+        )
+        (
+            score_docs(d.filter(is_batch), lp, oov)
+            .join(lang, "doc_id")
+            .write.mode("append")
+            .bucketBy(4, "lang")
+            .sortBy("lang")
+            .saveAsTable(table)
+        )
+        return ccnet_serve_from_features(spark.table(table)).localCheckpoint(eager=True)
 
 
 def ccnet_serve_from_features(feats: DataFrame) -> DataFrame:
@@ -1007,36 +1005,29 @@ def q179_bm25_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     bm25_index_probe's docstring). Reference tie: the planned text-search
     analysis the reference never built (README.md:24,41) — and the q67
     TF-IDF scalars are this operator's per-doc form."""
-    pt, lt = "q179_bm25_postings", "q179_bm25_doclen"
-    build_bm25_layouts(spark, sf_dir, pt, lt)
-    res = bm25_index_probe(spark.table(pt), spark.table(lt)).localCheckpoint(
-        eager=True
-    )
-    from wikipediaetl_spark.operators.layout import _drop_table
+    from wikipediaetl_spark.operators.layout import scoped_tables
 
-    _drop_table(spark, pt)
-    _drop_table(spark, lt)
-    return res
+    pt, lt = "q179_bm25_postings", "q179_bm25_doclen"
+    with scoped_tables(spark, pt, lt):
+        build_bm25_layouts(spark, sf_dir, pt, lt)
+        return bm25_index_probe(spark.table(pt), spark.table(lt)).localCheckpoint(
+            eager=True
+        )
 
 
 def build_bm25_layouts(spark: SparkSession, sf_dir: str, pt: str, lt: str) -> None:
     """q179's layout build, factored so q186 exercises the SAME maintained
-    lexical index: drop + bootstrap both tables from the 90% split, then
+    lexical index: bootstrap both tables from the 90% split, then
     append the 10% batch through the same tokenize path (append-only,
     O(batch tokens), bucket layouts preserved). Both steps go through
     ``append_batch_to_layout`` so postings and doclens carry a replay
     watermark + mid-append crash recovery (ADVICE r9: a bare
-    mode('append') double-appends on foreachBatch redelivery)."""
-    from wikipediaetl_spark.operators.layout import (
-        _drop_table,
-        append_batch_to_layout,
-    )
+    mode('append') double-appends on foreachBatch redelivery). The caller
+    holds both tables in ``scoped_tables``, so the build starts from none."""
+    from wikipediaetl_spark.operators.layout import append_batch_to_layout
 
     d = load_table(spark, sf_dir, "documents")
     is_batch = F.pmod(F.col("doc_id") * 23 + 1, F.lit(10)) == 4
-
-    for t in (pt, f"{pt}_staging", lt, f"{lt}_staging"):
-        _drop_table(spark, t)
     base, batch = d.filter(~is_batch), d.filter(is_batch)
     append_batch_to_layout(spark, _bm25_postings(base), pt, bucket_key="tok", batch_id=0)
     append_batch_to_layout(spark, _bm25_doclen(base), lt, bucket_key="doc_id", batch_id=0)

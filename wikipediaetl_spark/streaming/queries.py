@@ -479,47 +479,44 @@ def q189_bootstrap_attach_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     consultation); the bootstrap/attach split is the standard
     backfill-batch + stream-from-cutover deployment."""
     from wikipediaetl_spark.operators.layout import (
-        _drop_table,
         merge_batch_into_keyed_rollup,
+        scoped_tables,
     )
     from wikipediaetl_spark.sources import load_table
 
     table = "q189_segment_rollup"
-    _drop_table(spark, table)
-    _drop_table(spark, f"{table}_staging")
-    ev = load_table(spark, sf_dir, "events")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    hist = ev.filter(F.pmod(F.col("event_id"), F.lit(10)) != 7)
-    # batch bootstrap: unstamped (the stream's own batch 0 must not be
-    # treated as a replay of the bootstrap)
-    merge_batch_into_keyed_rollup(
-        spark,
-        _segment_partials(hist, cust),
-        table,
-        keys=["c_mktsegment"],
-        merge_aggs=[
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("total_d").cast("decimal(30,2)").alias("total_d"),
-        ],
-        bucket_key="c_mktsegment",
-        n_buckets=1,
-    )
-    # stream attach: the delta arrives as two micro-batches
-    sink = enrich_rollup_sink(spark, table, cust)
-    delta = ev.filter(F.pmod(F.col("event_id"), F.lit(10)) == 7)
-    sink(delta.filter(F.pmod(F.col("event_id"), F.lit(2)) == 0), 0)
-    sink(delta.filter(F.pmod(F.col("event_id"), F.lit(2)) == 1), 1)
-    res = (
-        spark.table(table)
-        .select(
-            "c_mktsegment",
-            "n_events",
-            F.col("total_d").cast("double").alias("total_value"),
+    with scoped_tables(spark, table):
+        ev = load_table(spark, sf_dir, "events")
+        cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+        hist = ev.filter(F.pmod(F.col("event_id"), F.lit(10)) != 7)
+        # batch bootstrap: unstamped (the stream's own batch 0 must not be
+        # treated as a replay of the bootstrap)
+        merge_batch_into_keyed_rollup(
+            spark,
+            _segment_partials(hist, cust),
+            table,
+            keys=["c_mktsegment"],
+            merge_aggs=[
+                F.sum("n_events").cast("long").alias("n_events"),
+                F.sum("total_d").cast("decimal(30,2)").alias("total_d"),
+            ],
+            bucket_key="c_mktsegment",
+            n_buckets=1,
         )
-        .localCheckpoint(eager=True)
-    )
-    _drop_table(spark, table)
-    return res
+        # stream attach: the delta arrives as two micro-batches
+        sink = enrich_rollup_sink(spark, table, cust)
+        delta = ev.filter(F.pmod(F.col("event_id"), F.lit(10)) == 7)
+        sink(delta.filter(F.pmod(F.col("event_id"), F.lit(2)) == 0), 0)
+        sink(delta.filter(F.pmod(F.col("event_id"), F.lit(2)) == 1), 1)
+        return (
+            spark.table(table)
+            .select(
+                "c_mktsegment",
+                "n_events",
+                F.col("total_d").cast("double").alias("total_value"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 @query(
