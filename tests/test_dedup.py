@@ -687,7 +687,10 @@ def test_connected_components_hop_start_zero_matches_adaptive(spark):
 def test_connected_components_runs_one_job_per_checkpoint(spark, jobs_of, monkeypatch):
     """The per-round stability check rides the round's eager checkpoint (an
     Observation), so the loop launches exactly one job per checkpoint —
-    none for the check. Same star graph as the shallow-graph test."""
+    none for the check — and the lazily seeded labels (one propagation
+    step) launch none either. Same star graph as the shallow-graph test:
+    the seed already holds its components, so one round observes
+    stability."""
     from wikipediaetl_spark.operators.relational_ext import connected_components
 
     pairs = spark.createDataFrame(
@@ -702,8 +705,8 @@ def test_connected_components_runs_one_job_per_checkpoint(spark, jobs_of, monkey
 
     monkeypatch.setattr(cls, "localCheckpoint", counted)
     _, jobs = jobs_of(lambda: connected_components(pairs, max_rounds=3, hop_start=4))
-    assert len(checkpoints) >= 3  # edges, initial labels, >= 1 round
-    assert jobs == len(checkpoints)
+    assert len(checkpoints) == 2  # edges, one round
+    assert jobs == 2
 
 
 def test_connected_components_raises_when_not_converged(spark):

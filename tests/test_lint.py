@@ -288,3 +288,60 @@ def test_parquet_reads_pass_a_schema():
     every call. Engine reads of fixture tables take their schema from
     ``sources.parquet_schema`` (memoized per file version) instead."""
     assert inferred_parquet_reads(REPO_ROOT / "wikipediaetl_spark") == []
+
+
+def _wraps_inheritable(node: ast.expr) -> bool:
+    """``inheritable_thread_target(fn)`` or ``inheritable_thread_target(spark)(fn)``."""
+    while isinstance(node, ast.Call):
+        f = node.func
+        if (isinstance(f, ast.Name) and f.id == "inheritable_thread_target") or (
+            isinstance(f, ast.Attribute) and f.attr == "inheritable_thread_target"
+        ):
+            return True
+        node = f
+    return False
+
+
+def unwrapped_threads(pkg: Path) -> list[str]:
+    """``path:line`` of every ``Thread(...)`` whose ``target`` and every
+    ``.submit(fn, ...)`` whose ``fn`` is not wrapped in
+    ``inheritable_thread_target`` under ``pkg``."""
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name == "Thread":
+                target = next((k.value for k in node.keywords if k.arg == "target"), None)
+            elif name == "submit":
+                target = node.args[0] if node.args else None
+            else:
+                continue
+            if target is None or not _wraps_inheritable(target):
+                hits.append(f"{path.relative_to(pkg).as_posix()}:{node.lineno}")
+    return sorted(hits)
+
+
+def test_engine_threads_inherit_the_callers_local_properties():
+    """A driver thread Spark does not know about runs its jobs outside the
+    caller's job group, description and local properties, so job counters
+    keyed on the group (perfbench, ``tools/ab.py``, the ``jobs_of``
+    fixture) miss them. Engine threads start only through
+    ``inheritable_thread_target`` or ``InheritableThread``."""
+    assert unwrapped_threads(REPO_ROOT / "wikipediaetl_spark") == []
+
+
+def test_thread_lint_flags_bare_threads_and_unwrapped_submits(tmp_path):
+    (tmp_path / "m.py").write_text(
+        "import threading\n"
+        "from pyspark import inheritable_thread_target\n"
+        "threading.Thread(target=f).start()\n"
+        "pool.submit(f, 1)\n"
+        "pool.submit(inheritable_thread_target(f), 1)\n"
+        "pool.submit(inheritable_thread_target(spark)(f), 1)\n"
+        "threading.Thread(target=inheritable_thread_target(spark)(f)).start()\n"
+        "InheritableThread(target=f).start()\n"
+    )
+    assert unwrapped_threads(tmp_path) == ["m.py:3", "m.py:4"]

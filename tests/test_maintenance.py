@@ -646,6 +646,8 @@ def test_tblproperties_helpers_distinguish_missing_from_broken(spark):
     swallowing it would make recover_interrupted_swap read a committed
     staging as uncommitted (dropping the full maintained history) or make
     the replay gate return None (silently re-enabling double-appends)."""
+    from types import SimpleNamespace
+
     import pytest
     from pyspark.errors import AnalysisException
 
@@ -661,7 +663,10 @@ def test_tblproperties_helpers_distinguish_missing_from_broken(spark):
     assert _table_prop_int(spark, "t_definitely_not_a_table", "p") is None
 
     class _BrokenCatalog:
-        """Stands in for a SparkSession whose metastore is transiently down."""
+        """Stands in for a SparkSession whose metastore is transiently down:
+        the catalog still lists the table, reading its properties fails."""
+
+        catalog = SimpleNamespace(tableExists=lambda _: True)
 
         def sql(self, _):
             raise AnalysisException("connection to metastore lost")
@@ -673,6 +678,23 @@ def test_tblproperties_helpers_distinguish_missing_from_broken(spark):
         _table_batch_id(broken, "t_any")
     with pytest.raises(AnalysisException):
         _table_prop_int(broken, "t_any", "p")
+
+
+def test_tblproperties_of_an_absent_table_runs_no_query(spark, monkeypatch):
+    """A missing table is answered by the catalog: no ``SHOW TBLPROPERTIES``
+    runs, so Spark logs no TABLE_OR_VIEW_NOT_FOUND ERROR trace for it."""
+    from wikipediaetl_spark.operators.layout import _show_tblproperties
+
+    queries = []
+    real = type(spark).sql
+
+    def spied(self, *args, **kwargs):
+        queries.append(args[0])
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(spark), "sql", spied)
+    assert _show_tblproperties(spark, "t_definitely_not_a_table") is None
+    assert queries == []
 
 
 def test_maintained_layout_sink_order_is_structural(spark):

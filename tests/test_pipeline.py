@@ -2,8 +2,14 @@
 
 from __future__ import annotations
 
+import threading
+
+import pytest
+from pyspark import StorageLevel
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
+import wikipediaetl_spark.pipeline as pipeline_mod
 from wikipediaetl_spark.pipeline import run_pipeline, split_valid_invalid
 
 
@@ -45,6 +51,62 @@ def test_manifest_observation_matches_readback(spark, sf_dir, tmp_path):
     manifest = run_pipeline(spark, sf_dir, out)
     for name, n in manifest.items():
         assert spark.read.parquet(f"{out}/{name}").count() == n
+
+
+def test_run_pipeline_submits_the_four_sinks_at_once(spark, sf_dir, tmp_path, monkeypatch):
+    """Every sink's write waits on one 4-party barrier before it starts:
+    sinks written one after another would break it (the first would time
+    out alone), so passing means all four were in flight together."""
+    barrier = threading.Barrier(4, timeout=60)
+    real = DataFrameWriter.parquet
+
+    def gated(self, *args, **kwargs):
+        barrier.wait()
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", gated)
+    manifest = run_pipeline(spark, sf_dir, str(tmp_path / "out"))
+    assert list(manifest) == ["pages", "categories", "page_categories", "html_texts"]
+
+
+def test_run_pipeline_sink_jobs_stay_in_the_callers_job_group(spark, sf_dir, tmp_path, jobs_of):
+    """The sink threads inherit the caller's job group, so job counters
+    keyed on it (perfbench's ``exec.jobs``, ``tools/ab.py``) still see
+    every sink's write job."""
+    _, jobs = jobs_of(lambda: run_pipeline(spark, sf_dir, str(tmp_path / "out")))
+    assert jobs >= 4
+
+
+def test_run_pipeline_reraises_a_sink_error_after_every_sink_ends(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A failing sink's error reaches the caller (``run_dag`` retries on
+    it), but only after the other sinks have landed: no sink thread
+    outlives the call, and the shared corpus is unpersisted."""
+    out = tmp_path / "out"
+    real_write = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        if path.endswith("/categories"):
+            raise RuntimeError("categories sink failed")
+        return real_write(self, path, *args, **kwargs)
+
+    corpora = []
+    real_process = pipeline_mod.process_corpus
+
+    def spied(*args):
+        tables = real_process(*args)
+        corpora.append(tables["_corpus"])
+        return tables
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    monkeypatch.setattr(pipeline_mod, "process_corpus", spied)
+    with pytest.raises(RuntimeError, match="categories sink failed"):
+        run_pipeline(spark, sf_dir, str(out))
+    assert not [t for t in threading.enumerate() if t.name.startswith("sink")]
+    assert corpora[0].storageLevel == StorageLevel.NONE
+    for name in ("pages", "page_categories", "html_texts"):
+        assert (out / name / "_SUCCESS").exists()
 
 
 def test_dsir_selection_enriches_target_slice(spark, sf_dir):

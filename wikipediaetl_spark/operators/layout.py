@@ -61,13 +61,20 @@ def _show_tblproperties(spark: SparkSession, table: str):
     committed staging holding the full maintained history — and the same
     failure in the replay gate returned None and silently disabled replay
     suppression, allowing double-appends). Recovery must fail LOUD on
-    unexpected errors, never destroy state on them."""
+    unexpected errors, never destroy state on them.
+
+    An absent table is answered by the catalog before any query runs:
+    Spark logs every failed ``SHOW TBLPROPERTIES`` at ERROR with a full
+    Java stack trace, which buried real errors in the run log. The catch
+    below only covers a table dropped between the check and the query."""
     from pyspark.errors import AnalysisException
 
+    if not spark.catalog.tableExists(table):
+        return None
     try:
         return spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
     except AnalysisException as e:
-        cls = getattr(e, "getErrorClass", lambda: None)() or ""
+        cls = getattr(e, "getCondition", lambda: None)() or ""
         if "TABLE_OR_VIEW_NOT_FOUND" in cls or "TABLE_OR_VIEW_NOT_FOUND" in str(e):
             return None
         raise

@@ -331,7 +331,12 @@ def connected_components(
 
     Each round is ONE Spark job: the stability check (no node's label
     moved) rides the round's eager checkpoint as an ``Observation``, so the
-    loop costs one job per checkpoint and none for the check."""
+    loop costs one job per checkpoint and none for the check. The labels
+    are seeded lazily with one propagation step over the checkpointed
+    edges (``least(src, min(dst))`` per ``src``) rather than checkpointed
+    as identity labels, so the seed costs no job and the loop starts one
+    round ahead: the edges plus one checkpoint per round are the whole
+    job bill (a star converges in 2 jobs)."""
     spark = pairs.sparkSession
     # Materialize the pair list BEFORE pinning the loop confs: the upstream
     # pair generation (e.g. q53's shingle join) is the heavy stage and must
@@ -341,12 +346,12 @@ def connected_components(
     ).unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
     edges = edges.localCheckpoint(eager=True)
     with scoped_confs(spark, _LOOP_CONFS):
-        labels = (
-            edges.select(F.col("src").alias("node"))
-            .distinct()
-            .withColumn("label", F.col("node"))
-            .localCheckpoint(eager=True)
-        )
+        # lazy seed = one propagation step from identity labels: every node
+        # is some edge's src, so min over its closed neighborhood is
+        # least(src, min(dst)). It runs inside the first round's job.
+        labels = edges.groupBy("src").agg(
+            F.least(F.col("src"), F.min("dst")).alias("label")
+        ).withColumnRenamed("src", "node")
         converged = False
         for rnd in range(max_rounds):
             # one join + one aggregate per round: a node's own label rides

@@ -106,9 +106,11 @@ def run_dag(
       ``retry_delay_s`` between attempts (pipeline.py:19 ``retries=1``);
     - return values land in the shared ``xcom`` dict keyed by task name and
       are visible to downstream tasks (pipeline.py:88-89 pattern);
-    - independent tasks run in submission order — Spark's scheduler is the
-      actual parallelism layer (a task's jobs use every executor), so
-      driver-side task concurrency would only interleave job submission.
+    - independent tasks run one after another, in submission order. A
+      task's jobs do not always fill the executors: small jobs leave cores
+      idle, so a task that holds several independent writes submits them
+      from threads of its own (``run_pipeline`` lands its four sinks at
+      once); the DAG layer itself stays sequential.
     """
     by_name = {t.name: t for t in tasks}
     for t in tasks:
@@ -159,7 +161,8 @@ def run_dag(
 
 def process_html_dag(spark: SparkSession, sf_dir: str, out_dir: str) -> DagRun:
     """The reference DAG rebuilt on ``run_dag``: parallel-group transform
-    (categorizer ∥ converter over ONE shared corpus scan) → archival
+    (categorizer ∥ converter: ``run_pipeline`` writes their four sinks
+    concurrently over ONE shared corpus scan) → archival
     consuming the transform's manifest via XCom — ETL/dags/pipeline.py:62-89
     with the N+1 ORM load replaced by set-based writes."""
     from wikipediaetl_spark.pipeline import run_pipeline

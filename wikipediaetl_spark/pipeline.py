@@ -3,9 +3,11 @@
 Reference parity (SURVEY.md §3.1, ETL/dags/pipeline.py:25-93): the
 ``process_html`` DAG runs categorizer and converter in parallel task groups,
 then archives processed files. Here the orchestration collapses into a plain
-driver function over one shared corpus scan (operators/etl.process_corpus):
-Spark's scheduler already parallelizes the two branches' jobs, and the
-archival step is the set-based split from sources/formats.archive_processed.
+driver function over one shared corpus scan (operators/etl.process_corpus)
+that submits its four parquet sinks at once, one driver thread each, so the
+two branches' small jobs share the executors instead of queueing behind
+each other; the archival step is the set-based split from
+sources/formats.archive_processed.
 
 Airflow control-flow machinery (per-task retries, XCom handoff,
 upstream-failure propagation) lives in ``orchestration.py`` (``run_dag`` /
@@ -15,10 +17,21 @@ the run (the reference's own schedule is None, ETL/dags/pipeline.py:28).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from wikipediaetl_spark.operators.etl import process_corpus
+
+# process_corpus key -> landed table name, in manifest order
+_SINKS = {
+    "pages": "pages",
+    "categories": "categories",
+    "page_categories": "page_categories",
+    "converter_output": "html_texts",
+}
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
@@ -29,35 +42,43 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, in
       out_dir/pages, out_dir/categories, out_dir/page_categories,
       out_dir/html_texts  (converter.py:60-61 parity, mode=overwrite)
 
+    The four sinks are submitted together, one thread each: every sink is
+    a few 1-4-task stages, so written one after another they left most
+    cores idle. Each thread target is wrapped in
+    ``inheritable_thread_target``, so the caller's job group and local
+    properties reach the sink's jobs. The corpus stays cached until every
+    sink has ended; then the first sink error, in manifest order, is
+    re-raised (``run_dag``'s retry sees it).
+
     Returns a row-count manifest (the reference returns the processed file
     list through XCom, pipeline.py:88-89 — the manifest is its accounting
     equivalent).
     """
-    from pyspark.sql import Observation
-
     tables = process_corpus(spark, sf_dir)
     corpus_handle = tables.pop("_corpus")
+
+    def land(key: str, out_name: str) -> int:
+        # manifest counts ride the WRITE pass via an Observation — the old
+        # read-back count re-scanned every output table, a second full
+        # pass per sink that a 100 TB landing zone cannot afford (and
+        # Airflow's XCom accounting gets for free from the task's own
+        # output)
+        obs = Observation(f"rows_{out_name}")
+        tables[key].observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(f"{out_dir}/{out_name}")
+        return int(obs.get["n"])
+
     try:
-        manifest: dict[str, int] = {}
-        out_names = {
-            "pages": "pages",
-            "categories": "categories",
-            "page_categories": "page_categories",
-            "converter_output": "html_texts",
-        }
-        for key, out_name in out_names.items():
-            df = tables[key]
-            # manifest counts ride the WRITE pass via an Observation —
-            # the old read-back count re-scanned every output table, a
-            # second full pass per sink that a 100 TB landing zone cannot
-            # afford (and Airflow's XCom accounting gets for free from
-            # the task's own output)
-            obs = Observation(f"rows_{out_name}")
-            df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-                "overwrite"
-            ).parquet(f"{out_dir}/{out_name}")
-            manifest[out_name] = int(obs.get["n"])
-        return manifest
+        with ThreadPoolExecutor(len(_SINKS), thread_name_prefix="sink") as pool:
+            # one wrap per sink: each copies the caller's local properties
+            # anew, so the sinks' SQL execution ids never share one object
+            futures = {
+                out: pool.submit(inheritable_thread_target(spark)(land), key, out)
+                for key, out in _SINKS.items()
+            }
+        # leaving the pool joined every sink thread
+        return {out: f.result() for out, f in futures.items()}
     finally:
         corpus_handle.unpersist()
 

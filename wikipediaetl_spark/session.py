@@ -105,7 +105,11 @@ def scoped_confs(spark: SparkSession, confs: dict) -> Iterator[None]:
     """Set runtime SQL ``confs`` for the ``with`` body, then put the session
     back as it was: a key that was set gets its old value, a key that was
     unset is unset again. Every set runs inside the ``try``, so a set that
-    fails (a static conf) still restores the keys set before it."""
+    fails (a static conf) still restores the keys set before it.
+
+    The overrides apply to the whole session, not to the calling thread:
+    threads that run at the same time (``pipeline.run_pipeline``'s sinks)
+    see them too."""
     saved = {k: spark.conf.get(k, None) for k in confs}
     try:
         for k, v in confs.items():
