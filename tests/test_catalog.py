@@ -9,6 +9,7 @@ import pytest
 
 from wikipediaetl_spark.catalog import all_queries
 from wikipediaetl_spark.session import scoped_confs
+from wikipediaetl_spark.sources import load_table
 
 TOOLS_DIR = Path(__file__).resolve().parents[1] / "tools"
 
@@ -114,6 +115,18 @@ def test_pagerank_mass_conserved_and_deterministic(spark, sf_dir):
     assert all(v > 0 for v in r1.values())
     r2 = {r.node: r.rank for r in fn(spark, sf_dir).collect()}
     assert r1 == r2  # deterministic across runs (rounded grid)
+
+
+@pytest.mark.parametrize("name", ["q103_pagerank", "q165_pagerank_exact"])
+def test_pagerank_builds_in_23_jobs(spark, sf_dir, jobs_of, name):
+    """One PageRank loop for both rank types: the node count rides the
+    nodes' checkpoint and the first round reads the initial rank lazily, so
+    a 5-round build at sf0.01 runs 23 jobs (25 with a separate count job
+    and an identity-rank checkpoint)."""
+    sf01 = str(Path(sf_dir).parent / "sf0.01")
+    load_table(spark, sf01, "orders")  # the schema memo's inference job is not the loop's
+    _, n_jobs = jobs_of(lambda: all_queries()[name].fn(spark, sf01))
+    assert n_jobs <= 23
 
 
 def test_bpe_merges_known_corpus():

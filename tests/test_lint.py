@@ -345,3 +345,35 @@ def test_thread_lint_flags_bare_threads_and_unwrapped_submits(tmp_path):
         "InheritableThread(target=f).start()\n"
     )
     assert unwrapped_threads(tmp_path) == ["m.py:3", "m.py:4"]
+
+
+def isempty_probes(pkg: Path) -> list[str]:
+    """``path:line`` of every ``.isEmpty()`` call under ``pkg``."""
+    hits = []
+    for path in _sources(None, pkg):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "isEmpty"
+            ):
+                hits.append(f"{path.relative_to(pkg).as_posix()}:{node.lineno}")
+    return sorted(hits)
+
+
+def test_fixpoint_loops_count_inside_their_checkpoints():
+    """``df.isEmpty()`` is a job of its own. A loop that checks a frame it
+    has just checkpointed gets the row count from that checkpoint's job
+    instead, through ``session.counted_checkpoint``."""
+    assert isempty_probes(REPO_ROOT / "wikipediaetl_spark") == []
+
+
+def test_isempty_lint_flags_probes(tmp_path):
+    (tmp_path / "m.py").write_text(
+        "df = df.localCheckpoint(eager=True)\n"
+        "if df.isEmpty():\n"
+        "    pass\n"
+        "df, n = counted_checkpoint(df)\n"
+        "done = not frontier.isEmpty()\n"
+    )
+    assert isempty_probes(tmp_path) == ["m.py:2", "m.py:5"]

@@ -171,6 +171,19 @@ def _make_fake_site():
     return fetch
 
 
+def _logging_transport(log_path: str):
+    """The fake site's transport, appending each fetched URL to a file —
+    a file, not a list, because the fetch runs in Python workers."""
+    fetch_site = _make_fake_site()
+
+    def fetch(url: str):
+        with open(log_path, "a") as log:
+            log.write(url + "\n")
+        return fetch_site(url)
+
+    return fetch
+
+
 def test_fetch_urls_with_transport(spark):
     urls = spark.createDataFrame(
         [("https://en.wikipedia.org/wiki/A",), ("https://en.wikipedia.org/wiki/Missing",)],
@@ -203,6 +216,29 @@ def test_crawl_end_to_end(spark):
     # seen ⊇ pages (dead links never fetched successfully but may be seen)
     seen = {r.url for r in out["seen"].collect()}
     assert set(urls) <= seen
+
+
+def test_crawl_fetches_each_page_once_and_counts_in_its_checkpoints(spark, jobs_of, tmp_path):
+    """Pages and metadata come from one checkpoint of the fetched rows, so
+    neither the crawl nor a later collect of its outputs fetches a page
+    again (a re-fetch could pair a page's HTML with another response's
+    Last-Modified). Each round's emptiness checks are counted inside its
+    checkpoint jobs: the 3-page crawl runs 14 jobs (18 with ``isEmpty()``
+    probes)."""
+    log = tmp_path / "fetches.log"
+    out, n_jobs = jobs_of(
+        lambda: crawl(
+            spark, ["https://en.wikipedia.org/wiki/A"], _logging_transport(str(log)), max_rounds=5
+        )
+    )
+    assert len(out["pages"].collect()) == 3
+    assert len(out["metadata"].collect()) == 3
+    assert sorted(log.read_text().split()) == [
+        "https://en.wikipedia.org/wiki/A",
+        "https://en.wikipedia.org/wiki/B",
+        "https://en.wikipedia.org/wiki/C",
+    ]
+    assert n_jobs <= 14
 
 
 def test_orc_roundtrip(spark, sf_dir, tmp_path):

@@ -7,33 +7,6 @@ from pyspark.sql import functions as F
 
 from wikipediaetl_spark.sources import load_table
 from wikipediaetl_spark.streaming.queries import _events_stream, _run_to_completion
-from wikipediaetl_spark.streaming.stateful import running_user_stats
-
-
-def test_running_stats_converge_to_batch(spark, sf_dir):
-    stream = _events_stream(spark, sf_dir)
-    out = _run_to_completion(running_user_stats(stream), "update")
-    # update mode emits one row per key per batch; the last emission per key
-    # is the final state — with a single input file there is one batch.
-    final = (
-        out.groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("max_value").alias("max_value"),
-        )
-        .collect()
-    )
-    batch = {
-        r.user_id: r
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.max("value").alias("mx"))
-        .collect()
-    }
-    assert len(final) == len(batch)
-    for r in final:
-        assert r.n_events == batch[r.user_id].n
-        assert abs(r.max_value - batch[r.user_id].mx) < 1e-9
 
 
 def test_foreach_batch_sink_checkpoint_recovery(spark, sf_dir, tmp_path):

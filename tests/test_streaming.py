@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from wikipediaetl_spark.operators.relational import q37_tumbling_window
-from wikipediaetl_spark.operators.relational_ext import connected_components, pagerank_exact
+from wikipediaetl_spark.operators.relational_ext import connected_components, pagerank
 from wikipediaetl_spark.session import scoped_confs
 from wikipediaetl_spark.streaming.crawler import (
     bfs_fixpoint,
@@ -70,6 +70,21 @@ def test_bfs_lookahead_depth_exact(spark):
     seeds = spark.createDataFrame([("a",)], "node string")
     plain = {r.node: r.depth for r in bfs_fixpoint(spark, seeds, edges).collect()}
     assert plain == {"a": 0, "b": 1, "c": 1, "d": 2, "e": 3, "f": 4}
+
+
+def test_bfs_emptiness_check_rides_each_rounds_checkpoint(spark, jobs_of):
+    """The per-round "no new nodes" check is counted inside the round's
+    checkpoint job, not probed by a job of its own: on a 5-node cycle plus
+    tail the loop runs 5 rounds in 15 jobs (20 with an ``isEmpty()`` probe
+    per round)."""
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")],
+        "src string, dst string",
+    )
+    seeds = spark.createDataFrame([("a",)], "node string")
+    out, n_jobs = jobs_of(lambda: bfs_fixpoint(spark, seeds, edges))
+    assert {r.node: r.depth for r in out.collect()} == {"a": 0, "b": 1, "c": 2, "d": 3, "e": 4}
+    assert n_jobs <= 15
 
 
 def test_bfs_cycle_terminates(spark):
@@ -155,7 +170,7 @@ def test_fixpoint_loops_leave_the_session_as_they_found_it(spark):
     pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long")
     assert connected_components(pairs).count() == 5
     edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
-    assert pagerank_exact(edges, n_iter=2).count() == 3
+    assert pagerank(edges, n_iter=2, exact=True).count() == 3
     forest = spark.createDataFrame(_FOREST, "src string, dst string")
     seeds = spark.createDataFrame([("a",)], "node string")
     assert recursive_bfs_tree(spark, seeds, forest).count() == 10

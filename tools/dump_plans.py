@@ -85,9 +85,9 @@ SHOWCASE = {
     "agg in update mode, state keyed per user — no Python worker in the loop "
     "(r6: within ~2x of q149's micro-sharded Python state at 400x, vs 12x over "
     "the per-key form it replaced).",
-    "q165_pagerank_exact": "integer-state PageRank: per-round join + BIGINT aggregate "
-    "+ broadcast dangling scalar, lineage cut per round; bit-exact under any "
-    "partitioning, hash-verified against an unrolled SQL oracle.",
+    "q165_pagerank_exact": "integer-state PageRank, pagerank(..., exact=True): per-round "
+    "join + BIGINT aggregate + broadcast dangling scalar, lineage cut per round; "
+    "bit-exact under any partitioning, hash-verified against an unrolled SQL oracle.",
     "q138_waiting_suppliers": "ONE lineitem scan, 'F'-status SEMI-REDUCED before "
     "the (order,supplier) grain aggregate (r10: halves both aggregates' input, "
     "deletes the late f_orders join — 6.69x -> 3.02x at 400x, "

@@ -17,17 +17,17 @@ from pyspark.sql import functions as F
 from wikipediaetl_spark.catalog import query
 from wikipediaetl_spark.functions.fixedpoint import scaled_long, sum_unscaled, unscale
 from wikipediaetl_spark.operators.dedup import q53_shingle_neardup
-from wikipediaetl_spark.session import scoped_confs
+from wikipediaetl_spark.session import counted_checkpoint, scoped_confs
 from wikipediaetl_spark.sources import load_table
 
 # Pinned for the driver-side fixpoint loops below (connected components,
-# both PageRanks): many tiny rounds, so AQE's per-stage re-optimization is
-# pure overhead, and with AQE off nothing coalesces post-shuffle, so the
-# partition count is pinned small. Per-round whole-stage compilation is a
-# net loss on tiny frontiers and the generated classes get code-cache-
-# evicted between calls (measured interleaved with heavy queries: q83
-# 1.85 -> 1.36 s/call, q165 2.44 -> 2.03 s/call; the same finding as
-# recursive_bfs_tree).
+# ``pagerank`` and ``pagerank(..., exact=True)``): many tiny rounds, so
+# AQE's per-stage re-optimization is pure overhead, and with AQE off
+# nothing coalesces post-shuffle, so the partition count is pinned small.
+# Per-round whole-stage compilation is a net loss on tiny frontiers and the
+# generated classes get code-cache-evicted between calls (measured
+# interleaved with heavy queries: q83 1.85 -> 1.36 s/call, q165 2.44 ->
+# 2.03 s/call; the same finding as recursive_bfs_tree).
 _LOOP_CONFS = {
     "spark.sql.adaptive.enabled": "false",
     "spark.sql.shuffle.partitions": "8",
@@ -926,55 +926,87 @@ def q102_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pagerank(edges: DataFrame, n_iter: int = 5, damping: float = 0.85) -> DataFrame:
-    """Fixed-iteration PageRank over edges(src, dst) — the iterative
-    message-passing pattern beyond BFS/label-propagation: each round is a
-    join (send rank/out_degree along edges) + aggregate (sum incoming) +
-    dangling-mass redistribution, checkpointed per round. Deterministic up
-    to float addition order (rows-only operator)."""
+# PageRank's integer rank unit: ``exact=True`` ranks are parts per billion
+_PPB = 1_000_000_000
+
+
+def pagerank(edges: DataFrame, n_iter: int = 5, exact: bool = False) -> DataFrame:
+    """Fixed-iteration PageRank (damping 0.85) over edges(src, dst) — the
+    iterative message-passing pattern beyond BFS/label-propagation: each
+    round is a join (send rank/out_degree along edges) + aggregate (sum
+    incoming) + dangling-mass redistribution, checkpointed per round.
+
+    ``exact=False`` holds the rank as a double and returns (node, rank):
+    deterministic up to float addition order (rows-only operator).
+    ``exact=True`` holds it as BIGINT parts per billion and returns (node,
+    rank_ppb): every round is pure integer arithmetic (r DIV deg
+    contributions, (15·base) DIV (100·N) + (85·(inc + dangling DIV N))
+    DIV 100), so truncation replaces float rounding and the fixpoint of the
+    ALGORITHM (not of ideal PageRank) is reproducible bit-for-bit on any
+    engine and any partitioning — which is what lets an iterative graph
+    operator join the hash-checked set at all.
+
+    The node count rides the nodes' checkpoint (``counted_checkpoint``) and
+    the first round reads the uniform initial rank lazily, so neither costs
+    a job of its own."""
     spark = edges.sparkSession
+    out_col = "rank_ppb" if exact else "rank"
     with scoped_confs(spark, _LOOP_CONFS):
-        nodes = (
+        nodes, n = counted_checkpoint(
             edges.select(F.col("src").alias("node"))
             .unionByName(edges.select(F.col("dst").alias("node")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        n_nodes = nodes.count()
-        if n_nodes == 0:
-            return nodes.withColumn("rank", F.lit(0.0))
+        if n == 0:
+            return nodes.withColumn(out_col, F.lit(0).cast("long") if exact else F.lit(0.0))
+        if exact:
+            init = F.lit(_PPB // n).cast("long")
+            contrib = F.expr("r div deg")
+            update = F.lit((15 * _PPB) // (100 * n)).cast("long") + F.expr(
+                f"(85 * (coalesce(inc, 0) + dm div {n})) div 100"
+            ).cast("long")
+        else:
+            init = F.lit(1.0 / n)
+            contrib = F.col("r") / F.col("deg")
+            # (1 - 0.85) / n, not 0.15 / n: the two differ in the last bit
+            update = (
+                F.lit((1 - 0.85) / n)
+                + F.lit(0.85) * F.col("dm") / F.lit(float(n))
+                + F.lit(0.85) * F.coalesce(F.col("inc"), F.lit(0.0))
+            )
         out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         graph = edges.join(out_deg, "src").localCheckpoint(eager=True)
-        ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes)).localCheckpoint(eager=True)
+        ranks = nodes.withColumn("r", init)
         for _ in range(n_iter):
             contribs = (
                 graph.join(ranks, graph.src == ranks.node)
-                .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
+                .select(F.col("dst").alias("node"), contrib.alias("c"))
                 .groupBy("node")
-                .agg(F.sum("c").alias("incoming"))
+                .agg(F.sum("c").alias("inc"))
             )
             # dangling nodes (no outgoing edges) leak rank mass; redistribute
             # it as a broadcast 1-row scalar folded into the same plan — no
             # per-iteration driver collect (VERDICT r2 #5): the only action
             # per round is the lineage-truncating checkpoint of `ranks`.
-            dangling = (
-                ranks.join(out_deg, ranks.node == out_deg.src, "left_anti")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass"))
+            dangling = ranks.join(out_deg, ranks.node == out_deg.src, "left_anti").agg(
+                F.coalesce(F.sum("r"), F.lit(0)).alias("dm")
             )
             ranks = (
                 nodes.join(contribs, "node", "left")
                 .join(F.broadcast(dangling))
-                .select(
-                    "node",
-                    (
-                        F.lit((1 - damping) / n_nodes)
-                        + F.lit(damping) * F.col("dangling_mass") / F.lit(float(n_nodes))
-                        + F.lit(damping) * F.coalesce(F.col("incoming"), F.lit(0.0))
-                    ).alias("rank"),
-                )
+                .select("node", update.alias("r"))
                 .localCheckpoint(eager=True)
             )
-        return ranks
+        return ranks.select("node", F.col("r").alias(out_col))
+
+
+def _order_parent_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The order-parent graph (q38's BFS edge set) over the first 2000
+    orders: ``o_orderkey div 2 -> o_orderkey``, self-loops dropped."""
+    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000)
+    return o.select(
+        F.expr("o_orderkey div 2").alias("src"), F.col("o_orderkey").alias("dst")
+    ).filter(F.col("dst") != F.col("src"))
 
 
 @query("q103_pagerank")
@@ -982,22 +1014,18 @@ def q103_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank(5 iterations) over the order-parent graph (same edge set as
     q38's BFS). Rows-only (float accumulation); tests assert rank-mass
     conservation and determinism. The hash-verifiable twin with integer
-    rank state is q165_pagerank_exact."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000)
-    edges = o.select(
-        F.expr("o_orderkey div 2").alias("src"), F.col("o_orderkey").alias("dst")
-    ).filter(F.col("dst") != F.col("src"))
-    pr = pagerank(edges, n_iter=5)
+    rank state is q165_pagerank_exact, ``pagerank(..., exact=True)``."""
+    pr = pagerank(_order_parent_edges(spark, sf_dir), n_iter=5)
     return pr.select("node", F.round("rank", 9).alias("rank"))
 
 
 def _pagerank_exact_oracle(n_iter: int) -> str:
     """Unrolled n_iter-iteration INTEGER PageRank in ANSI SQL (one CTE
-    chain per iteration) — the oracle twin of ``pagerank_exact``. Rank
-    state is BIGINT parts-per-billion; every per-iteration op is integer
-    (DIV, ×, Σ), so the result is bit-identical regardless of engine or
-    evaluation order."""
-    base = 1_000_000_000
+    chain per iteration) — the oracle twin of ``pagerank(..., exact=True)``.
+    Rank state is BIGINT parts-per-billion; every per-iteration op is
+    integer (DIV, ×, Σ), so the result is bit-identical regardless of
+    engine or evaluation order."""
+    base = _PPB
     sql = f"""
     WITH edges AS (
       SELECT o_orderkey // 2 AS src, o_orderkey AS dst FROM orders
@@ -1042,78 +1070,18 @@ def _pagerank_exact_oracle(n_iter: int) -> str:
     return sql
 
 
-def pagerank_exact(edges: DataFrame, n_iter: int = 5) -> DataFrame:
-    """Integer-state PageRank: rank held as BIGINT parts-per-billion,
-    every iteration pure integer arithmetic (r DIV deg contributions,
-    integer damping (15·base) DIV (100·N) + (85·(inc + dangling DIV N))
-    DIV 100). Truncation replaces float rounding, so the fixpoint of the
-    ALGORITHM (not of ideal PageRank) is reproducible bit-for-bit on any
-    engine and any partitioning — which is what lets an iterative graph
-    operator join the hash-checked set at all. Structure matches
-    ``pagerank``: per-round join + integer aggregate + broadcast dangling
-    scalar, lineage cut by localCheckpoint."""
-    spark = edges.sparkSession
-    base = 1_000_000_000
-    with scoped_confs(spark, _LOOP_CONFS):
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .unionByName(edges.select(F.col("dst").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n_nodes = nodes.count()
-        if n_nodes == 0:
-            return nodes.withColumn("rank_ppb", F.lit(0).cast("long"))
-        out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        graph = edges.join(out_deg, "src").localCheckpoint(eager=True)
-        ranks = nodes.withColumn(
-            "r", F.lit(base // n_nodes).cast("long")
-        ).localCheckpoint(eager=True)
-        for _ in range(n_iter):
-            contribs = (
-                graph.join(ranks, graph.src == ranks.node)
-                .select(
-                    F.col("dst").alias("node"),
-                    F.expr("r div deg").alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("inc"))
-            )
-            dangling = ranks.join(
-                out_deg, ranks.node == out_deg.src, "left_anti"
-            ).agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("dm"))
-            ranks = (
-                nodes.join(contribs, "node", "left")
-                .join(F.broadcast(dangling))
-                .select(
-                    "node",
-                    (
-                        F.lit((15 * base) // (100 * n_nodes)).cast("long")
-                        + F.expr(
-                            f"(85 * (coalesce(inc, 0) + dm div {n_nodes})) div 100"
-                        ).cast("long")
-                    ).alias("r"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        return ranks.select("node", F.col("r").alias("rank_ppb"))
-
-
 @query("q165_pagerank_exact", oracle=_pagerank_exact_oracle(5))
 def q165_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank(5 iterations) with INTEGER rank state, hash-verified
-    against an unrolled 5-iteration SQL oracle — the iterative-algorithm
+    """PageRank(5 iterations), ``pagerank(..., exact=True)``, with INTEGER
+    rank state, hash-verified against an unrolled 5-iteration SQL oracle —
+    the iterative-algorithm
     class (q38/q83/q103) entering the exact-checked set: quantizing the
     state to BIGINT parts-per-billion makes every iteration's result
     order-independent, so the driver-grade value hash applies to a graph
-    fixpoint computation. Same order-parent edge set as q103; at scale
-    the per-round plan is q103's (edges hash-partitioned once, integer
-    aggregate, broadcast dangling scalar)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000)
-    edges = o.select(
-        F.expr("o_orderkey div 2").alias("src"), F.col("o_orderkey").alias("dst")
-    ).filter(F.col("dst") != F.col("src"))
-    return pagerank_exact(edges, n_iter=5)
+    fixpoint computation. Same order-parent edge set and the same loop as
+    q103: the edges are hash-partitioned once, each round's aggregate is
+    integer and its dangling mass a broadcast scalar."""
+    return pagerank(_order_parent_edges(spark, sf_dir), n_iter=5, exact=True)
 
 
 @query(

@@ -12,7 +12,8 @@ import contextlib
 import os
 from collections.abc import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -121,3 +122,13 @@ def scoped_confs(spark: SparkSession, confs: dict) -> Iterator[None]:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eagerly ``localCheckpoint`` ``df`` and return it with its row count.
+    The count is an ``Observation`` that rides the checkpoint's own job, so
+    a fixpoint loop's size check (empty frontier, node count) costs no job
+    of its own."""
+    rows = Observation()
+    df = df.observe(rows, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return df, rows.get["n"]

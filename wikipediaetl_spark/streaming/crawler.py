@@ -20,7 +20,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wikipediaetl_spark.session import scoped_confs
+from wikipediaetl_spark.session import counted_checkpoint, scoped_confs
+
+
+def _tiny_round_confs(spark: SparkSession) -> tuple[int, dict[str, str]]:
+    """``(n_part, confs)`` for a BFS loop of many tiny rounds.
+
+    Few fat partitions beat many thin ones for iterative micro-batches:
+    every round is a frontier-broadcast join, so per-task scheduling
+    overhead × rounds dominates at small frontier sizes. AQE is disabled
+    for the loop: its per-stage re-optimization costs more than it saves
+    on many tiny rounds (measured ~20% of wall); re-enable (drop this pin)
+    when rounds are cluster-sized. With AQE off nothing coalesces
+    post-shuffle, so the partition count is pinned: a default-200 driver
+    session would otherwise run 200 tasks per tiny round."""
+    n_part = min(8, spark.sparkContext.defaultParallelism)
+    return n_part, {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(n_part),
+    }
 
 
 def bfs_fixpoint(
@@ -40,20 +58,10 @@ def bfs_fixpoint(
     (small) broadcasts against it. The seen-set grows monotonically, so the
     dedup anti-join shuffles on the key and the seen set stays
     partition-distributed — the only setting that survives crawl scale.
+    Each round's emptiness check rides its checkpoint
+    (``counted_checkpoint``).
     """
-    # Few fat partitions beat many thin ones for iterative micro-batches:
-    # every round is a frontier-broadcast join, so per-task scheduling
-    # overhead × rounds dominates at small frontier sizes. AQE is disabled
-    # for the loop: its per-stage re-optimization costs more than it saves
-    # on many tiny rounds (measured ~20% of wall); re-enable (drop this
-    # pin) when rounds are cluster-sized. With AQE off nothing coalesces
-    # post-shuffle, so the partition count is pinned: a default-200 driver
-    # session would otherwise run 200 tasks per tiny round.
-    n_part = min(8, spark.sparkContext.defaultParallelism)
-    loop_confs = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(n_part),
-    }
+    n_part, loop_confs = _tiny_round_confs(spark)
     with scoped_confs(spark, loop_confs):
         edges = edges.repartition(n_part, "src").persist()
         try:
@@ -61,16 +69,15 @@ def bfs_fixpoint(
             frontier = frontier.localCheckpoint(eager=True)
             seen = frontier
             for _ in range(max_rounds):
-                new_nodes = (
+                new_nodes, n_new = counted_checkpoint(
                     F.broadcast(frontier)
                     .join(edges, frontier["node"] == edges["src"])
                     .select(F.col("dst").alias("node"), (frontier["depth"] + 1).alias("depth"))
                     .join(seen.select("node"), "node", "left_anti")
                     .groupBy("node")
                     .agg(F.min("depth").alias("depth"))
-                    .localCheckpoint(eager=True)
                 )
-                if new_nodes.isEmpty():
+                if n_new == 0:
                     break
                 # re-checkpointing the unioned seen set each round measured
                 # FASTER than keeping it as a lazy union of frontiers — the
@@ -137,13 +144,9 @@ def recursive_bfs_tree(
                 f"multi-parent graphs (UNION ALL recursion enumerates every path)"
             )
     tag = uuid.uuid4().hex[:12]
-    n_part = min(8, spark.sparkContext.defaultParallelism)
-    loop_confs = {
-        # Same rationale as bfs_fixpoint: tiny per-level frontiers make
-        # AQE's per-stage re-optimization and default-200 shuffles pure
-        # overhead.
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(n_part),
+    # tiny per-level frontiers, as in bfs_fixpoint, plus two keys
+    n_part, loop_confs = _tiny_round_confs(spark)
+    loop_confs |= {
         # the default 1M-row recursion guard fires on any fact-scale reach
         # set (15M nodes at 100x). Raise it to a LARGE FINITE bound rather
         # than -1 (ADVICE r7): max_depth already guarantees termination,
@@ -268,7 +271,9 @@ def crawl(
     Returns {"pages": (url, file_name, html), "metadata": (url, htmlPath,
     last_modified), "seen": (url)}. Each round's new state is
     localCheckpoint-ed (cluster deployments swap in a Delta/parquet `seen`
-    table and a real checkpoint dir).
+    table and a real checkpoint dir), and each page is fetched once. The
+    round's emptiness checks ride those checkpoints
+    (``counted_checkpoint``).
     """
     from wikipediaetl_spark.functions.html import extract_links_expr
     from wikipediaetl_spark.functions.urls import (
@@ -293,19 +298,29 @@ def crawl(
 
             admitted, deferred = throttle_frontier(frontier, max_per_host)
             frontier = admitted.localCheckpoint(eager=True)
-            deferred = deferred.localCheckpoint(eager=True)
+            deferred, n_deferred = counted_checkpoint(deferred)
         else:
-            deferred = None
-        fetched = fetch_urls(frontier, transport).filter(F.col("html").isNotNull())
-        batch_pages = fetched.select(
-            "url", url_to_filename(F.col("url")).alias("file_name"), "html"
-        ).localCheckpoint(eager=True)
-        if batch_pages.isEmpty():
-            if deferred is not None and not deferred.isEmpty():
+            deferred, n_deferred = None, 0
+        # one checkpoint holds each fetched page whole: pages and metadata
+        # are both selected from it, so no page is fetched twice and its
+        # Last-Modified comes from the response that gave its HTML
+        batch, n_batch = counted_checkpoint(
+            fetch_urls(frontier, transport)
+            .filter(F.col("html").isNotNull())
+            .select(
+                "url",
+                url_to_filename(F.col("url")).alias("file_name"),
+                "html",
+                "last_modified_raw",
+            )
+        )
+        if n_batch == 0:
+            if n_deferred:
                 frontier = deferred  # whole admitted wave failed; drain deferrals
                 continue
             break
-        batch_meta = batch_pages.join(fetched.select("url", "last_modified_raw"), "url").select(
+        batch_pages = batch.select("url", "file_name", "html")
+        batch_meta = batch.select(
             "url",
             F.concat(F.lit("landing/"), F.col("file_name"), F.lit(".html")).alias("htmlPath"),
             # HTTP Last-Modified ("%a, %d %b %Y %H:%M:%S %Z",
@@ -331,8 +346,8 @@ def crawl(
         frontier = discovered.join(seen, "url", "left_anti")
         if deferred is not None:
             frontier = frontier.unionByName(deferred).distinct()
-        frontier = frontier.localCheckpoint(eager=True)
-        if frontier.isEmpty():
+        frontier, n_frontier = counted_checkpoint(frontier)
+        if n_frontier == 0:
             break
         seen = seen.unionByName(frontier).distinct().localCheckpoint(eager=True)
     empty_pages = spark.createDataFrame([], "url string, file_name string, html string")

@@ -2,9 +2,14 @@
 
 The reference's only custom state is the Redis seen-set and the x-retry-count
 header; dropDuplicates and retry_queue_step cover those. This module covers
-the *arbitrary* keyed-state axis (SURVEY.md §2.9 [E]): a per-key running
-aggregate maintained across micro-batches with explicit GroupState — the
-Spark-native form of "stateful consumer with a side store".
+the *arbitrary* keyed-state axis (SURVEY.md §2.9 [E]): a per-user running
+(count, cents-sum, max) maintained across micro-batches with explicit
+GroupState — the Spark-native form of "stateful consumer with a side
+store". The sum is held in integer cents, so the fold is order-independent
+and oracle-checkable. Two forms: ``running_user_stats_exact`` keys the
+state per user (the documented per-key path, which per-user timeouts need)
+and ``running_user_stats_exact_sharded`` keys it per shard of users (the
+scale form q149 runs).
 """
 
 from __future__ import annotations
@@ -17,70 +22,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
 from wikipediaetl_spark.functions.fixedpoint import scaled_long_np
-
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-        T.StructField("max_value", T.DoubleType()),
-    ]
-)
-
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("total", T.DoubleType()),
-        T.StructField("mx", T.DoubleType()),
-    ]
-)
-
-
-_OUT_TMPL = pd.DataFrame(
-    {"user_id": [0], "n_events": [0], "total_value": [0.0], "max_value": [0.0]}
-)
-
-
-def _update(
-    key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    # per-key constant costs dominate at scale — see _EXACT_OUT_TMPL note
-    n, total, mx = state.get if state.exists else (0, 0.0, float("-inf"))
-    for pdf in batches:
-        v = pdf["value"].to_numpy()
-        n += v.size
-        total += float(v.sum())
-        m = v.max()
-        if m > mx:
-            mx = float(m)
-    state.update((n, total, mx))
-    out = _OUT_TMPL.copy()
-    out.iat[0, 0] = key[0]
-    out.iat[0, 1] = n
-    out.iat[0, 2] = total
-    out.iat[0, 3] = mx
-    yield out
-
-
-def running_user_stats(events_stream: DataFrame) -> DataFrame:
-    """Per-user running (count, sum, max) maintained in GroupState across
-    micro-batches; each batch emits the key's updated totals (update mode).
-
-    State is partitioned by key in the state store — scale-out is by key
-    hash, same as any keyed agg; no driver state.
-    """
-    return (
-        events_stream.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
 
 EXACT_OUTPUT_SCHEMA = T.StructType(
     [
@@ -141,8 +82,11 @@ def _update_exact(
 
 
 def running_user_stats_exact(events_stream: DataFrame) -> DataFrame:
-    """Per-user running (count, cents-sum, max) in GroupState — the
-    oracle-checkable variant of ``running_user_stats``."""
+    """Per-user running (count, cents-sum, max) in GroupState, one state
+    row per user; each batch emits the key's updated totals (update mode).
+
+    State is partitioned by key in the state store — scale-out is by key
+    hash, same as any keyed agg; no driver state."""
     return (
         events_stream.select("user_id", "value")
         .groupBy("user_id")
