@@ -274,9 +274,11 @@ def test_rollup_interrupted_swap_recovers_from_staging(spark, sf_dir):
 
 def test_rollup_unstamped_merge_carries_watermark(spark, sf_dir):
     """An unstamped call (batch_id=None) on a stamped table must carry the
-    stored last_batch_id forward (ADVICE r4: dropping it would discard the
-    replay watermark and a later resumed stream would double-count)."""
+    stored replay watermark forward (ADVICE r4: dropping it would discard
+    the watermark and a later resumed stream would double-count)."""
     from wikipediaetl_spark.operators.layout import (
+        _BATCH_PROP,
+        _table_prop_int,
         merge_batch_into_rollup,
         scoped_tables,
     )
@@ -288,12 +290,53 @@ def test_rollup_unstamped_merge_carries_watermark(spark, sf_dir):
         # an ad-hoc (unstamped) maintenance merge between streaming batches
         merge_batch_into_rollup(spark, o.limit(10), table="t_rollup_carry", batch_id=None)
         cur = spark.table("t_rollup_carry")
-        assert "last_batch_id" in cur.columns
-        assert cur.select("last_batch_id").first()[0] == 7
+        assert _table_prop_int(spark, "t_rollup_carry", _BATCH_PROP) == 7
         # the carried watermark still suppresses a replay of batch 7
         before = cur.agg(F.sum("n_orders")).first()[0]
         merge_batch_into_rollup(spark, o, table="t_rollup_carry", batch_id=7)
         assert spark.table("t_rollup_carry").agg(F.sum("n_orders")).first()[0] == before
+
+
+def test_rollup_merges_keep_the_materialized_dtypes(spark, sf_dir):
+    """After one, two and three merges the custkey rollup has the column
+    types ``materialize_rollup`` writes: revenue_d stays DECIMAL(28,2)."""
+    from wikipediaetl_spark.operators.layout import (
+        materialize_rollup,
+        merge_batch_into_rollup,
+        scoped_tables,
+    )
+    from wikipediaetl_spark.sources import load_table
+
+    o = load_table(spark, sf_dir, "orders")
+    with scoped_tables(spark, "t_rollup_types", "t_rollup_types_full"):
+        materialize_rollup(spark, sf_dir, table="t_rollup_types_full")
+        want = spark.table("t_rollup_types_full").dtypes
+        assert ("revenue_d", "decimal(28,2)") in want
+        for i in range(3):
+            merge_batch_into_rollup(
+                spark, o.filter(F.col("o_orderkey") % 3 == i), table="t_rollup_types"
+            )
+            assert spark.table("t_rollup_types").dtypes == want, i
+
+
+def test_rollup_replay_launches_no_job(spark, sf_dir, jobs_of):
+    """The replay gate reads the watermark from the table's properties, a
+    catalog call: replaying a committed batch runs no Spark job."""
+    from wikipediaetl_spark.operators.layout import (
+        merge_batch_into_rollup,
+        scoped_tables,
+    )
+    from wikipediaetl_spark.sources import load_table
+
+    o = load_table(spark, sf_dir, "orders")
+    with scoped_tables(spark, "t_rollup_replay_jobs"):
+        merge_batch_into_rollup(spark, o, table="t_rollup_replay_jobs", batch_id=0)
+        _, n_jobs = jobs_of(
+            lambda: merge_batch_into_rollup(
+                spark, o, table="t_rollup_replay_jobs", batch_id=0
+            )
+        )
+        assert n_jobs == 0
 
 
 def test_rollup_partial_staging_not_adopted(spark, sf_dir):

@@ -129,6 +129,34 @@ def test_pagerank_builds_in_23_jobs(spark, sf_dir, jobs_of, name):
     assert n_jobs <= 23
 
 
+def test_pagerank_rounds_do_not_reread_the_edges(spark, tmp_path):
+    """Every round reads the checkpointed graph, never the caller's edges:
+    the edge source is read as often at 5 rounds as at 1."""
+    from pyspark.sql import functions as F
+
+    from wikipediaetl_spark.operators.relational_ext import pagerank
+
+    log = tmp_path / "reads.log"
+
+    def logged(batches):
+        with open(log, "a") as f:
+            f.write("read\n")
+        yield from batches
+
+    ids = spark.range(0, 8, numPartitions=2)
+    edges = ids.select(
+        F.col("id").alias("src"),
+        F.when(F.col("id") == 7, 8).otherwise(F.col("id") + 1).cast("long").alias("dst"),
+    ).mapInPandas(logged, "src long, dst long")
+
+    reads = {}
+    for n_iter in (1, 5):
+        log.write_text("")
+        pagerank(edges, n_iter=n_iter).collect()
+        reads[n_iter] = len(log.read_text().splitlines())
+    assert reads[1] > 0 and reads[5] == reads[1], reads
+
+
 def test_bpe_merges_known_corpus():
     from wikipediaetl_spark.operators.text_analysis import bpe_merges
 

@@ -377,3 +377,72 @@ def test_isempty_lint_flags_probes(tmp_path):
         "done = not frontier.isEmpty()\n"
     )
     assert isempty_probes(tmp_path) == ["m.py:2", "m.py:5"]
+
+
+def commit_sql_sites(pkg: Path) -> dict[str, dict[str, list[str]]]:
+    """``{kind: {function: [path:line, ...]}}`` of every ``.sql(...)`` call
+    under ``pkg`` whose SQL text renames a table (kind ``rename``) or sets
+    table properties in a function that names ``_COMMIT_PROP`` (kind
+    ``commit``). The function is the innermost enclosing one."""
+    sites: dict[str, dict[str, list[str]]] = {"rename": {}, "commit": {}}
+
+    def visit(node: ast.AST, rel: str, fn: str | None, names_commit: bool) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+            names_commit = any(
+                isinstance(n, ast.Name) and n.id == "_COMMIT_PROP" for n in ast.walk(node)
+            )
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "sql"
+            and node.args
+        ):
+            text = "".join(
+                n.value
+                for n in ast.walk(node.args[0])
+                if isinstance(n, ast.Constant) and isinstance(n.value, str)
+            )
+            kinds = []
+            if re.search(r"\bRENAME\s+TO\b", text, re.I):
+                kinds.append("rename")
+            if names_commit and re.search(r"\bSET\s+TBLPROPERTIES\b", text, re.I):
+                kinds.append("commit")
+            for kind in kinds:
+                sites[kind].setdefault(fn, []).append(f"{rel}:{node.lineno}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, fn, names_commit)
+
+    for path in _sources(None, pkg):
+        rel = path.relative_to(pkg).as_posix()
+        visit(ast.parse(path.read_text(), filename=str(path)), rel, None, False)
+    return sites
+
+
+def test_staged_swap_commits_in_one_place():
+    """A maintained table is renamed into place and marked committed by one
+    helper each: ``_rename_into_place`` (shared by the swap and its crash
+    recovery) and ``staged_swap_write``. A second hand-written copy of the
+    protocol is how the watermark and the column types drifted before."""
+    sites = commit_sql_sites(REPO_ROOT / "wikipediaetl_spark")
+    assert {kind: sorted(by_fn) for kind, by_fn in sites.items()} == {
+        "rename": ["_rename_into_place"],
+        "commit": ["staged_swap_write"],
+    }, sites
+
+
+def test_commit_sql_lint_flags_copies(tmp_path):
+    (tmp_path / "m.py").write_text(
+        "def a(spark):\n"
+        "    spark.sql(f'ALTER TABLE {s} RENAME TO {t}')\n"
+        "def b(spark):\n"
+        "    props = f\"'{_COMMIT_PROP}'='true'\"\n"
+        "    spark.sql(f'ALTER TABLE {s} SET TBLPROPERTIES ({props})')\n"
+        "    spark.sql(f'ALTER TABLE {s} RENAME TO {t}')\n"
+        "def c(spark):\n"
+        "    spark.sql(f\"ALTER TABLE {t} SET TBLPROPERTIES ('{_PENDING_PROP}'='1')\")\n"
+    )
+    assert commit_sql_sites(tmp_path) == {
+        "rename": {"a": ["m.py:2"], "b": ["m.py:6"]},
+        "commit": {"b": ["m.py:5"]},
+    }

@@ -653,13 +653,11 @@ def test_tblproperties_helpers_distinguish_missing_from_broken(spark):
 
     from wikipediaetl_spark.operators.layout import (
         _staging_committed,
-        _table_batch_id,
         _table_prop_int,
     )
 
     # genuinely missing table → absent, no exception
     assert _staging_committed(spark, "t_definitely_not_a_table") is False
-    assert _table_batch_id(spark, "t_definitely_not_a_table") is None
     assert _table_prop_int(spark, "t_definitely_not_a_table", "p") is None
 
     class _BrokenCatalog:
@@ -674,8 +672,6 @@ def test_tblproperties_helpers_distinguish_missing_from_broken(spark):
     broken = _BrokenCatalog()
     with pytest.raises(AnalysisException):
         _staging_committed(broken, "t_any")
-    with pytest.raises(AnalysisException):
-        _table_batch_id(broken, "t_any")
     with pytest.raises(AnalysisException):
         _table_prop_int(broken, "t_any", "p")
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from wikipediaetl_spark.orchestration import DagRun, Task, process_html_dag, run_dag
+from wikipediaetl_spark.orchestration import Task, process_html_dag, run_dag
 
 
 def test_retry_then_succeed(spark):
@@ -128,13 +128,3 @@ def test_repeated_dag_runs_idempotent_over_sink(spark, sf_dir, tmp_path):
     assert m2 == m1
     landed2 = {t: spark.read.parquet(f"{out}/{t}").count() for t in m2}
     assert landed2 == landed1  # overwrite sink: no duplication across ticks
-
-
-def test_run_dag_records_schedule_metadata(spark):
-    """``schedule`` is advisory metadata stamped on the DagRun — the runner
-    itself never sleeps or loops (one call == one run)."""
-    run = run_dag(
-        spark, [Task("t", lambda s, x: 1)], schedule="*/10 * * * *"
-    )
-    assert run.state == "success" and run.schedule == "*/10 * * * *"
-    assert run_dag(spark, [Task("t", lambda s, x: 1)]).schedule is None

@@ -43,9 +43,9 @@ from wikipediaetl_spark.session import scoped_confs
 from wikipediaetl_spark.sources import load_table
 
 
-# Table property marking a staging table as a COMPLETED merge (safe to
-# rename into place). Set after saveAsTable finishes, before the main table
-# is dropped — see merge_batch_into_rollup's crash-recovery contract.
+# TBLPROPERTIES of the staged-swap protocol: the commit marker and the
+# replay watermark (``staged_swap_write`` states the contract), and the
+# pending-append stamp (``append_batch_to_layout``).
 _COMMIT_PROP = "wikipediaetl.rollup.committed"
 _BATCH_PROP = "wikipediaetl.rollup.lastBatchId"
 _PENDING_PROP = "wikipediaetl.append.pendingBatchId"
@@ -99,28 +99,6 @@ def _table_prop_int(spark: SparkSession, table: str, prop: str) -> int | None:
         return None
     for r in rows:
         if r["key"] == prop:
-            try:
-                return int(r["value"])
-            except ValueError:
-                return None
-    return None
-
-
-def _table_batch_id(spark: SparkSession, table: str) -> int | None:
-    """The replay watermark stamped into ``table``'s TBLPROPERTIES by a
-    previous merge, or None for an unstamped/missing table. The property
-    rides the staging table through RENAME, so the watermark survives every
-    crash window — including the one ADVICE r8 flagged, where a crash
-    between drop and rename is recovered by auto-renaming a committed
-    staging that ALREADY contains batch N: the renamed table carries
-    lastBatchId=N, so a replay of batch N is skipped, not double-counted.
-    Raises on unexpected catalog errors (ADVICE r10 low) — a swallowed
-    metastore failure here would silently disable replay suppression."""
-    rows = _show_tblproperties(spark, table)
-    if rows is None:
-        return None
-    for r in rows:
-        if r["key"] == _BATCH_PROP:
             try:
                 return int(r["value"])
             except ValueError:
@@ -195,11 +173,22 @@ def recover_interrupted_swap(
     staging = f"{table}_staging"
     if not spark.catalog.tableExists(table) and spark.catalog.tableExists(staging):
         if _staging_committed(spark, staging):
-            spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-            if partition_cols:
-                spark.sql(f"ALTER TABLE {table} RECOVER PARTITIONS")
+            _rename_into_place(spark, table, partition_cols)
         else:
             _drop_table(spark, staging)
+
+
+def _rename_into_place(
+    spark: SparkSession, table: str, partition_cols: tuple[str, ...]
+) -> None:
+    """Rename ``{table}_staging`` to ``table``. A partitioned managed
+    table's per-partition locations still reference the staging directory
+    after RENAME (the catalog tracks partitions individually), so they are
+    recovered from the moved directory layout; without that every scan
+    resolves to the deleted staging paths and reads empty."""
+    spark.sql(f"ALTER TABLE {table}_staging RENAME TO {table}")
+    if partition_cols:
+        spark.sql(f"ALTER TABLE {table} RECOVER PARTITIONS")
 
 
 def maintained_layout_sink(
@@ -304,6 +293,15 @@ def bucketize_facts(
     return out
 
 
+def _custkey_partial(orders: DataFrame) -> DataFrame:
+    """Orders at the custkey grain: order count and the exact DECIMAL(28,2)
+    sum of the DECIMAL(18,2) order totals."""
+    return orders.groupBy("o_custkey").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("revenue_d"),
+    )
+
+
 def materialize_rollup(
     spark: SparkSession,
     sf_dir: str,
@@ -318,24 +316,15 @@ def materialize_rollup(
     associatively, so the final double is bit-identical to aggregating the
     raw fact table (asserted by tools/bench_bucketed.py). At 100 TB this is
     the standard cube/materialized-view trade: the rollup is maintained
-    incrementally at ingest (each micro-batch appends its partial
-    aggregates; a periodic compaction re-merges the grain), and every
+    incrementally at ingest (``merge_batch_into_rollup`` folds each
+    micro-batch's partial aggregates into the grain), and every
     region/nation/segment dashboard query rides it instead of the fact
     scan. The grain column keeps FULL fidelity — any dimension join still
     works — only the additive measures are pre-combined."""
-    from pyspark.sql import functions as F
-
     _drop_table(spark, table)
-    o = load_table(spark, sf_dir, "orders")
-    (
-        o.groupBy("o_custkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("revenue_d"),
-        )
-        .write.mode("overwrite")
-        .saveAsTable(table)
-    )
+    _custkey_partial(load_table(spark, sf_dir, "orders")).write.mode(
+        "overwrite"
+    ).saveAsTable(table)
 
 
 def merge_batch_into_rollup(
@@ -344,95 +333,35 @@ def merge_batch_into_rollup(
     table: str = "m_orders_by_custkey",
     batch_id: int | None = None,
 ) -> None:
-    """Incremental rollup maintenance: fold one ingest batch's partial
-    aggregates into the stored summary table, idempotently.
-
-    The batch is aggregated to the rollup grain (count + exact DECIMAL
-    partial sums — associative, so merge order is irrelevant), unioned with
-    the current table, re-merged per key, and swapped in via
-    staging-write + drop + rename. The drop→rename pair is NOT a single
-    atomic step, so two hazards are handled explicitly rather than assumed
-    away: (1) a crash anywhere in the swap window leaves only the staging
-    table — a COMMIT MARKER (table property set after the staging write
-    completes, BEFORE the main table is dropped) distinguishes a completed
-    merge awaiting rename (recovered by finishing the rename) from a
-    partial staging write of a first-ever merge that crashed
-    mid-``saveAsTable`` (dropped, so the merge restarts from the batch —
-    the main table never existed, so nothing is lost); (2) a foreachBatch
-    replay after a completed merge would double-count — so when
-    ``batch_id`` is given it is stamped into every rollup row (constant
-    ``last_batch_id`` column, atomic with the data it describes) and a
-    replayed id ≤ the stored one is a no-op. An unstamped call
-    (``batch_id=None``) on a stamped table CARRIES the stored
-    ``last_batch_id`` forward rather than rebuilding without it — dropping
-    it would silently discard the replay watermark and a later resumed
-    stream would double-count its redelivered batch. Cost per batch is
+    """Incremental maintenance of the ``materialize_rollup`` table: fold one
+    ingest batch of orders into the stored custkey rollup. Counts and
+    DECIMAL partial sums are associative, so any batching leaves the rows
+    a one-shot build writes. Crash recovery and the ``batch_id`` replay
+    watermark are ``staged_swap_write``'s contract. Cost per batch is
     O(batch + |grain|), independent of the fact table's full history — the
     property that makes a 100 TB rollup maintainable. The streaming entry
     point is ``rollup_sink`` (a foreachBatch wrapper)."""
-    from pyspark.sql import functions as F
-
-    staging = f"{table}_staging"
-    # Recover an interrupted swap: the staging table without the main table
-    # is EITHER a completed previous merge caught between drop and rename
-    # (commit marker present → finish the rename) OR a first-ever merge
-    # that crashed mid-saveAsTable (no marker → the partial table must NOT
-    # be adopted; drop it and merge from scratch — main never existed).
-    if not spark.catalog.tableExists(table) and spark.catalog.tableExists(staging):
-        if _staging_committed(spark, staging):
-            spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-        else:
-            _drop_table(spark, staging)
-    grain_cols = ["o_custkey", "n_orders", "revenue_d"]
-    stored_batch_id: int | None = None
-    if spark.catalog.tableExists(table):
-        cur = spark.table(table)
-        if "last_batch_id" in cur.columns:
-            row = cur.select("last_batch_id").first()
-            if row is not None and row[0] is not None:
-                stored_batch_id = int(row[0])
-    if batch_id is not None and stored_batch_id is not None and batch_id <= stored_batch_id:
-        return  # replayed batch already folded into the rollup
-    partial = batch.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("revenue_d"),
+    merge_batch_into_keyed_rollup(
+        spark,
+        _custkey_partial(batch),
+        table,
+        keys=["o_custkey"],
+        merge_aggs=[
+            F.sum("n_orders").alias("n_orders"),
+            F.sum("revenue_d").cast("decimal(28,2)").alias("revenue_d"),
+        ],
+        bucket_key=None,
+        batch_id=batch_id,
     )
-    if spark.catalog.tableExists(table):
-        merged = (
-            spark.table(table)
-            .select(*grain_cols)
-            .unionByName(partial)
-            .groupBy("o_custkey")
-            .agg(
-                F.sum("n_orders").alias("n_orders"),
-                F.sum("revenue_d").cast("decimal(18,2)").alias("revenue_d"),
-            )
-        )
-    else:
-        merged = partial
-    # Stamp the new watermark; an unstamped call carries the stored one.
-    stamp = batch_id if batch_id is not None else stored_batch_id
-    if stamp is not None:
-        merged = merged.withColumn("last_batch_id", F.lit(stamp).cast("long"))
-    _drop_table(spark, staging)
-    merged.write.mode("overwrite").saveAsTable(staging)
-    # Commit point: marker set ⟹ staging holds a COMPLETE merge. Only after
-    # this may the main table be dropped, so "main absent + staging without
-    # marker" can only mean a partial first-ever write (handled above).
-    spark.sql(
-        f"ALTER TABLE {staging} SET TBLPROPERTIES ('{_COMMIT_PROP}'='true')"
-    )
-    _drop_table(spark, table)
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
 
 
 def rollup_sink(spark: SparkSession, table: str = "m_orders_by_custkey"):
     """foreachBatch sink maintaining the rollup from a stream of orders:
     ``stream.writeStream.foreachBatch(rollup_sink(spark)).start()``.
-    Replays are idempotent: the micro-batch id is stamped into the rollup
-    atomically with the merged data (see ``merge_batch_into_rollup``), so
-    a redelivered batch after a completed merge is skipped, and an
-    interrupted drop/rename swap is recovered from staging."""
+    Replays are idempotent: the micro-batch id is the rollup's replay
+    watermark (see ``staged_swap_write``), so a redelivered batch after a
+    completed merge is skipped, and an interrupted drop/rename swap is
+    recovered from staging."""
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         merge_batch_into_rollup(spark, batch, table=table, batch_id=batch_id)
@@ -669,6 +598,18 @@ def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     return _read_layout(spark, path).drop("_pkey")
 
 
+def _lineitem_partial(lineitem: DataFrame) -> DataFrame:
+    """Lineitem at the orderkey grain: line count and the exact
+    DECIMAL(28,6) revenue. Each term is cast to DECIMAL(18,6) before the
+    sum, so partials merge bit-identically in any order."""
+    return lineitem.groupBy("l_orderkey").agg(
+        F.count(F.lit(1)).alias("n_lines"),
+        F.sum(
+            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
+        ).alias("revenue_d"),
+    )
+
+
 def materialize_lineitem_rollup(
     spark: SparkSession,
     sf_dir: str,
@@ -682,20 +623,13 @@ def materialize_lineitem_rollup(
     rows instead of ~4×|orders| lineitem rows and merges partials —
     bit-identical to aggregating raw lineitem (per-term decimal casts
     happen before the partial sum, so association order is irrelevant).
-    Same incremental-maintenance story as ``merge_batch_into_rollup``."""
-    from pyspark.sql import functions as F
-
-    _drop_table(spark, table)
-    li = load_table(spark, sf_dir, "lineitem")
-    agg = li.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
-        ).alias("revenue_d"),
+    Maintained incrementally by ``merge_batch_into_lineitem_rollup``."""
+    bucketize(
+        _lineitem_partial(load_table(spark, sf_dir, "lineitem")),
+        table,
+        "l_orderkey",
+        n_buckets=n_buckets,
     )
-    agg.write.mode("overwrite").bucketBy(n_buckets, "l_orderkey").sortBy(
-        "l_orderkey"
-    ).saveAsTable(table)
 
 
 def merge_batch_into_lineitem_rollup(
@@ -708,67 +642,25 @@ def merge_batch_into_lineitem_rollup(
     """Incremental maintenance for the ORDERKEY-grain lineitem rollup
     (``materialize_lineitem_rollup``): fold one ingest batch's partial
     aggregates into the stored summary, preserving the bucketed layout.
-
-    Same associativity argument, staged-swap crash contract, AND replay
-    contract as ``merge_batch_into_keyed_rollup`` (commit marker + batch-id
-    watermark stamped into the staging TBLPROPERTIES in one ALTER before
-    the drop→rename window; a replayed ``batch_id`` ≤ the stored watermark
-    is a no-op — see that docstring for the recovery cases); per-term
-    DECIMAL(18,6) revenue partials merge exactly in any order, so the
-    maintained rollup is bit-identical to rebuilding from the full fact
-    history. Cost per batch is O(batch + |grain|), independent of history
-    size. q167 drives this end-to-end against the raw-lineitem oracle."""
-    from pyspark.sql import functions as F
-
-    staging = f"{table}_staging"
-    if not spark.catalog.tableExists(table) and spark.catalog.tableExists(staging):
-        if _staging_committed(spark, staging):
-            spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-        else:
-            _drop_table(spark, staging)
-    stored_batch_id = _table_batch_id(spark, table)
-    if batch_id is not None and stored_batch_id is not None and batch_id <= stored_batch_id:
-        return  # replayed batch already folded into the rollup
-    partial = batch.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
-        ).alias("revenue_d"),
+    Per-term DECIMAL(18,6) revenue partials merge exactly in any order, so
+    the maintained rollup is bit-identical to rebuilding from the full fact
+    history. Crash recovery and the ``batch_id`` replay watermark are
+    ``staged_swap_write``'s contract. Cost per batch is O(batch + |grain|),
+    independent of history size. q167 drives this end-to-end against the
+    raw-lineitem oracle."""
+    merge_batch_into_keyed_rollup(
+        spark,
+        _lineitem_partial(batch),
+        table,
+        keys=["l_orderkey"],
+        merge_aggs=[
+            F.sum("n_lines").alias("n_lines"),
+            F.sum("revenue_d").cast("decimal(28,6)").alias("revenue_d"),
+        ],
+        bucket_key="l_orderkey",
+        n_buckets=n_buckets,
+        batch_id=batch_id,
     )
-    if spark.catalog.tableExists(table):
-        merged = (
-            spark.table(table)
-            .select("l_orderkey", "n_lines", "revenue_d")
-            .unionByName(
-                partial.select(
-                    "l_orderkey",
-                    "n_lines",
-                    F.col("revenue_d").cast("decimal(28,6)").alias("revenue_d"),
-                )
-            )
-            .groupBy("l_orderkey")
-            .agg(
-                F.sum("n_lines").alias("n_lines"),
-                F.sum("revenue_d").cast("decimal(28,6)").alias("revenue_d"),
-            )
-        )
-    else:
-        merged = partial.select(
-            "l_orderkey",
-            "n_lines",
-            F.col("revenue_d").cast("decimal(28,6)").alias("revenue_d"),
-        )
-    _drop_table(spark, staging)
-    merged.write.mode("overwrite").bucketBy(n_buckets, "l_orderkey").sortBy(
-        "l_orderkey"
-    ).saveAsTable(staging)
-    stamp = batch_id if batch_id is not None else stored_batch_id
-    props = f"'{_COMMIT_PROP}'='true'"
-    if stamp is not None:
-        props += f", '{_BATCH_PROP}'='{int(stamp)}'"
-    spark.sql(f"ALTER TABLE {staging} SET TBLPROPERTIES ({props})")
-    _drop_table(spark, table)
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
 
 
 def merge_batch_into_keyed_rollup(
@@ -777,30 +669,22 @@ def merge_batch_into_keyed_rollup(
     table: str,
     keys: list[str],
     merge_aggs: list,
-    bucket_key: str,
+    bucket_key: str | None,
     n_buckets: int = 8,
     partition_cols: tuple[str, ...] = (),
     batch_id: int | None = None,
 ) -> None:
     """Generic incremental maintenance for ANY associatively-mergeable keyed
-    rollup (VERDICT r7 #2 — the q167 pattern, factored so each serving
-    layout below states only its grain and merge algebra).
+    rollup (VERDICT r7 #2 — the q167 pattern, factored so each maintained
+    rollup states only its grain and merge algebra).
 
     ``partial`` is the batch already aggregated to the rollup grain with
     FINAL column types; ``merge_aggs`` are the combine aggregates (sum for
     additive counts/decimal partials, max for running maxima — anything
     associative+commutative, which is exactly the class a map-side combine
-    needs anyway). Staged-swap crash contract identical to
-    ``merge_batch_into_rollup``: commit marker after the staging write, so
-    a crash in the drop→rename window recovers by rename, and an
-    uncommitted staging table is discarded. REPLAY contract (ADVICE r8):
-    when ``batch_id`` is given, it is stamped into the staging table's
-    TBLPROPERTIES in the same ALTER as the commit marker, BEFORE the main
-    table is dropped — the property rides the RENAME, so even the crash
-    window where a committed staging (already containing batch N) is
-    auto-renamed on the next call leaves a table stamped with N, and a
-    replayed ``batch_id <= N`` is a no-op rather than a double-count under
-    the sum algebra. Unstamped calls carry a stored watermark forward.
+    needs anyway). The first call writes ``partial`` as the table; later
+    calls re-merge it with the stored rows per key. Crash recovery and the
+    ``batch_id`` replay watermark are ``staged_swap_write``'s contract.
     Cost per batch is O(batch + |grain|) regardless of history size.
     ``partition_cols`` additionally partitions the stored rollup (e.g. by
     year/mode) so serve-time filters become directory pruning on top of
@@ -830,68 +714,80 @@ def merge_batch_into_keyed_rollup(
     )
 
 
-def staged_swap_write(
-    spark: SparkSession,
-    build,
-    table: str,
-    bucket_key: str | None,
-    n_buckets: int = 8,
-    partition_cols: tuple[str, ...] = (),
-    batch_id: int | None = None,
-) -> bool:
-    """The staged-swap crash contract, factored out of
-    ``merge_batch_into_keyed_rollup`` (which now delegates here) so that
-    NON-aggregate maintenance — q184's cluster-ledger relabel is a
-    join-merge, not a keyed agg — shares byte-identical recovery and
-    replay semantics with the keyed rollups:
-
-    1. interrupted-swap recovery: a committed staging left by a crash in
-       the drop→rename window is renamed into place; an uncommitted one
-       is discarded;
-    2. replay watermark: with ``batch_id`` given, a batch at or below the
-       stored watermark is a NO-OP (returns False) — ``build`` is never
-       invoked, so replays cannot double-apply;
-    3. ``build()`` runs only after recovery/replay checks and may lazily
-       reference ``spark.table(table)``: the staging write executes while
-       the old table still exists, then the swap happens;
-    4. the commit marker (+ batch stamp) lands in ONE ALTER on the staging
-       table before the old table drops, and rides the rename.
-
-    Returns True iff the swap was applied. ``bucket_key`` may be a single
-    column name or a tuple of names (composite bucket spec, e.g. the LSH
-    band index's (band_idx, band_hash) probe-join keys)."""
-    staging = f"{table}_staging"
-
-    def _rename_into_place() -> None:
-        spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-        if partition_cols:
-            # a partitioned managed table's per-partition locations still
-            # reference the staging directory after RENAME (the catalog
-            # tracks partitions individually); recover them from the moved
-            # directory layout or every serve-time scan resolves to the
-            # deleted staging paths and reads empty
-            spark.sql(f"ALTER TABLE {table} RECOVER PARTITIONS")
-
-    recover_interrupted_swap(spark, table, partition_cols)
-    stored_batch_id = _table_batch_id(spark, table)
-    if batch_id is not None and stored_batch_id is not None and batch_id <= stored_batch_id:
-        return False  # replayed batch already folded in
-    merged = build()
-    _drop_table(spark, staging)
-    w = merged.write.mode("overwrite")
+def _layout_writer(
+    df: DataFrame,
+    mode: str,
+    bucket_key: str | tuple[str, ...] | None,
+    n_buckets: int,
+    partition_cols: tuple[str, ...],
+):
+    """``df``'s ``saveAsTable`` writer in ``mode``, partitioned on
+    ``partition_cols`` and bucketed + sorted on ``bucket_key`` (a column
+    name or a tuple of names) when it is given."""
+    w = df.write.mode(mode)
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     if bucket_key is not None:
         bk = (bucket_key,) if isinstance(bucket_key, str) else tuple(bucket_key)
         w = w.bucketBy(n_buckets, *bk).sortBy(*bk)
-    w.saveAsTable(staging)
+    return w
+
+
+def staged_swap_write(
+    spark: SparkSession,
+    build,
+    table: str,
+    bucket_key: str | tuple[str, ...] | None,
+    n_buckets: int = 8,
+    partition_cols: tuple[str, ...] = (),
+    batch_id: int | None = None,
+) -> bool:
+    """The ONE commit path of every rewritten maintained table: the keyed
+    rollups (``merge_batch_into_keyed_rollup`` and the custkey/lineitem
+    merges built on it), q184's cluster-ledger relabel (a join-merge, not a
+    keyed agg) and ``append_batch_to_layout``'s bootstrap and scrub all
+    delegate here, so they share one recovery and replay contract:
+
+    1. interrupted-swap recovery (``recover_interrupted_swap``): a staging
+       table without the main table is EITHER a completed merge caught
+       between drop and rename (commit marker present → the rename is
+       finished) OR a first-ever write that crashed mid-``saveAsTable`` (no
+       marker → dropped; the main table never existed, so nothing is lost);
+    2. replay watermark: with ``batch_id`` given, a batch at or below the
+       stored ``_BATCH_PROP`` watermark is a NO-OP (returns False) —
+       ``build`` is never invoked, so a foreachBatch replay cannot
+       double-apply; reading the watermark is a catalog call, not a job;
+    3. ``build()`` runs only after recovery/replay checks and may lazily
+       reference ``spark.table(table)``: the staging write executes while
+       the old table still exists, then the swap happens;
+    4. the commit marker (+ batch stamp) lands in ONE ALTER on the staging
+       table before the old table drops, and rides the rename. So even the
+       crash window where a committed staging (already holding batch N) is
+       auto-renamed on the next call leaves a table stamped with N, and a
+       replayed ``batch_id <= N`` is skipped, not double-counted. An
+       unstamped call (``batch_id=None``) carries the stored watermark
+       forward; dropping it would let a resumed stream double-count.
+
+    Returns True iff the swap was applied. ``bucket_key`` may be a single
+    column name or a tuple of names (composite bucket spec, e.g. the LSH
+    band index's (band_idx, band_hash) probe-join keys)."""
+    staging = f"{table}_staging"
+    recover_interrupted_swap(spark, table, partition_cols)
+    stored_batch_id = _table_prop_int(spark, table, _BATCH_PROP)
+    if batch_id is not None and stored_batch_id is not None and batch_id <= stored_batch_id:
+        return False  # replayed batch already folded in
+    merged = build()
+    _drop_table(spark, staging)
+    _layout_writer(merged, "overwrite", bucket_key, n_buckets, partition_cols).saveAsTable(
+        staging
+    )
     stamp = batch_id if batch_id is not None else stored_batch_id
     props = f"'{_COMMIT_PROP}'='true'"
     if stamp is not None:
         props += f", '{_BATCH_PROP}'='{int(stamp)}'"
     spark.sql(f"ALTER TABLE {staging} SET TBLPROPERTIES ({props})")
     _drop_table(spark, table)
-    _rename_into_place()
+    _rename_into_place(spark, table, partition_cols)
     return True
 
 
@@ -951,7 +847,7 @@ def append_batch_to_layout(
             partition_cols,
             batch_id=batch_id,
         )
-    committed = _table_batch_id(spark, table)
+    committed = _table_prop_int(spark, table, _BATCH_PROP)
     if batch_id is not None and committed is not None and batch_id <= committed:
         return False  # replayed batch: rows already appended + committed
     pending = _table_prop_int(spark, table, _PENDING_PROP)
@@ -973,13 +869,7 @@ def append_batch_to_layout(
             f"ALTER TABLE {table} SET TBLPROPERTIES "
             f"('{_PENDING_PROP}'='{int(batch_id)}')"
         )
-    w = stamped.write.mode("append")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    if bucket_key is not None:
-        bk = (bucket_key,) if isinstance(bucket_key, str) else tuple(bucket_key)
-        w = w.bucketBy(n_buckets, *bk).sortBy(*bk)
-    w.saveAsTable(table)
+    _layout_writer(stamped, "append", bucket_key, n_buckets, partition_cols).saveAsTable(table)
     if batch_id is not None:
         # commit point: watermark >= pending ⟹ the append above is complete
         spark.sql(
@@ -1390,9 +1280,9 @@ def q172_market_share_denorm(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q167_rollup_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The AGGREGATE half of the layout story (VERDICT r6 #5) — q166's
     pattern applied to a materialized rollup: build the orderkey-grain
-    lineitem rollup from ~90% of the fact history, fold the remaining 10%
-    in through ``merge_batch_into_lineitem_rollup`` (staged swap, exact
-    DECIMAL partials), then answer the q12 fact-fact shape FROM THE
+    lineitem rollup from ~90% of the fact history and fold the remaining
+    10% in, both through ``merge_batch_into_lineitem_rollup`` (staged swap,
+    exact DECIMAL partials), then answer the q12 fact-fact shape FROM THE
     MAINTAINED ROLLUP — and hash-match the oracle computed from raw
     lineitem. Because the per-order partials merge associatively, the
     maintained rollup's totals are bit-identical to a full rebuild, which
@@ -1410,22 +1300,8 @@ def q167_rollup_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     is_batch = F.pmod(F.col("l_orderkey"), F.lit(10)) == 7
     with scoped_tables(spark, table):
-        hist_partial = (
-            li.filter(~is_batch)
-            .groupBy("l_orderkey")
-            .agg(
-                F.count(F.lit(1)).alias("n_lines"),
-                F.sum(
-                    (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                        "decimal(18,6)"
-                    )
-                )
-                .cast("decimal(28,6)")
-                .alias("revenue_d"),
-            )
-        )
-        hist_partial.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(table)
-        merge_batch_into_lineitem_rollup(spark, li.filter(is_batch), table, n_buckets=8)
+        for part in (~is_batch, is_batch):
+            merge_batch_into_lineitem_rollup(spark, li.filter(part), table, n_buckets=8)
         rollup = spark.table(table)
         return (
             rollup.join(o, rollup.l_orderkey == o.o_orderkey)

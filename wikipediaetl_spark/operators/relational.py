@@ -463,9 +463,10 @@ def q12_fact_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r5 #2): stock oscillates 4.1-5.0× across rounds with this
     plan unchanged (machine noise, BENCH_NOTES r6), while the bucketed
     lineitem→orderkey rollup (operators/layout.py
-    materialize_lineitem_rollup, maintained by merge_batch_into_rollup)
-    serves this exact shape at **1.40×** with the join exchange-free —
-    BENCH_BUCKETED_400x.json, exact-match asserted in the same run.
+    materialize_lineitem_rollup, maintained by
+    merge_batch_into_lineitem_rollup) serves this exact shape at **1.40×**
+    with the join exchange-free — BENCH_BUCKETED_400x.json, exact-match
+    asserted in the same run.
     """
     li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")

@@ -24,18 +24,17 @@ invoking ``run_dag`` (or ``process_html_dag``) once per tick::
 
     */10 * * * *  spark-submit run_etl.py   # → process_html_dag(spark, ...)
 
-``run_dag`` accepts an advisory ``schedule`` string recorded verbatim on the
-``DagRun`` so runs are attributable to their cadence, but it neither sleeps
-nor loops: one call == one DAG run. What makes that contract safe is that
-every sink a DAG task writes through is IDEMPOTENT per tick:
+``run_dag`` neither sleeps nor loops: one call == one DAG run. What makes
+that contract safe is that every sink a DAG task writes through is
+IDEMPOTENT per tick:
 
 - ``run_pipeline``'s parquet sinks are ``mode=overwrite`` — a repeated or
   crashed-and-rerun tick converges to the same landing state instead of
   appending duplicates (asserted by
   tests/test_orchestration.py::test_repeated_dag_runs_idempotent_over_sink);
-- streaming-fed rollups stamp their micro-batch id
-  (operators/layout.py ``merge_batch_into_rollup``), so a tick that replays
-  a delivered batch is a no-op;
+- streaming-fed rollups stamp their micro-batch id as the table's replay
+  watermark (operators/layout.py ``staged_swap_write``), so a tick that
+  replays a delivered batch is a no-op;
 - catch-up/backfill is likewise the invoker's concern: missed ticks can be
   replayed in any order because each run recomputes from the current source
   snapshot rather than consuming an offset the scheduler must manage.
@@ -43,7 +42,6 @@ every sink a DAG task writes through is IDEMPOTENT per tick:
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from typing import Any
@@ -61,7 +59,6 @@ class Task:
     fn: Callable[[SparkSession, dict[str, Any]], Any]
     upstream: Sequence[str] = ()
     retries: int = 1
-    retry_delay_s: float = 0.0
 
 
 @dataclass
@@ -75,10 +72,6 @@ class TaskResult:
 @dataclass
 class DagRun:
     results: dict[str, TaskResult] = field(default_factory=dict)
-    #: advisory cadence the invoking scheduler ran this DAG under (e.g.
-    #: "*/10 * * * *"); informational only — see the module's cadence
-    #: contract. ``None`` mirrors the reference's unscheduled DAG.
-    schedule: str | None = None
 
     @property
     def state(self) -> str:
@@ -89,21 +82,18 @@ class DagRun:
         )
 
 
-def run_dag(
-    spark: SparkSession, tasks: Sequence[Task], schedule: str | None = None
-) -> DagRun:
+def run_dag(spark: SparkSession, tasks: Sequence[Task]) -> DagRun:
     """Execute tasks in dependency order with retries and XCom handoff.
 
-    One call is ONE DAG run; ``schedule`` is recorded on the returned
-    ``DagRun`` as advisory metadata for the external scheduler that owns
+    One call is ONE DAG run; the external scheduler that invokes it owns
     the cadence (see the module docstring's cadence contract).
 
     Semantics (matched to what the reference's DAG relies on):
     - a task runs only when every upstream succeeded; otherwise it is
       marked ``upstream_failed`` and skipped (Airflow trigger_rule
       ``all_success``, the default the reference uses);
-    - a failing task is retried ``retries`` more times, sleeping
-      ``retry_delay_s`` between attempts (pipeline.py:19 ``retries=1``);
+    - a failing task is retried ``retries`` more times, at once
+      (pipeline.py:19 ``retries=1``);
     - return values land in the shared ``xcom`` dict keyed by task name and
       are visible to downstream tasks (pipeline.py:88-89 pattern);
     - independent tasks run one after another, in submission order. A
@@ -132,7 +122,7 @@ def run_dag(
         if not progressed:
             raise ValueError(f"dependency cycle among {[t.name for t in pending]}")
 
-    run = DagRun(schedule=schedule)
+    run = DagRun()
     xcom: dict[str, Any] = {}
     for t in order:
         bad_up = [
@@ -151,8 +141,6 @@ def run_dag(
                 break
             except Exception as e:  # noqa: BLE001 - task isolation boundary
                 res.error = f"{type(e).__name__}: {e}"
-                if attempt < t.retries and t.retry_delay_s:
-                    time.sleep(t.retry_delay_s)
         if res.state == "success":
             xcom[t.name] = res.value
         run.results[t.name] = res
